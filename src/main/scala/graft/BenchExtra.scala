@@ -46,7 +46,18 @@ object BenchExtra {
     val (warmSec, _) = leg(1000L) // JIT/codegen warmup, untimed leg
     val (cappedSec, cappedRemoved) = leg(1000L)
     val (uncappedSec, uncappedRemoved) = leg(Long.MaxValue)
-    println(s"""{"metric":"exact_substr_skew","docs":$nDocs,"hot_docs":${nDocs / 2},"warm_sec":${f"$warmSec%.3f"},"capped_sec":${f"$cappedSec%.3f"},"capped_removed":$cappedRemoved,"uncapped_sec":${f"$uncappedSec%.3f"},"uncapped_removed":$uncappedRemoved}""")
+    println(resultLine(nDocs, warmSec, cappedSec, cappedRemoved, uncappedSec,
+      uncappedRemoved))
     spark.stop()
+  }
+
+  /** The leg's one-line JSON result. Seconds are formatted under
+    * Locale.ROOT: a default locale with a decimal comma must not turn
+    * `1.234` into `1,234` and break the JSON.
+    */
+  def resultLine(nDocs: Int, warmSec: Double, cappedSec: Double,
+      cappedRemoved: Long, uncappedSec: Double, uncappedRemoved: Long): String = {
+    def sec(x: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, x)
+    s"""{"metric":"exact_substr_skew","docs":$nDocs,"hot_docs":${nDocs / 2},"warm_sec":${sec(warmSec)},"capped_sec":${sec(cappedSec)},"capped_removed":$cappedRemoved,"uncapped_sec":${sec(uncappedSec)},"uncapped_removed":$uncappedRemoved}"""
   }
 }

@@ -3,7 +3,7 @@ package graft.crawl
 import graft.core.{ScopeFilter, UrlCanonicalizer}
 import graft.extract.{DocAnalysis, HtmlParser, HtmlToSpans, PdfToSpans}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -93,8 +93,12 @@ private final class BroadcastSyntheticFetcher(
   *    in one partition (politeness is partition-local, J3); the per-host
   *    per-wave cap (waveBudget / crawlDelay) bounds skew at the SCHEDULING
   *    level — a hot host can never dominate a wave (SURVEY.md §4);
-  *  - the seen-set anti-join is an equi-join on url_hash longs (never
-  *    broadcast at frontier scale; AQE picks sort-merge vs shuffled-hash);
+  *  - the exact seen check is probe-side ([[CrawlEngine.seenJoin]]): the
+  *    wave's candidate hashes are broadcast and `seen` is streamed past
+  *    them, so only the hits reach the small-side anti-join and `seen` is
+  *    never broadcast or collected; when the candidates outgrow
+  *    spark.sql.autoBroadcastJoinThreshold it falls back to a sort-merge
+  *    shuffle join of candidates and `seen`;
   *  - dense seq assignment is sort + zipWithIndex — two linear passes, no
   *    single-partition window bottleneck (W3);
   *  - per-host state NEVER lives on the driver: crawl delays, per-domain
@@ -172,57 +176,72 @@ final class CrawlEngine(
     * DIFFERENT bucket count (the `bloom_buckets` manifest stat — resuming
     * at a different parallelism would cogroup candidates against the wrong
     * bucket's filter, i.e. Bloom FALSE NEGATIVES) → rebuild from the
-    * authoritative seen table, distributedly.
+    * authoritative seen table, distributedly. Returned hash-partitioned on
+    * the `bucket` column: the caller persists it once, and both per-wave
+    * cogroups (apply and update), grouping on that column, find it already
+    * clustered — the filter bits cross the shuffle once per wave.
     */
-  private def readBlooms(wave: Int): org.apache.spark.sql.Dataset[FilterBucket] = {
+  private def readBlooms(wave: Int): Dataset[FilterBucket] = {
     val cap = perBucketCapacity
     val fpr = config.bloomFpr
     val nb = numPartitions
     // blooms_v guards the row layout: v1 (pre-FilterBucket) warehouses and
     // bucket-count mismatches both rebuild from the authoritative seen table
-    if (io.waveExists("blooms", wave - 1) &&
-        io.stat("bloom_buckets").contains(nb.toLong) &&
-        io.stat("blooms_v").contains(CrawlEngine.BloomsVersion)) {
-      val persisted =
-        io.readWave("blooms", wave - 1, TableIO.BloomsSchema).as[FilterBucket]
-      // self-heal saturated buckets (a cuckoo insert failed or a remove
-      // fence tripped — the bucket answers "maybe" for every key, so its
-      // candidates all pay the exact anti-join): rebuild JUST those from
-      // the authoritative seen table at doubled capacity. The check reads
-      // two columns of an O(numPartitions)-row table; the heal scan runs
-      // only when saturation actually exists.
-      val sat = persisted.filter($"saturated").select($"bucket")
-        .as[Int].collect().toSet
-      if (sat.isEmpty) persisted
-      else {
-        val satB = spark.sparkContext.broadcast(sat)
-        // map-side filter BEFORE the shuffle: only the saturated buckets'
-        // hashes move (1/nb of the seen set per saturated bucket), not the
-        // whole table
-        val healed = io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
+    val buckets: Dataset[FilterBucket] =
+      if (io.waveExists("blooms", wave - 1) &&
+          io.stat("bloom_buckets").contains(nb.toLong) &&
+          io.stat("blooms_v").contains(CrawlEngine.BloomsVersion)) {
+        val persisted =
+          io.readWave("blooms", wave - 1, TableIO.BloomsSchema).as[FilterBucket]
+        // self-heal saturated buckets (a cuckoo insert failed or a remove
+        // fence tripped — the bucket answers "maybe" for every key, so its
+        // candidates all pay the exact anti-join): rebuild JUST those from
+        // the authoritative seen table at doubled capacity. The previous
+        // commit's blooms_clean_gen vouches for buckets the engine wrote
+        // itself; any other writer (a forget's bucket maintenance) moves
+        // gen_blooms, and the check reads two columns of the
+        // O(numPartitions)-row table. The heal scan runs only when
+        // saturation actually exists.
+        val knownClean = io.stat("blooms_clean_gen").exists(g =>
+          io.stat("gen_blooms").getOrElse(0L) == g)
+        val sat =
+          if (knownClean) Set.empty[Int]
+          else persisted.filter($"saturated").select($"bucket")
+            .as[Int].collect().toSet
+        if (sat.isEmpty) persisted
+        else {
+          val satB = spark.sparkContext.broadcast(sat)
+          // map-side filter BEFORE the shuffle: only the saturated buckets'
+          // hashes move (1/nb of the seen set per saturated bucket), not the
+          // whole table
+          val healed = io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
+            .select($"url_hash").as[Long]
+            .filter(h => satB.value.contains(CrawlEngine.bloomBucket(h, nb)))
+            .groupByKey(h => CrawlEngine.bloomBucket(h, nb))
+            .mapGroups { (b, hs) =>
+              val all = hs.toArray
+              val cf = graft.core.CuckooFilter64
+                .forCapacity(math.max(cap, all.length * 2L))
+              var stillSat = false
+              all.foreach { h => if (!cf.add(h)) stillSat = true }
+              FilterBucket.ofCuckoo(b, cf, stillSat)
+            }
+          persisted.filter(!$"saturated").union(healed)
+        }
+      } else
+        io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
           .select($"url_hash").as[Long]
-          .filter(h => satB.value.contains(CrawlEngine.bloomBucket(h, nb)))
           .groupByKey(h => CrawlEngine.bloomBucket(h, nb))
           .mapGroups { (b, hs) =>
-            val all = hs.toArray
-            val cf = graft.core.CuckooFilter64
-              .forCapacity(math.max(cap, all.length * 2L))
-            var stillSat = false
-            all.foreach { h => if (!cf.add(h)) stillSat = true }
-            FilterBucket.ofCuckoo(b, cf, stillSat)
+            val bf = graft.core.BloomFilter64.forCapacity(cap, fpr)
+            var n = 0L
+            hs.foreach { h => bf.add(h); n += 1 }
+            FilterBucket.of(b, bf, n)
           }
-        persisted.filter(!$"saturated").union(healed)
-      }
-    } else
-      io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
-        .select($"url_hash").as[Long]
-        .groupByKey(h => CrawlEngine.bloomBucket(h, nb))
-        .mapGroups { (b, hs) =>
-          val bf = graft.core.BloomFilter64.forCapacity(cap, fpr)
-          var n = 0L
-          hs.foreach { h => bf.add(h); n += 1 }
-          FilterBucket.of(b, bf, n)
-        }
+    // map(identity) re-encodes the rows as FilterBucket, so `bucket` is
+    // non-null on every branch (parquet reads it as nullable), matching the
+    // candidates' key for the cogroup
+    buckets.map(identity).repartition(nb, $"bucket")
   }
 
   private def loadState(): Unit = {
@@ -303,7 +322,8 @@ final class CrawlEngine(
     if (!trace) f else {
       val t0 = System.nanoTime()
       val r = f
-      System.err.println(f"[trace] w$wave $step%-14s ${(System.nanoTime() - t0) / 1e9}%.2fs")
+      System.err.println("[trace] w%d %-14s %.2fs".formatLocal(java.util.Locale.ROOT,
+        wave, step, (System.nanoTime() - t0) / 1e9))
       r
     }
   }
@@ -353,11 +373,14 @@ final class CrawlEngine(
       .as[String].persist()
     // take(65) decides the branch AND delivers the ≤64 names in the SAME
     // job (the old shape ran a count job, then a second collect job on
-    // discovery waves); only the >64 case pays a full count
-    val newHostsTaken = timed(wave, "hosts")(newHosts.take(65))
-    val newHostsCount =
-      if (newHostsTaken.length <= 64) newHostsTaken.length.toLong
-      else newHosts.count()
+    // discovery waves); only the >64 case pays a full count. coalesce(1)
+    // keeps it ONE job: over several partitions, a take that finds fewer
+    // than 65 rows in the first one runs a second job for the rest — the
+    // late-wave zero case every time
+    val (newHostsTaken, newHostsCount) = timed(wave, "hosts") {
+      val taken = newHosts.coalesce(1).take(65)
+      (taken, if (taken.length <= 64) taken.length.toLong else newHosts.count())
+    }
     // few new hosts → fetch robots on the driver (no job round-trip; the
     // ≤64 take is the only names-to-driver path and is O(64) by
     // construction; the common late-wave zero case runs one short-circuit
@@ -474,17 +497,21 @@ final class CrawlEngine(
         pages.map(p => CrawlEngine.extractOne(p, pid, extractCost))
       }
       .persist()
-    val (errorsWave, contentCharsWave, botBlockedWave) = timed(wave, "extract")(
-      if (pagesFetched == 0) (0L, 0L, 0L)
-      else {
-        val r = results.toDF().agg(
-          sum(when($"is_error", 1L).otherwise(0L)),
-          sum($"content_chars".cast("long")),
-          sum(when($"status" === HttpFetcher.BotProtectionStatus, 1L).otherwise(0L))).head()
-        (if (r.isNullAt(0)) 0L else r.getLong(0),
-          if (r.isNullAt(1)) 0L else r.getLong(1),
-          if (r.isNullAt(2)) 0L else r.getLong(2))
-      })
+    // the same pass also counts the wave's out-links: an upper bound on
+    // the candidate keys that the exact seen check sizes its join by
+    val (errorsWave, contentCharsWave, botBlockedWave, outLinksWave) =
+      timed(wave, "extract") {
+        if (pagesFetched == 0) (0L, 0L, 0L, 0L)
+        else {
+          val r = results.toDF().agg(
+            sum(when($"is_error", 1L).otherwise(0L)),
+            sum($"content_chars".cast("long")),
+            sum(when($"status" === HttpFetcher.BotProtectionStatus, 1L).otherwise(0L)),
+            sum(size($"out_links").cast("long"))).head()
+          def longAt(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+          (longAt(0), longAt(1), longAt(2), longAt(3))
+        }
+      }
 
     // ---- 4. text-block analysis + first-wins dedup (D3/W2) ---------------
     // Only UNIQUENESS needs cross-doc work; totals/language were folded
@@ -538,7 +565,9 @@ final class CrawlEngine(
     // with the partition-local Bloom negative-cache peeling off
     // definitely-new candidates so only "maybe seen" rows pay the join
     // (SURVEY.md §7 step 7). Candidates cogroup with their url_hash
-    // bucket's filter — the filter bits stay on executors.
+    // bucket's filter — the filter bits stay on executors. The exact check
+    // streams `seen` past the candidate keys (seenJoin), sized by the
+    // wave's out-link count — a bound on the keys that costs no job.
     val seenTable = io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
     val nb = numPartitions
     var flagged: DataFrame = null
@@ -549,10 +578,12 @@ final class CrawlEngine(
     // one read of the previous wave's filters serves both the apply-side
     // cogroup here and the update cogroup at stage time
     val prevBlooms = if (useBloom) readBlooms(wave).persist() else null
+    def unseen(cands: DataFrame): DataFrame = CrawlEngine.seenJoin(spark,
+      cands, seenTable, cands.select($"url_hash"), outLinksWave, "left_anti")
     val notSeen = (if (useBloom) {
-      flagged = waveDistinct.as[CandidateLink]
-        .groupByKey(c => CrawlEngine.bloomBucket(c.url_hash, nb))
-        .cogroup(prevBlooms.groupByKey(_.bucket)) { (_, cands, blooms) =>
+      flagged = waveDistinct
+        .groupBy(CrawlEngine.bloomBucketCol($"url_hash", nb)).as[Int, CandidateLink]
+        .cogroup(prevBlooms.groupBy($"bucket").as[Int, FilterBucket]) { (_, cands, blooms) =>
           if (blooms.hasNext) {
             val bf = blooms.next().filter
             cands.map(c => (c, bf.mightContain(c.url_hash)))
@@ -561,12 +592,9 @@ final class CrawlEngine(
         .select($"cand.*", $"maybe_seen")
         .persist()
       val definitelyNew = flagged.filter(!$"maybe_seen").drop("maybe_seen")
-      val needJoin = flagged.filter($"maybe_seen").drop("maybe_seen")
-        .join(seenTable, Seq("url_hash"), "left_anti")
-      definitelyNew.unionByName(needJoin)
-    } else {
-      waveDistinct.join(seenTable, Seq("url_hash"), "left_anti")
-    }).persist()
+      definitelyNew.unionByName(
+        unseen(flagged.filter($"maybe_seen").drop("maybe_seen")))
+    } else unseen(waveDistinct)).persist()
 
     // every evaluated candidate becomes known — pass or fail (AddKnownUri).
     // The wave's seen-added total rides the stage:seen write as an
@@ -649,12 +677,19 @@ final class CrawlEngine(
       } else null
 
     // ---- 6. per-partition metrics lineage (A1 analog) --------------------
-    val metrics = results.groupBy($"wave", $"partition_id").agg(
-      count(lit(1)).as("pages"),
-      sum(when($"is_error", 1L).otherwise(0L)).as("errors"),
-      sum($"total_words").as("words"),
-      sum($"fetch_ms").as("fetch_ms"),
-      sum($"extract_ms").as("extract_ms"))
+    // a partition-local fold, no shuffle: `results` keeps the extract
+    // stage's partitioning, whose rows carry their own partition's id
+    val metrics = results.mapPartitions { rs =>
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[(Int, Int), (Long, Long, Long, Double, Double)]
+      rs.foreach { r =>
+        val (n, e, w, f, x) =
+          acc.getOrElse((r.wave, r.partition_id), (0L, 0L, 0L, 0.0, 0.0))
+        acc((r.wave, r.partition_id)) = (n + 1, if (r.is_error) e + 1 else e,
+          w + r.total_words, f + r.fetch_ms, x + r.extract_ms)
+      }
+      acc.iterator.map { case ((wv, pid), (n, e, w, f, x)) => (wv, pid, n, e, w, f, x) }
+    }.toDF("wave", "partition_id", "pages", "errors", "words", "fetch_ms", "extract_ms")
 
     // ---- 7. wave-boundary stop cascade (WebsiteTextExtractor.cs:638-767) -
     pagesTotal += pagesFetched
@@ -807,15 +842,16 @@ final class CrawlEngine(
         .groupBy($"host").agg(sum($"pages").as("pages"))
       staged("stage:hostcounts")(io.stage("host_counts", wave, hostCountsDf))
     }
+    val obsSaturated = org.apache.spark.sql.Observation()
     if (useBloom) {
       // fold this wave's accepted hashes into their buckets' filters and
       // stage the full bucket set for wave N (buckets with no additions
       // carry forward through the cogroup) — all executor-side
       val cap = perBucketCapacity
       val fpr = config.bloomFpr
-      val newBlooms = notSeen.select($"url_hash").as[Long]
-        .groupByKey(h => CrawlEngine.bloomBucket(h, nb))
-        .cogroup(prevBlooms.groupByKey(_.bucket)) { (b, hs, buckets) =>
+      val newBlooms = notSeen.select($"url_hash")
+        .groupBy(CrawlEngine.bloomBucketCol($"url_hash", nb)).as[Int, Long]
+        .cogroup(prevBlooms.groupBy($"bucket").as[Int, FilterBucket]) { (b, hs, buckets) =>
           // addAll preserves the bucket's representation: Bloom buckets add
           // bits, Cuckoo buckets (post-retraction) insert fingerprints —
           // with the saturation fence on a failed insert
@@ -823,7 +859,10 @@ final class CrawlEngine(
                      else FilterBucket.of(b, graft.core.BloomFilter64.forCapacity(cap, fpr))
           Iterator(base.addAll(hs))
         }
-      staged("stage:blooms")(io.stage("blooms", wave, newBlooms))
+      // the write also counts saturated buckets, so the next wave's
+      // readBlooms knows they are all clean without a job of its own
+      staged("stage:blooms")(io.stage("blooms", wave,
+        newBlooms.observe(obsSaturated, count(when($"saturated", 1)).as("n"))))
     }
     // seqs are assigned BEFORE the retroactive exclude filter (the oracle's
     // seq counter is monotonic over assignments, not survivors).
@@ -849,7 +888,7 @@ final class CrawlEngine(
           .persist() // write + count both read it; released in-branch below
         Future(timed(wave, "stage:frontier") {
           try {
-            io.stage("frontier", wave + 1, nextFrontierP)
+            io.stage("frontier", wave + 1, sized(nextFrontierP, pagesFetched * 2048L))
             (newAssigned, nextFrontierP.count())
           } finally {
             newFrontierP.unpersist()
@@ -887,11 +926,16 @@ final class CrawlEngine(
       "next_frontier" -> nextCount)
     // bloom_buckets records the bucket count the staged blooms are keyed on;
     // readBlooms rejects persisted filters whose count differs from the
-    // current numPartitions (resume-at-different-parallelism safety)
-    val stats = if (useBloom)
+    // current numPartitions (resume-at-different-parallelism safety).
+    // blooms_clean_gen: the staged buckets hold no saturated one, stamped
+    // with the blooms generation they were written under
+    val stats = if (useBloom) {
+      val clean = obsSaturated.get("n").asInstanceOf[Long] == 0L
       baseStats + ("bloom_buckets" -> nb.toLong) +
-        ("blooms_v" -> CrawlEngine.BloomsVersion)
-    else baseStats
+        ("blooms_v" -> CrawlEngine.BloomsVersion) ++
+        (if (clean) Some("blooms_clean_gen" -> io.stat("gen_blooms").getOrElse(0L))
+         else None)
+    } else baseStats
     io.commitWave(wave, stats, stopReason)
 
     results.unpersist()
@@ -941,10 +985,15 @@ object CrawlEngine {
       UrlCanonicalizer.host(rootCanon), "", 0, 0L, 0)
     io.stage("frontier", 0, Seq(rootEntry).toDS())
     val rootSeen = Seq(rootEntry.url_hash).toDF("url_hash")
+    // the seeded rows are counted by the write itself (an observe()
+    // metric), not by a second pass over extraSeen
+    val obsExtra = org.apache.spark.sql.Observation()
     io.stage("seen", 0,
       if (extraSeen == null) rootSeen
-      else extraSeen.select(col("url_hash")).union(rootSeen))
-    val extraSeenCount = if (extraSeen == null) 0L else extraSeen.count()
+      else extraSeen.select(col("url_hash"))
+        .observe(obsExtra, count(lit(1)).as("n")).union(rootSeen))
+    val extraSeenCount =
+      if (extraSeen == null) 0L else obsExtra.get("n").asInstanceOf[Long]
     io.writeConfig(CrawlConfigCodec.toJson(config))
     val base = Map("max_seq" -> 0L, "next_frontier" -> 1L,
       "start_epoch_ms" -> nowMs)
@@ -1066,6 +1115,39 @@ object CrawlEngine {
   /** Bucket of a url_hash for partition-local seen-cache filters. */
   def bloomBucket(urlHash: Long, numBuckets: Int): Int =
     java.lang.Math.floorMod(urlHash, numBuckets.toLong).toInt
+
+  /** [[bloomBucket]] as a column. Grouping on it (instead of on a closure)
+    * lets the planner see that filter buckets already hash-partitioned on
+    * their `bucket` column are clustered for the cogroup, so only the
+    * other side is shuffled. A cogroup needs both keys to share name, type
+    * and nullability: this is a non-null int named `bucket`, like
+    * [[FilterBucket]]'s field.
+    */
+  private[crawl] def bloomBucketCol(urlHash: Column, numBuckets: Int): Column =
+    coalesce(pmod(urlHash, lit(numBuckets.toLong)).cast("int"), lit(0)).as("bucket")
+
+  /** Exact seen check, probe side: the rows of `rows` whose url_hash is in
+    * `seen` (`how = "left_semi"`) or not in it (`"left_anti"`). `keys` is a
+    * url_hash column covering `rows`' hashes (duplicates allowed) and
+    * `keyCount` bounds its row count.
+    *
+    * While keyCount × 8 B fits spark.sql.autoBroadcastJoinThreshold the
+    * keys are broadcast and `seen` is STREAMED past them (seen ⋉ keys, one
+    * scan, no shuffle); only those hits — at most keyCount hashes — meet
+    * `rows` in the small-side join. Neither the driver nor any broadcast
+    * ever holds `seen` itself, however large it grows. Above the threshold
+    * it is the shuffle join of `rows` against `seen`, hinted to sort-merge
+    * so `seen` can never be picked as a broadcast side by its file size.
+    */
+  private[graft] def seenJoin(spark: SparkSession, rows: DataFrame,
+      seen: DataFrame, keys: DataFrame, keyCount: Long,
+      how: String): DataFrame = {
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold >= 0 && keyCount <= threshold / 8) {
+      val hits = seen.join(broadcast(keys), Seq("url_hash"), "left_semi")
+      rows.join(broadcast(hits), Seq("url_hash"), how)
+    } else rows.join(seen.hint("merge"), Seq("url_hash"), how)
+  }
 
   /** In-page canonical-URL dedup, first occurrence order (D2). */
   def dedupResolve(baseUrl: String, hrefs: Vector[String]): Vector[String] = {

@@ -1,7 +1,8 @@
 package graft.crawl
 
 import graft.core.{CuckooFilter64, UrlCanonicalizer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -34,7 +35,15 @@ import org.apache.spark.sql.expressions.Window
   *
   * Everything is distributed — joins and per-bucket cogroups keyed on
   * url_hash; the driver holds only scalar counts, the exclude-prefix list,
-  * and the O(numPartitions) bucket-kind directory. Crash-atomicity reuses
+  * and the O(numPartitions) bucket-kind directory. The exact seen checks
+  * (which targets are still in `seen`, which re-staged hashes are not) go
+  * through [[CrawlEngine.seenJoin]]: the target and re-staged hashes are
+  * broadcast and `seen` is streamed past them in one scan, so `seen` is
+  * never broadcast or collected; past spark.sql.autoBroadcastJoinThreshold
+  * they fall back to a sort-merge shuffle join against `seen`. The counts
+  * the report and the manifest need ride passes that run anyway: one
+  * aggregate per step over an already-persisted frame, and `seen_total`
+  * as an observe() metric on the seen-generation write. Crash-atomicity reuses
   * the warehouse's manifest contract ([[TableIO.stageGeneration]] /
   * [[TableIO.mergeStats]]): all replacement data is written into invisible
   * next-generation directories first, then ONE atomic manifest replace
@@ -109,17 +118,16 @@ object SeenMaintenance {
     val (schema, genVal) = compactWith(spark, io, name)
     // the read-back count is the OPERATOR's confirmation — the engine's
     // auto-compaction hook calls compactWith directly and skips this job
-    spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(schema))
+    spark.read.schema(schema)
       .parquet(s"${io.warehouse}/${name}_g$genVal/w0").count()
   }
 
   /** Same, over an existing TableIO and without the read-back count — the
     * engine's auto-compaction hook (`CrawlConfig.compactEveryWaves`) runs
-    * this between wave commits. Returns (schemaDdl, newGeneration).
+    * this between wave commits. Returns (schema, newGeneration).
     */
   private[graft] def compactWith(spark: SparkSession, io: TableIO,
-      name: String): (String, Long) = {
+      name: String): (StructType, Long) = {
     require(name == "seen" || name == "unique_blocks",
       s"compactTable supports the grow-only set tables, not '$name'")
     require(io.committedWave >= -1, "compact needs a bootstrapped warehouse")
@@ -153,34 +161,48 @@ object SeenMaintenance {
     // reseed table is the only frontier-shaped table forget may touch)
     val enginePending = io
       .readWave("frontier", c + 1, TableIO.FrontierSchema, lookahead = 1)
-      .select($"url_hash").distinct()
-    val known = targets
-      .join(enginePending, Seq("url_hash"), "left_anti").persist()
-    val requested = known.select($"url_hash").distinct().count()
-    val skippedPending = targets.select($"url_hash").distinct()
-      .join(enginePending, Seq("url_hash"), "left_semi").count()
+      .select($"url_hash").distinct().withColumn("__pending", lit(true))
+    val flaggedTargets = targets
+      .join(enginePending, Seq("url_hash"), "left").persist()
+    // one aggregate materializes the flagged targets and counts both sides
+    val targetCounts = flaggedTargets.agg(
+      count_distinct(when($"__pending".isNull, $"url_hash")),
+      count_distinct(when($"__pending".isNotNull, $"url_hash"))).head()
+    val requested = targetCounts.getLong(0)
+    val skippedPending = targetCounts.getLong(1)
+    val known = flaggedTargets.filter($"__pending".isNull).drop("__pending")
     val stats = Map.newBuilder[String, Long]
 
     // ---- 1. recrawl re-seeding (reseed mode) ------------------------------
     val reseedWave = c + 1
-    val (reseededCount, reseededHashes) = if (!reseed) {
+    // reseed rows an earlier forget left for the next wave, each tagged
+    // with whether this forget's targets replace (or cancel) it; only read
+    // when such rows exist
+    val hasPendingReseed =
+      io.stat("reseed_wave").contains(reseedWave.toLong) &&
+        io.waveExists("reseed", reseedWave, lookahead = 1)
+    def pendingReseed: DataFrame =
+      io.readWave("reseed", reseedWave, TableIO.FrontierSchema, lookahead = 1)
+        .join(known.select($"url_hash").distinct().withColumn("__replaced", lit(true)),
+          Seq("url_hash"), "left")
+    // reseededHashes: one per merged reseed row; reseededRows: their
+    // count; reseedAll: the persisted frame they come from, released at
+    // the end
+    val (reseededCount, reseededHashes, reseededRows, reseedAll) = if (!reseed) {
       // pure retraction CANCELS any pending reseed rows for the targets —
       // a removal request issued after a recrawl request wins, and the
       // retracted hashes must not ride back in at the next wave
-      if (io.stat("reseed_wave").contains(reseedWave.toLong) &&
-          io.waveExists("reseed", reseedWave, lookahead = 1)) {
-        val pending = io.readWave("reseed", reseedWave,
-          TableIO.FrontierSchema, lookahead = 1)
-        val kept = pending.join(known, Seq("url_hash"), "left_anti").persist()
-        val cancelled = pending.count() - kept.count()
+      if (hasPendingReseed) {
+        val pending = pendingReseed
+        val cancelled = pending.filter($"__replaced".isNotNull).count()
         if (cancelled > 0) {
-          stats += io.stageGeneration("reseed", atWave = reseedWave, kept)
+          stats += io.stageGeneration("reseed", atWave = reseedWave,
+            pending.filter($"__replaced".isNull).drop("__replaced"))
           stats += ("next_frontier" ->
             math.max(0L, io.stat("next_frontier").getOrElse(0L) - cancelled))
         }
-        kept.unpersist()
       }
-      (0L, TableIO.emptyDf(spark, "url_hash bigint"))
+      (0L, TableIO.emptyDf(spark, TableIO.SeenSchema), 0L, null)
     } else {
       // one row per target hash: its FIRST frontier appearance (original
       // discovery context — parent, depth), minus rows under a still-active
@@ -210,26 +232,29 @@ object SeenMaintenance {
           "redirect_position")
       // merge with any reseed rows already pending for this wave (repeated
       // forgets before the next run) — the reseed table is generation-
-      // flipped like the others, so the merge is crash-atomic too
-      val pending0 =
-        if (io.stat("reseed_wave").contains(reseedWave.toLong) &&
-            io.waveExists("reseed", reseedWave, lookahead = 1))
-          io.readWave("reseed", reseedWave, TableIO.FrontierSchema, lookahead = 1)
-            .persist() // three counts below derive from it — read disk once
-        else TableIO.emptyDf(spark, TableIO.FrontierSchema)
-      val pending = pending0
-        .join(known, Seq("url_hash"), "left_anti") // re-forgotten: new row wins
-      val merged = pending.unionByName(assigned).persist()
-      val n = merged.count()
-      val pendingKept = pending.count()
-      val nAssigned = n - pendingKept
-      // pending rows REPLACED by this forget ("new row wins") contributed
-      // +1 to next_frontier at their earlier forget, and their replacements
+      // flipped like the others, so the merge is crash-atomic too. __src:
+      // 1 = assigned now, 0 = pending row kept, -1 = pending row replaced
+      // by a re-forgotten target ("new row wins")
+      val fresh = assigned.withColumn("__src", lit(1))
+      val all = (if (!hasPendingReseed) fresh
+        else pendingReseed
+          .withColumn("__src", when($"__replaced".isNull, 0).otherwise(-1))
+          .drop("__replaced")
+          .unionByName(fresh)).persist()
+      val srcCounts = all.agg(
+        count(when($"__src" === 1, 1)),
+        count(when($"__src" === 0, 1)),
+        count(when($"__src" === -1, 1))).head()
+      val nAssigned = srcCounts.getLong(0)
+      val pendingKept = srcCounts.getLong(1)
+      // pending rows REPLACED by this forget contributed +1 to
+      // next_frontier at their earlier forget, and their replacements
       // count again inside nAssigned — subtract them or repeated forgets
-      // drift the fast-empty-gate stat upward (ADVICE r06; the pure-
-      // retraction branch above already decrements symmetrically)
-      val replacedPending = pending0.count() - pendingKept
-      if (n > 0) {
+      // drift the fast-empty-gate stat upward (the pure-retraction branch
+      // above already decrements symmetrically)
+      val replacedPending = srcCounts.getLong(2)
+      val merged = all.filter($"__src" >= 0).drop("__src")
+      if (nAssigned + pendingKept > 0) {
         stats += io.stageGeneration("reseed", atWave = reseedWave, merged)
         stats += ("reseed_wave" -> reseedWave.toLong)
         stats += ("max_seq" -> (maxSeq + nAssigned))
@@ -237,11 +262,7 @@ object SeenMaintenance {
         stats += ("next_frontier" -> math.max(0L,
           io.stat("next_frontier").getOrElse(0L) + nAssigned - replacedPending))
       }
-      val hs = merged.select($"url_hash").distinct().persist()
-      hs.count() // materialize before merged is unpersisted
-      merged.unpersist()
-      pending0.unpersist() // no-op for the empty-frame branch
-      (nAssigned, hs.toDF())
+      (nAssigned, merged.select($"url_hash"), nAssigned + pendingKept, all)
     }
 
     // ---- 2. seen rewrite. Two deltas, both preserving "in frontier ⊆ in
@@ -250,53 +271,71 @@ object SeenMaintenance {
     // .removeAll's safety argument), and re-staged urls whose hashes had
     // been retracted by an EARLIER forget re-enter it (reAdd — a recrawl
     // request must re-fetch exactly once even if the url is rediscovered
-    // as a candidate in the same run). The result becomes generation g+1
-    // as a SINGLE wave-0 partition (copy-on-write snapshot replace; the
-    // seen table is a set, so folding all waves into one partition is
-    // lossless and doubles as compaction).
-    val retract = known.select($"url_hash").distinct()
-      .join(seen, Seq("url_hash"), "left_semi")
-      .join(reseededHashes, Seq("url_hash"), "left_anti").persist()
-    val retractedCount = retract.count()
-    val reAdd = reseededHashes
-      .join(seen, Seq("url_hash"), "left_anti").persist()
-    val reAddCount = reAdd.count()
+    // as a candidate in the same run). Each touched hash is tagged once —
+    // target (k) and/or re-staged (r) — and ONE probe of `seen` tells which
+    // tagged hashes it holds; one aggregate over the persisted op stream
+    // counts both deltas. The result becomes generation g+1 as a SINGLE
+    // wave-0 partition (copy-on-write snapshot replace; the seen table is a
+    // set, so folding all waves into one partition is lossless and doubles
+    // as compaction).
+    val tagged = known.select($"url_hash", lit(true).as("k"), lit(false).as("r"))
+      .unionByName(reseededHashes.select($"url_hash", lit(false).as("k"), lit(true).as("r")))
+      .groupBy($"url_hash").agg(max($"k").as("k"), max($"r").as("r")).persist()
+    val inSeen = CrawlEngine.seenJoin(spark, tagged, seen, tagged.select($"url_hash"),
+      requested + reseededRows, "left_semi").select($"url_hash", lit(true).as("s"))
+    // one op stream: -1 = retract, +1 = re-add
+    val ops = tagged.join(inSeen, Seq("url_hash"), "left")
+      .select($"url_hash",
+        when($"k" && !$"r" && $"s".isNotNull, -1)
+          .when($"r" && $"s".isNull, 1).as("op"))
+      .filter($"op".isNotNull).persist()
+    // the same aggregate gathers the filter buckets the ops land in (at
+    // most 2 × numPartitions ints) for the bucket maintenance below
+    val bucketOf = CrawlEngine.bloomBucketCol($"url_hash",
+      io.stat("bloom_buckets").getOrElse(1L).toInt)
+    val opCounts = ops.agg(
+      count(when($"op" < 0, 1)), count(when($"op" > 0, 1)),
+      collect_set(when($"op" < 0, bucketOf)),
+      collect_set(when($"op" > 0, bucketOf))).head()
+    val retractedCount = opCounts.getLong(0)
+    val reAddCount = opCounts.getLong(1)
+    val deleteBuckets = opCounts.getSeq[Int](2).toSet
+    val addBuckets = opCounts.getSeq[Int](3).toSet
     var rebuilt = 0L
     var cuckooUpdated = 0L
     if (retractedCount > 0 || reAddCount > 0) {
-      val newSeen = seen.join(retract, Seq("url_hash"), "left_anti")
-        .unionByName(reAdd)
+      val obsSeen = Observation()
+      val newSeen = seen
+        .join(ops.filter($"op" < 0).select($"url_hash"), Seq("url_hash"), "left_anti")
+        .unionByName(ops.filter($"op" > 0).select($"url_hash"))
+        .observe(obsSeen, count(lit(1)).as("n"))
       val (genKey, genVal) = io.stageGeneration("seen", atWave = 0, newSeen)
       stats += (genKey -> genVal)
-      val seenAfter = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(TableIO.SeenSchema))
-        .parquet(s"${io.warehouse}/seen_g$genVal/w0").count()
-      stats += ("seen_total" -> math.max(1L, seenAfter))
+      stats += ("seen_total" -> math.max(1L, obsSeen.get("n").asInstanceOf[Long]))
 
       // ---- 3. filter buckets: Bloom→Cuckoo on first retraction -----------
       // (re-reading the staged generation keeps the rebuild input and the
       // committed snapshot byte-identical)
-      val staged = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(TableIO.SeenSchema))
+      val staged = spark.read.schema(TableIO.SeenSchema)
         .parquet(s"${io.warehouse}/seen_g$genVal/w0")
-      val (r, u) =
-        maintainFilterBuckets(spark, io, retract, reAdd, staged, c, stats)
+      val (r, u) = maintainFilterBuckets(spark, io, ops, deleteBuckets,
+        addBuckets, staged, c, stats)
       rebuilt = r; cuckooUpdated = u
     }
-    reAdd.unpersist()
 
     // ---- 4. document removal (operator removal request) ------------------
+    // the rewrite counts the rows it drops as an observe() metric
     val droppedDocs = if (!dropDocuments) 0L else {
-      val docs = io.readAll("documents", TableIO.DocumentsSchema)
       val targetUrls = known.select($"url".as("doc_id")).distinct()
-      val kept = docs.join(targetUrls, Seq("doc_id"), "left_anti")
-      val before = docs.count()
+        .withColumn("__drop", lit(true))
+      val obsDocs = Observation()
+      val kept = io.readAll("documents", TableIO.DocumentsSchema)
+        .join(targetUrls, Seq("doc_id"), "left")
+        .observe(obsDocs, count(when($"__drop".isNotNull, 1)).as("n"))
+        .filter($"__drop".isNull).drop("__drop")
       val (genKey, genVal) = io.stageGeneration("documents", atWave = 0, kept)
       stats += (genKey -> genVal)
-      val after = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(TableIO.DocumentsSchema))
-        .parquet(s"${io.warehouse}/documents_g$genVal/w0").count()
-      before - after
+      obsDocs.get("n").asInstanceOf[Long]
     }
 
     // ---- 5. the single atomic maintenance commit --------------------------
@@ -305,19 +344,22 @@ object SeenMaintenance {
     io.dropOldGenerations("blooms")
     io.dropOldGenerations("reseed")
     if (dropDocuments) io.dropOldGenerations("documents")
-    known.unpersist(); retract.unpersist(); reseededHashes.unpersist()
+    flaggedTargets.unpersist(); tagged.unpersist(); ops.unpersist()
+    if (reseedAll != null) reseedAll.unpersist()
     ForgetReport(requested, retractedCount, reseededCount, droppedDocs,
       rebuilt, cuckooUpdated, skippedPending)
   }
 
-  /** Update the persisted filter buckets for a retraction (`retract`) plus
-    * re-added recrawl hashes (`reAdd`); `newSeen` is the staged post-op seen
-    * snapshot the rebuilds draw from. No-op when the negative cache was
-    * never engaged (readBlooms will rebuild from the already-rewritten seen
-    * table if it engages later).
+  /** Update the persisted filter buckets for an op stream of (url_hash,
+    * op) rows — op -1 retracts a hash, +1 re-adds a recrawl hash — whose
+    * deletes and adds land in `deleteBuckets` / `addBuckets`; `newSeen` is
+    * the staged post-op seen snapshot the rebuilds draw from. No-op when
+    * the negative cache was never engaged (readBlooms will rebuild from the
+    * already-rewritten seen table if it engages later).
     */
   private def maintainFilterBuckets(spark: SparkSession, io: TableIO,
-      retract: DataFrame, reAdd: DataFrame, newSeen: DataFrame,
+      opStream: DataFrame, deleteBuckets: Set[Int], addBuckets: Set[Int],
+      newSeen: DataFrame,
       committedWave: Int,
       stats: scala.collection.mutable.Builder[(String, Long), Map[String, Long]])
       : (Long, Long) = {
@@ -330,25 +372,18 @@ object SeenMaintenance {
     val buckets = io.readWave("blooms", committedWave, TableIO.BloomsSchema)
       .as[FilterBucket]
 
-    // one op stream: -1 = retract, +1 = re-add, keyed by bucket
-    val ops = retract.select($"url_hash", lit(-1).as("op"))
-      .unionByName(reAdd.select($"url_hash", lit(1).as("op")))
-      .as[(Long, Int)].persist()
+    val ops = opStream.select($"url_hash", $"op").as[(Long, Int)]
+    val affected = deleteBuckets ++ addBuckets
+    if (affected.isEmpty) return (0L, 0L)
 
     // bucket-kind directory: O(numPartitions) rows of 3 ints — the only
     // driver-side structure, bounded by parallelism, never by data
     val kinds = buckets.select($"bucket", $"kind", $"saturated")
       .collect().map(r => r.getInt(0) -> ((r.getInt(1), r.getBoolean(2)))).toMap
-    val touched = ops.map { case (h, op) =>
-      (CrawlEngine.bloomBucket(h, nb), op)
-    }.distinct().collect() // bounded: ≤ 2 * numPartitions pairs
-    val affected = touched.map(_._1).toSet
-    if (affected.isEmpty) { ops.unpersist(); return (0L, 0L) }
     // a bucket needs a full rebuild (to Cuckoo) iff it LOSES a hash while
     // its current representation cannot delete (Bloom, or saturated, or
     // inconsistent/absent); adds alone never force a rebuild
-    val hasDelete = touched.filter(_._2 < 0).map(_._1).toSet
-    val rebuildSet = hasDelete.filter { b =>
+    val rebuildSet = deleteBuckets.filter { b =>
       kinds.get(b).forall { case (k, sat) => k == FilterBucket.KindBloom || sat }
     }
     val updateSet = affected -- rebuildSet
@@ -402,7 +437,6 @@ object SeenMaintenance {
     val newBuckets = untouched.toDF()
       .unionByName(rebuilt.toDF()).unionByName(updated.toDF())
     stats += io.stageGeneration("blooms", atWave = committedWave, newBuckets)
-    ops.unpersist()
-    (rebuildSet.size.toLong, hasDelete.diff(rebuildSet).size.toLong)
+    (rebuildSet.size.toLong, deleteBuckets.diff(rebuildSet).size.toLong)
   }
 }

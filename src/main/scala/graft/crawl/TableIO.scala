@@ -1,6 +1,7 @@
 package graft.crawl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
 import java.nio.charset.StandardCharsets
 
@@ -222,14 +223,13 @@ final class TableIO(val warehouse: String, spark: SparkSession) {
   }
 
   /** Union of all visible wave partitions of a table. */
-  def readAll(name: String, schemaDdl: String, lookahead: Int = 0): DataFrame = {
+  def readAll(name: String, schema: StructType, lookahead: Int = 0): DataFrame = {
     val maxWave = committedWave + lookahead
     val root = tableRoot(name) // resolve the generation once, not per wave
     val dirs = (0 to maxWave).map(w => s"$root/w$w")
       .filter(exists)
-    if (dirs.isEmpty) emptyDf(spark, schemaDdl)
-    else spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-      .parquet(dirs: _*)
+    if (dirs.isEmpty) emptyDf(spark, schema)
+    else spark.read.schema(schema).parquet(dirs: _*)
   }
 
   /** Persisted crawl config (the reference's `_wordslab/config.txt`
@@ -249,47 +249,48 @@ final class TableIO(val warehouse: String, spark: SparkSession) {
     wave <= committedWave + lookahead && exists(waveDir(name, wave))
 
   /** Rows of exactly one visible wave partition. */
-  def readWave(name: String, wave: Int, schemaDdl: String, lookahead: Int = 0): DataFrame = {
+  def readWave(name: String, wave: Int, schema: StructType, lookahead: Int = 0): DataFrame = {
     val d = waveDir(name, wave)
-    if (wave > committedWave + lookahead || !exists(d)) emptyDf(spark, schemaDdl)
-    else spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-      .parquet(d)
+    if (wave > committedWave + lookahead || !exists(d)) emptyDf(spark, schema)
+    else spark.read.schema(schema).parquet(d)
   }
 }
 
 object TableIO {
-  val FrontierSchema =
+  // each table's schema, parsed from its DDL once — every read of every
+  // wave reuses these instead of re-running the SQL parser
+  val FrontierSchema: StructType = StructType.fromDDL(
     "url string, url_hash bigint, host string, parent_url string, depth int, " +
     "seq bigint, wave int, is_retry boolean, retry_count int, " +
-    "retry_after_sec int, redirect_position int"
-  val SeenSchema = "url_hash bigint"
-  val UniqueBlocksSchema = "text_hash bigint, words int"
-  val DocumentsSchema =
+    "retry_after_sec int, redirect_position int")
+  val SeenSchema: StructType = StructType.fromDDL("url_hash bigint")
+  val UniqueBlocksSchema: StructType = StructType.fromDDL("text_hash bigint, words int")
+  val DocumentsSchema: StructType = StructType.fromDDL(
     "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, " +
-    "title string, lang string, total_words bigint, unique_words bigint, wave int, seq bigint"
-  val MetricsSchema =
+    "title string, lang string, total_words bigint, unique_words bigint, wave int, seq bigint")
+  val MetricsSchema: StructType = StructType.fromDDL(
     "wave int, partition_id int, pages bigint, errors bigint, words bigint, " +
-    "fetch_ms double, extract_ms double"
-  val HostsSchema = "host string, crawl_delay_ms bigint, robots_txt string, discovered_wave int"
-  val ExcludesSchema = "pattern string, wave int"
-  val Window10Schema = "url string, pct double, ord int"
-  val HostCountsSchema = "host string, pages bigint"
+    "fetch_ms double, extract_ms double")
+  val HostsSchema: StructType = StructType.fromDDL(
+    "host string, crawl_delay_ms bigint, robots_txt string, discovered_wave int")
+  val ExcludesSchema: StructType = StructType.fromDDL("pattern string, wave int")
+  val Window10Schema: StructType = StructType.fromDDL("url string, pct double, ord int")
+  val HostCountsSchema: StructType = StructType.fromDDL("host string, pages bigint")
   // v2 (manifest stat blooms_v=2): kind-aware filter buckets — Bloom by
   // default, Cuckoo after a seen-retraction transitions the bucket
   // (FilterBucket). v1 warehouses rebuild from the authoritative seen table.
-  val BloomsSchema = "bucket int, kind int, num_bits bigint, num_hashes int, " +
-    "count bigint, saturated boolean, bits binary"
-  val FetchLogSchema =
+  val BloomsSchema: StructType = StructType.fromDDL(
+    "bucket int, kind int, num_bits bigint, num_hashes int, " +
+    "count bigint, saturated boolean, bits binary")
+  val FetchLogSchema: StructType = StructType.fromDDL(
     "wave int, seq bigint, url string, host string, depth int, status int, " +
     "content_type string, no_follow boolean, is_error boolean, retry_count int, " +
     "n_links int, n_spans int, total_words bigint, fetch_ms double, " +
-    "extract_ms double, css_ms double"
-  val ErrorsSchema =
+    "extract_ms double, css_ms double")
+  val ErrorsSchema: StructType = StructType.fromDDL(
     "wave int, seq bigint, url string, host string, status int, " +
-    "error_class string, error_message string, error_stack string, retry_count int"
+    "error_class string, error_message string, error_stack string, retry_count int")
 
-  def emptyDf(spark: SparkSession, schemaDdl: String): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
+  def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 }

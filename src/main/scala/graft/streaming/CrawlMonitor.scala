@@ -4,6 +4,7 @@ import graft.crawl.TableIO
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import org.apache.spark.sql.types.StructType
 
 /** Cumulative per-host fetch counters held in stream GroupState (top-level:
   * the state Encoder's generated code needs a public constructor).
@@ -55,9 +56,9 @@ object CrawlMonitor {
     waveTableStream(spark, warehouse, "fetch_log", TableIO.FetchLogSchema)
 
   private def waveTableStream(spark: SparkSession, warehouse: String,
-      table: String, schemaDdl: String): DataFrame =
+      table: String, schema: StructType): DataFrame =
     spark.readStream
-      .schema(schemaDdl)
+      .schema(schema)
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", "*.parquet")
       // a resumed wave overwrites its staged dir; listed-but-deleted part
@@ -129,7 +130,7 @@ object CrawlMonitor {
     */
   final class CommittedWaveTailer(
       spark: SparkSession, warehouse: String, table: String,
-      schemaDdl: String, checkpointDir: Option[String] = None) {
+      schema: StructType, checkpointDir: Option[String] = None) {
 
     private val io = new TableIO(warehouse, spark)
     private var last: Int = readCheckpoint().getOrElse(-2)
@@ -167,7 +168,7 @@ object CrawlMonitor {
       while (last < target) {
         val w = last + 1
         if (io.waveExists(table, w)) {
-          onBatch(w, io.readWave(table, w, schemaDdl))
+          onBatch(w, io.readWave(table, w, schema))
           n += 1
         }
         last = w

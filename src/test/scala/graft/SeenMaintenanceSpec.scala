@@ -159,6 +159,39 @@ class SeenMaintenanceSpec extends AnyFunSuite {
     assert(io2.readAll("documents", TableIO.DocumentsSchema).count() == docs0)
   }
 
+  test("two reseed forgets in a row: a re-forgotten pending row is replaced," +
+      " and max_seq / next_frontier count each staged row once") {
+    val wh = Files.createTempDirectory("graft-forget-twice").toString
+    val io = crawl(wh)
+    val c0 = io.committedWave
+    val maxSeq0 = io.stat("max_seq").get
+    val next0 = io.stat("next_frontier").get
+
+    val r1 = SeenMaintenance.forgetUrls(spark, wh, Seq(url(2), url(3)), reseed = true)
+    assert(r1.reseeded == 2)
+    assert(io.stat("max_seq").contains(maxSeq0 + 2))
+    assert(io.stat("next_frontier").contains(next0 + 2))
+
+    // url(3) is already pending: its row is replaced (new row wins), so it
+    // adds a seq but no frontier entry; url(5) is new on both counts
+    val r2 = SeenMaintenance.forgetUrls(spark, wh, Seq(url(3), url(5)), reseed = true)
+    assert(r2.requestedHashes == 2)
+    assert(r2.reseeded == 2)
+    assert(r2.retractedSeen == 0)
+    assert(io.stat("max_seq").contains(maxSeq0 + 4))
+    assert(io.stat("next_frontier").contains(next0 + 3))
+    val reseedRows = io.readWave("reseed", c0 + 1, TableIO.FrontierSchema, lookahead = 1)
+      .select("url", "seq").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(reseedRows.keySet == Set(url(2), url(3), url(5)))
+    assert(reseedRows(url(3)) > maxSeq0 + 2, "the replacement row carries a new seq")
+
+    // the resumed crawl fetches each of the three exactly once
+    val io2 = crawl(wh)
+    val refetched = io2.readAll("fetch_log", TableIO.FetchLogSchema)
+      .filter(s"wave > $c0").select("url").collect().map(_.getString(0)).toSeq
+    assert(refetched.sorted == Seq(url(2), url(3), url(5)).sorted)
+  }
+
   // ---- pure retraction: the Bloom→Cuckoo transition ------------------------
 
   test("retraction transitions affected buckets to cuckoo, removes the" +
