@@ -2,9 +2,10 @@ package graft.crawl
 
 import graft.core.{ScopeFilter, UrlCanonicalizer}
 import graft.extract.{DocAnalysis, HtmlParser, HtmlToSpans, PdfToSpans}
-import org.apache.spark.TaskContext
+import org.apache.spark.{HashPartitioner, Partitioner, RangePartitioner, TaskContext}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -93,14 +94,27 @@ private final class BroadcastSyntheticFetcher(
   *    in one partition (politeness is partition-local, J3); the per-host
   *    per-wave cap (waveBudget / crawlDelay) bounds skew at the SCHEDULING
   *    level — a hot host can never dominate a wave (SURVEY.md §4);
-  *  - the exact seen check is probe-side ([[CrawlEngine.seenJoin]]): the
-  *    wave's candidate hashes are broadcast and `seen` is streamed past
-  *    them, so only the hits reach the small-side anti-join and `seen` is
-  *    never broadcast or collected; when the candidates outgrow
-  *    spark.sql.autoBroadcastJoinThreshold it falls back to a sort-merge
-  *    shuffle join of candidates and `seen`;
-  *  - dense seq assignment is sort + zipWithIndex — two linear passes, no
-  *    single-partition window bottleneck (W3);
+  *  - the exact seen check is probe-side ([[CrawlEngine.absentFrom]]): the
+  *    wave's maybe-seen candidate hashes are broadcast and `seen` is
+  *    streamed past them, so only the hits (at most one per key) reach the
+  *    driver and `seen` is never broadcast or collected; when the
+  *    candidates outgrow spark.sql.autoBroadcastJoinThreshold it falls back
+  *    to a sort-merge anti join of candidates and `seen`. Block ownership
+  *    probes `unique_blocks` the same way;
+  *  - the next frontier's seqs ride one range shuffle on parent_seq: each
+  *    partition is sorted by (parent_seq, link_index), the per-page link
+  *    cap is a running count in that order, and zipWithIndex numbers the
+  *    survivors (one count job, then the numbering pass) — no window and
+  *    no single-partition bottleneck (W3);
+  *  - codegen budget: a wave compiles 70 or fewer distinct classes (Spark
+  *    keys its codegen cache by class loader too, so a whole-stage class
+  *    counts twice: driver and executor) and carries no per-wave literal in
+  *    generated code (the next wave is a data column), so steady waves fit
+  *    Spark's default 100-entry codegen cache and compile almost nothing.
+  *    The candidate, block-ownership and Bloom passes are plain RDD passes
+  *    over the cached extract rows (read by ordinal), the politeness split
+  *    runs inside the fetch pass, and the extract totals and metrics rows
+  *    come from one partition fold — none of them generates code;
   *  - per-host state NEVER lives on the driver: crawl delays, per-domain
   *    allowances AND robots rules are all columns joined in from the
   *    `hosts` / `host_counts` tables; the only per-host driver collect is
@@ -131,7 +145,7 @@ final class CrawlEngine(
     */
   private[graft] var lastWaveDelayMapSize: Int = -1
 
-  /** Whether the last wave ran the partition-local bloom cogroup path
+  /** Whether the last wave ran the partition-local Bloom filter path
     * (test hook: the seeded-seen scale tests assert the negative cache
     * genuinely engaged past bloomMinSeenRows).
     */
@@ -151,7 +165,7 @@ final class CrawlEngine(
 
   /** Bloom negative-cache over seen url_hashes, PARTITION-LOCAL: one filter
     * per url_hash bucket, persisted as the per-wave `blooms` table and
-    * applied by cogrouping candidates with their bucket's filter — no
+    * applied by zipping candidates with their bucket's filter — no
     * filter bits and no hashes ever pass through the driver, so the path
     * is identical at a 10^10-URL frontier. Candidates that definitely were
     * never seen skip the exact anti-join entirely; "maybe seen" ones still
@@ -174,14 +188,15 @@ final class CrawlEngine(
   /** Previous wave's committed bucket filters; absent (bootstrap, legacy
     * warehouse, or a kill between stage and commit) OR keyed with a
     * DIFFERENT bucket count (the `bloom_buckets` manifest stat — resuming
-    * at a different parallelism would cogroup candidates against the wrong
+    * at a different parallelism would zip candidates with the wrong
     * bucket's filter, i.e. Bloom FALSE NEGATIVES) → rebuild from the
-    * authoritative seen table, distributedly. Returned hash-partitioned on
-    * the `bucket` column: the caller persists it once, and both per-wave
-    * cogroups (apply and update), grouping on that column, find it already
-    * clustered — the filter bits cross the shuffle once per wave.
+    * authoritative seen table, distributedly. Returned with bucket b in
+    * partition b ([[CrawlEngine.byBucket]]): the caller persists it once,
+    * and both per-wave passes (apply and update) zip their bucket-
+    * partitioned candidates with it — the filter bits cross the shuffle
+    * once per wave.
     */
-  private def readBlooms(wave: Int): Dataset[FilterBucket] = {
+  private def readBlooms(wave: Int): RDD[FilterBucket] = {
     val cap = perBucketCapacity
     val fpr = config.bloomFpr
     val nb = numPartitions
@@ -238,10 +253,7 @@ final class CrawlEngine(
             hs.foreach { h => bf.add(h); n += 1 }
             FilterBucket.of(b, bf, n)
           }
-    // map(identity) re-encodes the rows as FilterBucket, so `bucket` is
-    // non-null on every branch (parquet reads it as nullable), matching the
-    // candidates' key for the cogroup
-    buckets.map(identity).repartition(nb, $"bucket")
+    CrawlEngine.byBucket(buckets.rdd, nb)(_.bucket)
   }
 
   private def loadState(): Unit = {
@@ -328,8 +340,12 @@ final class CrawlEngine(
     }
   }
 
+  /** Janino compiles so far in this JVM (Spark's codegen cache misses). */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Process one wave; false = frontier empty, crawl complete. */
   def runWave(wave: Int): Boolean = {
+    val compiles0 = compiles
     loadState()
     if (stopReason.nonEmpty) return false
     // fast empty check from the previous commit's lineage stats (the Spark
@@ -430,62 +446,69 @@ final class CrawlEngine(
       .union(freshDelays) // fresh hosts have no table row yet, so no dupes
     val defaultDelay = config.effectiveDelayMs(0)
     val waveBudget = config.waveBudgetMs
-    val hostRank = Window.partitionBy($"host").orderBy($"seq")
-    val ranked0 = frontier.withColumn("host_rank", row_number().over(hostRank))
-      .join(delayCols, Seq("host"), "left")
+    val capped = frontier.join(delayCols, Seq("host"), "left")
       .withColumn("__cap", greatest(lit(1L),
         floor(lit(waveBudget) /
           greatest(lit(1L), coalesce($"crawl_delay_ms", lit(defaultDelay))))))
       .drop("crawl_delay_ms")
-    val ranked =
+    val allowed =
       if (config.maxPagesPerDomain > 0) {
         val counts =
           if (io.waveExists("host_counts", wave - 1))
             io.readWave("host_counts", wave - 1, TableIO.HostCountsSchema)
           else Seq.empty[(String, Long)].toDF("host", "pages")
         val maxPerDomain = config.maxPagesPerDomain
-        ranked0.join(counts.select($"host", $"pages".as("__crawled")),
+        capped.join(counts.select($"host", $"pages".as("__crawled")),
             Seq("host"), "left")
-          .filter($"host_rank" <=
+          .withColumn("__allow",
             greatest(lit(0L), lit(maxPerDomain) - coalesce($"__crawled", lit(0L))))
           .drop("__crawled")
-      } else ranked0
-    val dueByHost = ranked.filter($"host_rank" <= $"__cap")
-      .drop("host_rank", "__cap")
-    val carry = ranked.filter($"host_rank" > $"__cap")
-      .drop("host_rank", "__cap")
-      .withColumn("wave", lit(wave + 1))
-    // global page budget truncates in deterministic seq order (wave-level
-    // MaxPagesToCrawl; overflow entries are dropped, matching the oracle)
-    val due =
-      if (config.maxPagesToCrawl > 0) {
-        val budget = math.max(0L, config.maxPagesToCrawl - pagesTotal)
-        CrawlEngine.assignSeq(spark, dueByHost, Seq("seq"), 0L, "gidx")
-          .filter($"gidx" < budget).drop("gidx")
-      } else dueByHost
+      } else capped.withColumn("__allow", lit(Long.MaxValue))
 
     // ---- 3a. fetch: host-bucketed partitions (politeness is partition-
     //          local state; one host never spans two partitions) -----------
     // repartition hashes the KEY itself — never pre-bucket with pmod, or the
     // partitioner re-hashes the bucket ids and collides them (observed 32→20
     // occupied partitions with 3x skew). hash(host) keeps one host in exactly
-    // one partition, which is the politeness requirement.
-    val fetched = due.as[FrontierEntry]
-      .repartition(numPartitions, $"host")
+    // one partition, which is the politeness requirement. Each partition
+    // arrives in (host, seq) order, so the fetch pass ranks every host's
+    // entries itself (CrawlEngine.politeness): no window, no second shuffle,
+    // and the carried entries come out of the same pass.
+    val byHost = allowed.repartition(numPartitions, $"host")
       .sortWithinPartitions($"host", $"seq")
-      .mapPartitions { entries =>
-        // stylesheet cache: hosts are partition-local, so this caches each
-        // host's shared sheets for the whole task
-        val cssCache = scala.collection.mutable.Map.empty[String, String]
-        entries.map(e => CrawlEngine.fetchOne(fetcherL, e, cssCache))
+      .select(struct(TableIO.FrontierSchema.fieldNames.toSeq.map(col): _*),
+        $"__cap", $"__allow")
+      .as[(FrontierEntry, Long, Long)]
+    // global page budget truncates the due entries in deterministic seq
+    // order (wave-level MaxPagesToCrawl; overflow entries are dropped,
+    // matching the oracle): the seq of the last due entry within budget
+    val lastDueSeq =
+      if (config.maxPagesToCrawl > 0) {
+        val budget = math.max(0L, config.maxPagesToCrawl - pagesTotal)
+        val dueSeqs = byHost.mapPartitions(rows =>
+          CrawlEngine.politeness(rows).collect { case (e, true) => e.seq })
+        if (budget == 0) -1L
+        else CrawlEngine.assignSeq(spark, dueSeqs.toDF("seq"), Seq("seq"), 0L, "gidx")
+          .filter($"gidx" === budget - 1).select($"seq").as[Long].collect()
+          .headOption.getOrElse(Long.MaxValue)
+      } else Long.MaxValue
+    val fetched = byHost.mapPartitions { rows =>
+      // stylesheet cache: hosts are partition-local, so this caches each
+      // host's shared sheets for the whole task
+      val cssCache = scala.collection.mutable.Map.empty[String, String]
+      CrawlEngine.politeness(rows).collect {
+        case (e, true) if e.seq <= lastDueSeq => CrawlEngine.fetchOne(fetcherL, e, cssCache)
+        case (e, false) => CrawlEngine.carried(e)
       }
+    }
 
     // materialize the fetch stage before the extract shuffle: measured 5x
     // faster than leaving both exchanges in one AQE plan (the fetch subtree
     // otherwise re-executes during query-stage re-optimization), and the
-    // count doubles as the pages-crawled figure
+    // extract fold below counts the pages. A no-op write materializes the
+    // cache without an aggregate plan's generated classes
     val fetchedP = fetched.persist()
-    val pagesFetched = timed(wave, "fetch")(fetchedP.count())
+    timed(wave, "fetch")(fetchedP.write.format("noop").mode("overwrite").save())
 
     // ---- 3b. extract: salted even repartition — hot-host skew constrains
     //          FETCH PACING only; parsing is embarrassingly parallel -------
@@ -494,170 +517,125 @@ final class CrawlEngine(
       .repartition(numPartitions, $"seq")
       .mapPartitions { pages =>
         val pid = TaskContext.getPartitionId()
-        pages.map(p => CrawlEngine.extractOne(p, pid, extractCost))
+        pages.filter(!_.carry).map(p => CrawlEngine.extractOne(p, pid, extractCost))
       }
       .persist()
-    // the same pass also counts the wave's out-links: an upper bound on
-    // the candidate keys that the exact seen check sizes its join by
-    val (errorsWave, contentCharsWave, botBlockedWave, outLinksWave) =
-      timed(wave, "extract") {
-        if (pagesFetched == 0) (0L, 0L, 0L, 0L)
-        else {
-          val r = results.toDF().agg(
-            sum(when($"is_error", 1L).otherwise(0L)),
-            sum($"content_chars".cast("long")),
-            sum(when($"status" === HttpFetcher.BotProtectionStatus, 1L).otherwise(0L)),
-            sum(size($"out_links").cast("long"))).head()
-          def longAt(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
-          (longAt(0), longAt(1), longAt(2), longAt(3))
-        }
-      }
+    // ---- 3c. extract totals + per-partition metrics lineage (A1 analog) --
+    // One partition-local fold over the cached rows materializes `results`
+    // and yields the per-partition `metrics` rows (O(numPartitions), they
+    // reach the driver) plus the wave totals: pages, errors, content chars,
+    // bot-wall hits, and the out-link and text-block counts — upper bounds
+    // on the keys the exact seen and block-ownership checks size their
+    // probes by. No shuffle and no generated code: `results` keeps the
+    // extract stage's partitioning, whose rows carry their own partition's id.
+    val totals = timed(wave, "extract")(CrawlEngine.foldResults(results))
+    val pagesFetched = totals.pages
 
     // ---- 4. text-block analysis + first-wins dedup (D3/W2) ---------------
-    // Only UNIQUENESS needs cross-doc work; totals/language were folded
-    // locally in the extract mapPartitions (PageResult.total_words/lang).
-    val blocks = results.flatMap { r =>
-      DocAnalysis.analyzableItems(r.spans).map(it =>
-        (r.seq, it.offset, it.text_hash, it.words))
-    }.toDF("seq", "offset", "text_hash", "words")
-
-    // first occurrence within the wave, by deterministic (seq, offset) order
-    val firstWin = Window.partitionBy($"text_hash").orderBy($"seq", $"offset")
-    val withRn = blocks.withColumn("rn", row_number().over(firstWin))
-    // not already owned by a previous wave (cross-wave anti-join semantics,
-    // expressed as left join + null test so no self-join lineage is needed)
+    // Only UNIQUENESS needs cross-doc work; totals/language and the block
+    // refs were folded locally in the extract mapPartitions. First
+    // occurrence within the wave by (seq, offset), then not already owned
+    // by a previous wave: probed against `unique_blocks` like the seen
+    // check, in plain RDD passes.
     val uniqueBlocksTable = io.readAll("unique_blocks", TableIO.UniqueBlocksSchema)
-    val newUnique = withRn.join(
-        uniqueBlocksTable.select($"text_hash").withColumn("prev", lit(true)),
-        Seq("text_hash"), "left")
-      .filter($"rn" === 1 && $"prev".isNull)
-      .select($"seq", $"text_hash", $"words")
+    val newUnique = CrawlEngine.absentFrom(spark,
+        CrawlEngine.firstBlocks(results, numPartitions), uniqueBlocksTable,
+        "text_hash", totals.blocks)(_.text_hash, _ => true)
       .persist()
 
-    val uniquePerDoc = newUnique.groupBy($"seq")
-      .agg(sum($"words").as("unique_words"))
-      .withColumnRenamed("seq", "u_seq")
+    val uniquePerDoc = newUnique.map(b => (b.seq, b.words.toLong))
+      .reduceByKey(_ + _).toDF("u_seq", "unique_words")
 
     val docs = results.toDF()
       .join(uniquePerDoc, $"seq" === $"u_seq", "inner") // inner: unique_words>0 implied
       .filter($"unique_words" > 0)
       .select($"url".as("doc_id"), $"spans", $"title", $"lang",
         $"total_words", $"unique_words", $"wave", $"seq")
-
     // ---- 5. candidate links → seen updates + next frontier (D1/J1/W3) ----
-    val rawCand = results.flatMap { r =>
-      // a redirect target continues its parent's 3xx chain; ordinary links
-      // reset the chain (PageRequester.cs:86-141 redirect bookkeeping)
-      val rp = if (r.status >= 300 && r.status < 400) r.redirect_position + 1 else 0
-      r.out_links.zipWithIndex.map { case (link, idx) =>
-        (r.seq, r.url, r.depth, idx, link,
-          UrlCanonicalizer.urlHash(link), UrlCanonicalizer.host(link), rp)
-      }
-    }.toDF("parent_seq", "parent_url", "parent_depth", "link_index", "url",
-      "url_hash", "host", "redirect_position")
-
-    // within-wave first occurrence wins, deterministically (W2 analog)
-    val candWin = Window.partitionBy($"url_hash").orderBy($"parent_seq", $"link_index")
-    val waveDistinct = rawCand.withColumn("crn", row_number().over(candWin))
-      .filter($"crn" === 1).drop("crn")
-
-    // cross-wave: never-seen candidates only (D1 anti-join on hashed urls),
-    // with the partition-local Bloom negative-cache peeling off
-    // definitely-new candidates so only "maybe seen" rows pay the join
-    // (SURVEY.md §7 step 7). Candidates cogroup with their url_hash
-    // bucket's filter — the filter bits stay on executors. The exact check
-    // streams `seen` past the candidate keys (seenJoin), sized by the
-    // wave's out-link count — a bound on the keys that costs no job.
+    // One fused pipeline of plain RDD passes between the cached extract
+    // rows and the staged tables, so it adds no generated code: the
+    // candidates are shuffled into their url_hash bucket's partition,
+    // sorted by (url_hash, parent_seq, link_index), and zipped with that
+    // bucket's filter, so one streaming pass keeps each hash's first
+    // occurrence and flags it (definitely new / maybe seen); the exact seen
+    // check probes only the maybe-seen hashes; the robots join and filters
+    // follow, and the per-page cap rides the seq sort. The filter bits stay
+    // on executors; with the Bloom path off every candidate is "maybe seen".
+    val cands = CrawlEngine.candidateLinks(results)
     val seenTable = io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
     val nb = numPartitions
-    var flagged: DataFrame = null
     // snapshot the engage decision for the whole wave (seenRowsTotal moves
     // at the end of the wave; flipping mid-wave would desync prevBlooms)
     val useBloom = bloomEnabled
     lastWaveBloomEngaged = useBloom
     // one read of the previous wave's filters serves both the apply-side
-    // cogroup here and the update cogroup at stage time
-    val prevBlooms = if (useBloom) readBlooms(wave).persist() else null
-    def unseen(cands: DataFrame): DataFrame = CrawlEngine.seenJoin(spark,
-      cands, seenTable, cands.select($"url_hash"), outLinksWave, "left_anti")
-    val notSeen = (if (useBloom) {
-      flagged = waveDistinct
-        .groupBy(CrawlEngine.bloomBucketCol($"url_hash", nb)).as[Int, CandidateLink]
-        .cogroup(prevBlooms.groupBy($"bucket").as[Int, FilterBucket]) { (_, cands, blooms) =>
-          if (blooms.hasNext) {
-            val bf = blooms.next().filter
-            cands.map(c => (c, bf.mightContain(c.url_hash)))
-          } else cands.map(c => (c, false)) // empty bucket: definitely new
-        }.toDF("cand", "maybe_seen")
-        .select($"cand.*", $"maybe_seen")
-        .persist()
-      val definitelyNew = flagged.filter(!$"maybe_seen").drop("maybe_seen")
-      definitelyNew.unionByName(
-        unseen(flagged.filter($"maybe_seen").drop("maybe_seen")))
-    } else unseen(waveDistinct)).persist()
-
-    // every evaluated candidate becomes known — pass or fail (AddKnownUri).
-    // The wave's seen-added total rides the stage:seen write as an
-    // observe() metric (obsSeen, read after the staging futures complete)
-    // instead of a dedicated count job; the persisted notSeen is
-    // materialized lazily by its first staging consumer — concurrent
-    // cache-miss computation is serialized per block by the BlockManager
-    // (the step-8 staging contract). The retired design collect()ed
-    // per-host candidate counts here to scope a robots broadcast —
-    // O(wave candidate hosts) through the driver, the last crawl
-    // structure that grew with wave width. Gone: robots rules are a
-    // join column now, below.
-    val obsSeen = org.apache.spark.sql.Observation()
-    val seenAdds = notSeen.select($"url_hash")
-      .observe(obsSeen, count(lit(1)).as("n"))
+    // pass here and the update pass at stage time
+    val prevBlooms =
+      if (useBloom) readBlooms(wave).persist()
+      else CrawlEngine.byBucket(spark.sparkContext.emptyRDD[FilterBucket], nb)(_.bucket)
+    val flagged = CrawlEngine.flagFirsts(cands, prevBlooms, useBloom, nb).persist()
 
     // robots matching is a JOIN of candidates against the hosts TABLE on
     // `host` (plus this wave's freshly-fetched states, not yet committed),
-    // with the pure matcher evaluated per row on the robots_txt column
-    // riding the join — fully distributed. Hosts never seen before have
-    // no table row, read null → Empty → pass (their robots are fetched
-    // when they become frontier — reference semantics). Neither the
-    // driver nor any broadcast ever holds the robots corpus or even this
-    // wave's slice of it; at a 10^7-candidate-host wave this stage costs
-    // the driver nothing. RobotsCache amortizes the per-row parse to once
-    // per distinct robots body per executor thread (same-host rows are
+    // with the pure matcher evaluated per row on the robots text riding
+    // the join — fully distributed. Hosts never seen before have no table
+    // row, read None → Empty → pass (their robots are fetched when they
+    // become frontier — reference semantics). Neither the driver nor any
+    // broadcast ever holds the robots corpus or even this wave's slice of
+    // it; at a 10^7-candidate-host wave this stage costs the driver
+    // nothing. RobotsCache amortizes the per-row parse to once per
+    // distinct robots body per executor thread (same-host rows are
     // contiguous after the join shuffle, so the memo hit rate is ~100%).
     val freshRobots = newHostStates.select($"host", $"robots_txt")
     val robotsCols = hostsTbl.select($"host", $"robots_txt")
       .unionByName(freshRobots) // fresh hosts have no table row yet: no dupes
-
     val scope = config.scope
     val root = rootCanon
     val maxDepth = config.maxDepth
+    val maxRedirects = config.maxRedirects
     val userAgent = config.userAgent
     val excludesBc = spark.sparkContext.broadcast(excludedPrefixes)
-    val passesFilters = udf((url: String, robotsTxt: String, parentDepth: Int) => {
-      parentDepth + 1 <= maxDepth &&
-      ScopeFilter.shouldCrawl(scope, url, root) &&
-      RobotsCache.compiled(robotsTxt)
-        .allowed(UrlCanonicalizer.pathAndQuery(url), userAgent) &&
-      !excludesBc.value.exists(url.startsWith)
-    })
-    val perPage = Window.partitionBy($"parent_seq").orderBy($"link_index")
-    val passing = notSeen
-      .join(robotsCols, Seq("host"), "left")
-      .filter(passesFilters($"url", coalesce($"robots_txt", lit("")), $"parent_depth"))
-      .drop("robots_txt")
-      .filter($"redirect_position" <= config.maxRedirects) // chain bound
-      .withColumn("page_rank", row_number().over(perPage))
-      .filter($"page_rank" <= config.maxLinksPerPage).drop("page_rank")
 
-    val newFrontier = CrawlEngine.assignSeq(spark,
-        passing.select($"url", $"url_hash", $"host", $"parent_url",
-          ($"parent_depth" + 1).as("depth"), $"parent_seq", $"link_index",
-          $"redirect_position"),
-        Seq("parent_seq", "link_index"), prevMaxSeq + 1)
+    // the seen probe collects its hits and the seq sort's range
+    // partitioner samples its input: the chain's eager work, before staging
+    val (notSeen, newFrontier) = timed(wave, "candidates") {
+      val notSeen = CrawlEngine.absentFrom(spark, flagged, seenTable, "url_hash",
+        totals.outLinks)(_.url_hash, _.maybe_seen).persist()
+      val passing = notSeen.keyBy(_.host)
+        .leftOuterJoin(robotsCols.as[(String, String)].rdd, nb)
+        .flatMap { case (_, (c, robotsTxt)) =>
+          val ok = c.parent_depth + 1 <= maxDepth &&
+            c.redirect_position <= maxRedirects && // chain bound
+            ScopeFilter.shouldCrawl(scope, c.url, root) &&
+            RobotsCache.compiled(robotsTxt.getOrElse(""))
+              .allowed(UrlCanonicalizer.pathAndQuery(c.url), userAgent) &&
+            !excludesBc.value.exists(c.url.startsWith)
+          if (ok) Some(c) else None
+        }
+      (notSeen, CrawlEngine.capAndNumber(passing, config.maxLinksPerPage,
+        prevMaxSeq + 1, nb).toDS())
+    }
+
+    // every evaluated candidate becomes known — pass or fail (AddKnownUri).
+    // The wave's seen-added total rides the stage:seen write as an
+    // observe() metric (obsSeen, read after the staging futures complete)
+    // instead of a dedicated count job. The retired design collect()ed
+    // per-host candidate counts here to scope a robots broadcast —
+    // O(wave candidate hosts) through the driver, the last crawl
+    // structure that grew with wave width. Gone: robots rules are a
+    // join column now.
+    val obsSeen = org.apache.spark.sql.Observation()
+    val seenAdds = notSeen.map(_.url_hash).toDF("url_hash")
+      .observe(obsSeen, count(lit(1)).as("n"))
+
+    // entries over their host's cap carry to the next wave; the next wave
+    // is a data column (every row of this wave's frontier has wave =
+    // `wave`), not a literal: generated code stays identical from wave to
+    // wave
+    val carry = fetchedP.filter($"carry")
       .select($"url", $"url_hash", $"host", $"parent_url", $"depth", $"seq",
-        $"redirect_position")
-      .withColumn("wave", lit(wave + 1))
-      .withColumn("is_retry", lit(false))
-      .withColumn("retry_count", lit(0))
-      .withColumn("retry_after_sec", lit(0))
+        ($"wave" + 1).as("wave"), $"is_retry", $"retry_count",
+        $"retry_after_sec", $"redirect_position")
 
     // transiently-failed fetches (5xx / network error) re-enter the next
     // wave with retry_count+1 (WebCrawler.cs:837-875); they keep their seq
@@ -670,31 +648,16 @@ final class CrawlEngine(
           .filter($"is_error" && ($"status" >= 500 || $"status" < 0) &&
             $"retry_count" < config.maxRetries)
           .select($"url", $"url_hash", $"host", $"parent_url", $"depth", $"seq",
-            lit(wave + 1).as("wave"), lit(true).as("is_retry"),
+            ($"wave" + 1).as("wave"), lit(true).as("is_retry"),
             ($"retry_count" + 1).as("retry_count"),
             greatest($"retry_after_sec", lit(0)).as("retry_after_sec"),
             $"redirect_position")
       } else null
 
-    // ---- 6. per-partition metrics lineage (A1 analog) --------------------
-    // a partition-local fold, no shuffle: `results` keeps the extract
-    // stage's partitioning, whose rows carry their own partition's id
-    val metrics = results.mapPartitions { rs =>
-      val acc = scala.collection.mutable.LinkedHashMap
-        .empty[(Int, Int), (Long, Long, Long, Double, Double)]
-      rs.foreach { r =>
-        val (n, e, w, f, x) =
-          acc.getOrElse((r.wave, r.partition_id), (0L, 0L, 0L, 0.0, 0.0))
-        acc((r.wave, r.partition_id)) = (n + 1, if (r.is_error) e + 1 else e,
-          w + r.total_words, f + r.fetch_ms, x + r.extract_ms)
-      }
-      acc.iterator.map { case ((wv, pid), (n, e, w, f, x)) => (wv, pid, n, e, w, f, x) }
-    }.toDF("wave", "partition_id", "pages", "errors", "words", "fetch_ms", "extract_ms")
-
     // ---- 7. wave-boundary stop cascade (WebsiteTextExtractor.cs:638-767) -
     pagesTotal += pagesFetched
-    errorsTotal += errorsWave
-    contentCharsTotal += contentCharsWave
+    errorsTotal += totals.errors
+    contentCharsTotal += totals.contentChars
     var newExclude: Option[String] = None
     if (config.minUniquePct > 0) {
       // only the LAST 10 html rows of the wave can survive takeRight(10):
@@ -713,7 +676,7 @@ final class CrawlEngine(
     }
     // cascade order mirrors the reference (WebsiteTextExtractor.cs:642-766):
     // bot-wall → duration → pages → errors → minUnique → size-on-disk
-    if (botBlockedWave > 0) {
+    if (totals.botBlocked > 0) {
       // the site rejects bots (DataDome): abort the whole crawl to comply
       stopReason = Some("bot_protection")
     } else if (config.maxDurationMin > 0 &&
@@ -779,7 +742,8 @@ final class CrawlEngine(
     staged("stage:docs")(io.stage("documents", wave,
       sized(docs, pagesFetched * 4096L)))
     staged("stage:blocks")(io.stage("unique_blocks", wave,
-      sized(newUnique.select($"text_hash", $"words"), pagesFetched * 240L)))
+      sized(newUnique.map(b => (b.text_hash, b.words)).toDF("text_hash", "words"),
+        pagesFetched * 240L)))
     staged("stage:seen")(io.stage("seen", wave + 1,
       sized(seenAdds, pagesFetched * 1024L)))
     if (newHostsCount > 0 && !hostsStagedEarly) {
@@ -787,7 +751,7 @@ final class CrawlEngine(
       // from that file — re-staging would overwrite its own input)
       staged("stage:hosts")(io.stage("hosts", wave, newHostStates))
     }
-    staged("stage:metrics")(io.stage("metrics", wave, metrics.coalesce(1)))
+    staged("stage:metrics")(io.stage("metrics", wave, totals.metrics.toDS().coalesce(1)))
     if (config.logFetches) {
       // request log (S9): one row per fetch, mirroring the reference's
       // per-request CSV columns that exist in our model
@@ -801,7 +765,7 @@ final class CrawlEngine(
       staged("stage:fetchlog")(io.stage("fetch_log", wave,
         sized(fetchLog, pagesFetched * 256L)))
     }
-    if (errorsWave > 0) {
+    if (totals.errors > 0) {
       // error-detail log (S9 remainder): the WHY of each error row —
       // exception class + message per failed fetch, persisted per wave
       // like the reference's exceptions/messages logs
@@ -811,7 +775,7 @@ final class CrawlEngine(
         $"wave", $"seq", $"url", $"host", $"status",
         $"error_class", $"error_message", $"error_stack", $"retry_count")
       staged("stage:errors")(io.stage("errors", wave,
-        sized(errorLog, errorsWave * 512L)))
+        sized(errorLog, totals.errors * 512L)))
     } else {
       // data-dependent staging: a killed earlier attempt of THIS wave may
       // have staged errors that the re-run no longer produces (transient
@@ -846,19 +810,25 @@ final class CrawlEngine(
     if (useBloom) {
       // fold this wave's accepted hashes into their buckets' filters and
       // stage the full bucket set for wave N (buckets with no additions
-      // carry forward through the cogroup) — all executor-side
+      // carry forward unchanged) — all executor-side
       val cap = perBucketCapacity
       val fpr = config.bloomFpr
-      val newBlooms = notSeen.select($"url_hash")
-        .groupBy(CrawlEngine.bloomBucketCol($"url_hash", nb)).as[Int, Long]
-        .cogroup(prevBlooms.groupBy($"bucket").as[Int, FilterBucket]) { (b, hs, buckets) =>
-          // addAll preserves the bucket's representation: Bloom buckets add
-          // bits, Cuckoo buckets (post-retraction) insert fingerprints —
-          // with the saturation fence on a failed insert
-          val base = if (buckets.hasNext) buckets.next()
-                     else FilterBucket.of(b, graft.core.BloomFilter64.forCapacity(cap, fpr))
-          Iterator(base.addAll(hs))
-        }
+      // the accepted hashes zip with their buckets' filters; they are laid
+      // out by bucket again, because the sort-merge branch of the seen
+      // check does not keep flagged's layout
+      val added = CrawlEngine.byBucket(notSeen.map(_.url_hash), nb)(
+        CrawlEngine.bloomBucket(_, nb))
+      val newBlooms = added.zipPartitions(prevBlooms) { (added, buckets) =>
+        // addAll preserves the bucket's representation: Bloom buckets add
+        // bits, Cuckoo buckets (post-retraction) insert fingerprints —
+        // with the saturation fence on a failed insert
+        val hs = added.buffered
+        if (buckets.hasNext) Iterator(buckets.next().addAll(hs))
+        else if (hs.hasNext)
+          Iterator(FilterBucket.of(CrawlEngine.bloomBucket(hs.head, nb),
+            graft.core.BloomFilter64.forCapacity(cap, fpr)).addAll(hs))
+        else Iterator.empty
+      }.toDS()
       // the write also counts saturated buckets, so the next wave's
       // readBlooms knows they are all clean without a job of its own
       staged("stage:blooms")(io.stage("blooms", wave,
@@ -878,7 +848,7 @@ final class CrawlEngine(
       case Some(lcp) =>
         val newFrontierP = newFrontier.persist()
         val newAssigned = newFrontierP.count()
-        val nextFrontierAll0 = carry.unionByName(newFrontierP)
+        val nextFrontierAll0 = carry.unionByName(newFrontierP.toDF())
         val nextFrontierAll =
           if (retryEntries != null) nextFrontierAll0.unionByName(retryEntries)
           else nextFrontierAll0
@@ -899,7 +869,7 @@ final class CrawlEngine(
         val obsNew = org.apache.spark.sql.Observation()
         val obsNext = org.apache.spark.sql.Observation()
         val newFrontierO = newFrontier.observe(obsNew, count(lit(1)).as("n"))
-        val nextFrontierAll0 = carry.unionByName(newFrontierO)
+        val nextFrontierAll0 = carry.unionByName(newFrontierO.toDF())
         val nextFrontierAll =
           if (retryEntries != null) nextFrontierAll0.unionByName(retryEntries)
           else nextFrontierAll0
@@ -941,11 +911,15 @@ final class CrawlEngine(
     results.unpersist()
     newHosts.unpersist()
     newHostStates.unpersist() // no-op for the ≤64 local-relation branch
-    if (flagged != null) flagged.unpersist()
-    if (prevBlooms != null) prevBlooms.unpersist()
+    prevBlooms.unpersist()
+    flagged.unpersist()
     fetchedP.unpersist()
     newUnique.unpersist()
     notSeen.unpersist()
+    // a steady wave's generated code is the last wave's, so it should
+    // compile (almost) nothing: this count is the codegen-budget check
+    if (trace) System.err.println("[trace] w%d %-14s %d".formatLocal(java.util.Locale.ROOT,
+      wave, "compiles", compiles - compiles0))
     true
   }
 }
@@ -1049,6 +1023,29 @@ object CrawlEngine {
       resp.errorClass, resp.errorMessage, resp.errorStack, css, (t2 - t1) / 1e6)
   }
 
+  /** The politeness split of one fetch partition, which holds whole hosts
+    * in (host, seq) order, each entry with its host's wave cap and
+    * per-domain allowance: an entry ranked past the allowance is dropped
+    * (O3), past the cap it carries to the next wave (false), otherwise it
+    * is due this wave (true).
+    */
+  private[crawl] def politeness(rows: Iterator[(FrontierEntry, Long, Long)])
+      : Iterator[(FrontierEntry, Boolean)] = {
+    var host: String = null
+    var rank = 0L
+    rows.flatMap { case (e, cap, allow) =>
+      if (rank == 0L || e.host != host) { host = e.host; rank = 0L }
+      rank += 1
+      if (rank > allow) None else Some((e, rank <= cap))
+    }
+  }
+
+  /** A frontier entry over its host's cap, carried through the fetch pass. */
+  private def carried(e: FrontierEntry): FetchedPage =
+    FetchedPage(e.url, e.url_hash, e.host, e.parent_url, e.seq, e.depth, e.wave,
+      0, null, null, null, 0.0, e.retry_count, e.retry_after_sec,
+      e.redirect_position, carry = true, is_retry = e.is_retry)
+
   /** Extract one fetched page — the CPU-bound unit of work run in the
     * salted extract stage (north rule: extraction as a partition-parallel
     * mapPartitions emitting interleaved text+media span structs).
@@ -1109,8 +1106,50 @@ object CrawlEngine {
       p.fetch_ms, (t2 - t1) / 1e6, partitionId, totalWords, lang, isError,
       p.parent_url, p.retry_count, p.retry_after_sec, p.redirect_position,
       if (p.body == null) 0 else p.body.length, p.css_ms,
-      errClass, errMsg, errStack)
+      errClass, errMsg, errStack,
+      items.map(i => TextBlockRef(i.offset, i.text_hash, i.words)))
   }
+
+  /** The wave's extract fold over the cached `results` rows: one
+    * [[MetricsRow]] per (wave, partition id) of each partition, and the
+    * totals of pages, errors, content chars, bot-wall statuses, out-links
+    * and text blocks.
+    * Reads the internal rows by ordinal, so no generated code is needed.
+    */
+  private def foldResults(results: Dataset[PageResult]): WaveTotals = {
+    val schema = results.schema
+    val Seq(iWave, iPid, iErr, iWords, iFetch, iExtract, iChars, iStatus, iLinks, iBlocks) =
+      Seq("wave", "partition_id", "is_error", "total_words", "fetch_ms",
+        "extract_ms", "content_chars", "status", "out_links", "blocks")
+        .map(schema.fieldIndex)
+    val bot = HttpFetcher.BotProtectionStatus
+    val parts = results.queryExecution.toRdd.mapPartitions { rows =>
+      val acc = scala.collection.mutable.LinkedHashMap.empty[(Int, Int), MetricsRow]
+      var chars, bots, links, blocks = 0L
+      rows.foreach { r =>
+        val k = (r.getInt(iWave), r.getInt(iPid))
+        val m = acc.getOrElse(k, MetricsRow(k._1, k._2, 0L, 0L, 0L, 0.0, 0.0))
+        val err = r.getBoolean(iErr)
+        acc(k) = m.copy(pages = m.pages + 1, errors = if (err) m.errors + 1 else m.errors,
+          words = m.words + r.getLong(iWords), fetch_ms = m.fetch_ms + r.getDouble(iFetch),
+          extract_ms = m.extract_ms + r.getDouble(iExtract))
+        chars += r.getInt(iChars)
+        if (r.getInt(iStatus) == bot) bots += 1
+        links += r.getArray(iLinks).numElements()
+        blocks += r.getArray(iBlocks).numElements()
+      }
+      Iterator((acc.values.toVector, Array(chars, bots, links, blocks)))
+    }.collect()
+    val rows = parts.toSeq.flatMap(_._1)
+    val Seq(chars, bots, links, blocks) = (0 until 4).map(i => parts.map(_._2(i)).sum)
+    WaveTotals(rows, rows.map(_.pages).sum, rows.map(_.errors).sum, chars,
+      bots, links, blocks)
+  }
+
+  /** A wave's extract fold: see foldResults. */
+  private final case class WaveTotals(metrics: Seq[MetricsRow], pages: Long,
+      errors: Long, contentChars: Long, botBlocked: Long, outLinks: Long,
+      blocks: Long)
 
   /** Bucket of a url_hash for partition-local seen-cache filters. */
   def bloomBucket(urlHash: Long, numBuckets: Int): Int =
@@ -1141,12 +1180,168 @@ object CrawlEngine {
     */
   private[graft] def seenJoin(spark: SparkSession, rows: DataFrame,
       seen: DataFrame, keys: DataFrame, keyCount: Long,
-      how: String): DataFrame = {
+      how: String): DataFrame =
+    if (probeFits(spark, keyCount))
+      rows.join(broadcast(seenHits(seen, keys)), Seq("url_hash"), how)
+    else rows.join(seen.hint("merge"), Seq("url_hash"), how)
+
+  /** Whether `keyCount` url_hash keys (8 B each) fit the broadcast threshold. */
+  private def probeFits(spark: SparkSession, keyCount: Long): Boolean = {
     val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold >= 0 && keyCount <= threshold / 8) {
-      val hits = seen.join(broadcast(keys), Seq("url_hash"), "left_semi")
-      rows.join(broadcast(hits), Seq("url_hash"), how)
-    } else rows.join(seen.hint("merge"), Seq("url_hash"), how)
+    threshold >= 0 && keyCount <= threshold / 8
+  }
+
+  /** seen ⋉ keys with the keys broadcast: `seen` streams past them. */
+  private def seenHits(seen: DataFrame, keys: DataFrame): DataFrame =
+    seen.join(broadcast(keys), keys.columns.toSeq, "left_semi")
+
+  /** The wave's candidate out-links, in document order per page, read
+    * from the cached extract rows by ordinal (no generated code). A
+    * redirect target continues its parent's 3xx chain; ordinary links
+    * reset the chain (PageRequester.cs:86-141 redirect bookkeeping).
+    */
+  private def candidateLinks(results: Dataset[PageResult]): RDD[CandidateLink] =
+    results.select(col("seq"), col("url"), col("depth"), col("status"),
+        col("redirect_position"), col("out_links"), col("wave"))
+      .queryExecution.toRdd.flatMap { r =>
+        val status = r.getInt(3)
+        val rp = if (status >= 300 && status < 400) r.getInt(4) + 1 else 0
+        val (seq, url, depth, wave) =
+          (r.getLong(0), r.getUTF8String(1).toString, r.getInt(2), r.getInt(6) + 1)
+        val links = r.getArray(5)
+        Array.tabulate(links.numElements()) { idx =>
+          val link = links.getUTF8String(idx).toString
+          CandidateLink(seq, url, depth, idx, link, UrlCanonicalizer.urlHash(link),
+            UrlCanonicalizer.host(link), rp, wave)
+        }
+      }
+
+  /** Hash-partitions tuple keys by their first field (other keys whole),
+    * so a sort on the full key groups each prefix in one partition. On
+    * bucket ids in [0, n) it puts bucket b in partition b.
+    */
+  private final class PrefixPartitioner(n: Int) extends Partitioner {
+    private val byHash = new HashPartitioner(n)
+    def numPartitions: Int = n
+    def getPartition(key: Any): Int = byHash.getPartition(key match {
+      case p: Product => p.productElement(0)
+      case k => k
+    })
+  }
+
+  /** `rows` laid out by bucket, as [[flagFirsts]] zips them: the rows of
+    * bucket b in partition b.
+    */
+  private[graft] def byBucket[T: scala.reflect.ClassTag](rows: RDD[T], numBuckets: Int)(
+      bucket: T => Int): RDD[T] =
+    rows.keyBy(bucket).partitionBy(new PrefixPartitioner(numBuckets)).values
+
+  /** The first occurrence of every url_hash among `cands`, in
+    * (parent_seq, link_index) order, flagged with the Bloom verdict. The
+    * candidates are shuffled into their bucket's partition, sorted by
+    * (url_hash, parent_seq, link_index), and zipped with `blooms` (laid
+    * out by [[byBucket]]): one streaming pass keeps the first row of each
+    * hash — maybe seen when the bucket's filter might hold it (or the
+    * filters are not `engaged`), definitely new otherwise. The output
+    * keeps the bucket layout.
+    */
+  private[graft] def flagFirsts(cands: RDD[CandidateLink], blooms: RDD[FilterBucket],
+      engaged: Boolean, numBuckets: Int): RDD[CandidateLink] =
+    cands.keyBy(c => (bloomBucket(c.url_hash, numBuckets), c.url_hash, c.parent_seq, c.link_index))
+      .repartitionAndSortWithinPartitions(new PrefixPartitioner(numBuckets))
+      .zipPartitions(blooms) { (cs, bs) =>
+        val filter = if (bs.hasNext) bs.next().filter else null
+        var first = true
+        var last = 0L
+        cs.collect { case ((_, h, _, _), c) if first || h != last =>
+          first = false
+          last = h
+          c.copy(maybe_seen = if (filter == null) !engaged else filter.mightContain(h))
+        }
+      }
+
+  /** The rows of `rows` whose `key` is absent from `table`'s `keyCol`.
+    * Only the rows that `probe` selects are looked up; the others must be
+    * known absent (a hash its Bloom filter rules out of `seen`). While the
+    * probe keys (bounded by `keyCount`) fit the broadcast threshold, the
+    * table streams past them broadcast, and the hits — at most keyCount
+    * keys — are collected and broadcast to a map-side filter that keeps
+    * `rows`' layout; the driver never holds `table` itself. Otherwise it
+    * is a sort-merge anti join of `rows` and `table`, laid out by key hash.
+    */
+  private[graft] def absentFrom[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      spark: SparkSession, rows: RDD[T], table: DataFrame, keyCol: String,
+      keyCount: Long)(key: T => Long, probe: T => Boolean): RDD[T] = {
+    import spark.implicits._
+    if (probeFits(spark, keyCount)) {
+      val keys = rows.filter(probe).map(key).toDF(keyCol)
+      val hits = spark.sparkContext.broadcast(
+        seenHits(table.select(keyCol), keys).as[Long].collect().toSet)
+      rows.filter(r => !probe(r) || !hits.value.contains(key(r)))
+    } else
+      rows.toDS().join(table.select(keyCol).hint("merge"), Seq(keyCol), "left_anti")
+        .as[T].rdd
+  }
+
+  /** The first occurrence of every text hash among the cached pages'
+    * block refs, by (seq, offset): the refs are shuffled by hash, sorted by
+    * (text_hash, seq, offset), and one streaming pass keeps each hash's
+    * first row.
+    */
+  private def firstBlocks(results: Dataset[PageResult], numPartitions: Int): RDD[BlockRow] =
+    results.select(col("seq"), col("blocks")).queryExecution.toRdd
+      .flatMap { r =>
+        val seq = r.getLong(0)
+        val bs = r.getArray(1)
+        Array.tabulate(bs.numElements()) { i =>
+          val b = bs.getStruct(i, 3)
+          ((b.getLong(1), seq, b.getInt(0)), b.getInt(2))
+        }
+      }
+      .repartitionAndSortWithinPartitions(new PrefixPartitioner(numPartitions))
+      .mapPartitions { bs =>
+        var first = true
+        var last = 0L
+        bs.collect { case ((h, seq, _), words) if first || h != last =>
+          first = false
+          last = h
+          BlockRow(seq, h, words)
+        }
+      }
+
+  /** The next frontier's rows, with the per-page cap fused into the seq
+    * sort: range-partition on `parent_seq` (so each parent's links share a
+    * partition) and sort each partition by (`parent_seq`, `link_index`),
+    * keep the first `cap` links of every parent in that order, and number
+    * the survivors densely from `start` in the same order (zipWithIndex:
+    * one count job, then the numbering pass). One shuffle, no window and
+    * no single-partition bottleneck (W3).
+    */
+  private[graft] def capAndNumber(links: RDD[CandidateLink], cap: Int,
+      start: Long, numPartitions: Int): RDD[FrontierEntry] = {
+    val parents = new RangePartitioner(numPartitions, links.map(c => (c.parent_seq, ())))
+    val byParent = new Partitioner {
+      def numPartitions: Int = parents.numPartitions
+      def getPartition(key: Any): Int = parents.getPartition(key.asInstanceOf[(Long, Int)]._1)
+    }
+    links.keyBy(c => (c.parent_seq, c.link_index))
+      .repartitionAndSortWithinPartitions(byParent)
+      .values
+      .mapPartitions { cs =>
+        var first = true
+        var parent = 0L
+        var n = 0
+        cs.filter { c =>
+          if (first || c.parent_seq != parent) { first = false; parent = c.parent_seq; n = 0 }
+          n += 1
+          n <= cap
+        }
+      }
+      .zipWithIndex()
+      .map { case (c, i) =>
+        FrontierEntry(c.url, c.url_hash, c.host, c.parent_url, c.parent_depth + 1,
+          start + i, c.wave, redirect_position = c.redirect_position)
+      }
   }
 
   /** In-page canonical-URL dedup, first occurrence order (D2). */

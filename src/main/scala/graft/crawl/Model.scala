@@ -77,7 +77,11 @@ final case class FetchedPage(
     // up to MaxSheetsPerPage extra CSS requests per host per task are a
     // documented under-count (the per-partition cache makes them one per
     // sheet per task in practice)
-    css_ms: Double = 0.0)
+    css_ms: Double = 0.0,
+    // a frontier entry over its host's wave cap: not fetched, it carries
+    // to the next wave (with its is_retry flag) instead of being extracted
+    carry: Boolean = false,
+    is_retry: Boolean = false)
 
 /** Result of fetching+extracting one page inside the fetch mapPartitions. */
 final case class PageResult(
@@ -110,7 +114,20 @@ final case class PageResult(
     // on success — the WHY of each error row, persisted per wave
     error_class: String = null,
     error_message: String = null,
-    error_stack: String = null)
+    error_stack: String = null,
+    // the document's analyzable text items (DocAnalysis), folded once at
+    // extract time for the wave's first-wins block dedup
+    blocks: Seq[TextBlockRef] = Nil)
+
+/** One analyzable text item of a fetched page: where it sits, its text
+  * hash and its word count.
+  */
+final case class TextBlockRef(offset: Int, text_hash: Long, words: Int)
+
+/** A text block's first occurrence in a wave: the owning page and its
+  * words.
+  */
+final case class BlockRow(seq: Long, text_hash: Long, words: Int)
 
 /** One extracted document row — the north-rule table shape
   * (doc_id, spans) plus analysis metadata.
@@ -135,7 +152,11 @@ final case class MetricsRow(
     fetch_ms: Double,
     extract_ms: Double)
 
-/** One candidate out-link row inside a wave (pre-seen-gate). */
+/** One candidate out-link row inside a wave (pre-seen-gate). `wave` is the
+  * wave the link would be fetched in (its parent's wave + 1); `maybe_seen`
+  * is the Bloom verdict: false only when the link's bucket filter rules
+  * `seen` out, so only true rows pay the exact seen check.
+  */
 final case class CandidateLink(
     parent_seq: Long,
     parent_url: String,
@@ -144,7 +165,9 @@ final case class CandidateLink(
     url: String,
     url_hash: Long,
     host: String,
-    redirect_position: Int)
+    redirect_position: Int,
+    wave: Int,
+    maybe_seen: Boolean = true)
 
 /** One hash-bucket's membership filter over seen url_hashes, persisted per
   * wave (the partition-local negative cache in front of the exact seen

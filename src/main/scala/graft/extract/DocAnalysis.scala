@@ -12,8 +12,7 @@ final case class AnalyzedItem(
     offset: Int,
     text: String,
     text_hash: Long,
-    words: Int,
-    lang: String)
+    words: Int)
 
 object DocAnalysis {
 
@@ -25,18 +24,20 @@ object DocAnalysis {
       val isBlock = s.kind == "TextBlock.Text"
       if (isTitle || isBlock) {
         val stats = TextStats.of(s.text)
-        Some(AnalyzedItem(s.offset, s.text, TextStats.textHash(s.text), stats.words, LangId.detect(s.text)))
+        Some(AnalyzedItem(s.offset, s.text, TextStats.textHash(s.text), stats.words))
       } else None
     }
 
   /** Document language = argmax of per-language word sums, first-seen wins
     * ties (C# dictionary Aggregate semantics, `NLPTextAnalyzer.cs:94-97`).
-    * Returns "?" when no analyzable items.
+    * Returns "?" when no analyzable items. The only caller of the per-item
+    * language detector: the items themselves carry no language, so the
+    * uniqueness passes over them never pay for it.
     */
   def docLanguage(items: Seq[AnalyzedItem]): String = {
     if (items.isEmpty) return "?"
     val firstSeen = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    items.foreach(i => firstSeen.updateWith(i.lang) {
+    items.foreach(i => firstSeen.updateWith(LangId.detect(i.text)) {
       case Some(w) => Some(w + i.words)
       case None => Some(i.words.toLong)
     })
