@@ -5,7 +5,7 @@ import graft.extract.{DocAnalysis, HtmlParser, HtmlToSpans, PdfToSpans}
 import org.apache.spark.{HashPartitioner, Partitioner, RangePartitioner, TaskContext}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -94,13 +94,16 @@ private final class BroadcastSyntheticFetcher(
   *    in one partition (politeness is partition-local, J3); the per-host
   *    per-wave cap (waveBudget / crawlDelay) bounds skew at the SCHEDULING
   *    level — a hot host can never dominate a wave (SURVEY.md §4);
-  *  - the exact seen check is probe-side ([[CrawlEngine.absentFrom]]): the
-  *    wave's maybe-seen candidate hashes are broadcast and `seen` is
-  *    streamed past them, so only the hits (at most one per key) reach the
-  *    driver and `seen` is never broadcast or collected; when the
-  *    candidates outgrow spark.sql.autoBroadcastJoinThreshold it falls back
-  *    to a sort-merge anti join of candidates and `seen`. Block ownership
-  *    probes `unique_blocks` the same way;
+  *  - the seen set — the exact `seen` table behind per-bucket Bloom/Cuckoo
+  *    filters — lives in [[SeenSet]], shared with forget: the filters are
+  *    partition-local (zipped with candidates laid out by bucket), and the
+  *    exact check is probe-side ([[SeenSet.probe]]): the wave's maybe-seen
+  *    candidate hashes are broadcast and `seen` is streamed past them, so
+  *    only the hits (at most one per key) reach the driver and `seen` is
+  *    never broadcast or collected; when the candidates outgrow
+  *    spark.sql.autoBroadcastJoinThreshold it falls back to a sort-merge
+  *    join of candidates and `seen`. Block ownership probes `unique_blocks`
+  *    the same way;
   *  - the next frontier's seqs ride one range shuffle on parent_seq: each
   *    partition is sorted by (parent_seq, link_index), the per-page link
   *    cap is a running count in that order, and zipWithIndex numbers the
@@ -163,98 +166,14 @@ final class CrawlEngine(
   private var window10 = Vector.empty[(String, Double)] // (url, pct), seq order
   var stopReason: Option[String] = None
 
-  /** Bloom negative-cache over seen url_hashes, PARTITION-LOCAL: one filter
-    * per url_hash bucket, persisted as the per-wave `blooms` table and
-    * applied by zipping candidates with their bucket's filter — no
-    * filter bits and no hashes ever pass through the driver, so the path
-    * is identical at a 10^10-URL frontier. Candidates that definitely were
-    * never seen skip the exact anti-join entirely; "maybe seen" ones still
-    * go through it (false positives are safe; false negatives cannot
-    * happen because every accepted hash is folded into its bucket's filter
-    * in the same wave it enters `seen`).
-    */
-  /** Hybrid engage rule: the exact anti-join is cheap while `seen` is
-    * small — the filters only pay once the set passes bloomMinSeenRows
-    * (the broadcast-vs-shuffle-join selection analog). Engaging later is
-    * safe: readBlooms rebuilds the buckets from the authoritative seen
-    * table on its first engaged wave.
+  /** Hybrid engage rule: the exact seen check is cheap while `seen` is
+    * small — the [[SeenSet]] filters only pay once the set passes
+    * bloomMinSeenRows (the broadcast-vs-shuffle-join selection analog).
+    * Engaging later is safe: [[SeenSet.read]] builds the buckets from the
+    * authoritative seen table on its first engaged wave.
     */
   private def bloomEnabled: Boolean =
     config.bloomCapacity > 0 && seenRowsTotal >= config.bloomMinSeenRows
-
-  private def perBucketCapacity: Long =
-    math.max(1024L, config.bloomCapacity / numPartitions)
-
-  /** Previous wave's committed bucket filters; absent (bootstrap, legacy
-    * warehouse, or a kill between stage and commit) OR keyed with a
-    * DIFFERENT bucket count (the `bloom_buckets` manifest stat — resuming
-    * at a different parallelism would zip candidates with the wrong
-    * bucket's filter, i.e. Bloom FALSE NEGATIVES) → rebuild from the
-    * authoritative seen table, distributedly. Returned with bucket b in
-    * partition b ([[CrawlEngine.byBucket]]): the caller persists it once,
-    * and both per-wave passes (apply and update) zip their bucket-
-    * partitioned candidates with it — the filter bits cross the shuffle
-    * once per wave.
-    */
-  private def readBlooms(wave: Int): RDD[FilterBucket] = {
-    val cap = perBucketCapacity
-    val fpr = config.bloomFpr
-    val nb = numPartitions
-    // blooms_v guards the row layout: v1 (pre-FilterBucket) warehouses and
-    // bucket-count mismatches both rebuild from the authoritative seen table
-    val buckets: Dataset[FilterBucket] =
-      if (io.waveExists("blooms", wave - 1) &&
-          io.stat("bloom_buckets").contains(nb.toLong) &&
-          io.stat("blooms_v").contains(CrawlEngine.BloomsVersion)) {
-        val persisted =
-          io.readWave("blooms", wave - 1, TableIO.BloomsSchema).as[FilterBucket]
-        // self-heal saturated buckets (a cuckoo insert failed or a remove
-        // fence tripped — the bucket answers "maybe" for every key, so its
-        // candidates all pay the exact anti-join): rebuild JUST those from
-        // the authoritative seen table at doubled capacity. The previous
-        // commit's blooms_clean_gen vouches for buckets the engine wrote
-        // itself; any other writer (a forget's bucket maintenance) moves
-        // gen_blooms, and the check reads two columns of the
-        // O(numPartitions)-row table. The heal scan runs only when
-        // saturation actually exists.
-        val knownClean = io.stat("blooms_clean_gen").exists(g =>
-          io.stat("gen_blooms").getOrElse(0L) == g)
-        val sat =
-          if (knownClean) Set.empty[Int]
-          else persisted.filter($"saturated").select($"bucket")
-            .as[Int].collect().toSet
-        if (sat.isEmpty) persisted
-        else {
-          val satB = spark.sparkContext.broadcast(sat)
-          // map-side filter BEFORE the shuffle: only the saturated buckets'
-          // hashes move (1/nb of the seen set per saturated bucket), not the
-          // whole table
-          val healed = io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
-            .select($"url_hash").as[Long]
-            .filter(h => satB.value.contains(CrawlEngine.bloomBucket(h, nb)))
-            .groupByKey(h => CrawlEngine.bloomBucket(h, nb))
-            .mapGroups { (b, hs) =>
-              val all = hs.toArray
-              val cf = graft.core.CuckooFilter64
-                .forCapacity(math.max(cap, all.length * 2L))
-              var stillSat = false
-              all.foreach { h => if (!cf.add(h)) stillSat = true }
-              FilterBucket.ofCuckoo(b, cf, stillSat)
-            }
-          persisted.filter(!$"saturated").union(healed)
-        }
-      } else
-        io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
-          .select($"url_hash").as[Long]
-          .groupByKey(h => CrawlEngine.bloomBucket(h, nb))
-          .mapGroups { (b, hs) =>
-            val bf = graft.core.BloomFilter64.forCapacity(cap, fpr)
-            var n = 0L
-            hs.foreach { h => bf.add(h); n += 1 }
-            FilterBucket.of(b, bf, n)
-          }
-    CrawlEngine.byBucket(buckets.rdd, nb)(_.bucket)
-  }
 
   private def loadState(): Unit = {
     if (stateLoaded) return
@@ -538,7 +457,7 @@ final class CrawlEngine(
     // by a previous wave: probed against `unique_blocks` like the seen
     // check, in plain RDD passes.
     val uniqueBlocksTable = io.readAll("unique_blocks", TableIO.UniqueBlocksSchema)
-    val newUnique = CrawlEngine.absentFrom(spark,
+    val newUnique = SeenSet.absent(spark,
         CrawlEngine.firstBlocks(results, numPartitions), uniqueBlocksTable,
         "text_hash", totals.blocks)(_.text_hash, _ => true)
       .persist()
@@ -570,9 +489,10 @@ final class CrawlEngine(
     lastWaveBloomEngaged = useBloom
     // one read of the previous wave's filters serves both the apply-side
     // pass here and the update pass at stage time
+    val seenLayout = new SeenSet.Layout(config, nb)
     val prevBlooms =
-      if (useBloom) readBlooms(wave).persist()
-      else CrawlEngine.byBucket(spark.sparkContext.emptyRDD[FilterBucket], nb)(_.bucket)
+      if (useBloom) SeenSet.read(spark, io, seenLayout, wave).persist()
+      else SeenSet.byBucket(spark.sparkContext.emptyRDD[FilterBucket], nb)(_.bucket)
     val flagged = CrawlEngine.flagFirsts(cands, prevBlooms, useBloom, nb).persist()
 
     // robots matching is a JOIN of candidates against the hosts TABLE on
@@ -599,7 +519,7 @@ final class CrawlEngine(
     // the seen probe collects its hits and the seq sort's range
     // partitioner samples its input: the chain's eager work, before staging
     val (notSeen, newFrontier) = timed(wave, "candidates") {
-      val notSeen = CrawlEngine.absentFrom(spark, flagged, seenTable, "url_hash",
+      val notSeen = SeenSet.absent(spark, flagged, seenTable, "url_hash",
         totals.outLinks)(_.url_hash, _.maybe_seen).persist()
       val passing = notSeen.keyBy(_.host)
         .leftOuterJoin(robotsCols.as[(String, String)].rdd, nb)
@@ -810,27 +730,11 @@ final class CrawlEngine(
     if (useBloom) {
       // fold this wave's accepted hashes into their buckets' filters and
       // stage the full bucket set for wave N (buckets with no additions
-      // carry forward unchanged) — all executor-side
-      val cap = perBucketCapacity
-      val fpr = config.bloomFpr
-      // the accepted hashes zip with their buckets' filters; they are laid
-      // out by bucket again, because the sort-merge branch of the seen
-      // check does not keep flagged's layout
-      val added = CrawlEngine.byBucket(notSeen.map(_.url_hash), nb)(
-        CrawlEngine.bloomBucket(_, nb))
-      val newBlooms = added.zipPartitions(prevBlooms) { (added, buckets) =>
-        // addAll preserves the bucket's representation: Bloom buckets add
-        // bits, Cuckoo buckets (post-retraction) insert fingerprints —
-        // with the saturation fence on a failed insert
-        val hs = added.buffered
-        if (buckets.hasNext) Iterator(buckets.next().addAll(hs))
-        else if (hs.hasNext)
-          Iterator(FilterBucket.of(CrawlEngine.bloomBucket(hs.head, nb),
-            graft.core.BloomFilter64.forCapacity(cap, fpr)).addAll(hs))
-        else Iterator.empty
-      }.toDS()
-      // the write also counts saturated buckets, so the next wave's
-      // readBlooms knows they are all clean without a job of its own
+      // carry forward unchanged) — all executor-side. The write also counts
+      // saturated buckets, so the next wave's SeenSet.read knows they are
+      // all clean without a job of its own
+      val newBlooms = SeenSet.update(prevBlooms, spark.sparkContext.emptyRDD[Long],
+        notSeen.map(_.url_hash), seenLayout).toDS()
       staged("stage:blooms")(io.stage("blooms", wave,
         newBlooms.observe(obsSaturated, count(when($"saturated", 1)).as("n"))))
     }
@@ -894,18 +798,10 @@ final class CrawlEngine(
       "seen_total" -> seenRowsTotal,
       "max_seq" -> (prevMaxSeq + newAssigned),
       "next_frontier" -> nextCount)
-    // bloom_buckets records the bucket count the staged blooms are keyed on;
-    // readBlooms rejects persisted filters whose count differs from the
-    // current numPartitions (resume-at-different-parallelism safety).
-    // blooms_clean_gen: the staged buckets hold no saturated one, stamped
-    // with the blooms generation they were written under
-    val stats = if (useBloom) {
-      val clean = obsSaturated.get("n").asInstanceOf[Long] == 0L
-      baseStats + ("bloom_buckets" -> nb.toLong) +
-        ("blooms_v" -> CrawlEngine.BloomsVersion) ++
-        (if (clean) Some("blooms_clean_gen" -> io.stat("gen_blooms").getOrElse(0L))
-         else None)
-    } else baseStats
+    val stats =
+      if (useBloom) baseStats ++ SeenSet.commitStats(io, nb,
+        clean = obsSaturated.get("n").asInstanceOf[Long] == 0L)
+      else baseStats
     io.commitWave(wave, stats, stopReason)
 
     results.unpersist()
@@ -930,13 +826,6 @@ object CrawlEngine {
     * errors log — e.g. a plain 404/500 with no transport exception.
     */
   val HttpStatusErrorClass = "HttpStatus"
-
-  /** Manifest `blooms_v` value the persisted filter-bucket layout must carry
-    * to be readable (readBlooms rebuilds otherwise). Bumped when
-    * [[FilterBucket]]'s row shape changes — v2 added kind/count/saturated
-    * for the Bloom→Cuckoo retraction transition.
-    */
-  val BloomsVersion = 2L
 
   /** Bootstrap a fresh warehouse exactly as a new engine would (the
     * commit-"-1" contract: root frontier entry + seen set + persisted
@@ -1155,46 +1044,6 @@ object CrawlEngine {
   def bloomBucket(urlHash: Long, numBuckets: Int): Int =
     java.lang.Math.floorMod(urlHash, numBuckets.toLong).toInt
 
-  /** [[bloomBucket]] as a column. Grouping on it (instead of on a closure)
-    * lets the planner see that filter buckets already hash-partitioned on
-    * their `bucket` column are clustered for the cogroup, so only the
-    * other side is shuffled. A cogroup needs both keys to share name, type
-    * and nullability: this is a non-null int named `bucket`, like
-    * [[FilterBucket]]'s field.
-    */
-  private[crawl] def bloomBucketCol(urlHash: Column, numBuckets: Int): Column =
-    coalesce(pmod(urlHash, lit(numBuckets.toLong)).cast("int"), lit(0)).as("bucket")
-
-  /** Exact seen check, probe side: the rows of `rows` whose url_hash is in
-    * `seen` (`how = "left_semi"`) or not in it (`"left_anti"`). `keys` is a
-    * url_hash column covering `rows`' hashes (duplicates allowed) and
-    * `keyCount` bounds its row count.
-    *
-    * While keyCount × 8 B fits spark.sql.autoBroadcastJoinThreshold the
-    * keys are broadcast and `seen` is STREAMED past them (seen ⋉ keys, one
-    * scan, no shuffle); only those hits — at most keyCount hashes — meet
-    * `rows` in the small-side join. Neither the driver nor any broadcast
-    * ever holds `seen` itself, however large it grows. Above the threshold
-    * it is the shuffle join of `rows` against `seen`, hinted to sort-merge
-    * so `seen` can never be picked as a broadcast side by its file size.
-    */
-  private[graft] def seenJoin(spark: SparkSession, rows: DataFrame,
-      seen: DataFrame, keys: DataFrame, keyCount: Long,
-      how: String): DataFrame =
-    if (probeFits(spark, keyCount))
-      rows.join(broadcast(seenHits(seen, keys)), Seq("url_hash"), how)
-    else rows.join(seen.hint("merge"), Seq("url_hash"), how)
-
-  /** Whether `keyCount` url_hash keys (8 B each) fit the broadcast threshold. */
-  private def probeFits(spark: SparkSession, keyCount: Long): Boolean = {
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    threshold >= 0 && keyCount <= threshold / 8
-  }
-
-  /** seen ⋉ keys with the keys broadcast: `seen` streams past them. */
-  private def seenHits(seen: DataFrame, keys: DataFrame): DataFrame =
-    seen.join(broadcast(keys), keys.columns.toSeq, "left_semi")
-
   /** The wave's candidate out-links, in document order per page, read
     * from the cached extract rows by ordinal (no generated code). A
     * redirect target continues its parent's 3xx chain; ordinary links
@@ -1229,20 +1078,13 @@ object CrawlEngine {
     })
   }
 
-  /** `rows` laid out by bucket, as [[flagFirsts]] zips them: the rows of
-    * bucket b in partition b.
-    */
-  private[graft] def byBucket[T: scala.reflect.ClassTag](rows: RDD[T], numBuckets: Int)(
-      bucket: T => Int): RDD[T] =
-    rows.keyBy(bucket).partitionBy(new PrefixPartitioner(numBuckets)).values
-
   /** The first occurrence of every url_hash among `cands`, in
     * (parent_seq, link_index) order, flagged with the Bloom verdict. The
     * candidates are shuffled into their bucket's partition, sorted by
     * (url_hash, parent_seq, link_index), and zipped with `blooms` (laid
-    * out by [[byBucket]]): one streaming pass keeps the first row of each
-    * hash — maybe seen when the bucket's filter might hold it (or the
-    * filters are not `engaged`), definitely new otherwise. The output
+    * out by [[SeenSet.byBucket]]): one streaming pass keeps the first row
+    * of each hash — maybe seen when the bucket's filter might hold it (or
+    * the filters are not `engaged`), definitely new otherwise. The output
     * keeps the bucket layout.
     */
   private[graft] def flagFirsts(cands: RDD[CandidateLink], blooms: RDD[FilterBucket],
@@ -1259,29 +1101,6 @@ object CrawlEngine {
           c.copy(maybe_seen = if (filter == null) !engaged else filter.mightContain(h))
         }
       }
-
-  /** The rows of `rows` whose `key` is absent from `table`'s `keyCol`.
-    * Only the rows that `probe` selects are looked up; the others must be
-    * known absent (a hash its Bloom filter rules out of `seen`). While the
-    * probe keys (bounded by `keyCount`) fit the broadcast threshold, the
-    * table streams past them broadcast, and the hits — at most keyCount
-    * keys — are collected and broadcast to a map-side filter that keeps
-    * `rows`' layout; the driver never holds `table` itself. Otherwise it
-    * is a sort-merge anti join of `rows` and `table`, laid out by key hash.
-    */
-  private[graft] def absentFrom[T <: Product : scala.reflect.runtime.universe.TypeTag](
-      spark: SparkSession, rows: RDD[T], table: DataFrame, keyCol: String,
-      keyCount: Long)(key: T => Long, probe: T => Boolean): RDD[T] = {
-    import spark.implicits._
-    if (probeFits(spark, keyCount)) {
-      val keys = rows.filter(probe).map(key).toDF(keyCol)
-      val hits = spark.sparkContext.broadcast(
-        seenHits(table.select(keyCol), keys).as[Long].collect().toSet)
-      rows.filter(r => !probe(r) || !hits.value.contains(key(r)))
-    } else
-      rows.toDS().join(table.select(keyCol).hint("merge"), Seq(keyCol), "left_anti")
-        .as[T].rdd
-  }
 
   /** The first occurrence of every text hash among the cached pages'
     * block refs, by (seq, offset): the refs are shuffled by hash, sorted by

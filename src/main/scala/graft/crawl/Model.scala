@@ -298,7 +298,7 @@ final case class CrawlConfig(
     bloomCapacity: Long = 2000001L,
     bloomFpr: Double = 0.001,
     // hybrid engage threshold: below this many SEEN rows the exact
-    // anti-join is already cheap and the per-wave bloom cogroup/update is
+    // anti-join is already cheap and the per-wave filter apply/update is
     // pure fixed overhead (measured ~6 s/wave at local[24]); at/above it
     // the partition-local filters pay for themselves. The broadcast-vs-
     // shuffle-join selection analog. 0 = always engage (parity tests).

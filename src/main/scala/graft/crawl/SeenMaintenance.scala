@@ -1,6 +1,6 @@
 package graft.crawl
 
-import graft.core.{CuckooFilter64, UrlCanonicalizer}
+import graft.core.UrlCanonicalizer
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
@@ -33,15 +33,15 @@ import org.apache.spark.sql.expressions.Window
   * logs (fetch_log, errors) and the shared unique-text blocks are
   * deliberately untouched.
   *
-  * Everything is distributed — joins and per-bucket cogroups keyed on
-  * url_hash; the driver holds only scalar counts, the exclude-prefix list,
-  * and the O(numPartitions) bucket-kind directory. The exact seen checks
-  * (which targets are still in `seen`, which re-staged hashes are not) go
-  * through [[CrawlEngine.seenJoin]]: the target and re-staged hashes are
+  * Everything is distributed — joins keyed on url_hash and bucket passes
+  * zipped by bucket; the driver holds only scalar counts, the
+  * exclude-prefix list, and the O(numPartitions) bucket directories. The
+  * exact seen check (which targets are still in `seen`, which re-staged
+  * hashes are not) is one [[SeenSet.probe]] of the touched hashes: they are
   * broadcast and `seen` is streamed past them in one scan, so `seen` is
   * never broadcast or collected; past spark.sql.autoBroadcastJoinThreshold
-  * they fall back to a sort-merge shuffle join against `seen`. The counts
-  * the report and the manifest need ride passes that run anyway: one
+  * it falls back to a sort-merge join against `seen`. The counts the
+  * report and the manifest need ride passes that run anyway: one
   * aggregate per step over an already-persisted frame, and `seen_total`
   * as an observe() metric on the seen-generation write. Crash-atomicity reuses
   * the warehouse's manifest contract ([[TableIO.stageGeneration]] /
@@ -51,7 +51,8 @@ import org.apache.spark.sql.expressions.Window
   * at any point resumes from a consistent snapshot; re-running the forget
   * overwrites the orphans.
   *
-  * Filter-bucket maintenance is where the Bloom→Cuckoo fallback lives:
+  * Filter-bucket maintenance is where the Bloom→Cuckoo fallback lives
+  * ([[SeenSet.afterForget]]):
   *  - a bucket losing entries for the FIRST time is rebuilt from its
   *    authoritative surviving hashes as a [[graft.core.CuckooFilter64]]
   *    (Bloom filters cannot delete);
@@ -273,41 +274,27 @@ object SeenMaintenance {
     // request must re-fetch exactly once even if the url is rediscovered
     // as a candidate in the same run). Each touched hash is tagged once —
     // target (k) and/or re-staged (r) — and ONE probe of `seen` tells which
-    // tagged hashes it holds; one aggregate over the persisted op stream
-    // counts both deltas. The result becomes generation g+1 as a SINGLE
-    // wave-0 partition (copy-on-write snapshot replace; the seen table is a
-    // set, so folding all waves into one partition is lossless and doubles
-    // as compaction).
+    // tagged hashes it holds; both deltas come from that persisted answer.
+    // The result becomes generation g+1 as a SINGLE wave-0
+    // partition (copy-on-write snapshot replace; the seen table is a set,
+    // so folding all waves into one partition is lossless and doubles as
+    // compaction).
     val tagged = known.select($"url_hash", lit(true).as("k"), lit(false).as("r"))
       .unionByName(reseededHashes.select($"url_hash", lit(false).as("k"), lit(true).as("r")))
-      .groupBy($"url_hash").agg(max($"k").as("k"), max($"r").as("r")).persist()
-    val inSeen = CrawlEngine.seenJoin(spark, tagged, seen, tagged.select($"url_hash"),
-      requested + reseededRows, "left_semi").select($"url_hash", lit(true).as("s"))
-    // one op stream: -1 = retract, +1 = re-add
-    val ops = tagged.join(inSeen, Seq("url_hash"), "left")
-      .select($"url_hash",
-        when($"k" && !$"r" && $"s".isNotNull, -1)
-          .when($"r" && $"s".isNull, 1).as("op"))
-      .filter($"op".isNotNull).persist()
-    // the same aggregate gathers the filter buckets the ops land in (at
-    // most 2 × numPartitions ints) for the bucket maintenance below
-    val bucketOf = CrawlEngine.bloomBucketCol($"url_hash",
-      io.stat("bloom_buckets").getOrElse(1L).toInt)
-    val opCounts = ops.agg(
-      count(when($"op" < 0, 1)), count(when($"op" > 0, 1)),
-      collect_set(when($"op" < 0, bucketOf)),
-      collect_set(when($"op" > 0, bucketOf))).head()
-    val retractedCount = opCounts.getLong(0)
-    val reAddCount = opCounts.getLong(1)
-    val deleteBuckets = opCounts.getSeq[Int](2).toSet
-    val addBuckets = opCounts.getSeq[Int](3).toSet
-    var rebuilt = 0L
-    var cuckooUpdated = 0L
-    if (retractedCount > 0 || reAddCount > 0) {
+      .groupBy($"url_hash").agg(max($"k").as("k"), max($"r").as("r"))
+      .as[(Long, Boolean, Boolean)].rdd
+    val answer = SeenSet.probe(spark, tagged, seen, "url_hash", requested + reseededRows)(
+      _._1, _ => true).persist()
+    // (url_hash, k, r) with whether seen holds it: retract a target that
+    // was not re-staged and is in seen; re-add a re-staged hash it lacks
+    val deletes = answer.collect { case ((h, true, false), true) => h }
+    val adds = answer.collect { case ((h, _, true), false) => h }
+    val Seq(retractedCount, reAddCount) = Seq(deletes, adds).map(_.count())
+    val (rebuilt, cuckooUpdated) = if (retractedCount == 0 && reAddCount == 0) (0L, 0L) else {
       val obsSeen = Observation()
       val newSeen = seen
-        .join(ops.filter($"op" < 0).select($"url_hash"), Seq("url_hash"), "left_anti")
-        .unionByName(ops.filter($"op" > 0).select($"url_hash"))
+        .join(deletes.toDF("url_hash"), Seq("url_hash"), "left_anti")
+        .unionByName(adds.toDF("url_hash"))
         .observe(obsSeen, count(lit(1)).as("n"))
       val (genKey, genVal) = io.stageGeneration("seen", atWave = 0, newSeen)
       stats += (genKey -> genVal)
@@ -318,9 +305,11 @@ object SeenMaintenance {
       // committed snapshot byte-identical)
       val staged = spark.read.schema(TableIO.SeenSchema)
         .parquet(s"${io.warehouse}/seen_g$genVal/w0")
-      val (r, u) = maintainFilterBuckets(spark, io, ops, deleteBuckets,
-        addBuckets, staged, c, stats)
-      rebuilt = r; cuckooUpdated = u
+      SeenSet.afterForget(spark, io, c, deletes, adds, staged).fold((0L, 0L)) {
+        case (buckets, rebuilt, cuckooUpdated) =>
+          stats += io.stageGeneration("blooms", atWave = c, buckets.toDS().toDF())
+          (rebuilt, cuckooUpdated)
+      }
     }
 
     // ---- 4. document removal (operator removal request) ------------------
@@ -344,99 +333,9 @@ object SeenMaintenance {
     io.dropOldGenerations("blooms")
     io.dropOldGenerations("reseed")
     if (dropDocuments) io.dropOldGenerations("documents")
-    flaggedTargets.unpersist(); tagged.unpersist(); ops.unpersist()
+    flaggedTargets.unpersist(); answer.unpersist()
     if (reseedAll != null) reseedAll.unpersist()
     ForgetReport(requested, retractedCount, reseededCount, droppedDocs,
       rebuilt, cuckooUpdated, skippedPending)
-  }
-
-  /** Update the persisted filter buckets for an op stream of (url_hash,
-    * op) rows — op -1 retracts a hash, +1 re-adds a recrawl hash — whose
-    * deletes and adds land in `deleteBuckets` / `addBuckets`; `newSeen` is
-    * the staged post-op seen snapshot the rebuilds draw from. No-op when
-    * the negative cache was never engaged (readBlooms will rebuild from the
-    * already-rewritten seen table if it engages later).
-    */
-  private def maintainFilterBuckets(spark: SparkSession, io: TableIO,
-      opStream: DataFrame, deleteBuckets: Set[Int], addBuckets: Set[Int],
-      newSeen: DataFrame,
-      committedWave: Int,
-      stats: scala.collection.mutable.Builder[(String, Long), Map[String, Long]])
-      : (Long, Long) = {
-    import spark.implicits._
-    val nbOpt = io.stat("bloom_buckets")
-    if (nbOpt.isEmpty || !io.waveExists("blooms", committedWave) ||
-        !io.stat("blooms_v").contains(CrawlEngine.BloomsVersion))
-      return (0L, 0L)
-    val nb = nbOpt.get.toInt
-    val buckets = io.readWave("blooms", committedWave, TableIO.BloomsSchema)
-      .as[FilterBucket]
-
-    val ops = opStream.select($"url_hash", $"op").as[(Long, Int)]
-    val affected = deleteBuckets ++ addBuckets
-    if (affected.isEmpty) return (0L, 0L)
-
-    // bucket-kind directory: O(numPartitions) rows of 3 ints — the only
-    // driver-side structure, bounded by parallelism, never by data
-    val kinds = buckets.select($"bucket", $"kind", $"saturated")
-      .collect().map(r => r.getInt(0) -> ((r.getInt(1), r.getBoolean(2)))).toMap
-    // a bucket needs a full rebuild (to Cuckoo) iff it LOSES a hash while
-    // its current representation cannot delete (Bloom, or saturated, or
-    // inconsistent/absent); adds alone never force a rebuild
-    val rebuildSet = deleteBuckets.filter { b =>
-      kinds.get(b).forall { case (k, sat) => k == FilterBucket.KindBloom || sat }
-    }
-    val updateSet = affected -- rebuildSet
-
-    // rebuild class: buckets rebuilt as Cuckoo over their hashes in the
-    // post-op seen snapshot, sized with headroom for future adds (config
-    // capacity share)
-    val cfg = io.readConfig().map(CrawlConfigCodec.fromJson)
-    val perBucketCap = cfg.map(c => math.max(1024L, c.bloomCapacity / nb))
-      .getOrElse(1024L)
-    val fpr = cfg.map(_.bloomFpr).getOrElse(0.001)
-    // skipped entirely when nothing needs a rebuild — the incremental path
-    // must stay O(deletes), never a scan of the seen set
-    val rebuildB = spark.sparkContext.broadcast(rebuildSet)
-    val rebuilt = if (rebuildSet.isEmpty) spark.emptyDataset[FilterBucket]
-    else newSeen.select($"url_hash").as[Long]
-      // map-side filter before the shuffle: only rebuild buckets' hashes move
-      .filter(h => rebuildB.value.contains(CrawlEngine.bloomBucket(h, nb)))
-      .groupByKey(h => CrawlEngine.bloomBucket(h, nb))
-      .mapGroups { (b, hs) =>
-        val all = hs.toArray
-        val cf = CuckooFilter64.forCapacity(math.max(perBucketCap, all.length.toLong))
-        var sat = false
-        all.foreach { h => if (!cf.add(h)) sat = true }
-        FilterBucket.ofCuckoo(b, cf, sat)
-      }
-
-    // incremental class: removes hit only Cuckoo-unsaturated buckets (the
-    // rebuild set caught every other delete); adds preserve the bucket's
-    // kind, creating a fresh Bloom bucket when none exists yet
-    val updateB = spark.sparkContext.broadcast(updateSet)
-    val updated = ops
-      .groupByKey { case (h, _) => CrawlEngine.bloomBucket(h, nb) }
-      .cogroup(buckets.groupByKey(_.bucket)) { (b, os, bs) =>
-        if (!updateB.value.contains(b)) Iterator.empty
-        else {
-          val (dels, adds) = os.toArray.partition(_._2 < 0)
-          val base = if (bs.hasNext) bs.next()
-            else FilterBucket.of(b,
-              graft.core.BloomFilter64.forCapacity(perBucketCap, fpr))
-          val afterDels =
-            if (dels.isEmpty) base else base.removeAll(dels.iterator.map(_._1))
-          Iterator(afterDels.addAll(adds.iterator.map(_._1)))
-        }
-      }
-
-    // untouched buckets carry over unchanged; a rebuild bucket whose rows
-    // were ALL deleted simply disappears (an absent bucket means "nothing
-    // seen here" — exactly right after full retraction)
-    val untouched = buckets.filter(!$"bucket".isin(affected.toSeq: _*))
-    val newBuckets = untouched.toDF()
-      .unionByName(rebuilt.toDF()).unionByName(updated.toDF())
-    stats += io.stageGeneration("blooms", atWave = committedWave, newBuckets)
-    (rebuildSet.size.toLong, deleteBuckets.diff(rebuildSet).size.toLong)
   }
 }

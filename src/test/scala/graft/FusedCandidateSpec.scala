@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The wave's fused candidate step — Bloom-flagged first occurrences
   * ([[CrawlEngine.flagFirsts]]), the exact seen check
-  * ([[CrawlEngine.absentFrom]]) and the capped seq numbering
+  * ([[SeenSet.absent]]) and the capped seq numbering
   * ([[CrawlEngine.capAndNumber]]) — equals the reference formulation: the
   * first occurrence per url_hash by (parent_seq, link_index), minus `seen`,
   * then the maxLinksPerPage cap per parent, then dense seqs from
@@ -68,14 +68,14 @@ class FusedCandidateSpec extends AnyFunSuite {
         hs.foreach(bf.add)
         FilterBucket.of(b, bf, hs.size.toLong)
       }.toSeq
-    val blooms = CrawlEngine.byBucket(
+    val blooms = SeenSet.byBucket(
       sc.parallelize(if (w.engaged) filters else Nil, 2), NumBuckets)(_.bucket)
     val flagged = CrawlEngine.flagFirsts(sc.parallelize(cands, 3), blooms,
       w.engaged, NumBuckets)
     val seen = w.seen.toSeq.toDF("url_hash")
     // a key count past the broadcast threshold takes the sort-merge branch
     val keyCount = if (w.broadcastProbe) cands.size.toLong else Long.MaxValue
-    val unseen = CrawlEngine.absentFrom(spark, flagged, seen, "url_hash",
+    val unseen = SeenSet.absent(spark, flagged, seen, "url_hash",
       keyCount)(_.url_hash, _.maybe_seen)
     CrawlEngine.capAndNumber(unseen, w.cap, w.start, 3).collect().toSeq
       .map { e =>

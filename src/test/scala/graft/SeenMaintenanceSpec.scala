@@ -344,7 +344,7 @@ class SeenMaintenanceSpec extends AnyFunSuite {
     io.mergeStats(Map(k -> v))
     assert(bucketsOf(io)(victim).saturated)
 
-    // drive one real wave (reseed a page) — readBlooms must heal the
+    // drive one real wave (reseed a page) — SeenSet.read must heal the
     // bucket: rebuilt as unsaturated cuckoo over its seen hashes
     SeenMaintenance.forgetUrls(spark, wh, Seq(url(3)), reseed = true)
     val io2 = crawl(wh)

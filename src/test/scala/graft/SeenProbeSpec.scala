@@ -2,21 +2,22 @@ package graft
 
 import graft.core.{ScopeFilter, UrlCanonicalizer}
 import graft.crawl._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{BinaryExecNode, FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalacheck.{Gen, Prop, Test => Check}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
-/** The probe-side exact seen check ([[CrawlEngine.seenJoin]]): it returns
-  * exactly the rows of the plain join on both of its branches, and no
-  * crawl wave or forget ever broadcasts the seen table.
+/** The probe-side exact seen check ([[SeenSet.probe]]): on both of its
+  * branches it answers present and absent exactly like the plain joins,
+  * and no crawl wave or forget ever broadcasts the seen table.
   */
 class SeenProbeSpec extends AnyFunSuite {
 
@@ -70,6 +71,9 @@ class SeenProbeSpec extends AnyFunSuite {
     }
   }
 
+  /** The RDDs `r` is computed from, itself included. */
+  private def lineage(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
+
   test("probe-side seen check returns exactly the plain join's rows on both" +
       " branches (property, 200 cases)") {
     import spark.implicits._
@@ -78,36 +82,54 @@ class SeenProbeSpec extends AnyFunSuite {
     val hash = Gen.choose(-12L, 12L)
     val genSeen = Gen.listOf(hash)
     val genCands = Gen.listOf(Gen.zip(hash, Gen.choose(0, 3)))
-    def rowsOf(df: DataFrame): Seq[(Long, Int)] =
-      df.select($"url_hash", $"payload").as[(Long, Int)].collect().toSeq.sorted
+    // the executed plans, through a listener: the broadcast branch's hits
+    // query is the only Dataset action in a case
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    def ranBroadcastJoin(waitFor: Boolean): Boolean = {
+      var waited = 0
+      def found = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(nodes)
+        .exists(_.isInstanceOf[BroadcastHashJoinExec])
+      while (waitFor && !found && waited < 250) { Thread.sleep(20); waited += 1 }
+      found
+    }
 
     val prop = Prop.forAllNoShrink(genSeen, genCands) { (seenList, candList) =>
       val seen = seenList.toDF("url_hash")
-      val cands = candList.toDF("url_hash", "payload")
-      val keys = cands.select($"url_hash")
       val n = candList.size.toLong
-      val plainAnti = rowsOf(cands.join(seen, Seq("url_hash"), "left_anti"))
       val seenSet = seenList.toSet
-      val modelSemi = candList.filter(c => seenSet(c._1)).sorted
+      val (modelSemi, modelAnti) = candList.sorted.partition(c => seenSet(c._1))
       val nonEmpty = seenList.nonEmpty && candList.nonEmpty
       // keys × 8 B exactly at the threshold: broadcast; one byte under it:
-      // the shuffle-join fallback
+      // the sort-merge fallback
       Seq(n * 8 -> true, n * 8 - 1 -> false).forall { case (threshold, bc) =>
         withThreshold(threshold) {
-          val anti = CrawlEngine.seenJoin(spark, cands, seen, keys, n, "left_anti")
-          val semi = CrawlEngine.seenJoin(spark, cands, seen, keys, n, "left_semi")
-          val antiRows = rowsOf(anti)
-          val plan = nodes(anti.queryExecution.executedPlan)
+          plans.clear()
+          val answer = SeenSet.probe(spark, spark.sparkContext.parallelize(candList, 2),
+            seen, "url_hash", n)(_._1, _ => true)
+          val (present, absent) = answer.collect().toSeq.partition(_._2)
+          // the broadcast branch streams seen past the broadcast keys and
+          // keeps the rows' layout (no shuffle); the fallback's two joins
+          // are sort-merge joins (each zips its two sorted inputs) and no
+          // broadcast hash join runs
+          val zips = lineage(answer).count(_.getClass.getSimpleName == "ZippedPartitionsRDD2")
           val shapeOk = !nonEmpty || (
-            if (bc) plan.exists(_.isInstanceOf[BroadcastHashJoinExec])
-            else !plan.exists(_.isInstanceOf[BroadcastHashJoinExec]) &&
-              plan.exists(_.isInstanceOf[SortMergeJoinExec]))
-          antiRows == plainAnti && rowsOf(semi) == modelSemi && shapeOk
+            if (bc) ranBroadcastJoin(waitFor = true) && zips == 0
+            else zips == 2 && !ranBroadcastJoin(waitFor = false))
+          absent.map(_._1).sorted == modelAnti && present.map(_._1).sorted == modelSemi &&
+            shapeOk
         }
       }
     }
-    val result = Check.check(
-      Check.Parameters.default.withMinSuccessfulTests(200).withWorkers(1), prop)
+    spark.listenerManager.register(listener)
+    val result =
+      try Check.check(
+        Check.Parameters.default.withMinSuccessfulTests(200).withWorkers(1), prop)
+      finally spark.listenerManager.unregister(listener)
     assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
   }
 
