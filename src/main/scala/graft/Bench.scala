@@ -1,8 +1,9 @@
 package graft
 
 import graft.crawl._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import java.util.Locale
 
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR plus the crawl-engine throughput bench, prints ONE
@@ -37,21 +38,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = LocalSpark.envCpus(32)
     // optional comma-separated subset for profiling (e.g. isolating one
     // query's wall time from its predecessors'); "nocrawl" skips the crawl leg
     val subset = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val skipCrawl = subset.exists(s => !s.contains("crawl"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark(cpus, cpus, "graft-bench")
 
     // untimed session warmup: JVM/JIT, codegen compilation, and parquet
     // footer reads land here instead of inflating the first timed query
@@ -92,15 +85,18 @@ object Bench {
 
     // ---- crawl-engine throughput (pages fetched+extracted per second) ----
     val (crawlSec, pages, waves) =
-      if (skipCrawl) (0.0, 0L, 0) else crawlBench(spark, cpus)
+      if (skipCrawl) (0.0, 0L, 0) else {
+        val (sec, pages, waves, _) = crawlBenchIo(spark, cpus)
+        (sec, pages, waves)
+      }
     if (!skipCrawl) results("crawl") = crawlSec
     val pagesPerSec = if (crawlSec > 0) pages / crawlSec else 0.0
 
     // ---- scale-evidence legs (VERDICT_r05 #4) -----------------------------
     // (a) the same engine with a 10^6-row PRE-SEEDED seen table: the bloom
     //     negative cache genuinely engages (threshold 200k) and every
-    //     wave's candidates cogroup against filters rebuilt from the
-    //     authoritative seen set — the shape of a long-running crawl's
+    //     wave's candidates are flagged against filter buckets rebuilt from
+    //     the authoritative seen set — the shape of a long-running crawl's
     //     late waves, which the fresh-start leg never reaches;
     // (b) a SKEWED web (one host = 50% of all pages) with a binding
     //     per-host wave cap: scheduling-level skew control must bound the
@@ -123,71 +119,123 @@ object Bench {
       results("crawl_skew") = skewSec
     }
 
-    // failed queries are absent from `results`, so the headline total only
-    // sums real timings — a fully-failing query invalidates comparability,
-    // it doesn't make the run faster
-    val total = results.values.sum
-    val qs = (results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" } ++
-        failed.map(k => "\"" + k + "\":null"))
-      .mkString("{", ",", "}")
-    val ss = samples.map { case (k, vs) =>
-      "\"" + k + "\":" + vs.map(v => f"$v%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val fl = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val seededPps = if (seededSec > 0) seededPages / seededSec else 0.0
     val skewPps = if (skewSec > 0) skewPages / skewSec else 0.0
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"samples":$ss,"failed":$fl,"reps":$reps,"sf":"$sfDir","cpus":$cpus,"crawl_pages":$pages,"crawl_waves":$waves,"crawl_pages_per_sec":${f"$pagesPerSec%.1f"},"seeded_seen_rows":1000000,"seeded_bloom_engaged":$seededBloom,"seeded_pages":$seededPages,"seeded_pages_per_sec":${f"$seededPps%.1f"},"forget_batch_size":$forgetBatch,"forget_retracted":$forgetRetracted,"forget_buckets_to_cuckoo":$forgetToCuckoo,"forget_buckets_incremental":$forgetIncr,"skew_pages":$skewPages,"skew_waves":$skewWaves,"skew_hot_max_per_wave":$skewHotMax,"skew_pages_per_sec":${f"$skewPps%.1f"}}""")
+    println(resultLine(sfDir, cpus, reps, results.toSeq, samples.toSeq,
+      failed.toSeq, Seq(
+        "crawl_pages" -> pages, "crawl_waves" -> waves,
+        "crawl_pages_per_sec" -> pagesPerSec,
+        "seeded_seen_rows" -> 1000000, "seeded_bloom_engaged" -> seededBloom,
+        "seeded_pages" -> seededPages, "seeded_pages_per_sec" -> seededPps,
+        "forget_batch_size" -> forgetBatch, "forget_retracted" -> forgetRetracted,
+        "forget_buckets_to_cuckoo" -> forgetToCuckoo,
+        "forget_buckets_incremental" -> forgetIncr,
+        "skew_pages" -> skewPages, "skew_waves" -> skewWaves,
+        "skew_hot_max_per_wave" -> skewHotMax, "skew_pages_per_sec" -> skewPps)))
     spark.stop()
   }
+
+  /** Bench's one JSON line. `value` is the sum of `results` (seconds per
+    * query or crawl leg); `failed` queries print as null and stay out of it
+    * (a failing query invalidates comparability, it does not make the run
+    * faster); `stats` follow in order, Doubles with one decimal. Numbers
+    * are formatted under Locale.ROOT: a default locale with a decimal comma
+    * must not turn `1.234` into `1,234` and break the JSON.
+    */
+  def resultLine(sfDir: String, cpus: Int, reps: Int,
+      results: Seq[(String, Double)], samples: Seq[(String, Seq[Double])],
+      failed: Seq[String], stats: Seq[(String, Any)]): String = {
+    def num(digits: Int)(v: Double) = s"%.${digits}f".formatLocal(Locale.ROOT, v)
+    def str(s: String) = "\"" + s + "\""
+    def obj(fields: Seq[(String, String)]) =
+      fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+    val queries = results.map { case (k, v) => k -> num(3)(v) } ++
+      failed.map(_ -> "null")
+    val sampled = samples.map { case (k, vs) => k -> vs.map(num(3)).mkString("[", ",", "]") }
+    obj(Seq("metric" -> str("total"), "value" -> num(3)(results.map(_._2).sum),
+      "unit" -> str("sec"), "queries" -> obj(queries), "samples" -> obj(sampled),
+      "failed" -> failed.map(str).mkString("[", ",", "]"),
+      "reps" -> reps.toString, "sf" -> str(sfDir), "cpus" -> cpus.toString) ++
+      stats.map {
+        case (k, v: Double) => k -> num(1)(v)
+        case (k, v) => k -> v.toString
+      })
+  }
+
+  // ~60 ms CPU per page stands in for parsing + analyzing realistically-
+  // sized pages (~100 KB of HTML through a browser-grade parser; the
+  // synthetic fixtures are ~2 KB so their real parse cost is ~30x off);
+  // override for profiling via GRAFT_EXTRACT_COST_NANOS
+  private lazy val extractCostNanos =
+    sys.env.get("GRAFT_EXTRACT_COST_NANOS").map(_.toLong).getOrElse(60000000L)
+
+  /** One crawl leg: crawls `spec`'s synthetic web to completion with `cpus`
+    * partitions on a fresh warehouse — seeded with `extraSeen` hashes first
+    * when given — and returns (sec, waves, engine, io).
+    */
+  private def timedCrawl(spark: SparkSession, cpus: Int,
+      spec: SyntheticWeb.Spec, waveBudgetMs: Long, logFetches: Boolean,
+      extraSeen: Option[DataFrame] = None): (Double, Int, CrawlEngine, TableIO) = {
+    val site = SyntheticWeb.generate(spec)
+    val config = CrawlConfig(rootUrl = site.rootUrl,
+      scope = graft.core.ScopeFilter.Domain, waveBudgetMs = waveBudgetMs,
+      maxWaves = 60, logFetches = logFetches,
+      simulatedExtractCostNanos = extractCostNanos)
+    // 0.2 ms simulated fetch CPU (socket bookkeeping; network latency is
+    // WALL time handled by politeness pacing, not CPU, so it does not
+    // belong in the per-host-serial fetch partition)
+    val fetcher = SyntheticFetcher.broadcast(spark, site,
+      simulatedCostNanos = 200000L)
+    val io = new TableIO(
+      java.nio.file.Files.createTempDirectory("graft-bench").toString, spark)
+    extraSeen.foreach(seen =>
+      CrawlEngine.seedWarehouse(spark, io, config, extraSeen = seen))
+    val engine = new CrawlEngine(spark, io, config, fetcher, numPartitions = cpus)
+    val t0 = System.nanoTime()
+    val waves = engine.run()
+    ((System.nanoTime() - t0) / 1e9, waves, engine, io)
+  }
+
+  private def metricsPages(io: TableIO): Long =
+    io.readAll("metrics", TableIO.MetricsSchema)
+      .agg(sum(col("pages"))).head().getLong(0)
 
   /** Seeded synthetic-web crawl: tree-shaped links (BFS depth ~log_f n) so
     * waves are large and the engine — not wave-loop fixed cost — dominates.
     * Fixed simulated per-page fetch cost exercises the politeness/schedule/
-    * extract pipeline rather than the absent network.
+    * extract pipeline rather than the absent network. Politeness caps stay
+    * real but non-binding; request-log I/O is excluded from the measured
+    * loop. Returns (sec, pages, waves, io).
     */
-  def crawlBench(spark: SparkSession, cpus: Int,
-      hosts: Int = 24, pagesPerHost: Int = 1250): (Double, Long, Int) = {
-    val (sec, pages, waves, _) = crawlBenchIo(spark, cpus, hosts, pagesPerHost)
-    (sec, pages, waves)
+  def crawlBenchIo(spark: SparkSession, cpus: Int,
+      hosts: Int = 24, pagesPerHost: Int = 1250): (Double, Long, Int, TableIO) = {
+    val (sec, waves, _, io) = timedCrawl(spark, cpus, SyntheticWeb.Spec(
+      hosts = hosts, pagesPerHost = pagesPerHost, hotHostFactor = 3,
+      fanout = 64, seed = 42L, treeLinks = true, sharedDomain = true),
+      waveBudgetMs = 600000L, logFetches = false)
+    (sec, metricsPages(io), waves, io)
   }
 
   /** Scale-evidence leg (a): crawl over a warehouse whose seen table is
     * PRE-SEEDED with `preSeeded` junk hashes (offset past any real
     * url_hash range), so seen_total clears bloomMinSeenRows from wave 0 —
     * the bloom buckets rebuild distributedly from the million-row seen
-    * set and every wave's candidates take the cogroup path. Returns
+    * set and every wave's candidates are flagged against them. Returns
     * (sec, pages, bloomEngaged, warehousePath) — the warehouse feeds the
     * retraction leg ([[forgetBench]]).
     */
   def seededSeenBench(spark: SparkSession, cpus: Int,
       preSeeded: Long = 1000000L,
       hosts: Int = 12, pagesPerHost: Int = 250): (Double, Long, Boolean, String) = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val site = SyntheticWeb.generate(SyntheticWeb.Spec(
+    // hashes offset to 2^40+ never collide with real 64-bit url hashes in
+    // practice, so crawl results are those of a fresh crawl while the seen
+    // machinery carries 10^6 rows
+    val junk = spark.range(preSeeded).select((col("id") + (1L << 40)).as("url_hash"))
+    val (sec, _, engine, io) = timedCrawl(spark, cpus, SyntheticWeb.Spec(
       hosts = hosts, pagesPerHost = pagesPerHost, hotHostFactor = 3,
-      fanout = 64, seed = 43L, treeLinks = true, sharedDomain = true))
-    val config = CrawlConfig(rootUrl = site.rootUrl,
-      scope = graft.core.ScopeFilter.Domain,
-      waveBudgetMs = 600000L, maxWaves = 60, logFetches = false,
-      simulatedExtractCostNanos =
-        sys.env.get("GRAFT_EXTRACT_COST_NANOS").map(_.toLong).getOrElse(60000000L))
-    val fetcher = SyntheticFetcher.broadcast(spark, site, simulatedCostNanos = 200000L)
-    val wh = java.nio.file.Files.createTempDirectory("graft-bench-seeded").toString
-    val io = new TableIO(wh, spark)
-    // shared bootstrap + the junk seen rows: hashes offset to 2^40+ never
-    // collide with real 64-bit url hashes in practice, so crawl results
-    // are those of a fresh crawl while the seen machinery carries 10^6 rows
-    CrawlEngine.seedWarehouse(spark, io, config,
-      extraSeen = spark.range(preSeeded)
-        .select((col("id") + (1L << 40)).as("url_hash")))
-    val engine = new CrawlEngine(spark, io, config, fetcher, numPartitions = cpus)
-    val t0 = System.nanoTime()
-    engine.run()
-    val sec = (System.nanoTime() - t0) / 1e9
-    val pages = io.readAll("metrics", TableIO.MetricsSchema)
-      .agg(org.apache.spark.sql.functions.sum(col("pages"))).head().getLong(0)
-    (sec, pages, engine.lastWaveBloomEngaged, wh)
+      fanout = 64, seed = 43L, treeLinks = true, sharedDomain = true),
+      waveBudgetMs = 600000L, logFetches = false, extraSeen = Some(junk))
+    (sec, metricsPages(io), engine.lastWaveBloomEngaged, io.warehouse)
   }
 
   /** Scale-evidence leg (c): seen-set retraction (SeenMaintenance) against
@@ -230,61 +278,15 @@ object Bench {
     */
   def skewBench(spark: SparkSession, cpus: Int,
       hosts: Int = 8, pagesPerHost: Int = 150): (Double, Long, Int, Long) = {
-    import org.apache.spark.sql.functions.{col, count, max, lit}
-    val site = SyntheticWeb.generate(SyntheticWeb.Spec(
+    val (sec, waves, _, io) = timedCrawl(spark, cpus, SyntheticWeb.Spec(
       hosts = hosts, pagesPerHost = pagesPerHost, hotHostFactor = hosts - 1,
-      fanout = 64, seed = 44L, treeLinks = true, sharedDomain = true))
-    val config = CrawlConfig(rootUrl = site.rootUrl,
-      scope = graft.core.ScopeFilter.Domain,
+      fanout = 64, seed = 44L, treeLinks = true, sharedDomain = true),
       waveBudgetMs = 15000L, // cap = 15000/100ms = 150 pages/host/wave: BINDS
-      maxWaves = 60,
-      logFetches = true, // per-(wave, host) counts are this leg's evidence
-      simulatedExtractCostNanos =
-        sys.env.get("GRAFT_EXTRACT_COST_NANOS").map(_.toLong).getOrElse(60000000L))
-    val fetcher = SyntheticFetcher.broadcast(spark, site, simulatedCostNanos = 200000L)
-    val wh = java.nio.file.Files.createTempDirectory("graft-bench-skew").toString
-    val io = new TableIO(wh, spark)
-    val engine = new CrawlEngine(spark, io, config, fetcher, numPartitions = cpus)
-    val t0 = System.nanoTime()
-    val waves = engine.run()
-    val sec = (System.nanoTime() - t0) / 1e9
+      logFetches = true) // per-(wave, host) counts are this leg's evidence
     val log = io.readAll("fetch_log", TableIO.FetchLogSchema)
-    val pages = log.count()
     val hotMax = log.groupBy(col("wave"), col("host"))
       .agg(count(lit(1)).as("n"))
       .agg(max(col("n"))).head().getLong(0)
-    (sec, pages, waves, hotMax)
-  }
-
-  def crawlBenchIo(spark: SparkSession, cpus: Int,
-      hosts: Int = 24, pagesPerHost: Int = 1250): (Double, Long, Int, TableIO) = {
-    val site = SyntheticWeb.generate(SyntheticWeb.Spec(
-      hosts = hosts, pagesPerHost = pagesPerHost, hotHostFactor = 3,
-      fanout = 64, seed = 42L, treeLinks = true, sharedDomain = true))
-    val config = CrawlConfig(rootUrl = site.rootUrl,
-      scope = graft.core.ScopeFilter.Domain,
-      waveBudgetMs = 600000L, // politeness caps stay real but non-binding
-      maxWaves = 60,
-      logFetches = false, // request-log I/O excluded from the measured loop
-      // ~60 ms CPU per page stands in for parsing + analyzing realistically-
-      // sized pages (~100 KB of HTML through a browser-grade parser; the
-      // synthetic fixtures are ~2 KB so their real parse cost is ~30x off);
-      // override for profiling via GRAFT_EXTRACT_COST_NANOS
-      simulatedExtractCostNanos =
-        sys.env.get("GRAFT_EXTRACT_COST_NANOS").map(_.toLong).getOrElse(60000000L))
-    // 0.2 ms simulated fetch CPU (socket bookkeeping; network latency is
-    // WALL time handled by politeness pacing, not CPU, so it does not
-    // belong in the per-host-serial fetch partition)
-    val fetcher = SyntheticFetcher.broadcast(spark, site,
-      simulatedCostNanos = 200000L)
-    val wh = java.nio.file.Files.createTempDirectory("graft-bench-wh").toString
-    val io = new TableIO(wh, spark)
-    val engine = new CrawlEngine(spark, io, config, fetcher, numPartitions = cpus)
-    val t0 = System.nanoTime()
-    val waves = engine.run()
-    val sec = (System.nanoTime() - t0) / 1e9
-    val pages = io.readAll("metrics", TableIO.MetricsSchema)
-      .agg(sum(col("pages"))).head().getLong(0)
-    (sec, pages, waves, io)
+    (sec, log.count(), waves, hotMax)
   }
 }

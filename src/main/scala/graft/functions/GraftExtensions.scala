@@ -3,10 +3,11 @@ package graft.functions
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** SparkSessionExtensions entry point: registers graft's custom Catalyst
-  * functions so any session built with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` — or
+  * functions so any session whose builder calls
+  * `withExtensions(new GraftExtensions)` — or is given
   * `spark.sql.extensions=graft.functions.GraftExtensions` on spark-submit —
-  * gets them in SQL.
+  * gets them in SQL. Only a new session picks extensions up: `getOrCreate`
+  * on a running one ignores them.
   *
   * Per SURVEY.md §4 no custom Rule/SparkStrategy is needed for this engine:
   * all relational work lands on built-in Catalyst operators by design; the

@@ -3,7 +3,6 @@ package graft
 import graft.core.ScopeFilter
 import graft.crawl._
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -23,15 +22,7 @@ import java.nio.file.Files
   * 153, 152, 151): about 160 cache entries per wave, so the LRU evicted each
   * class before the next wave reused it.
   */
-class CodegenBudgetSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CodegenBudgetSpec extends AnyFunSuite with SharedSpark {
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 

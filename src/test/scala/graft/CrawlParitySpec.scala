@@ -2,7 +2,6 @@ package graft
 
 import graft.core.ScopeFilter
 import graft.crawl._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -10,21 +9,13 @@ import java.nio.file.Files
   * reproduce the sequential oracle's crawl ordering, final URL-seen set,
   * and per-row span sequences, and must resume exactly from a checkpoint.
   */
-class CrawlParitySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CrawlParitySpec extends AnyFunSuite with SharedSpark {
 
   private val site = SyntheticWeb.generate(
     SyntheticWeb.Spec(hosts = 2, pagesPerHost = 6, hotHostFactor = 2, fanout = 3))
   // small politeness budget so per-host caps bind and carryover is exercised
-  // bloomMinSeenRows = 0: always exercise the partition-local bloom
-  // cogroup path (the production threshold would skip it at fixture scale)
+  // bloomMinSeenRows = 0: always exercise the bucket-zipped Bloom flag
+  // pass (the production threshold would skip it at fixture scale)
   private val config = CrawlConfig(rootUrl = site.rootUrl,
     scope = ScopeFilter.Domain, waveBudgetMs = 3000L, maxWaves = 40,
     bloomMinSeenRows = 0L)
@@ -132,7 +123,7 @@ class CrawlParitySpec extends AnyFunSuite {
   test("resume at a DIFFERENT parallelism ignores persisted blooms (no false negatives)") {
     // blooms staged at numPartitions=4 are keyed floorMod(hash, 4); resuming
     // at 3 partitions must rebuild them from `seen` (bloom_buckets stat
-    // mismatch), or candidates cogroup against the wrong bucket's filter and
+    // mismatch), or candidates are zipped with the wrong bucket's filter and
     // already-seen URLs get re-crawled
     val wh = Files.createTempDirectory("graft-resume-parts").toString
     runEngine(wh, wavesPerRun = 2) // blooms committed with bloom_buckets=4
@@ -328,13 +319,13 @@ class CrawlParitySpec extends AnyFunSuite {
     // the stylesheet URL itself was never crawled as a page
     assert(!engineDocs.exists(_.doc_id.contains("style.css")))
   }
-  test("pre-seeded million-scale seen set engages the bloom cogroup path, crawl unchanged") {
+  test("pre-seeded million-scale seen set engages the Bloom filter buckets, crawl unchanged") {
     // 250k junk hashes (> bloomMinSeenRows default 200k) pre-seed the seen
     // table at offsets past any real url_hash, so the crawl RESULT is that
     // of a fresh crawl while the seen machinery carries the rows: the
     // bloom buckets must rebuild from the seeded set and every wave's
-    // candidates take the partition-local cogroup — the late-wave shape of
-    // a long-running crawl (VERDICT_r05 #4 scale evidence)
+    // candidates are flagged against their bucket's filter — the late-wave
+    // shape of a long-running crawl (VERDICT_r05 #4 scale evidence)
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val pre = 250000L

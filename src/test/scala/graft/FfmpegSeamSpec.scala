@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.{FfmpegCodec, Multimodal}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The ffmpeg-CLI seam for non-JDK containers (MP4 etc.): real decode when
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * they are absent (this sandbox has no ffmpeg — the integration tests
   * self-cancel via assume()).
   */
-class FfmpegSeamSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-ffmpeg-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FfmpegSeamSpec extends AnyFunSuite with SharedSpark {
 
   /** GFT stub blob: 'GFT' magic + 0 + 16-bit w/h + payload. */
   private def gft(w: Int, h: Int, payload: Array[Byte]): Array[Byte] =

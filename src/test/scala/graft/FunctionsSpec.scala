@@ -2,19 +2,11 @@ package graft
 
 import graft.functions.XxHash64Seed0
 import graft.ops.DatasetExport
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class FunctionsSpec extends AnyFunSuite {
+class FunctionsSpec extends AnyFunSuite with SharedSpark {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-fn-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   test("XxHash64Seed0 expression matches the kernel hash, eval and codegen") {

@@ -2,7 +2,6 @@ package graft
 
 import graft.core.BloomFilter64
 import graft.crawl._
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop, Test => Check}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,16 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * then the maxLinksPerPage cap per parent, then dense seqs from
   * prevMaxSeq + 1 in (parent_seq, link_index) order.
   */
-class FusedCandidateSpec extends AnyFunSuite {
+class FusedCandidateSpec extends AnyFunSuite with SharedSpark {
   import FusedCandidateSpec.Wave
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val NumBuckets = 3
 

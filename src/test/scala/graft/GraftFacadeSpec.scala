@@ -2,19 +2,10 @@ package graft
 
 import graft.core.ScopeFilter
 import graft.crawl._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-class GraftFacadeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-facade-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraftFacadeSpec extends AnyFunSuite with SharedSpark {
 
   test("crawl → documents → export → render, end to end through the facade") {
     val site = SyntheticWeb.generate(

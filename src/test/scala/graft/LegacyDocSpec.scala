@@ -8,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`wordslab.nlptextdoc/NLPTextDocumentReader.cs:12-226`) and its
   * round-trip writer.
   */
-class LegacyDocSpec extends AnyFunSuite {
-
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-legacy-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LegacyDocSpec extends AnyFunSuite with SharedSpark {
 
   private def doc(spans: Seq[Span]): LegacyDoc =
     LegacyDoc("https://example.org/a", "A title", "01/02/2026 03:04:05",

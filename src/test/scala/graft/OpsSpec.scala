@@ -9,15 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * cannot reproduce (minhash/simhash/LSH): assert against plain-Scala
   * oracles and known constructions instead.
   */
-class OpsSpec extends AnyFunSuite {
+class OpsSpec extends AnyFunSuite with SharedSpark {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-ops-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.001"

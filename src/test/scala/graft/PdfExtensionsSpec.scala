@@ -3,24 +3,9 @@ package graft
 import graft.extract.PdfToSpans
 import graft.extract.PdfFixture
 import graft.extract.PdfFixture.Block
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class PdfExtensionsSpec extends AnyFunSuite {
-
-  // runs FIRST: getOrCreate ignores withExtensions on an existing
-  // session, so this suite's shared session must be created here
-  test("GraftExtensions registers xxhash64_seed0 via withExtensions") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    val h = spark.sql("SELECT xxhash64_seed0('abc') AS h").head().getLong(0)
-    assert(h == 0x44BC2CF5AD770999L)
-  }
-
+class PdfExtensionsSpec extends AnyFunSuite with SharedSpark {
 
   test("PDF: lines group into blocks, /Title read, non-PDF rejected") {
     val pdf = PdfFixture.pdf(Seq(Seq(
@@ -511,10 +496,6 @@ class PdfExtensionsSpec extends AnyFunSuite {
     val oracle = SequentialOracle.crawl(site, config)
     assert(oracle.documents.exists(d => d.doc_id.endsWith(".pdf") && d.title == "Annual Report"))
 
-    val spark = SparkSession.builder()
-      .master("local[2]").appName("graft-pdf-crawl")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
     val io = new TableIO(java.nio.file.Files.createTempDirectory("graft-pdf").toString, spark)
     val engine = new CrawlEngine(spark, io, config,
       new SyntheticFetcher(site.pages, site.robots), numPartitions = 2)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression oracle for `q_pdf_documents` — the query whose rows-only
@@ -11,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * contain, so the fixture and extractor can't silently cancel each
   * other out again.
   */
-class PdfQueryDebugSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-pdfquery-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PdfQueryDebugSpec extends AnyFunSuite with SharedSpark {
 
   test("q_pdf_documents: every layout yields real text spans, decoration removed") {
     val rows = SparkEntry.queries("q_pdf_documents")(spark, "/root/testdata/sf0.001")

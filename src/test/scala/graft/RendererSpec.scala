@@ -3,7 +3,7 @@ package graft
 import graft.extract.{HtmlToSpans, SpanRenderers}
 import org.scalatest.funsuite.AnyFunSuite
 
-class RendererSpec extends AnyFunSuite {
+class RendererSpec extends AnyFunSuite with SharedSpark {
 
   private val html =
     """<html><head><title>Doc Title</title></head><body>
@@ -190,10 +190,6 @@ class RendererSpec extends AnyFunSuite {
     assert(DatasetExport.sizeCategory(500) == "n<1K")
     assert(DatasetExport.sizeCategory(5_000) == "1K<n<10K")
     assert(DatasetExport.sizeCategory(2_000_000) == "1M<n<10M")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("graft-card-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     val prepared = Seq(
       ("https://a.com/1", "a.com", "train", 10L),

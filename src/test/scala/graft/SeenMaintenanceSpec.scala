@@ -2,7 +2,6 @@ package graft
 
 import graft.core.{CuckooFilter64, ScopeFilter, UrlCanonicalizer}
 import graft.crawl._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -11,15 +10,7 @@ import java.nio.file.Files
   * bucket transition, the no-false-negative contract, and the atomicity of
   * the maintenance commit.
   */
-class SeenMaintenanceSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
 
   private val site = SyntheticWeb.generate(
     SyntheticWeb.Spec(hosts = 1, pagesPerHost = 12, hotHostFactor = 1, fanout = 3))

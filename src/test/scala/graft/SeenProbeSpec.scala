@@ -3,7 +3,6 @@ package graft
 import graft.core.{ScopeFilter, UrlCanonicalizer}
 import graft.crawl._
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{BinaryExecNode, FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -19,15 +18,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
   * branches it answers present and absent exactly like the plain joins,
   * and no crawl wave or forget ever broadcasts the seen table.
   */
-class SeenProbeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SeenProbeSpec extends AnyFunSuite with SharedSpark {
 
   private val ThresholdKey = "spark.sql.autoBroadcastJoinThreshold"
 

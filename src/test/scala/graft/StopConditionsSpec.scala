@@ -2,7 +2,6 @@ package graft
 
 import graft.core.ScopeFilter
 import graft.crawl._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -10,15 +9,7 @@ import java.nio.file.Files
   * CrawlDecisionMaker.cs:56-71): engine must stop at the same point, with
   * the same reason and the same crawled set, as the sequential oracle.
   */
-class StopConditionsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-stop-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StopConditionsSpec extends AnyFunSuite with SharedSpark {
 
   private val site = SyntheticWeb.generate(
     SyntheticWeb.Spec(hosts = 2, pagesPerHost = 8, hotHostFactor = 2, fanout = 3))

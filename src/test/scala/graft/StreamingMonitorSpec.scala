@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.CrawlMonitor
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -10,15 +9,7 @@ import java.nio.file.Files
   * micro-batches; per-host health accumulates in explicit GroupState
   * across them.
   */
-class StreamingMonitorSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-streaming-monitor-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingMonitorSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

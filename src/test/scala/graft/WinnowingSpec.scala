@@ -1,17 +1,10 @@
 package graft
 
 import graft.ops.Winnowing
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class WinnowingSpec extends AnyFunSuite {
+class WinnowingSpec extends AnyFunSuite with SharedSpark {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-winnow-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   test("winnowing guarantee: substring matches of length >= w+k-1 share a fingerprint") {
