@@ -95,7 +95,7 @@ object Dev {
     val seen = io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
     val metrics = io.readAll("metrics", TableIO.MetricsSchema)
 
-    println(s"=== engine: $waves waves in ${"%.1f".format(secs)}s → $warehouse")
+    println(s"=== engine: $waves waves in ${"%.1f".formatLocal(Locale.ROOT, secs)}s → $warehouse")
     println(s"documents: ${docs.count()}  seen: ${seen.count()}")
     docs.select("doc_id", "lang", "total_words", "unique_words", "wave", "seq")
       .orderBy("seq").show(10, truncate = false)
@@ -137,6 +137,8 @@ object Dev {
     "q_dedup_exact",     // fingerprint window
     "q_cosine_topk",     // broadcast queries x corpus, rank window
     "q_ivf_topk",        // cell equi-join probe + rerank
+    "q_pq_topk",         // the quantizer core, one zero cell: ADC scan + exact rerank
+    "q_ivfpq_topk",      // the quantizer core: cell-filtered residual ADC + exact rerank
     "q_export_stats",    // broadcast semi-join export gate
     "q_pii_scrub",       // regexp_replace chain inside codegen
     "q_repetition",      // split/array_distinct inside codegen

@@ -1,21 +1,28 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Two tiers, per the pipeline brief:
+  * Three tiers, per the pipeline brief:
   *  - brute-force cosine top-k: the exact baseline, a broadcast-joined
   *    cross product — correct at any k, O(N·Q) so only for bounded query
   *    sets (or as the per-bucket kernel below);
   *  - LSH-bucketed ANN (random hyperplanes → sign bits → bucket equi-join):
-  *    the scale path — candidate generation is an equi-join on a small
-  *    bucket id, so it hash-partitions evenly and never materializes the
-  *    quadratic pair space.
+  *    the scale path for near-duplicate pairs — candidate generation is an
+  *    equi-join on a small bucket id, so it hash-partitions evenly and never
+  *    materializes the quadratic pair space;
+  *  - quantized top-k (IVF, PQ, IVFPQ): one quantizer core — one k-means
+  *    trainer (`pqTrain`), one encoder of residuals to coarse cells, one
+  *    cell-filtered ADC scan with partition-local heaps — where PQ is the
+  *    core with a single zero cell.
   *
-  * All math is `aggregate`/`zip_with` over doubles (codegen'd, no UDF).
+  * Every top-k entry point ends in the same tail: `row_number` over
+  * (score desc, neighbor_id asc), then rank ≤ k. Column math is
+  * `aggregate`/`zip_with` over doubles (codegen'd, no UDF); the quantizer
+  * kernels are plain loops inside `mapPartitions`.
   */
 object Similarity {
 
@@ -27,6 +34,23 @@ object Similarity {
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+
+  /** The one top-k tail: each query's rows ranked by (`score` desc,
+    * neighbor_id asc), rank ≤ k kept.
+    */
+  private def topK(scored: DataFrame, score: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col(score).desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
+  /** Exact cosine top-k over (query_id, qvec, neighbor_id, nvec) pairs:
+    * the rows every top-k entry point returns.
+    */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    topK(pairs.withColumn("cos_sim", cosine(col("qvec"), col("nvec"))), "cos_sim", k)
+      .select(col("query_id"), col("neighbor_id"),
+        round(col("cos_sim"), 6).as("cos_sim"), col("rank"))
 
   /** Exact cosine top-k neighbors for each query row.
     * `queries` and `corpus` both need (idCol, vecCol). Query side is
@@ -40,14 +64,40 @@ object Similarity {
     // serialize them (no-op at scale)
     val c = Par.spread(
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec")))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim", cosine(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cos_sim"), 6).as("cos_sim"), col("rank"))
+    cosineTopK(c.join(broadcast(q), col("query_id") =!= col("neighbor_id")), k)
+  }
+
+  // --- vector kernels shared by LSH and the quantizer core -----------------
+
+  private def vectors(df: DataFrame, idCol: String,
+      vecCol: String): Dataset[(Long, Seq[Float])] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+      .as[(Long, Seq[Float])]
+  }
+
+  private def toDoubles(vec: Seq[Float]): Array[Double] = {
+    val arr = new Array[Double](vec.length)
+    var j = 0
+    while (j < arr.length) { arr(j) = vec(j).toDouble; j += 1 }
+    arr
+  }
+
+  /** Σ a(off + j) · b(j) over j < n. */
+  private def dotAt(a: Array[Double], off: Int, b: Array[Double], n: Int): Double = {
+    var s = 0.0
+    var j = 0
+    while (j < n) { s += a(off + j) * b(j); j += 1 }
+    s
+  }
+
+  /** Σ (a(off + j) − b(j))² over j < n. */
+  private def sqDist(a: Array[Double], off: Int, b: Array[Double], n: Int): Double = {
+    var d = 0.0
+    var j = 0
+    while (j < n) { val t = a(off + j) - b(j); d += t * t; j += 1 }
+    d
   }
 
   /** Deterministic pseudo-random hyperplanes: plane p, dim d coefficient
@@ -81,11 +131,6 @@ object Similarity {
       dim: Int, numPlanes: Int, numTables: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // spread off a narrow scan: the fused plane-matrix kernel runs per row
-    // and BOTH sides of the candidate self-join evaluate this subtree
-    // (per-row bucket math is partitioning-independent; no-op at scale)
-    val base = Par.spread(
-      df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")))
     // plane-index layout keeps table stride 64 so buckets match the previous
     // Column formulation for any numPlanes <= 64
     val planes: Array[Array[Double]] = Array.tabulate(numTables * numPlanes) { pi =>
@@ -94,21 +139,16 @@ object Similarity {
     }
     val bc = spark.sparkContext.broadcast(planes)
     val nt = numTables; val np = numPlanes
-    base.as[(Long, Seq[Float])].mapPartitions { it =>
+    vectors(df, idCol, vecCol).mapPartitions { it =>
       val pl = bc.value
       it.flatMap { case (id, vec) =>
-        val arr = new Array[Double](vec.length)
-        var j = 0
-        while (j < arr.length) { arr(j) = vec(j).toDouble; j += 1 }
+        val arr = toDoubles(vec)
         (0 until nt).iterator.map { t =>
           var bucket = 0L
           var p = 0
           while (p < np) {
             val plane = pl(t * np + p)
-            var dp = 0.0
-            var k = 0
-            val n = math.min(arr.length, plane.length)
-            while (k < n) { dp += arr(k) * plane(k); k += 1 }
+            val dp = dotAt(arr, 0, plane, math.min(arr.length, plane.length))
             if (dp > 0) bucket |= (1L << p)
             p += 1
           }
@@ -154,157 +194,6 @@ object Similarity {
       .select(col("id_a"), col("id_b"), round(col("cos_sim"), 6).as("cos_sim"))
   }
 
-  // --- IVF (inverted-file) ANN: the k-means-cell scale path ---------------
-
-  /** Nearest-centroid index for one vector (plain dot-product argmin over
-    * a small broadcast centroid matrix). Exposed as `nearestCellPublic`
-    * for test oracles.
-    */
-  def nearestCellPublic(vec: Array[Double], centroids: Array[Array[Double]]): Int =
-    nearestCell(vec, centroids)
-
-  private def nearestCell(vec: Array[Double], centroids: Array[Array[Double]]): Int = {
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < centroids.length) {
-      val cent = centroids(c)
-      var d = 0.0
-      var j = 0
-      val n = math.min(vec.length, cent.length)
-      while (j < n) { val t = vec(j) - cent(j); d += t * t; j += 1 }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
-
-  /** Per-partition k-means partials: each task folds ALL its vectors into
-    * at most `centroids.length` (cell, sum-vector, count) rows — the
-    * classic k-means combiner. Only these partials ever shuffle, so the
-    * per-iteration shuffle volume is O(partitions · nlist · dim) rows, not
-    * O(N · dim) vectors over the wire (asserted by `OpsSpec`).
-    */
-  def ivfPartials(base: org.apache.spark.sql.Dataset[(Long, Seq[Float])],
-      centroids: Array[Array[Double]]): org.apache.spark.sql.Dataset[(Int, Array[Double], Long)] = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(centroids)
-    base.mapPartitions { rows =>
-      val cents = bc.value
-      val sums = new Array[Array[Double]](cents.length)
-      val counts = new Array[Long](cents.length)
-      rows.foreach { case (_, vec) =>
-        val arr = new Array[Double](vec.length)
-        var j = 0
-        while (j < arr.length) { arr(j) = vec(j).toDouble; j += 1 }
-        val c = nearestCell(arr, cents)
-        if (sums(c) == null) sums(c) = new Array[Double](arr.length)
-        val s = sums(c)
-        var k = 0
-        val n = math.min(s.length, arr.length)
-        while (k < n) { s(k) += arr(k); k += 1 }
-        counts(c) += 1
-      }
-      cents.indices.iterator.filter(counts(_) > 0)
-        .map(c => (c, sums(c), counts(c)))
-    }
-  }
-
-  /** Train an IVF coarse quantizer with a few Lloyd iterations:
-    * deterministic init (the `nlist` corpus vectors with the smallest
-    * xxhash64(id) — reproducible, no RNG), then assign + per-cell mean.
-    * Centroids are tiny (nlist × dim doubles) — they live on the driver
-    * and broadcast; assignment + summation happen INSIDE mapPartitions
-    * (ivfPartials), so each iteration shuffles only the
-    * partitions × nlist pre-aggregated partials, never the corpus.
-    */
-  def ivfTrain(corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, iterations: Int = 3): Array[Array[Double]] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val base = corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .as[(Long, Seq[Float])]
-    var centroids: Array[Array[Double]] = base.toDF()
-      .withColumn("h", xxhash64(col("id"))).orderBy(col("h"))
-      .limit(nlist).select(col("vec")).as[Seq[Float]]
-      .collect().map(_.toArray.map(_.toDouble))
-    var it = 0
-    while (it < iterations) {
-      val sums = ivfPartials(base, centroids)
-        .groupByKey(_._1)
-        .reduceGroups { (a, b) =>
-          val s = a._2.clone()
-          var j = 0
-          val n = math.min(s.length, b._2.length)
-          while (j < n) { s(j) += b._2(j); j += 1 }
-          (a._1, s, a._3 + b._3)
-        }
-        .map { case (cell, (_, sum, count)) =>
-          val m = sum.clone()
-          var j = 0
-          while (j < m.length) { m(j) /= count; j += 1 }
-          (cell, m)
-        }.collect()
-      // empty cells keep their previous centroid
-      val next = centroids.map(_.clone())
-      sums.foreach { case (cell, mean) => next(cell) = mean }
-      centroids = next
-      it += 1
-    }
-    centroids
-  }
-
-  /** IVF ANN top-k: corpus vectors are bucketed by nearest centroid cell;
-    * each query probes its `nprobe` nearest cells and exact-reranks only
-    * those cells' vectors. Candidate generation is an equi-join on the
-    * cell id — never a cross join with the corpus — so it hash-partitions
-    * evenly; recall is the standard nprobe/nlist trade.
-    */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      nlist: Int = 16, nprobe: Int = 4, iterations: Int = 3): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val centroids = ivfTrain(corpus, idCol, vecCol, nlist, iterations)
-    val bc = spark.sparkContext.broadcast(centroids)
-    val corpusCells = corpus
-      .select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("nvec"))
-      .as[(Long, Seq[Float])]
-      .mapPartitions { rows =>
-        val cents = bc.value
-        rows.map { case (id, vec) =>
-          (nearestCell(vec.toArray.map(_.toDouble), cents), id, vec)
-        }
-      }.toDF("cell", "neighbor_id", "nvec")
-    val np = math.min(nprobe, nlist)
-    val queryCells = queries
-      .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qvec"))
-      .as[(Long, Seq[Float])]
-      .mapPartitions { rows =>
-        val cents = bc.value
-        rows.flatMap { case (id, vec) =>
-          val arr = vec.toArray.map(_.toDouble)
-          val byDist = cents.indices.sortBy { c =>
-            var d = 0.0; var j = 0
-            val n = math.min(arr.length, cents(c).length)
-            while (j < n) { val t = arr(j) - cents(c)(j); d += t * t; j += 1 }
-            d
-          }
-          byDist.take(np).map(cell => (cell, id, vec))
-        }
-      }.toDF("cell", "query_id", "qvec")
-    val scored = corpusCells.join(queryCells, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim", cosine(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cos_sim"), 6).as("cos_sim"), col("rank"))
-  }
-
   /** Exact cosine near-duplicate pairs over a bounded corpus (the oracle
     * baseline for the LSH variant): full pair join, id_a < id_b.
     */
@@ -321,36 +210,58 @@ object Similarity {
       .select(col("id_a"), col("id_b"), round(col("raw"), 6).as("cos_sim"))
   }
 
-  // ---- product quantization (Jégou/Douze/Schmid, TPAMI 2011 — public):
-  // m-subvector byte codes + asymmetric-distance (ADC) scan ---------------
+  // --- the quantizer core: IVF cells, product quantization (Jégou/Douze/
+  // Schmid, TPAMI 2011 — public) and their FAISS IVFPQ composition -------
 
-  /** Nearest codebook entry for one subvector (L2). */
+  /** No coarse quantizer: one cell whose zero-length centroid leaves every
+    * residual equal to its vector (`x − 0 == x`) and every cell offset 0.
+    */
+  private val NoCells: Array[Array[Double]] = Array(Array.emptyDoubleArray)
+
+  /** Nearest codebook entry for one subvector (L2; first entry on ties). */
   private def nearestSub(vec: Array[Double], off: Int, dsub: Int,
       book: Array[Array[Double]]): Int = {
     var best = 0
     var bestD = Double.MaxValue
     var c = 0
     while (c < book.length) {
-      val cent = book(c)
-      var d = 0.0
-      var j = 0
-      while (j < dsub) { val t = vec(off + j) - cent(j); d += t * t; j += 1 }
+      val d = sqDist(vec, off, book(c), dsub)
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
     best
   }
 
-  /** Per-partition PQ-k-means partials for ALL m subspaces at once: each
-    * task folds its vectors into at most m·ksub ((subspace, cell),
-    * sum-subvector, count) rows — the fused combiner, so one Lloyd
-    * iteration over every codebook shuffles O(partitions · m · ksub ·
-    * dsub), never the corpus (the same shape as `ivfPartials`, asserted
-    * by OpsSpec).
+  /** Nearest centroid cell for one whole vector. */
+  private[graft] def nearestCell(vec: Array[Double], centroids: Array[Array[Double]]): Int =
+    nearestSub(vec, 0, math.min(vec.length, centroids(0).length), centroids)
+
+  /** Replaces `vec` in place by its residual to its nearest cell's
+    * centroid; returns the cell.
     */
-  def pqPartials(base: org.apache.spark.sql.Dataset[(Long, Seq[Float])],
-      codebooks: Array[Array[Array[Double]]]):
-      org.apache.spark.sql.Dataset[(Int, Int, Array[Double], Long)] = {
+  private def toResidual(vec: Array[Double], centroids: Array[Array[Double]]): Int = {
+    val cell = nearestCell(vec, centroids)
+    val cent = centroids(cell)
+    var j = 0
+    while (j < math.min(vec.length, cent.length)) { vec(j) -= cent(j); j += 1 }
+    cell
+  }
+
+  /** The `np` cells nearest to `q` (L2), nearest first, ties by cell. */
+  private def probe(q: Array[Double], centroids: Array[Array[Double]], np: Int): Seq[Int] =
+    centroids.indices.sortBy { c =>
+      sqDist(q, 0, centroids(c), math.min(q.length, centroids(c).length))
+    }.take(np)
+
+  /** Per-partition k-means partials for ALL m subspaces at once: each
+    * task folds its vectors into at most m·ksub ((subspace, cell), task
+    * partition id, sum-subvector, count) rows — the classic k-means
+    * combiner, so one Lloyd iteration over every codebook shuffles
+    * O(partitions · m · ksub · dsub), never the corpus (asserted by
+    * OpsSpec). With m = 1 the one codebook is IVF's centroid list.
+    */
+  def pqPartials(base: Dataset[(Long, Seq[Float])],
+      codebooks: Array[Array[Array[Double]]]): Dataset[(Int, Int, Array[Double], Long)] = {
     val spark = base.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(codebooks)
@@ -363,13 +274,10 @@ object Similarity {
       val sums = new Array[Array[Double]](m * ksub)
       val counts = new Array[Long](m * ksub)
       rows.foreach { case (_, vec) =>
-        val arr = new Array[Double](vec.length)
-        var j = 0
-        while (j < arr.length) { arr(j) = vec(j).toDouble; j += 1 }
+        val arr = toDoubles(vec)
         var sub = 0
         while (sub < m) {
-          val c = nearestSub(arr, sub * dsub, dsub, books(sub))
-          val key = sub * ksub + c
+          val key = sub * ksub + nearestSub(arr, sub * dsub, dsub, books(sub))
           if (sums(key) == null) sums(key) = new Array[Double](dsub)
           val s = sums(key)
           var d = 0
@@ -383,25 +291,25 @@ object Similarity {
     }
   }
 
-  /** Train PQ codebooks: split the space into `m` contiguous subspaces of
-    * dim/m dims and k-means each one to `ksub` entries. Deterministic
-    * init (smallest-xxhash64(id) rows, like ivfTrain); every iteration is
-    * ONE fused pass over the corpus (pqPartials). Codebooks are tiny
-    * (m · ksub · dsub doubles) — driver + broadcast.
+  /** The one Lloyd trainer. Splits the space into `m` contiguous subspaces
+    * of dim/m dims and k-means each one to `ksub` entries. Deterministic
+    * init: the `ksub` rows with the smallest xxhash64(id), id breaking
+    * ties — reproducible, no RNG. Every iteration is ONE fused pass over
+    * the corpus (pqPartials) whose partials fold in partition-id order.
+    * Codebooks are tiny (m · ksub · dsub doubles) — driver + broadcast.
     * Returns codebooks(subspace)(entry)(dsub).
     */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, ksub: Int = 16, iterations: Int = 3): Array[Array[Array[Double]]] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val base = corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .as[(Long, Seq[Float])]
+    val base = vectors(corpus, idCol, vecCol)
     // id as the secondary sort key makes the seed picks a total order even
     // under (improbable) xxhash64 collisions — run-to-run determinism
     val seed = base.toDF()
       .withColumn("h", xxhash64(col("id"))).orderBy(col("h"), col("id"))
       .limit(ksub).select(col("vec")).as[Seq[Float]]
-      .collect().map(_.toArray.map(_.toDouble))
+      .collect().map(toDoubles)
     require(seed.nonEmpty, "empty corpus")
     val dim = seed(0).length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
@@ -414,8 +322,8 @@ object Similarity {
     var it = 0
     while (it < iterations) {
       // fold the per-partition partials in PARTITION-ID order: float sums
-      // are order-sensitive, and reduceGroups' shuffle-arrival order would
-      // make the trained codebooks vary run to run
+      // are order-sensitive, and the shuffle-arrival order would make the
+      // trained codebooks vary run to run
       val means = pqPartials(base, books)
         .groupByKey(_._1)
         .mapGroups { (key, it) =>
@@ -440,48 +348,176 @@ object Similarity {
     books
   }
 
-  /** Encode each vector to an m-byte PQ code plus its TRUE norm (kept so
-    * the ADC scan can rank by cosine, not just inner product). ~dim·4/m ×
-    * compression of the scan set: at 100 TB of float32 embeddings the
-    * code table is the only thing the top-k scan reads.
+  /** IVF coarse quantizer: `pqTrain`'s single codebook of `nlist` entries
+    * over whole vectors (m = 1). Assignment and summation happen inside
+    * mapPartitions, so each iteration shuffles only the partitions × nlist
+    * pre-aggregated partials, never the corpus.
     */
-  def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
+  def ivfTrain(corpus: DataFrame, idCol: String, vecCol: String,
+      nlist: Int, iterations: Int = 3): Array[Array[Double]] =
+    pqTrain(corpus, idCol, vecCol, m = 1, ksub = nlist, iterations)(0)
+
+  /** The one encoder: the inverted-list code table (cell, id, code, norm)
+    * — each vector's nearest cell, the m-byte PQ code of its residual to
+    * that cell's centroid, and its TRUE norm (kept so the ADC scan ranks by
+    * cosine, not just inner product). ~dim·4/m × compression of the scan
+    * set: at 100 TB of float32 embeddings the code table is the only thing
+    * the top-k scan reads.
+    */
+  private def encode(base: Dataset[(Long, Seq[Float])], centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    val spark = corpus.sparkSession
+    val spark = base.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(codebooks)
-    corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .as[(Long, Seq[Float])]
-      .mapPartitions { rows =>
-        val books = bc.value
-        val m = books.length
-        val dsub = books(0)(0).length
-        rows.map { case (id, vec) =>
-          val arr = new Array[Double](vec.length)
-          var j = 0
-          while (j < arr.length) { arr(j) = vec(j).toDouble; j += 1 }
-          val code = new Array[Byte](m)
-          var nrm = 0.0
-          var sub = 0
-          while (sub < m) {
-            code(sub) = nearestSub(arr, sub * dsub, dsub, books(sub)).toByte
-            sub += 1
-          }
-          j = 0
-          while (j < arr.length) { nrm += arr(j) * arr(j); j += 1 }
-          (id, code, math.sqrt(nrm))
-        }
-      }.toDF("id", "code", "norm")
+    val centBc = spark.sparkContext.broadcast(centroids)
+    val bookBc = spark.sparkContext.broadcast(codebooks)
+    base.mapPartitions { rows =>
+      val cents = centBc.value
+      val books = bookBc.value
+      val dsub = books(0)(0).length
+      rows.map { case (id, vec) =>
+        val arr = toDoubles(vec)
+        val nrm = math.sqrt(dotAt(arr, 0, arr, arr.length))
+        val cell = toResidual(arr, cents)
+        val code = Array.tabulate(books.length)(sub =>
+          nearestSub(arr, sub * dsub, dsub, books(sub)).toByte)
+        (cell, id, code, nrm)
+      }
+    }.toDF("cell", "id", "code", "norm")
   }
 
-  /** PQ ANN top-k with ADC: per query, a m×ksub inner-product lookup
-    * table against the codebooks turns each corpus distance into m table
-    * lookups over the byte code (no per-dim float math in the scan);
-    * approximate cosine = ADC-dot / (‖q‖ · true ‖x‖). Each partition
-    * keeps only its top-`rerank` candidates per query (bounded heaps), so
-    * the shuffle is O(partitions · queries · rerank); the survivors
-    * exact-rerank against their true vectors. Queries are a bounded set
-    * (broadcast), like the other top-k entry points.
+  /** Encode each vector to an m-byte PQ code plus its true norm: the
+    * encoder with no coarse cells, as (id, code, norm).
+    */
+  def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
+      codebooks: Array[Array[Array[Double]]]): DataFrame =
+    encode(vectors(corpus, idCol, vecCol), NoCells, codebooks).drop("cell")
+
+  /** One query's ADC state: the m×ksub inner-product table against the
+    * codebooks, its norm and its probed cells with their dot(q, centroid)
+    * offsets.
+    */
+  private final case class AdcQuery(id: Long, lut: Array[Double], norm: Double,
+      probed: Seq[(Int, Double)])
+
+  /** IVF / PQ / IVFPQ top-k on one core (Jégou et al. 2011 §IV, the FAISS
+    * IVFPQ shape):
+    *
+    *  1. ONE product quantizer trained on the RESIDUALS (vector − nearest
+    *     centroid) — residuals concentrate near 0 so the same codebook
+    *     budget quantizes much finer than raw-vector PQ;
+    *  2. the code table (`encode`);
+    *  3. driver-side query prep (bounded query sets by contract): residual
+    *     LUT, the `nprobe` nearest cells and their dot(q, centroid);
+    *  4. scan: only codes in probed cells reach the ADC loop (the `isin`
+    *     filter also pushes down to storage when the code table is
+    *     persisted bucketed by cell), scored as (dot(q, centroid) +
+    *     Σ lut[code]) / (‖q‖·‖x‖) with the TRUE vector norm — cosine
+    *     ranking from m byte lookups — into partition-local bounded heaps,
+    *     so the shuffle is O(partitions · Q · rerank);
+    *  5. the global top-rerank candidates exact-rerank against their true
+    *     vectors.
+    */
+  private def adcTopK(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, centroids: Array[Array[Double]],
+      nprobe: Int, m: Int, ksub: Int, iterations: Int, rerank: Int): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val base = vectors(corpus, idCol, vecCol)
+    val centBc = spark.sparkContext.broadcast(centroids)
+    val residuals = base.mapPartitions { rows =>
+      val cents = centBc.value
+      rows.map { case (id, vec) =>
+        val arr = toDoubles(vec)
+        toResidual(arr, cents)
+        (id, arr.map(_.toFloat).toSeq)
+      }
+    }.toDF("id", "vec")
+    val books = pqTrain(residuals, "id", "vec", m, ksub, iterations)
+    val codes = encode(base, centroids, books)
+    val kk = books(0).length
+    val dsub = books(0)(0).length
+    val np = math.min(nprobe, centroids.length)
+    val prep = vectors(queries, idCol, vecCol).collect().map { case (qid, qv) =>
+      val q = toDoubles(qv)
+      val lut = Array.tabulate(m * kk)(i =>
+        dotAt(q, i / kk * dsub, books(i / kk)(i % kk), dsub))
+      val probed = probe(q, centroids, np).map(c =>
+        (c, dotAt(q, 0, centroids(c), math.min(q.length, centroids(c).length))))
+      AdcQuery(qid, lut, math.sqrt(dotAt(q, 0, q, q.length)), probed)
+    }
+    val qBc = spark.sparkContext.broadcast(prep)
+    val r = math.max(k, rerank)
+    val cand = codes
+      .filter(col("cell").isin(prep.flatMap(_.probed.map(_._1)).distinct.toSeq: _*))
+      .as[(Int, Long, Array[Byte], Double)]
+      .mapPartitions { rows =>
+        val qs = qBc.value
+        // cell → (query index, dot(q, centroid)): only probing queries pay
+        // ADC for a code row
+        val byCell = qs.indices
+          .flatMap(qi => qs(qi).probed.map { case (c, cd) => (c, (qi, cd)) })
+          .groupMap(_._1)(_._2).withDefaultValue(Nil)
+        val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
+          Ordering.by[(Double, Long), Double](-_._1))) // min-heap on score
+        rows.foreach { case (cell, id, code, nrm) =>
+          byCell(cell).foreach { case (qi, cellDot) =>
+            val q = qs(qi)
+            if (q.id != id) {
+              var adc = cellDot
+              var sub = 0
+              while (sub < code.length) {
+                adc += q.lut(sub * kk + (code(sub) & 0xff))
+                sub += 1
+              }
+              val score = adc / math.max(q.norm * nrm, 1e-12)
+              val h = heaps(qi)
+              if (h.size < r) h.enqueue((score, id))
+              else if (score > h.head._1) { h.dequeue(); h.enqueue((score, id)) }
+            }
+          }
+        }
+        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
+          h.iterator.map { case (score, id) => (qs(qi).id, id, score) }
+        }
+      }.toDF("query_id", "neighbor_id", "adc_cos")
+    val topCand = topK(cand, "adc_cos", r).drop("rank", "adc_cos")
+    val truth = corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("nvec"))
+    val qDf = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qvec"))
+    cosineTopK(topCand.join(truth, "neighbor_id").join(broadcast(qDf), "query_id"), k)
+  }
+
+  /** IVF ANN top-k: corpus vectors are bucketed by nearest centroid cell;
+    * each query probes its `nprobe` nearest cells and exact-reranks only
+    * those cells' vectors. Candidate generation is an equi-join on the
+    * cell id — never a cross join with the corpus — so it hash-partitions
+    * evenly; recall is the standard nprobe/nlist trade.
+    */
+  def ivfTopK(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int,
+      nlist: Int = 16, nprobe: Int = 4, iterations: Int = 3): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(ivfTrain(corpus, idCol, vecCol, nlist, iterations))
+    val corpusCells = vectors(corpus, idCol, vecCol).mapPartitions { rows =>
+      val cents = bc.value
+      rows.map { case (id, vec) => (nearestCell(toDoubles(vec), cents), id, vec) }
+    }.toDF("cell", "neighbor_id", "nvec")
+    val np = math.min(nprobe, nlist)
+    val queryCells = vectors(queries, idCol, vecCol).mapPartitions { rows =>
+      val cents = bc.value
+      rows.flatMap { case (id, vec) =>
+        probe(toDoubles(vec), cents, np).map(cell => (cell, id, vec))
+      }
+    }.toDF("cell", "query_id", "qvec")
+    cosineTopK(corpusCells.join(queryCells, "cell")
+      .filter(col("query_id") =!= col("neighbor_id")), k)
+  }
+
+  /** PQ ANN top-k with ADC: the quantizer core with one zero cell. Per
+    * query, a m×ksub inner-product lookup table against the codebooks turns
+    * each corpus distance into m table lookups over the byte code (no
+    * per-dim float math in the scan); approximate cosine = ADC-dot /
+    * (‖q‖ · true ‖x‖); the top-`rerank` candidates exact-rerank.
     *
     * Measured recall@10 vs brute force on the synthetic dim-64 corpus
     * (uniform random — PQ's WORST case, no cluster structure): 0.29 /
@@ -492,100 +528,12 @@ object Similarity {
   def pqTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       m: Int = 8, ksub: Int = 16, iterations: Int = 3,
-      rerank: Int = 64): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val books = pqTrain(corpus, idCol, vecCol, m, ksub, iterations)
-    val codes = pqEncode(corpus, idCol, vecCol, books)
-      .as[(Long, Array[Byte], Double)]
-    // driver-side LUTs: queries are bounded by contract
-    val qRows = queries
-      .select(col(idCol).cast("long").as("qid"), col(vecCol).as("qvec"))
-      .as[(Long, Seq[Float])].collect()
-    val kk = books(0).length
-    val dsub = books(0)(0).length
-    val luts: Array[(Long, Array[Double], Double)] = qRows.map { case (qid, qv) =>
-      val q = qv.toArray.map(_.toDouble)
-      val lut = new Array[Double](m * kk)
-      var sub = 0
-      while (sub < m) {
-        var c = 0
-        while (c < kk) {
-          var s = 0.0
-          var d = 0
-          while (d < dsub) { s += q(sub * dsub + d) * books(sub)(c)(d); d += 1 }
-          lut(sub * kk + c) = s
-          c += 1
-        }
-        sub += 1
-      }
-      (qid, lut, math.sqrt(q.map(x => x * x).sum))
-    }
-    val lutBc = spark.sparkContext.broadcast(luts)
-    val r = math.max(k, rerank)
-    // partition-local top-r per query over the byte codes
-    val cand = codes.mapPartitions { rows =>
-      val qs = lutBc.value
-      val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-        Ordering.by[(Double, Long), Double](-_._1))) // min-heap on score
-      rows.foreach { case (id, code, nrm) =>
-        var qi = 0
-        while (qi < qs.length) {
-          val (qid, lut, qn) = qs(qi)
-          if (qid != id) {
-            var adc = 0.0
-            var sub = 0
-            while (sub < code.length) {
-              adc += lut(sub * kk + (code(sub) & 0xff))
-              sub += 1
-            }
-            val score = adc / math.max(qn * nrm, 1e-12)
-            val h = heaps(qi)
-            if (h.size < r) h.enqueue((score, id))
-            else if (score > h.head._1) { h.dequeue(); h.enqueue((score, id)) }
-          }
-          qi += 1
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.iterator.map { case (score, id) => (qs(qi)._1, id, score) }
-      }
-    }.toDF("query_id", "neighbor_id", "adc_cos")
-    // global top-r of the partition-local winners, then EXACT rerank
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_cos").desc, col("neighbor_id").asc)
-    val topCand = cand.withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= r).drop("arank", "adc_cos")
-    val truth = corpus.select(col(idCol).cast("long").as("neighbor_id"),
-      col(vecCol).as("nvec"))
-    val qDf = queries.select(col(idCol).cast("long").as("query_id"),
-      col(vecCol).as("qvec"))
-    val exact = topCand.join(truth, "neighbor_id").join(broadcast(qDf), "query_id")
-      .withColumn("cos_sim", cosine(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    exact.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cos_sim"), 6).as("cos_sim"), col("rank"))
-  }
+      rerank: Int = 64): DataFrame =
+    adcTopK(corpus, queries, idCol, vecCol, k, NoCells, 1, m, ksub, iterations, rerank)
 
   /** IVF+PQ composition — the FAISS IVFPQ shape, what a 100-TB vector
-    * corpus actually runs (Jégou et al. 2011 §IV):
-    *
-    *  1. coarse quantizer: k-means cells (`ivfTrain`), each corpus vector
-    *     assigned to its nearest cell;
-    *  2. ONE product quantizer trained on the RESIDUALS (vector − cell
-    *     centroid) — residuals concentrate near 0 so the same codebook
-    *     budget quantizes much finer than raw-vector PQ;
-    *  3. scan: each query probes its `nprobe` nearest cells; only codes in
-    *     probed cells reach the ADC loop (the `isin` filter also pushes
-    *     down to storage when the code table is persisted bucketed by
-    *     cell), scored as (dot(q, centroid) + Σ lut[code]) / (‖q‖·‖x‖)
-    *     with the TRUE vector norm carried per code — cosine ranking from
-    *     m byte lookups;
-    *  4. partition-local bounded heaps (shuffle O(partitions · Q ·
-    *     rerank)) then exact rerank via join, like `pqTopK`.
+    * corpus actually runs: `ivfTrain`'s k-means cells, then the quantizer
+    * core over residuals to them, probing `nprobe` cells per query.
     *
     * vs `pqTopK`: the scan does nprobe/nlist of the ADC work per query.
     * vs `ivfTopK`: probed cells are scanned as m-byte codes, not floats.
@@ -593,146 +541,7 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nlist: Int = 16, nprobe: Int = 4, m: Int = 8, ksub: Int = 16,
-      iterations: Int = 3, rerank: Int = 64): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val centroids = ivfTrain(corpus, idCol, vecCol, nlist, iterations)
-    val centBc = spark.sparkContext.broadcast(centroids)
-    val base = corpus
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .as[(Long, Seq[Float])]
-    // PQ on residuals: one codebook set across all cells (FAISS IVFPQ)
-    val residuals = base.mapPartitions { rows =>
-      val cents = centBc.value
-      rows.map { case (id, vec) =>
-        val arr = vec.toArray.map(_.toDouble)
-        val cell = nearestCell(arr, cents)
-        val res = new Array[Float](arr.length)
-        var j = 0
-        while (j < arr.length) { res(j) = (arr(j) - cents(cell)(j)).toFloat; j += 1 }
-        (id, res.toSeq)
-      }
-    }.toDF("id", "vec")
-    val books = pqTrain(residuals, "id", "vec", m, ksub, iterations)
-    val bookBc = spark.sparkContext.broadcast(books)
-    val kk = books(0).length
-    val dsub = books(0)(0).length
-    // inverted-list code table: (cell, id, m-byte residual code, true norm)
-    val codes = base.mapPartitions { rows =>
-      val cents = centBc.value
-      val bks = bookBc.value
-      val ds = bks(0)(0).length
-      rows.map { case (id, vec) =>
-        val arr = new Array[Double](vec.length)
-        var j = 0
-        var nrm = 0.0
-        while (j < arr.length) {
-          arr(j) = vec(j).toDouble; nrm += arr(j) * arr(j); j += 1
-        }
-        val cell = nearestCell(arr, cents)
-        val res = new Array[Double](arr.length)
-        j = 0
-        while (j < arr.length) { res(j) = arr(j) - cents(cell)(j); j += 1 }
-        val code = new Array[Byte](bks.length)
-        var sub = 0
-        while (sub < bks.length) {
-          code(sub) = nearestSub(res, sub * ds, ds, bks(sub)).toByte
-          sub += 1
-        }
-        (cell, id, code, math.sqrt(nrm))
-      }
-    }.toDF("cell", "id", "code", "norm")
-    // driver-side query prep (bounded query sets by contract): residual
-    // LUT + probed cells with their dot(q, centroid) offsets
-    val np = math.min(nprobe, nlist)
-    val qRows = queries
-      .select(col(idCol).cast("long").as("qid"), col(vecCol).as("qvec"))
-      .as[(Long, Seq[Float])].collect()
-    val qInfos: Array[(Long, Array[Double], Double, Array[(Int, Double)])] =
-      qRows.map { case (qid, qv) =>
-        val q = qv.toArray.map(_.toDouble)
-        val lut = new Array[Double](m * kk)
-        var sub = 0
-        while (sub < m) {
-          var c = 0
-          while (c < kk) {
-            var s = 0.0
-            var d = 0
-            while (d < dsub) { s += q(sub * dsub + d) * books(sub)(c)(d); d += 1 }
-            lut(sub * kk + c) = s
-            c += 1
-          }
-          sub += 1
-        }
-        val probed = centroids.indices.sortBy { ci =>
-          var dd = 0.0
-          var j = 0
-          val n = math.min(q.length, centroids(ci).length)
-          while (j < n) { val t = q(j) - centroids(ci)(j); dd += t * t; j += 1 }
-          dd
-        }.take(np).map { ci =>
-          var s = 0.0
-          var j = 0
-          val n = math.min(q.length, centroids(ci).length)
-          while (j < n) { s += q(j) * centroids(ci)(j); j += 1 }
-          (ci, s)
-        }.toArray
-        (qid, lut, math.sqrt(q.map(x => x * x).sum), probed)
-      }
-    val qBc = spark.sparkContext.broadcast(qInfos)
-    val probedCells = qInfos.flatMap(_._4.map(_._1)).distinct.toSeq
-    val r = math.max(k, rerank)
-    val cand = codes
-      .filter(col("cell").isin(probedCells: _*)) // cell pruning
-      .as[(Int, Long, Array[Byte], Double)]
-      .mapPartitions { rows =>
-        val qs = qBc.value
-        // cell → (query index, dot(q, centroid)) — only probing queries
-        // pay ADC for a code row
-        val byCell = scala.collection.mutable.Map
-          .empty[Int, List[(Int, Double)]].withDefaultValue(Nil)
-        qs.zipWithIndex.foreach { case ((_, _, _, probed), qi) =>
-          probed.foreach { case (cell, cd) => byCell(cell) = (qi, cd) :: byCell(cell) }
-        }
-        val heaps = qs.map(_ =>
-          new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-            Ordering.by[(Double, Long), Double](-_._1)))
-        rows.foreach { case (cell, id, code, nrm) =>
-          byCell(cell).foreach { case (qi, cellDot) =>
-            val (qid, lut, qn, _) = qs(qi)
-            if (qid != id) {
-              var adc = cellDot
-              var sub = 0
-              while (sub < code.length) {
-                adc += lut(sub * kk + (code(sub) & 0xff))
-                sub += 1
-              }
-              val score = adc / math.max(qn * nrm, 1e-12)
-              val h = heaps(qi)
-              if (h.size < r) h.enqueue((score, id))
-              else if (score > h.head._1) { h.dequeue(); h.enqueue((score, id)) }
-            }
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.iterator.map { case (score, id) => (qs(qi)._1, id, score) }
-        }
-      }.toDF("query_id", "neighbor_id", "adc_cos")
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_cos").desc, col("neighbor_id").asc)
-    val topCand = cand.withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= r).drop("arank", "adc_cos")
-    val truth = corpus.select(col(idCol).cast("long").as("neighbor_id"),
-      col(vecCol).as("nvec"))
-    val qDf = queries.select(col(idCol).cast("long").as("query_id"),
-      col(vecCol).as("qvec"))
-    val exact = topCand.join(truth, "neighbor_id").join(broadcast(qDf), "query_id")
-      .withColumn("cos_sim", cosine(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    exact.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cos_sim"), 6).as("cos_sim"), col("rank"))
-  }
+      iterations: Int = 3, rerank: Int = 64): DataFrame =
+    adcTopK(corpus, queries, idCol, vecCol, k,
+      ivfTrain(corpus, idCol, vecCol, nlist, iterations), nprobe, m, ksub, iterations, rerank)
 }

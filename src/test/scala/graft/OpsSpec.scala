@@ -521,25 +521,26 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
       .as[(Long, Seq[Float])].repartition(4)
     val n = base.count()
     val centroids = Similarity.ivfTrain(emb, "vec_id", "embedding", nlist = 8)
+    // IVF trains on the shared trainer with one codebook of nlist entries:
     // the train stage's shuffle input is the partial rows, bounded by
     // partitions x nlist regardless of corpus size (map-side combine)
-    val partials = Similarity.ivfPartials(base, centroids)
+    val partials = Similarity.pqPartials(base, Array(centroids))
     val partialCount = partials.count()
     assert(partialCount <= 4L * 8L, s"partials $partialCount exceed partitions*nlist")
     assert(partialCount < n, s"partials $partialCount not smaller than corpus $n")
     // partials reduce to the same means a single-pass computation gives
     val viaPartials = partials.collect()
       .groupBy(_._1).map { case (c, rows) =>
-        val dim = rows.head._2.length
+        val dim = rows.head._3.length
         val sum = new Array[Double](dim)
-        rows.foreach(r => (0 until dim).foreach(j => sum(j) += r._2(j)))
-        val cnt = rows.map(_._3).sum
+        rows.foreach(r => (0 until dim).foreach(j => sum(j) += r._3(j)))
+        val cnt = rows.map(_._4).sum
         c -> sum.map(_ / cnt).toVector
       }
     val direct = base.collect()
       .map { case (_, v) =>
         val arr = v.map(_.toDouble).toArray
-        (Similarity.nearestCellPublic(arr, centroids), arr)
+        (Similarity.nearestCell(arr, centroids), arr)
       }
       .groupBy(_._1).map { case (c, rows) =>
         val dim = rows.head._2.length
