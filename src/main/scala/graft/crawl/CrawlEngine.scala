@@ -155,45 +155,26 @@ final class CrawlEngine(
   private[graft] var lastWaveBloomEngaged: Boolean = false
 
   // --- stop-condition / budget state (wave-synchronous contract shared
-  // with SequentialOracle; all fields recoverable from tables/stats) ------
-  private var stateLoaded = false
-  private var pagesTotal = 0L
-  private var errorsTotal = 0L
-  private var contentCharsTotal = 0L
-  private var startEpochMs = 0L
-  private var seenRowsTotal = 1L // root hash seeds the set at bootstrap
-  private var excludedPrefixes = Vector.empty[String]
-  private var window10 = Vector.empty[(String, Double)] // (url, pct), seq order
-  var stopReason: Option[String] = None
-
-  /** Hybrid engage rule: the exact seen check is cheap while `seen` is
-    * small — the [[SeenSet]] filters only pay once the set passes
-    * bloomMinSeenRows (the broadcast-vs-shuffle-join selection analog).
-    * Engaging later is safe: [[SeenSet.read]] builds the buckets from the
-    * authoritative seen table on its first engaged wave.
-    */
-  private def bloomEnabled: Boolean =
-    config.bloomCapacity > 0 && seenRowsTotal >= config.bloomMinSeenRows
-
-  private def loadState(): Unit = {
-    if (stateLoaded) return
-    stateLoaded = true
-    pagesTotal = io.stat("pages_total").getOrElse(0L)
-    errorsTotal = io.stat("errors_total").getOrElse(0L)
-    contentCharsTotal = io.stat("content_chars_total").getOrElse(0L)
-    startEpochMs = io.stat("start_epoch_ms").getOrElse(nowMs())
-    seenRowsTotal = io.stat("seen_total").getOrElse(1L)
-    stopReason = io.statStr("stop_reason")
+  // with SequentialOracle). The manifest is the only copy of the stats and
+  // the stop reason: each wave reads them once at its start, so a
+  // maintenance commit between waves (SeenMaintenance.forget*) is seen by
+  // this instance too. Only the auto-exclude state is kept here: the
+  // engine alone writes the excludes/window10 tables, so they are read once,
+  // at the first wave this instance runs.
+  private final class ExcludeState(var prefixes: Vector[String],
+      var window10: Vector[(String, Double)]) // (url, pct), seq order
+  private lazy val excludes: ExcludeState = {
     val cw = io.committedWave
-    if (config.minUniquePct > 0 && cw >= 0) {
-      excludedPrefixes = io.readWave("excludes", cw, TableIO.ExcludesSchema)
-        .collect().map(_.getString(0)).toVector
-      window10 = io.readWave("window10", cw, TableIO.Window10Schema)
-        .collect().sortBy(_.getInt(2)).map(r => (r.getString(0), r.getDouble(1))).toVector
-    }
-    // per-domain crawled counts need no driver state: the committed
-    // host_counts wave table joins in as the allowance column directly
+    if (config.minUniquePct > 0 && cw >= 0) new ExcludeState(
+      io.readWave("excludes", cw, TableIO.ExcludesSchema)
+        .collect().map(_.getString(0)).toVector,
+      io.readWave("window10", cw, TableIO.Window10Schema)
+        .collect().sortBy(_.getInt(2)).map(r => (r.getString(0), r.getDouble(1))).toVector)
+    else new ExcludeState(Vector.empty, Vector.empty)
   }
+
+  /** The terminal stop reason of the last commit, if any. */
+  def stopReason: Option[String] = io.manifest.stopReason
 
   /** Run (or resume) the crawl to completion or a stop condition; returns
     * waves processed. A crawl stopped by the cascade stays stopped across
@@ -201,7 +182,6 @@ final class CrawlEngine(
     */
   def run(maxWavesThisRun: Int = Int.MaxValue): Int = {
     if (io.committedWave == -2) bootstrap()
-    loadState()
     var wave = io.committedWave + 1
     var processed = 0
     var continue = stopReason.isEmpty &&
@@ -229,11 +209,10 @@ final class CrawlEngine(
     // other (SequentialOracle.scala:193): record it so CrawlResult callers
     // can tell it from natural completion, and persist it so resumes respect
     // it. (maxWavesThisRun is a per-call slice, NOT a stop condition.)
-    if (stopReason.isEmpty && wave >= config.maxWaves &&
-        io.stat("next_frontier").exists(_ > 0)) {
-      stopReason = Some("max_waves")
+    val m = io.manifest
+    if (m.stopReason.isEmpty && wave >= config.maxWaves &&
+        m.stats.get("next_frontier").exists(_ > 0))
       io.setStopReason("max_waves")
-    }
     processed
   }
 
@@ -265,11 +244,14 @@ final class CrawlEngine(
   /** Process one wave; false = frontier empty, crawl complete. */
   def runWave(wave: Int): Boolean = {
     val compiles0 = compiles
-    loadState()
-    if (stopReason.nonEmpty) return false
+    // the wave's one read of the crawl state; it commits `m` + its deltas
+    val m = io.manifest
+    def stat(name: String): Long = m.stats.getOrElse(name, 0L)
+    if (m.stopReason.nonEmpty) return false
     // fast empty check from the previous commit's lineage stats (the Spark
     // isEmpty job only runs on the resume edge where no stat exists)
-    if (io.stat("next_frontier").contains(0L) && io.committedWave == wave - 1) return false
+    val afterCommit = m.committedWave == wave - 1 && m.stats.contains("next_frontier")
+    if (afterCommit && stat("next_frontier") == 0L) return false
     // na.fill: a warehouse written before the retry/redirect columns existed
     // reads nulls for them under the current schema — fill their defaults so
     // legacy-warehouse resume keeps working (as[FrontierEntry] would throw on
@@ -283,17 +265,15 @@ final class CrawlEngine(
     // seqs were assigned past max_seq at maintenance time, so ordering and
     // the engine's own seq assignment are untouched. Once this wave commits,
     // committedWave passes reseed_wave and the rows are never re-injected.
-    val frontier = io.stat("reseed_wave") match {
+    val frontier = m.stats.get("reseed_wave") match {
       case Some(rw) if rw == wave.toLong &&
           io.waveExists("reseed", wave, lookahead = 1) =>
         frontierBase.unionByName(
           io.readWave("reseed", wave, TableIO.FrontierSchema, lookahead = 1))
       case _ => frontierBase
     }
-    if (io.stat("next_frontier").isEmpty || io.committedWave != wave - 1) {
-      if (timed(wave, "isEmpty")(frontier.isEmpty)) return false
-    }
-    val prevMaxSeq = io.stat("max_seq").getOrElse(0L)
+    if (!afterCommit && timed(wave, "isEmpty")(frontier.isEmpty)) return false
+    val prevMaxSeq = stat("max_seq")
 
     // ---- 1. robots for hosts newly appearing in the frontier -------------
     val fetcherL = fetcher
@@ -403,7 +383,7 @@ final class CrawlEngine(
     // matching the oracle): the seq of the last due entry within budget
     val lastDueSeq =
       if (config.maxPagesToCrawl > 0) {
-        val budget = math.max(0L, config.maxPagesToCrawl - pagesTotal)
+        val budget = math.max(0L, config.maxPagesToCrawl - stat("pages_total"))
         val dueSeqs = byHost.mapPartitions(rows =>
           CrawlEngine.politeness(rows).collect { case (e, true) => e.seq })
         if (budget == 0) -1L
@@ -483,9 +463,14 @@ final class CrawlEngine(
     val cands = CrawlEngine.candidateLinks(results)
     val seenTable = io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
     val nb = numPartitions
-    // snapshot the engage decision for the whole wave (seenRowsTotal moves
-    // at the end of the wave; flipping mid-wave would desync prevBlooms)
-    val useBloom = bloomEnabled
+    // hybrid engage rule: the exact seen check is cheap while `seen` is
+    // small, so the [[SeenSet]] filters only pay once the set passes
+    // bloomMinSeenRows (the broadcast-vs-shuffle-join selection analog).
+    // Engaging later is safe: SeenSet.read builds the buckets from the
+    // authoritative seen table on its first engaged wave. The root hash
+    // seeds the set at bootstrap.
+    val seenTotal = m.stats.getOrElse("seen_total", 1L)
+    val useBloom = config.bloomCapacity > 0 && seenTotal >= config.bloomMinSeenRows
     lastWaveBloomEngaged = useBloom
     // one read of the previous wave's filters serves both the apply-side
     // pass here and the update pass at stage time
@@ -514,7 +499,7 @@ final class CrawlEngine(
     val maxDepth = config.maxDepth
     val maxRedirects = config.maxRedirects
     val userAgent = config.userAgent
-    val excludesBc = spark.sparkContext.broadcast(excludedPrefixes)
+    val excludesBc = spark.sparkContext.broadcast(excludes.prefixes)
 
     // the seen probe collects its hits and the seq sort's range
     // partitioner samples its input: the chain's eager work, before staging
@@ -562,22 +547,23 @@ final class CrawlEngine(
     // (so they sort ahead of newly-discovered links, like the reference's
     // re-add to the front of the host queue) and bypass the seen gate —
     // their url_hash is already in `seen`.
-    val retryEntries =
-      if (config.maxRetries > 0) {
-        results.toDF()
-          .filter($"is_error" && ($"status" >= 500 || $"status" < 0) &&
-            $"retry_count" < config.maxRetries)
-          .select($"url", $"url_hash", $"host", $"parent_url", $"depth", $"seq",
-            ($"wave" + 1).as("wave"), lit(true).as("is_retry"),
-            ($"retry_count" + 1).as("retry_count"),
-            greatest($"retry_after_sec", lit(0)).as("retry_after_sec"),
-            $"redirect_position")
-      } else null
+    val retryEntries = Option.when(config.maxRetries > 0) {
+      results.toDF()
+        .filter($"is_error" && ($"status" >= 500 || $"status" < 0) &&
+          $"retry_count" < config.maxRetries)
+        .select($"url", $"url_hash", $"host", $"parent_url", $"depth", $"seq",
+          ($"wave" + 1).as("wave"), lit(true).as("is_retry"),
+          ($"retry_count" + 1).as("retry_count"),
+          greatest($"retry_after_sec", lit(0)).as("retry_after_sec"),
+          $"redirect_position")
+    }
 
     // ---- 7. wave-boundary stop cascade (WebsiteTextExtractor.cs:638-767) -
-    pagesTotal += pagesFetched
-    errorsTotal += totals.errors
-    contentCharsTotal += totals.contentChars
+    val pagesTotal = stat("pages_total") + pagesFetched
+    val errorsTotal = stat("errors_total") + totals.errors
+    val contentCharsTotal = stat("content_chars_total") + totals.contentChars
+    val startEpochMs = m.stats.getOrElse("start_epoch_ms", nowMs())
+    var stop: Option[String] = None
     var newExclude: Option[String] = None
     if (config.minUniquePct > 0) {
       // only the LAST 10 html rows of the wave can survive takeRight(10):
@@ -592,41 +578,41 @@ final class CrawlEngine(
             .otherwise(lit(0.0)).as("pct"))
         .orderBy($"seq".desc).limit(10).collect()
         .reverseIterator.map(r => (r.getString(1), r.getDouble(2))).toVector
-      window10 = (window10 ++ waveTail).takeRight(10)
+      excludes.window10 = (excludes.window10 ++ waveTail).takeRight(10)
     }
     // cascade order mirrors the reference (WebsiteTextExtractor.cs:642-766):
     // bot-wall → duration → pages → errors → minUnique → size-on-disk
     if (totals.botBlocked > 0) {
       // the site rejects bots (DataDome): abort the whole crawl to comply
-      stopReason = Some("bot_protection")
+      stop = Some("bot_protection")
     } else if (config.maxDurationMin > 0 &&
         nowMs() - startEpochMs >= config.maxDurationMin * 60000L) {
-      stopReason = Some("max_duration")
+      stop = Some("max_duration")
     } else if (config.maxPagesToCrawl > 0 && pagesTotal >= config.maxPagesToCrawl) {
-      stopReason = Some("max_pages")
+      stop = Some("max_pages")
     } else if (config.maxErrors > 0 && errorsTotal >= config.maxErrors) {
-      stopReason = Some("max_errors")
-    } else if (config.minUniquePct > 0 && window10.size >= 10) {
-      val avgPct = window10.map(_._2).sum / 10.0 * 100.0
+      stop = Some("max_errors")
+    } else if (config.minUniquePct > 0 && excludes.window10.size >= 10) {
+      val avgPct = excludes.window10.map(_._2).sum / 10.0 * 100.0
       if (avgPct < config.minUniquePct) {
         // auto-exclude the longest common URL prefix of the last 10 pages
         // (WebsiteTextExtractor.cs:697-747); stop when no useful prefix
-        val urls = window10.map(_._1)
+        val urls = excludes.window10.map(_._1)
         val lcp = urls.reduce { (a, b) =>
           a.zip(b).takeWhile { case (x, y) => x == y }.map(_._1).mkString }
         val rootPrefix = rootCanon.take(rootCanon.indexOf('/', 8) + 1)
-        if (lcp.length > rootPrefix.length && !excludedPrefixes.contains(lcp)) {
-          excludedPrefixes :+= lcp
+        if (lcp.length > rootPrefix.length && !excludes.prefixes.contains(lcp)) {
+          excludes.prefixes :+= lcp
           newExclude = Some(lcp)
-          window10 = Vector.empty // reference resets its window after excluding
+          excludes.window10 = Vector.empty // reference resets its window after excluding
         } else {
-          stopReason = Some("min_unique_text")
+          stop = Some("min_unique_text")
         }
       }
     }
-    if (stopReason.isEmpty && config.maxContentChars > 0 &&
+    if (stop.isEmpty && config.maxContentChars > 0 &&
         contentCharsTotal >= config.maxContentChars) {
-      stopReason = Some("max_size_on_disk")
+      stop = Some("max_size_on_disk")
     }
 
     // ---- 8. stage everything, then atomically commit the wave ------------
@@ -704,8 +690,8 @@ final class CrawlEngine(
       io.deleteStaged("errors", wave)
     }
     if (config.minUniquePct > 0) {
-      val excludesDf = excludedPrefixes.map(p => (p, wave)).toDF("pattern", "wave")
-      val windowDf = window10.zipWithIndex
+      val excludesDf = excludes.prefixes.map(p => (p, wave)).toDF("pattern", "wave")
+      val windowDf = excludes.window10.zipWithIndex
         .map { case ((u, p), i) => (u, p, i) }.toDF("url", "pct", "ord")
       staged("stage:excludes") {
         io.stage("excludes", wave, excludesDf)
@@ -738,71 +724,38 @@ final class CrawlEngine(
       staged("stage:blooms")(io.stage("blooms", wave,
         newBlooms.observe(obsSaturated, count(when($"saturated", 1)).as("n"))))
     }
-    // seqs are assigned BEFORE the retroactive exclude filter (the oracle's
-    // seq counter is monotonic over assignments, not survivors).
-    //
     // Both frontier counts (seqs assigned; rows staged) ride the ONE
-    // staging write as observe() metrics instead of separate persist() +
-    // count() rounds — two fewer jobs and two fewer cached copies per
-    // wave, with byte-identical results (the counts are the same
-    // aggregates, collected during the write job). The rare new-exclude
-    // wave keeps the materialized path: the retroactive filter must not
-    // risk being planned below the pre-filter count.
-    val nextCountF: Future[(Long, Long)] = newExclude match {
-      case Some(lcp) =>
-        val newFrontierP = newFrontier.persist()
-        val newAssigned = newFrontierP.count()
-        val nextFrontierAll0 = carry.unionByName(newFrontierP.toDF())
-        val nextFrontierAll =
-          if (retryEntries != null) nextFrontierAll0.unionByName(retryEntries)
-          else nextFrontierAll0
-        // new exclude applies retroactively to the pending frontier
-        // (Scheduler.FilterAllowedUrlsAfterConfig analog, Scheduler.cs:123-139)
-        val nextFrontierP = nextFrontierAll.filter(!$"url".startsWith(lcp))
-          .persist() // write + count both read it; released in-branch below
-        Future(timed(wave, "stage:frontier") {
-          try {
-            io.stage("frontier", wave + 1, sized(nextFrontierP, pagesFetched * 2048L))
-            (newAssigned, nextFrontierP.count())
-          } finally {
-            newFrontierP.unpersist()
-            nextFrontierP.unpersist()
-          }
-        })(stageEc)
-      case None =>
-        val obsNew = org.apache.spark.sql.Observation()
-        val obsNext = org.apache.spark.sql.Observation()
-        val newFrontierO = newFrontier.observe(obsNew, count(lit(1)).as("n"))
-        val nextFrontierAll0 = carry.unionByName(newFrontierO.toDF())
-        val nextFrontierAll =
-          if (retryEntries != null) nextFrontierAll0.unionByName(retryEntries)
-          else nextFrontierAll0
-        val nextFrontierOut = nextFrontierAll
-          .observe(obsNext, count(lit(1)).as("n"))
-        Future(timed(wave, "stage:frontier") {
-          io.stage("frontier", wave + 1, sized(nextFrontierOut, pagesFetched * 2048L))
-          (obsNew.get("n").asInstanceOf[Long],
-            obsNext.get("n").asInstanceOf[Long])
-        })(stageEc)
-    }
+    // staging write as observe() metrics, not persist() + count() rounds.
+    // A new exclude applies retroactively to the whole pending frontier
+    // (Scheduler.FilterAllowedUrlsAfterConfig analog, Scheduler.cs:123-139),
+    // above the seqs-assigned count: the oracle's seq counter is monotonic
+    // over assignments, not survivors, and the optimizer pushes no filter
+    // through an observe() (CollectMetrics) node.
+    val obsNew = org.apache.spark.sql.Observation()
+    val obsNext = org.apache.spark.sql.Observation()
+    val pending = Seq(carry, newFrontier.observe(obsNew, count(lit(1)).as("n")).toDF()) ++
+      retryEntries
+    val nextFrontier = newExclude.foldLeft(pending.reduce(_ unionByName _))(
+      (df, lcp) => df.filter(!$"url".startsWith(lcp)))
+      .observe(obsNext, count(lit(1)).as("n"))
+    staged("stage:frontier")(io.stage("frontier", wave + 1,
+      sized(nextFrontier, pagesFetched * 2048L)))
     stageJobs.result().foreach(Await.result(_, Duration.Inf))
-    val (newAssigned, nextCount) = Await.result(nextCountF, Duration.Inf)
-    val seenAddedWave = obsSeen.get("n").asInstanceOf[Long]
-    seenRowsTotal += seenAddedWave
+    def observed(o: org.apache.spark.sql.Observation) = o.get("n").asInstanceOf[Long]
     val baseStats = Map(
       "pages" -> pagesFetched,
       "pages_total" -> pagesTotal,
       "errors_total" -> errorsTotal,
       "content_chars_total" -> contentCharsTotal,
       "start_epoch_ms" -> startEpochMs,
-      "seen_total" -> seenRowsTotal,
-      "max_seq" -> (prevMaxSeq + newAssigned),
-      "next_frontier" -> nextCount)
+      "seen_total" -> (seenTotal + observed(obsSeen)),
+      "max_seq" -> (prevMaxSeq + observed(obsNew)),
+      "next_frontier" -> observed(obsNext))
     val stats =
       if (useBloom) baseStats ++ SeenSet.commitStats(io, nb,
-        clean = obsSaturated.get("n").asInstanceOf[Long] == 0L)
+        clean = observed(obsSaturated) == 0L)
       else baseStats
-    io.commitWave(wave, stats, stopReason)
+    io.commitWave(wave, stats, stop)
 
     results.unpersist()
     newHosts.unpersist()

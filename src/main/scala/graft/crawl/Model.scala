@@ -381,20 +381,20 @@ object RobotsCache {
   * `_wordslab/config.txt` round-trip (`WebsiteExtractorParams.cs:139-199`):
   * a resumed crawl re-reads its persisted parameters and re-applies any
   * caller overrides, instead of requiring the caller to re-supply an
-  * identical config. Hand-rolled (flat fields, no JSON lib in scope).
+  * identical config. A flat JSON object, read by the manifest's reader
+  * (no JSON lib in scope; a field added later is absent from older
+  * warehouses' config.json and takes its default).
   */
 object CrawlConfigCodec {
 
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-
   def toJson(c: CrawlConfig): String = {
+    def q(s: String) = TableIO.Manifest.quote(s)
     val scope = c.scope match {
       case ScopeFilter.Domain => "domain"
       case ScopeFilter.SubDomain => "subdomain"
       case ScopeFilter.Path => "path"
     }
-    s"""{"rootUrl":"${esc(c.rootUrl)}","scope":"$scope","userAgent":"${esc(c.userAgent)}",""" +
+    s"""{"rootUrl":${q(c.rootUrl)},"scope":"$scope","userAgent":${q(c.userAgent)},""" +
       s""""maxDepth":${c.maxDepth},"maxLinksPerPage":${c.maxLinksPerPage},""" +
       s""""maxPagesToCrawl":${c.maxPagesToCrawl},"maxPagesPerDomain":${c.maxPagesPerDomain},""" +
       s""""maxErrors":${c.maxErrors},"maxRetries":${c.maxRetries},""" +
@@ -409,43 +409,34 @@ object CrawlConfigCodec {
   }
 
   def fromJson(json: String): CrawlConfig = {
-    def str(k: String): String =
-      ("\"" + k + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-        .findFirstMatchIn(json).map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-        .getOrElse(throw new IllegalArgumentException(s"missing $k"))
-    def num(k: String): String =
-      ("\"" + k + "\"\\s*:\\s*([-0-9.eE]+|true|false)").r
-        .findFirstMatchIn(json).map(_.group(1))
-        .getOrElse(throw new IllegalArgumentException(s"missing $k"))
-    // fields added after round 6: absent in older warehouses' config.json
-    def numOr(k: String, d: String): String =
-      ("\"" + k + "\"\\s*:\\s*([-0-9.eE]+|true|false)").r
-        .findFirstMatchIn(json).map(_.group(1)).getOrElse(d)
-    val scope = str("scope") match {
+    val f = TableIO.Manifest.fields(json)
+    def field(k: String): String =
+      f.getOrElse(k, throw new IllegalArgumentException(s"missing $k"))
+    val scope = field("scope") match {
       case "domain" => ScopeFilter.Domain
       case "subdomain" => ScopeFilter.SubDomain
       case "path" => ScopeFilter.Path
     }
     CrawlConfig(
-      rootUrl = str("rootUrl"), scope = scope, userAgent = str("userAgent"),
-      maxDepth = num("maxDepth").toInt,
-      maxLinksPerPage = num("maxLinksPerPage").toInt,
-      maxPagesToCrawl = num("maxPagesToCrawl").toLong,
-      maxPagesPerDomain = num("maxPagesPerDomain").toLong,
-      maxErrors = num("maxErrors").toLong,
-      maxRetries = num("maxRetries").toInt,
-      maxDurationMin = num("maxDurationMin").toInt,
-      maxContentChars = num("maxContentChars").toLong,
-      maxRedirects = num("maxRedirects").toInt,
-      minUniquePct = num("minUniquePct").toDouble,
-      minCrawlDelayMs = num("minCrawlDelayMs").toLong,
-      maxRobotsDelaySec = num("maxRobotsDelaySec").toInt,
-      waveBudgetMs = num("waveBudgetMs").toLong,
-      maxWaves = num("maxWaves").toInt,
-      bloomCapacity = num("bloomCapacity").toLong,
-      bloomFpr = num("bloomFpr").toDouble,
-      bloomMinSeenRows = num("bloomMinSeenRows").toLong,
-      compactEveryWaves = numOr("compactEveryWaves", "0").toInt,
-      logFetches = num("logFetches").toBoolean)
+      rootUrl = field("rootUrl"), scope = scope, userAgent = field("userAgent"),
+      maxDepth = field("maxDepth").toInt,
+      maxLinksPerPage = field("maxLinksPerPage").toInt,
+      maxPagesToCrawl = field("maxPagesToCrawl").toLong,
+      maxPagesPerDomain = field("maxPagesPerDomain").toLong,
+      maxErrors = field("maxErrors").toLong,
+      maxRetries = field("maxRetries").toInt,
+      maxDurationMin = field("maxDurationMin").toInt,
+      maxContentChars = field("maxContentChars").toLong,
+      maxRedirects = field("maxRedirects").toInt,
+      minUniquePct = field("minUniquePct").toDouble,
+      minCrawlDelayMs = field("minCrawlDelayMs").toLong,
+      maxRobotsDelaySec = field("maxRobotsDelaySec").toInt,
+      waveBudgetMs = field("waveBudgetMs").toLong,
+      maxWaves = field("maxWaves").toInt,
+      bloomCapacity = field("bloomCapacity").toLong,
+      bloomFpr = field("bloomFpr").toDouble,
+      bloomMinSeenRows = field("bloomMinSeenRows").toLong,
+      compactEveryWaves = f.getOrElse("compactEveryWaves", "0").toInt,
+      logFetches = field("logFetches").toBoolean)
   }
 }

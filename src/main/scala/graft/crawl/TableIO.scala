@@ -16,6 +16,13 @@ import java.nio.charset.StandardCharsets
   * committed wave: partitions staged for an uncommitted wave are invisible
   * and are overwritten on retry (north rule: "a killed run resumes exactly").
   *
+  * The manifest ([[TableIO.Manifest]]: committed wave, stats, stop reason)
+  * is the only copy of crawl state: the engine and [[SeenMaintenance]] read
+  * it afresh instead of caching it, so a maintenance commit between two
+  * waves is seen by the next wave of any engine instance. It is parsed by
+  * one function and rendered by one; [[commitWave]], [[mergeStats]] and
+  * [[setStopReason]] each write one modified copy of it.
+  *
   * Tables staged one wave AHEAD (frontier for wave N+1, seen additions) are
   * read with `lookahead = 1`: they were staged before the commit of wave N,
   * so index committedWave+1 is already durable.
@@ -88,33 +95,25 @@ final class TableIO(val warehouse: String, spark: SparkSession) {
 
   fs.mkdirs(new HPath(warehouse))
 
+  /** The committed crawl state; [[Manifest.Fresh]] for a fresh warehouse. */
+  def manifest: Manifest =
+    if (!exists(manifestPath)) Manifest.Fresh else Manifest.parse(readString(manifestPath))
+
   /** Last committed wave; -2 for a fresh warehouse (bootstrap commits -1). */
-  def committedWave: Int = {
-    if (!exists(manifestPath)) -2
-    else {
-      val txt = readString(manifestPath)
-      """"committed_wave"\s*:\s*(-?\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toInt).getOrElse(-2)
-    }
-  }
+  def committedWave: Int = manifest.committedWave
 
   /** A long-valued stat persisted with the last commit (e.g. max_seq). */
-  def stat(name: String): Option[Long] = {
-    if (!exists(manifestPath)) None
-    else {
-      val txt = readString(manifestPath)
-      (""""""" + name + """"\s*:\s*(-?\d+)""").r.findFirstMatchIn(txt).map(_.group(1).toLong)
-    }
-  }
+  def stat(name: String): Option[Long] = manifest.stats.get(name)
 
-  /** String-valued manifest field (e.g. stop_reason). */
-  def statStr(name: String): Option[String] = {
-    if (!exists(manifestPath)) None
-    else {
-      val txt = readString(manifestPath)
-      ("\"" + name + "\"\\s*:\\s*\"([^\"]*)\"").r.findFirstMatchIn(txt).map(_.group(1))
-    }
-  }
+  /** String-valued manifest field: `stop_reason`, the only one. */
+  def statStr(name: String): Option[String] =
+    if (name == "stop_reason") manifest.stopReason else None
+
+  private def write(m: Manifest): Unit = atomicWrite(manifestPath, Manifest.render(m))
+
+  /** One atomic replace of the existing manifest by `f` of it. */
+  private def rewrite(f: Manifest => Manifest): Unit =
+    write(f(Manifest.parse(readString(manifestPath))))
 
   /** Stage one table's rows for wave index `wave` (NOT yet visible). */
   def stage[T](name: String, wave: Int, ds: Dataset[T]): Unit =
@@ -136,29 +135,16 @@ final class TableIO(val warehouse: String, spark: SparkSession) {
   /** Atomically commit `wave`, with lineage stats and an optional terminal
     * stop reason (a stopped crawl stays stopped across resumes).
     *
-    * Maintenance-owned manifest keys — the `gen_<table>` generation
-    * pointers and `reseed_wave` ([[SeenMaintenance]]) — are carried forward
-    * from the current manifest: the engine recomputes ITS stats every wave,
-    * but a generation pointer it does not know about must survive the
+    * Maintenance-owned keys ([[Manifest.carriedByCommit]]) are carried
+    * forward from the current manifest: the engine restates ITS stats every
+    * wave, but a generation pointer it does not know about must survive the
     * commit or every generation-flipped table would silently fall back to
     * its (dropped) bare directory.
     */
   def commitWave(wave: Int, stats: Map[String, Long] = Map.empty,
       stopReason: Option[String] = None): Unit = {
-    val carried: Map[String, Long] =
-      if (!exists(manifestPath)) Map.empty
-      else {
-        val txt = readString(manifestPath)
-        """"((?:gen_[A-Za-z0-9_]+)|reseed_wave)"\s*:\s*(-?\d+)""".r
-          .findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toLong).toMap
-      }
-    val all = carried ++ stats // caller wins on conflict
-    val statsJson = all.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""","$k":$v""" }.mkString
-    val stopJson = stopReason.map(r => s""","stop_reason":"$r"""").getOrElse("")
-    val json = s"""{"committed_wave":$wave$statsJson$stopJson}"""
-    atomicWrite(manifestPath, json)
+    val carried = manifest.stats.filter { case (k, _) => Manifest.carriedByCommit(k) }
+    write(Manifest(wave, carried ++ stats, stopReason)) // caller wins on conflict
   }
 
   /** Atomically merge stats into the CURRENT manifest without advancing the
@@ -172,16 +158,8 @@ final class TableIO(val warehouse: String, spark: SparkSession) {
   def mergeStats(stats: Map[String, Long],
       clearStopReason: Boolean = false): Unit = {
     require(!stats.contains("committed_wave"), "use commitWave to advance waves")
-    var txt = readString(manifestPath).trim.stripSuffix("}")
-    for (k <- stats.keys) {
-      val q = java.util.regex.Pattern.quote(k)
-      txt = txt.replaceAll(s""","$q"\\s*:\\s*-?\\d+""", "")
-    }
-    if (clearStopReason)
-      txt = txt.replaceAll(""","stop_reason":"[^"]*"""", "")
-    val json = txt + stats.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""","$k":$v""" }.mkString + "}"
-    atomicWrite(manifestPath, json)
+    rewrite(m => m.copy(stats = m.stats ++ stats,
+      stopReason = if (clearStopReason) None else m.stopReason))
   }
 
   /** Write `df` as the single wave-`atWave` partition of the NEXT generation
@@ -215,12 +193,8 @@ final class TableIO(val warehouse: String, spark: SparkSession) {
     * (same atomic replace as commitWave) — used when a stop is decided at
     * run()-exit rather than at a wave boundary (e.g. max_waves).
     */
-  def setStopReason(reason: String): Unit = {
-    val txt = readString(manifestPath)
-    val stripped = txt.stripSuffix("}").replaceAll(""","stop_reason":"[^"]*"""", "")
-    val json = stripped + s""","stop_reason":"$reason"}"""
-    atomicWrite(manifestPath, json)
-  }
+  def setStopReason(reason: String): Unit =
+    rewrite(_.copy(stopReason = Some(reason)))
 
   /** Union of all visible wave partitions of a table. */
   def readAll(name: String, schema: StructType, lookahead: Int = 0): DataFrame = {
@@ -293,4 +267,53 @@ object TableIO {
 
   def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  /** The whole crawl state: the last committed wave, the stats committed
+    * with it (totals, seqs, generation pointers, filter layout) and the
+    * terminal stop reason. `manifest.json` holds its only copy, read by
+    * [[Manifest.parse]] and written by [[Manifest.render]].
+    */
+  final case class Manifest(committedWave: Int, stats: Map[String, Long] = Map.empty,
+      stopReason: Option[String] = None)
+
+  object Manifest {
+    val Fresh: Manifest = Manifest(-2)
+
+    /** Keys a wave commit carries forward from the manifest it replaces:
+      * the ones [[SeenMaintenance]] owns, the `gen_<table>` generation
+      * pointers and `reseed_wave`. The engine restates each stat it keeps
+      * at every commit, so any other old key (e.g. the filter layout after
+      * a wave that ran without the Bloom path) is dropped.
+      */
+    def carriedByCommit(key: String): Boolean = key.startsWith("gen_") || key == "reseed_wave"
+
+    def render(m: Manifest): String =
+      ((s""""committed_wave":${m.committedWave}""" +:
+        m.stats.toSeq.sortBy(_._1).map { case (k, v) => s"${quote(k)}:$v" }) ++
+        m.stopReason.map(r => s""""stop_reason":${quote(r)}""")).mkString("{", ",", "}")
+
+    def parse(text: String): Manifest = {
+      val f = fields(text)
+      Manifest(f.get("committed_wave").fold(-2)(_.toInt),
+        (f - "committed_wave" - "stop_reason").map { case (k, v) => k -> v.toLong },
+        f.get("stop_reason"))
+    }
+
+    /** `s` as a JSON string literal (`"` and `\` escaped). */
+    private[crawl] def quote(s: String): String =
+      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+    // "key": "string" | literal; possessive, so long strings do not recurse
+    private val Field =
+      """"((?:[^"\\]++|\\.)*+)"\s*:\s*(?:"((?:[^"\\]++|\\.)*+)"|([^\s,}"]+))""".r
+    private def unescape(s: String): String = s.replaceAll("""(?s)\\(.)""", "$1")
+
+    /** The fields of a flat JSON object (no nesting, no arrays): string
+      * values unescaped, other values as their literal text.
+      */
+    private[crawl] def fields(json: String): Map[String, String] =
+      Field.findAllMatchIn(json).map { m =>
+        unescape(m.group(1)) -> Option(m.group(2)).fold(m.group(3))(unescape)
+      }.toMap
+  }
 }

@@ -2,8 +2,10 @@ package graft
 
 import graft.core.{CuckooFilter64, ScopeFilter, UrlCanonicalizer}
 import graft.crawl._
+import graft.crawl.TableIO.Manifest
+import org.scalacheck.{Gen, Prop, Test => Check}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** Seen-set retraction and recrawl (the north rule's "bloom falling back to
   * cuckoo for deletions" clause): forget/reseed semantics, the Bloom→Cuckoo
@@ -11,6 +13,7 @@ import java.nio.file.Files
   * the maintenance commit.
   */
 class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
+  import SeenMaintenanceSpec._
 
   private val site = SyntheticWeb.generate(
     SyntheticWeb.Spec(hosts = 1, pagesPerHost = 12, hotHostFactor = 1, fanout = 3))
@@ -439,4 +442,165 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
     assert(io.stat(k).contains(v))
     assert(io.stat("seen_total").contains(2L))
   }
+
+  // ---- the manifest: one value with one reader and one writer --------------
+
+  private val statKey = Gen.oneOf("gen_seen", "gen_blooms", "gen_reseed",
+    "gen_documents", "reseed_wave", "bloom_buckets", "blooms_v",
+    "blooms_clean_gen", "seen_total", "pages_total", "max_seq", "next_frontier")
+  private val statsGen = Gen.mapOf(Gen.zip(statKey,
+    Gen.oneOf(Gen.choose(-3L, 3L), Gen.choose(Long.MinValue, Long.MaxValue))))
+  private val plainStop = Gen.oneOf("max_errors", "max_waves", "min_unique_text")
+  // stop reasons the manifest must round-trip, beyond the engine's own
+  private val stopGen = Gen.option(Gen.frequency(3 -> plainStop, 1 -> Gen.asciiPrintableStr))
+  private val opGen: Gen[Op] = Gen.oneOf(
+    for (w <- Gen.choose(-1, 9); st <- statsGen; r <- stopGen) yield Commit(w, st, r),
+    for (st <- statsGen; c <- Gen.oneOf(true, false)) yield Merge(st, c),
+    stopGen.map(r => Stop(r.getOrElse("max_waves"))))
+
+  // the writers of the parent format (before the manifest had one writer):
+  // sorted keys at a commit, merged keys and the stop reason appended
+  private def legacyCommit(prev: String, wave: Int, stats: Map[String, Long],
+      stop: Option[String]): String = {
+    val carried = """"((?:gen_[A-Za-z0-9_]+)|reseed_wave)"\s*:\s*(-?\d+)""".r
+      .findAllMatchIn(prev).map(m => m.group(1) -> m.group(2).toLong).toMap
+    val statsJson = (carried ++ stats).toSeq.sortBy(_._1)
+      .map { case (k, v) => s""","$k":$v""" }.mkString
+    s"""{"committed_wave":$wave$statsJson${stop.fold("")(r => s""","stop_reason":"$r"""")}}"""
+  }
+  private def legacyMerge(prev: String, stats: Map[String, Long], clear: Boolean): String = {
+    var txt = prev.trim.stripSuffix("}")
+    for (k <- stats.keys)
+      txt = txt.replaceAll(s""","${java.util.regex.Pattern.quote(k)}"\\s*:\\s*-?\\d+""", "")
+    if (clear) txt = txt.replaceAll(""","stop_reason":"[^"]*"""", "")
+    txt + stats.toSeq.sortBy(_._1).map { case (k, v) => s""","$k":$v""" }.mkString + "}"
+  }
+  private def legacyStop(prev: String, r: String): String =
+    prev.stripSuffix("}").replaceAll(""","stop_reason":"[^"]*"""", "") +
+      s""","stop_reason":"$r"}"""
+
+  test("manifest: render/parse round-trips, a commit carries exactly gen_*" +
+      " and reseed_wave, a merge keeps every other key, and the parent's" +
+      " formats parse to the same values (property, 200 cases)") {
+    val wh = Files.createTempDirectory("graft-manifest").toString
+    val io = new TableIO(wh, spark)
+    assert(io.manifest == Manifest.Fresh && io.committedWave == -2)
+    val caseGen = for {
+      first <- Gen.choose(-1, 9).flatMap(w => Gen.zip(statsGen, stopGen)
+        .map { case (st, r) => Commit(w, st, r) })
+      ops <- Gen.choose(1, 8).flatMap(Gen.listOfN(_, opGen))
+    } yield first :: ops
+    val prop = Prop.forAllNoShrink(caseGen) { ops =>
+      Files.deleteIfExists(Paths.get(wh, "manifest.json"))
+      val plain = ops.forall {
+        case Commit(_, _, r) => r.forall(_.matches("[a-z_]+"))
+        case Stop(r) => r.matches("[a-z_]+")
+        case _ => true
+      }
+      var model = Manifest.Fresh
+      var legacy = ""
+      ops.forall { op =>
+        op match {
+          case Commit(w, st, r) =>
+            io.commitWave(w, st, r)
+            model = Manifest(w, model.stats.filter { case (k, _) =>
+              k.startsWith("gen_") || k == "reseed_wave" } ++ st, r)
+            legacy = legacyCommit(legacy, w, st, r)
+          case Merge(st, clear) =>
+            io.mergeStats(st, clearStopReason = clear)
+            model = model.copy(stats = model.stats ++ st,
+              stopReason = if (clear) None else model.stopReason)
+            legacy = legacyMerge(legacy, st, clear)
+          case Stop(r) =>
+            io.setStopReason(r)
+            model = model.copy(stopReason = Some(r))
+            legacy = legacyStop(legacy, r)
+        }
+        io.manifest == model && Manifest.parse(Manifest.render(model)) == model &&
+          io.committedWave == model.committedWave &&
+          model.stats.forall { case (k, v) => io.stat(k).contains(v) } &&
+          io.statStr("stop_reason") == model.stopReason &&
+          (!plain || Manifest.parse(legacy) == model)
+      }
+    }
+    val result = Check.check(
+      Check.Parameters.default.withMinSuccessfulTests(200).withWorkers(1), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+  }
+
+  test("config.json: toJson → fromJson round-trips configs whose rootUrl and" +
+      " userAgent hold JSON metacharacters (property, 200 cases)") {
+    val meta = Gen.listOf(Gen.frequency(3 -> Gen.alphaNumChar,
+      2 -> Gen.oneOf('"', '\\', ',', ':', '}', '{', ' ', '/'))).map(_.mkString)
+    val configGen = for {
+      root <- meta; ua <- meta
+      scope <- Gen.oneOf(ScopeFilter.Domain, ScopeFilter.SubDomain, ScopeFilter.Path)
+      depth <- Gen.choose(0, 1000); pages <- Gen.choose(0L, Long.MaxValue)
+      uniq <- Gen.choose(0.0, 100.0); fpr <- Gen.choose(1e-9, 0.5)
+      compact <- Gen.choose(0, 5); log <- Gen.oneOf(true, false)
+    } yield CrawlConfig(rootUrl = "https://h.example/" + root, scope = scope,
+      userAgent = ua, maxDepth = depth, maxPagesToCrawl = pages,
+      minUniquePct = uniq, bloomFpr = fpr, compactEveryWaves = compact,
+      logFetches = log)
+    val prop = Prop.forAllNoShrink(configGen) { c =>
+      CrawlConfigCodec.fromJson(CrawlConfigCodec.toJson(c)) == c
+    }
+    val result = Check.check(
+      Check.Parameters.default.withMinSuccessfulTests(200).withWorkers(1), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+  }
+
+  // ---- an engine instance that outlives a maintenance commit ---------------
+
+  test("an engine instance run across a retraction commits seen_total ==" +
+      " count(seen)") {
+    val wh = Files.createTempDirectory("graft-forget-live").toString
+    val io = new TableIO(wh, spark)
+    val engine = new CrawlEngine(spark, io, config,
+      new SyntheticFetcher(site.pages, robots), numPartitions = 4)
+    assert(engine.run(2) == 2)
+    val fetched = io.readAll("fetch_log", TableIO.FetchLogSchema)
+      .select("url").collect().map(_.getString(0)).toSeq
+    val r = SeenMaintenance.forgetUrls(spark, wh, fetched, reseed = false)
+    assert(r.retractedSeen > 0)
+    assert(engine.run() > 0)
+    assert(io.stat("seen_total").contains(seenOf(io).size.toLong))
+  }
+
+  test("a reseed forget re-opens a crawl stopped by max_errors for the same" +
+      " engine instance, as for a fresh one") {
+    val stopAt = config.copy(maxErrors = 1)
+    val broken = site.pages - url(1) - url(2) // 404s
+    def engineOn(io: TableIO) = new CrawlEngine(spark, io, stopAt,
+      new SyntheticFetcher(broken, robots), numPartitions = 4)
+    def refetched(io: TableIO, after: Int) = io.readAll("fetch_log", TableIO.FetchLogSchema)
+      .filter(s"wave > $after").select("url").collect().map(_.getString(0)).toSet
+    val Seq((ioSame, same), (ioFresh, _)) = Seq("graft-reopen-same", "graft-reopen-fresh")
+      .map { prefix =>
+        val io = new TableIO(Files.createTempDirectory(prefix).toString, spark)
+        val engine = engineOn(io)
+        engine.run()
+        assert(engine.stopReason.contains("max_errors"))
+        (io, engine)
+      }
+    val c0 = ioSame.committedWave
+    assert(ioFresh.committedWave == c0)
+    for (io <- Seq(ioSame, ioFresh)) assert(SeenMaintenance.forgetUrls(spark,
+      io.warehouse, Seq(site.rootUrl), reseed = true).reseeded == 1)
+    assert(same.stopReason.isEmpty)
+    assert(same.run() > 0)
+    assert(engineOn(ioFresh).run() > 0)
+    assert(refetched(ioSame, c0).contains(site.rootUrl))
+    assert(refetched(ioSame, c0) == refetched(ioFresh, c0))
+    assert(ioSame.manifest == ioFresh.manifest.copy(stats = ioFresh.manifest.stats +
+      ("start_epoch_ms" -> ioSame.stat("start_epoch_ms").get)))
+  }
+}
+
+object SeenMaintenanceSpec {
+  /** One manifest write: a wave commit, a maintenance merge, a stop. */
+  sealed trait Op
+  final case class Commit(wave: Int, stats: Map[String, Long], stop: Option[String]) extends Op
+  final case class Merge(stats: Map[String, Long], clear: Boolean) extends Op
+  final case class Stop(reason: String) extends Op
 }

@@ -23,6 +23,17 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     (oracle, io, engine)
   }
 
+  /** `engine.run()` one wave at a time, checking after every committed
+    * wave (exclude waves included) that the manifest's next_frontier is
+    * the row count of the staged next-frontier partition.
+    */
+  private def runCheckingFrontier(engine: CrawlEngine, io: TableIO): Unit =
+    while (engine.run(1) > 0) {
+      val cw = io.committedWave
+      val staged = io.readWave("frontier", cw + 1, TableIO.FrontierSchema, lookahead = 1).count()
+      assert(io.stat("next_frontier").contains(staged), s"after wave $cw")
+    }
+
   private def crawledSet(io: TableIO): Set[(String, Long, Int)] =
     io.readAll("frontier", TableIO.FrontierSchema, lookahead = 1)
       .collect().map(r => (r.getString(0), r.getLong(5), r.getInt(6)))
@@ -102,7 +113,7 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     val io = new TableIO(Files.createTempDirectory("graft-uniq").toString, spark)
     val engine = new CrawlEngine(spark, io, config,
       new SyntheticFetcher(dupSite.pages, dupSite.robots), numPartitions = 4)
-    engine.run()
+    runCheckingFrontier(engine, io)
     val enginePages = io.stat("pages_total").get
     assert(enginePages == oracle.crawlOrder.size,
       s"engine crawled $enginePages vs oracle ${oracle.crawlOrder.size}")
@@ -138,13 +149,17 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     val mixSite = SyntheticWeb.Site((good ++ boiler).toMap,
       Map("mix.example.com" -> ""), Map.empty, "https://mix.example.com/p0.html")
     val config = CrawlConfig(rootUrl = mixSite.rootUrl, scope = ScopeFilter.Domain,
-      minUniquePct = 30.0, waveBudgetMs = 800L, maxWaves = 60)
+      minUniquePct = 30.0, waveBudgetMs = 1400L, maxWaves = 60)
     val oracle = SequentialOracle.crawl(mixSite, config)
+    // a 14-page host cap: wave 1 ends on ten boilerplate pages, so the
+    // family is excluded, and the one carried boilerplate page with it
+    assert(oracle.excludedPrefixes == Vector("https://mix.example.com/boiler/b"))
+    assert(oracle.crawlOrder.size == 23, "the carried page was not excluded")
 
     val io = new TableIO(Files.createTempDirectory("graft-excl").toString, spark)
     val engine = new CrawlEngine(spark, io, config,
       new SyntheticFetcher(mixSite.pages, mixSite.robots), numPartitions = 4)
-    engine.run()
+    runCheckingFrontier(engine, io)
 
     val expectedStop = oracle.stopReason match {
       case "frontier_empty" => None
