@@ -120,9 +120,10 @@ private final class BroadcastSyntheticFetcher(
   *    come from one partition fold — none of them generates code;
   *  - per-host state NEVER lives on the driver: crawl delays, per-domain
   *    allowances AND robots rules are all columns joined in from the
-  *    `hosts` / `host_counts` tables; the only per-host driver collect is
-  *    the wave's newly-discovered hosts (their robots must be fetched),
-  *    which is O(new hosts) and zero on late waves.
+  *    `hosts` / `host_counts` tables. Each wave's new hosts fetch their
+  *    robots on executors and are staged as the wave's `hosts` partition
+  *    before the wave reads the table, so no host name reaches the
+  *    driver at any wave width.
   */
 final class CrawlEngine(
     spark: SparkSession,
@@ -136,17 +137,6 @@ final class CrawlEngine(
 
   private val rootCanon = UrlCanonicalizer.canonicalize(config.rootUrl)
     .getOrElse(throw new IllegalArgumentException(s"bad root url: ${config.rootUrl}"))
-
-  /** Size of the last wave's driver-side per-host state (test hook) —
-    * the ONLY per-host data the driver ever touches: the wave's
-    * newly-discovered hosts, whose robots must be fetched and staged.
-    * O(new hosts), which goes to zero on late waves. Caps, allowances
-    * AND robots rules are all join columns (hosts / host_counts tables),
-    * so driver memory is O(1) with respect to wave width (candidate
-    * hosts), frontier size, and crawl age — there is no robots broadcast
-    * and no per-candidate-host driver structure at any scale.
-    */
-  private[graft] var lastWaveDelayMapSize: Int = -1
 
   /** Whether the last wave ran the partition-local Bloom filter path
     * (test hook: the seeded-seen scale tests assert the negative cache
@@ -276,63 +266,29 @@ final class CrawlEngine(
     val prevMaxSeq = stat("max_seq")
 
     // ---- 1. robots for hosts newly appearing in the frontier -------------
+    // One executor pass: the frontier's hosts that the committed `hosts`
+    // table lacks fetch their robots, and their states are staged as this
+    // wave's `hosts` partition before anything reads them. The staged
+    // parquet (invisible until the wave commits) is the one snapshot of
+    // each fetch: a recomputed partition (lost executor, speculative task)
+    // cannot give the delay and robots columns different fetches of one
+    // host. Every wave stages the partition, empty when no host is new, so
+    // a resumed attempt overwrites whatever a killed one staged. The
+    // driver holds no host name at any wave width.
     val fetcherL = fetcher
     val cfg = config
-    val hostsTbl = io.readAll("hosts", TableIO.HostsSchema)
-    // NEW hosts via distributed anti-join against the authoritative hosts
-    // table, kept as a (persisted) Dataset: zero rows on late waves; on a
-    // discovery-heavy wave (a 10^6-host seed list) the driver holds only
-    // the COUNT — never the names, never the robots corpus
-    val newHosts = frontier.select($"host").distinct()
-      .join(hostsTbl.select($"host"), Seq("host"), "left_anti")
-      .as[String].persist()
-    // take(65) decides the branch AND delivers the ≤64 names in the SAME
-    // job (the old shape ran a count job, then a second collect job on
-    // discovery waves); only the >64 case pays a full count. coalesce(1)
-    // keeps it ONE job: over several partitions, a take that finds fewer
-    // than 65 rows in the first one runs a second job for the rest — the
-    // late-wave zero case every time
-    val (newHostsTaken, newHostsCount) = timed(wave, "hosts") {
-      val taken = newHosts.coalesce(1).take(65)
-      (taken, if (taken.length <= 64) taken.length.toLong else newHosts.count())
-    }
-    // few new hosts → fetch robots on the driver (no job round-trip; the
-    // ≤64 take is the only names-to-driver path and is O(64) by
-    // construction; the common late-wave zero case runs one short-circuit
-    // job); many → fetch in partitions, stage the states to the wave's
-    // hosts partition IMMEDIATELY, and read the parquet back. persist()
-    // alone cannot guarantee once-only network fetches: a lost cached
-    // partition (executor death, speculative duplicate) would silently
-    // RE-FETCH robots mid-wave, so the delay column / robots column /
-    // staged hosts rows could come from DIFFERENT fetches of the same
-    // host. The staged parquet (invisible until the wave commits) is the
-    // immutable snapshot every downstream consumer — and a resumed
-    // attempt — reads.
-    var hostsStagedEarly = false
-    val newHostStates: Dataset[HostState] = timed(wave, "robots")(
-      if (newHostsCount == 0) {
-        spark.emptyDataset[HostState]
-      } else if (newHostsCount <= 64) {
-        newHostsTaken.toSeq.map { h =>
+    timed(wave, "robots")(io.stage("hosts", wave,
+      // hashed by host first: the distinct needs no second shuffle, and the
+      // fetch keeps numPartitions tasks
+      frontier.select($"host").repartition(numPartitions, $"host").distinct()
+        .join(io.readAll("hosts", TableIO.HostsSchema).select($"host"), Seq("host"), "left_anti")
+        .as[String].map { h =>
           val content = fetcherL.fetchRobots(h)
           val delay = CompiledRobots.of(content).crawlDelaySec(cfg.userAgent)
           HostState(h, cfg.effectiveDelayMs(delay), content, wave)
-        }.toDS()
-      } else {
-        val fetchedStates = newHosts.repartition(numPartitions)
-          .mapPartitions { hosts =>
-            hosts.map { h =>
-              val content = fetcherL.fetchRobots(h)
-              val delay = CompiledRobots.of(content).crawlDelaySec(cfg.userAgent)
-              HostState(h, cfg.effectiveDelayMs(delay), content, wave)
-            }
-          }
-        io.stage("hosts", wave, fetchedStates) // the one network-fetch job
-        hostsStagedEarly = true
-        io.readWave("hosts", wave, TableIO.HostsSchema, lookahead = 1)
-          .as[HostState].persist()
-      })
-    lastWaveDelayMapSize = newHostsCount.toInt
+        }))
+    // every host of the frontier, this wave's new ones included
+    val hostsTbl = io.readAll("hosts", TableIO.HostsSchema, lookahead = 1)
 
     // ---- 2. politeness split: per-host cap in seq order, rest carries;
     //         per-domain budget DROPS entries beyond the allowance (O3).
@@ -340,24 +296,19 @@ final class CrawlEngine(
     // against the hosts / host_counts TABLES — the budget filter runs
     // distributed and the driver holds no per-host politeness state at
     // any frontier scale (a wave touching 10^7 hosts costs it nothing).
-    val freshDelays = newHostStates.select($"host", $"crawl_delay_ms")
-    val delayCols = hostsTbl.select($"host", $"crawl_delay_ms")
-      .union(freshDelays) // fresh hosts have no table row yet, so no dupes
     val defaultDelay = config.effectiveDelayMs(0)
     val waveBudget = config.waveBudgetMs
-    val capped = frontier.join(delayCols, Seq("host"), "left")
+    val capped = frontier.join(hostsTbl.select($"host", $"crawl_delay_ms"), Seq("host"), "left")
       .withColumn("__cap", greatest(lit(1L),
         floor(lit(waveBudget) /
           greatest(lit(1L), coalesce($"crawl_delay_ms", lit(defaultDelay))))))
       .drop("crawl_delay_ms")
+    // the previous wave's cumulative per-host page counts (per-domain budget)
+    lazy val prevCounts = io.readWave("host_counts", wave - 1, TableIO.HostCountsSchema)
     val allowed =
       if (config.maxPagesPerDomain > 0) {
-        val counts =
-          if (io.waveExists("host_counts", wave - 1))
-            io.readWave("host_counts", wave - 1, TableIO.HostCountsSchema)
-          else Seq.empty[(String, Long)].toDF("host", "pages")
         val maxPerDomain = config.maxPagesPerDomain
-        capped.join(counts.select($"host", $"pages".as("__crawled")),
+        capped.join(prevCounts.select($"host", $"pages".as("__crawled")),
             Seq("host"), "left")
           .withColumn("__allow",
             greatest(lit(0L), lit(maxPerDomain) - coalesce($"__crawled", lit(0L))))
@@ -481,19 +432,17 @@ final class CrawlEngine(
     val flagged = CrawlEngine.flagFirsts(cands, prevBlooms, useBloom, nb).persist()
 
     // robots matching is a JOIN of candidates against the hosts TABLE on
-    // `host` (plus this wave's freshly-fetched states, not yet committed),
-    // with the pure matcher evaluated per row on the robots text riding
-    // the join — fully distributed. Hosts never seen before have no table
-    // row, read None → Empty → pass (their robots are fetched when they
-    // become frontier — reference semantics). Neither the driver nor any
-    // broadcast ever holds the robots corpus or even this wave's slice of
-    // it; at a 10^7-candidate-host wave this stage costs the driver
-    // nothing. RobotsCache amortizes the per-row parse to once per
-    // distinct robots body per executor thread (same-host rows are
-    // contiguous after the join shuffle, so the memo hit rate is ~100%).
-    val freshRobots = newHostStates.select($"host", $"robots_txt")
+    // `host` (this wave's staged states included), with the pure matcher
+    // evaluated per row on the robots text riding the join — fully
+    // distributed. Hosts never seen before have no table row, read None →
+    // Empty → pass (their robots are fetched when they become frontier —
+    // reference semantics). Neither the driver nor any broadcast ever
+    // holds the robots corpus or even this wave's slice of it; at a
+    // 10^7-candidate-host wave this stage costs the driver nothing.
+    // RobotsCache amortizes the per-row parse to once per distinct robots
+    // body per executor thread (same-host rows are contiguous after the
+    // join shuffle, so the memo hit rate is ~100%).
     val robotsCols = hostsTbl.select($"host", $"robots_txt")
-      .unionByName(freshRobots) // fresh hosts have no table row yet: no dupes
     val scope = config.scope
     val root = rootCanon
     val maxDepth = config.maxDepth
@@ -652,11 +601,6 @@ final class CrawlEngine(
         pagesFetched * 240L)))
     staged("stage:seen")(io.stage("seen", wave + 1,
       sized(seenAdds, pagesFetched * 1024L)))
-    if (newHostsCount > 0 && !hostsStagedEarly) {
-      // the >64 branch already staged the fetch snapshot (and is READING
-      // from that file — re-staging would overwrite its own input)
-      staged("stage:hosts")(io.stage("hosts", wave, newHostStates))
-    }
     staged("stage:metrics")(io.stage("metrics", wave, totals.metrics.toDS().coalesce(1)))
     if (config.logFetches) {
       // request log (S9): one row per fetch, mirroring the reference's
@@ -703,10 +647,6 @@ final class CrawlEngine(
       // union this wave's per-host page counts, summed — the driver never
       // holds a hosts-ever map (the one remaining crawl-age-proportional
       // driver structure, retired)
-      val prevCounts =
-        if (io.waveExists("host_counts", wave - 1))
-          io.readWave("host_counts", wave - 1, TableIO.HostCountsSchema)
-        else Seq.empty[(String, Long)].toDF("host", "pages")
       val hostCountsDf = prevCounts
         .union(results.groupBy($"host").agg(count(lit(1)).as("pages")))
         .groupBy($"host").agg(sum($"pages").as("pages"))
@@ -758,8 +698,6 @@ final class CrawlEngine(
     io.commitWave(wave, stats, stop)
 
     results.unpersist()
-    newHosts.unpersist()
-    newHostStates.unpersist() // no-op for the ≤64 local-relation branch
     prevBlooms.unpersist()
     flagged.unpersist()
     fetchedP.unpersist()

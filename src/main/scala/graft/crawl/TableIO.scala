@@ -105,10 +105,6 @@ final class TableIO(val warehouse: String, spark: SparkSession) {
   /** A long-valued stat persisted with the last commit (e.g. max_seq). */
   def stat(name: String): Option[Long] = manifest.stats.get(name)
 
-  /** String-valued manifest field: `stop_reason`, the only one. */
-  def statStr(name: String): Option[String] =
-    if (name == "stop_reason") manifest.stopReason else None
-
   private def write(m: Manifest): Unit = atomicWrite(manifestPath, Manifest.render(m))
 
   /** One atomic replace of the existing manifest by `f` of it. */

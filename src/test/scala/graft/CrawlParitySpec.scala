@@ -9,7 +9,7 @@ import java.nio.file.Files
   * reproduce the sequential oracle's crawl ordering, final URL-seen set,
   * and per-row span sequences, and must resume exactly from a checkpoint.
   */
-class CrawlParitySpec extends AnyFunSuite with SharedSpark {
+class CrawlParitySpec extends AnyFunSuite with CrawlFixture {
 
   private val site = SyntheticWeb.generate(
     SyntheticWeb.Spec(hosts = 2, pagesPerHost = 6, hotHostFactor = 2, fanout = 3))
@@ -21,25 +21,16 @@ class CrawlParitySpec extends AnyFunSuite with SharedSpark {
     bloomMinSeenRows = 0L)
   private lazy val oracle = SequentialOracle.crawl(site, config)
 
-  private def runEngine(warehouse: String, wavesPerRun: Int = Int.MaxValue): TableIO = {
-    val io = new TableIO(warehouse, spark)
-    val engine = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(site.pages, site.robots), numPartitions = 4)
-    engine.run(wavesPerRun)
-    io
-  }
+  private lazy val fullIo: TableIO = crawl(freshWarehouse("graft-parity"), site, config)
 
-  private def docsOf(io: TableIO): Vector[DocumentRow] = {
-    import spark.implicits._
-    io.readAll("documents", TableIO.DocumentsSchema).as[DocumentRow]
-      .collect().sortBy(_.seq).toVector
-  }
-  private def seenOf(io: TableIO): Set[Long] =
-    io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
-      .collect().map(_.getLong(0)).toSet
-
-  private lazy val fullIo: TableIO =
-    runEngine(Files.createTempDirectory("graft-parity").toString)
+  /** `(url, seq, wave)` of every fetched frontier entry: an entry is
+    * fetched in the LAST wave it appears in (politeness carryover
+    * restages it with wave+1 until it is due).
+    */
+  private def fetchedAt(io: TableIO): Set[(String, Long, Int)] =
+    io.readAll("frontier", TableIO.FrontierSchema, lookahead = 1)
+      .collect().map(r => (r.getString(0), r.getLong(5), r.getInt(6)))
+      .groupBy(_._1).map { case (url, rows) => (url, rows.head._2, rows.map(_._3).max) }.toSet
 
   test("final URL-seen set is identical to the oracle") {
     assert(seenOf(fullIo) == oracle.seen)
@@ -63,15 +54,7 @@ class CrawlParitySpec extends AnyFunSuite with SharedSpark {
   }
 
   test("crawl ordering matches: every page fetched at the same wave and seq") {
-    // engine side: a frontier entry is fetched in the LAST wave it appears in
-    // (politeness carryover restages it with wave+1 until it is due)
-    val frontierAll = fullIo.readAll("frontier", TableIO.FrontierSchema, lookahead = 1)
-      .collect().map(r => (r.getString(0), r.getLong(5), r.getInt(6)))
-    val fetchedWave = frontierAll.groupBy(_._1).map { case (url, rows) =>
-      (url, rows.head._2, rows.map(_._3).max)
-    }.toSet
-    val oracleOrder = oracle.crawlOrder.map(e => (e.url, e.seq, e.wave)).toSet
-    assert(fetchedWave == oracleOrder)
+    assert(fetchedAt(fullIo) == oracle.crawlOrder.map(e => (e.url, e.seq, e.wave)).toSet)
   }
 
   test("politeness: per-host per-wave cap of 1 forces carryover, parity holds") {
@@ -87,19 +70,12 @@ class CrawlParitySpec extends AnyFunSuite with SharedSpark {
     assert(byWaveHost.values.forall(_.size <= 1), "cap of 1 exceeded")
     assert(pOracle.crawlOrder.map(_.wave).max >= 4, "cap never bound")
 
-    val wh = Files.createTempDirectory("graft-polite").toString
-    val io = new TableIO(wh, spark)
-    new CrawlEngine(spark, io, pConfig,
-      new SyntheticFetcher(pSite.pages, pSite.robots), numPartitions = 4).run()
+    val io = crawl(freshWarehouse("graft-polite"), pSite, pConfig)
     // engine fetched each entry at the oracle's wave (carryover included)
-    val frontierAll = io.readAll("frontier", TableIO.FrontierSchema, lookahead = 1)
-      .collect().map(r => (r.getString(0), r.getLong(5), r.getInt(6)))
-    val fetchedWave = frontierAll.groupBy(_._1).map { case (url, rows) =>
-      (url, rows.head._2, rows.map(_._3).max)
-    }.toSet
-    assert(fetchedWave == pOracle.crawlOrder.map(e => (e.url, e.seq, e.wave)).toSet)
+    assert(fetchedAt(io) == pOracle.crawlOrder.map(e => (e.url, e.seq, e.wave)).toSet)
     // carryover really happened: some entry appears in >1 frontier wave
-    val carried = frontierAll.groupBy(_._1).count(_._2.length > 1)
+    val carried = io.readAll("frontier", TableIO.FrontierSchema, lookahead = 1)
+      .collect().groupBy(_.getString(0)).count(_._2.length > 1)
     assert(carried > 0, "no frontier entry was ever carried over")
   }
 
@@ -110,9 +86,9 @@ class CrawlParitySpec extends AnyFunSuite with SharedSpark {
   }
 
   test("killed run resumes exactly: stop after 2 waves, resume, identical tables") {
-    val wh = Files.createTempDirectory("graft-resume").toString
-    runEngine(wh, wavesPerRun = 2) // "killed" after 2 committed waves
-    val io2 = runEngine(wh) // fresh engine instance resumes from manifest
+    val wh = freshWarehouse("graft-resume")
+    crawl(wh, site, config, waves = 2) // "killed" after 2 committed waves
+    val io2 = crawl(wh, site, config) // fresh engine instance resumes from manifest
     assert(docsOf(io2) == docsOf(fullIo))
     assert(seenOf(io2) == seenOf(fullIo))
     val m1 = io2.readAll("metrics", TableIO.MetricsSchema).agg(
@@ -125,49 +101,47 @@ class CrawlParitySpec extends AnyFunSuite with SharedSpark {
     // at 3 partitions must rebuild them from `seen` (bloom_buckets stat
     // mismatch), or candidates are zipped with the wrong bucket's filter and
     // already-seen URLs get re-crawled
-    val wh = Files.createTempDirectory("graft-resume-parts").toString
-    runEngine(wh, wavesPerRun = 2) // blooms committed with bloom_buckets=4
-    val io = new TableIO(wh, spark)
+    val wh = freshWarehouse("graft-resume-parts")
+    val io = crawl(wh, site, config, waves = 2) // blooms committed with bloom_buckets=4
     assert(io.stat("bloom_buckets").contains(4L), "bucket count persisted")
-    new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(site.pages, site.robots), numPartitions = 3).run()
+    crawl(wh, site, config, numPartitions = 3)
     assert(docsOf(io) == docsOf(fullIo))
     assert(seenOf(io) == seenOf(fullIo))
   }
 
+  /** `(host, discovered_wave)` of every committed `hosts` row. */
+  private def hostRows(io: TableIO): Seq[(String, Int)] =
+    io.readAll("hosts", TableIO.HostsSchema).collect()
+      .map(r => (r.getString(0), r.getInt(3))).toSeq
+
+  /** Each host's robots were fetched once: one `hosts` row per host. */
+  private def assertOneRowPerHost(rows: Seq[(String, Int)]): Unit = {
+    val twice = rows.groupBy(_._1).collect { case (h, rs) if rs.size > 1 => h }
+    assert(twice.isEmpty, s"hosts with more than one row: $twice")
+  }
+
   test("driver per-host state is O(new hosts): no robots broadcast, no candidate-host collect") {
     // many hosts, narrow tree links: late waves only touch a few hosts.
-    // Since round 6, robots rules are a JOIN column (candidates ⋈ hosts
-    // table) and the seen-added total is a scalar agg, so the ONLY
-    // per-host driver structure left is the newly-discovered-host robots
-    // fetch list — which must sum to exactly one fetch per host ever and
-    // hit zero on late waves.
+    // Robots rules are a JOIN column (candidates ⋈ hosts table) and the
+    // seen-added total is a scalar agg; a wave's new hosts fetch their
+    // robots on executors into the `hosts` table — one row per host ever,
+    // and none discovered by the last wave.
     val sSite = SyntheticWeb.generate(SyntheticWeb.Spec(
       hosts = 6, pagesPerHost = 5, hotHostFactor = 1, fanout = 2,
       treeLinks = true, sharedDomain = true))
     val sConfig = CrawlConfig(rootUrl = sSite.rootUrl,
       scope = ScopeFilter.Domain, waveBudgetMs = 600000L, maxWaves = 40)
     val sOracle = SequentialOracle.crawl(sSite, sConfig)
-    val wh = Files.createTempDirectory("graft-robots-scope").toString
-    val io = new TableIO(wh, spark)
-    val engine = new CrawlEngine(spark, io, sConfig,
-      new SyntheticFetcher(sSite.pages, sSite.robots), numPartitions = 4)
-    val delaySizes = scala.collection.mutable.Buffer.empty[Int]
-    var hadWork = true
-    var wave = 0
-    while (hadWork && wave < 40) {
-      hadWork = engine.run(maxWavesThisRun = 1) > 0
-      if (hadWork) delaySizes += engine.lastWaveDelayMapSize
-      wave += 1
-    }
-    val totalHosts = sSite.pages.values.map(_.host).toSet.size
-    assert(totalHosts >= 6)
-    assert(delaySizes.forall(_ <= totalHosts))
-    assert(delaySizes.last == 0,
-      s"final wave fetched ${delaySizes.last} robots — driver per-host " +
-        "state must be empty once all hosts are known")
-    assert(delaySizes.sum <= totalHosts,
-      s"robots fetched ${delaySizes.sum} times for $totalHosts hosts")
+    val io = crawl(freshWarehouse("graft-robots-scope"), sSite, sConfig)
+    val hosts = hostRows(io)
+    assert(sSite.pages.values.map(_.host).toSet.size >= 6)
+    assertOneRowPerHost(hosts)
+    // every host that reached the frontier, and no other, has a row
+    assert(hosts.map(_._1).toSet == io.readAll("frontier", TableIO.FrontierSchema,
+      lookahead = 1).collect().map(_.getString(2)).toSet)
+    val lastWave = io.committedWave
+    assert(!hosts.exists(_._2 == lastWave),
+      s"final wave $lastWave discovered hosts: once all hosts are known it must fetch no robots")
     // parity is unaffected: robots STILL filter candidates identically
     // (the site generator plants disallow rules — seen-set equality below
     // fails if the joined matcher diverges from the oracle's)
@@ -182,8 +156,8 @@ class CrawlParitySpec extends AnyFunSuite with SharedSpark {
     // robots map for every candidate host before the wave could filter
     // links (2000 driver entries here; 10^7 at a real frontier). The join
     // design collects nothing at candidate scale — wave 0 discovers ONE
-    // host (the root's), so the driver per-host list is exactly 1 even
-    // though 2000 candidate hosts flow through the robots filter.
+    // host (the root's) even though 2000 candidate hosts flow through the
+    // robots filter; wave 1 discovers the 2000 on executors.
     val n = 2000
     val hostOf = (i: Int) => s"h$i.wide.example.com"
     val leafUrl = (i: Int) => s"https://${hostOf(i)}/p"
@@ -203,23 +177,23 @@ class CrawlParitySpec extends AnyFunSuite with SharedSpark {
     val wideConfig = CrawlConfig(rootUrl = rootUrl, scope = ScopeFilter.Domain,
       waveBudgetMs = 600000L, maxWaves = 4, maxLinksPerPage = n + 1)
     val wOracle = SequentialOracle.crawl(wideSite, wideConfig)
-    val wh = Files.createTempDirectory("graft-wide-hosts").toString
-    val io = new TableIO(wh, spark)
-    val engine = new CrawlEngine(spark, io, wideConfig,
-      new SyntheticFetcher(wideSite.pages, wideSite.robots), numPartitions = 4)
-    engine.run(maxWavesThisRun = 1) // wave 0: root fetch, n candidate hosts
-    assert(engine.lastWaveDelayMapSize == 1,
-      s"wave 0 must collect only the root host, got ${engine.lastWaveDelayMapSize}")
-    engine.run() // finish; wave 1 discovers the n leaf hosts (robots fetch)
-    assert(engine.lastWaveDelayMapSize <= n)
+    val wh = freshWarehouse("graft-wide-hosts")
+    val io = crawl(wh, wideSite, wideConfig, waves = 1) // wave 0: root fetch, n candidate hosts
+    assert(hostRows(io) == Seq(("wide.example.com", 0)),
+      s"wave 0 must discover only the root host, got ${hostRows(io).size}")
+    crawl(wh, wideSite, wideConfig) // finish; wave 1 discovers the n leaf hosts
+    val hosts = hostRows(io)
+    assertOneRowPerHost(hosts)
+    assert(hosts.count(_._2 == 1) == n)
+    assert(hosts.size == n + 1)
     assert(seenOf(io) == wOracle.seen)
     assert(io.readAll("documents", TableIO.DocumentsSchema).count() ==
       wOracle.documents.size)
   }
 
   test("stale staged hosts from a killed attempt are overwritten on resume (>64-host wave)") {
-    // the >64-new-hosts branch stages the robots-fetch snapshot to the
-    // wave's hosts partition BEFORE consuming it; a kill after that write
+    // every wave stages the robots-fetch snapshot to the wave's hosts
+    // partition BEFORE consuming it; a kill after that write
     // but before the wave commit leaves a stale (possibly different —
     // robots can change between attempts) staged file that the resumed
     // attempt must overwrite, never read alongside its own fetch
@@ -258,9 +232,8 @@ class CrawlParitySpec extends AnyFunSuite with SharedSpark {
   }
 
   test("legacy warehouse resume: frontier staged without retry/redirect columns") {
-    val wh = Files.createTempDirectory("graft-resume-legacy").toString
-    runEngine(wh, wavesPerRun = 2)
-    val io = new TableIO(wh, spark)
+    val wh = freshWarehouse("graft-resume-legacy")
+    val io = crawl(wh, site, config, waves = 2)
     // rewrite the staged next-wave frontier with the PRE-retry 7-column
     // schema (what a round-1 warehouse holds on disk)
     val nextWave = io.committedWave + 1
@@ -273,7 +246,7 @@ class CrawlParitySpec extends AnyFunSuite with SharedSpark {
       "depth int, seq bigint, wave int")
     spark.createDataFrame(spark.sparkContext.parallelize(legacyRows), legacySchema)
       .write.mode("overwrite").parquet(dir)
-    val io2 = runEngine(wh) // must fill defaults, not throw on null fields
+    val io2 = crawl(wh, site, config) // must fill defaults, not throw on null fields
     assert(docsOf(io2) == docsOf(fullIo))
     assert(seenOf(io2) == seenOf(fullIo))
   }
@@ -302,11 +275,7 @@ class CrawlParitySpec extends AnyFunSuite with SharedSpark {
     val site = SyntheticWeb.Site(pages, Map.empty, Map.empty, u("index.html"))
     val cfg = CrawlConfig(rootUrl = site.rootUrl, scope = ScopeFilter.Domain,
       waveBudgetMs = 3000L, maxWaves = 10)
-    val wh = Files.createTempDirectory("graft-css-parity").toString
-    val io = new TableIO(wh, spark)
-    new CrawlEngine(spark, io, cfg,
-      new SyntheticFetcher(site.pages, site.robots), numPartitions = 4).run()
-    val engineDocs = docsOf(io)
+    val engineDocs = docsOf(crawl(freshWarehouse("graft-css-parity"), site, cfg))
     val o = SequentialOracle.crawl(site, cfg)
     assert(engineDocs.map(d => (d.doc_id, d.spans)) ==
       o.documents.map(d => (d.doc_id, d.spans)))
@@ -330,14 +299,12 @@ class CrawlParitySpec extends AnyFunSuite with SharedSpark {
     import org.apache.spark.sql.functions.col
     val pre = 250000L
     val sConfig = config.copy(bloomMinSeenRows = 200000L)
-    val wh = Files.createTempDirectory("graft-seeded-seen").toString
-    val io = new TableIO(wh, spark)
+    val io = new TableIO(freshWarehouse("graft-seeded-seen"), spark)
     CrawlEngine.seedWarehouse(spark, io, sConfig,
       extraSeen = spark.range(pre)
         .select((col("id") + (1L << 40)).as("url_hash")),
       nowMs = 1L)
-    val engine = new CrawlEngine(spark, io, sConfig,
-      new SyntheticFetcher(site.pages, site.robots), numPartitions = 4)
+    val engine = engineOn(io, site, sConfig)
     engine.run()
     assert(engine.lastWaveBloomEngaged, "bloom path must engage past the threshold")
     // result parity with the unseeded oracle: junk hashes change nothing
@@ -363,10 +330,7 @@ class CrawlParitySpec extends AnyFunSuite with SharedSpark {
     val sConfig = CrawlConfig(rootUrl = sSite.rootUrl,
       scope = ScopeFilter.Domain, waveBudgetMs = 1000L, maxWaves = 60)
     val sOracle = SequentialOracle.crawl(sSite, sConfig)
-    val wh = Files.createTempDirectory("graft-skew").toString
-    val io = new TableIO(wh, spark)
-    new CrawlEngine(spark, io, sConfig,
-      new SyntheticFetcher(sSite.pages, sSite.robots), numPartitions = 4).run()
+    val io = crawl(freshWarehouse("graft-skew"), sSite, sConfig)
     val log = io.readAll("fetch_log", TableIO.FetchLogSchema)
     val cap = sConfig.maxPagesPerHostPerWave(0)
     assert(cap == 10)

@@ -12,15 +12,17 @@ import java.nio.file.{Files, Paths}
   * bucket transition, the no-false-negative contract, and the atomicity of
   * the maintenance commit.
   */
-class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
+class SeenMaintenanceSpec extends AnyFunSuite with CrawlFixture {
   import SeenMaintenanceSpec._
 
-  private val site = SyntheticWeb.generate(
-    SyntheticWeb.Spec(hosts = 1, pagesPerHost = 12, hotHostFactor = 1, fanout = 3))
   // zero crawl-delay so maintenance tests don't pay politeness sleeps; the
   // politeness machinery itself is covered by the parity/stop suites
-  private val robots = site.robots.map { case (h, r) =>
-    h -> r.replaceAll("Crawl-delay: \\d+", "Crawl-delay: 0")
+  private val site = {
+    val s = SyntheticWeb.generate(
+      SyntheticWeb.Spec(hosts = 1, pagesPerHost = 12, hotHostFactor = 1, fanout = 3))
+    s.copy(robots = s.robots.map { case (h, r) =>
+      h -> r.replaceAll("Crawl-delay: \\d+", "Crawl-delay: 0")
+    })
   }
   // bloom engage threshold 0 so the filter-bucket machinery is always real
   private val config = CrawlConfig(rootUrl = site.rootUrl,
@@ -31,17 +33,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
   private def hashOf(u: String): Long =
     UrlCanonicalizer.urlHash(UrlCanonicalizer.canonicalize(u).get)
 
-  private def crawl(warehouse: String,
-      pages: Map[String, SyntheticPage] = site.pages): TableIO = {
-    val io = new TableIO(warehouse, spark)
-    new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(pages, robots), numPartitions = 4).run()
-    io
-  }
-
-  private def seenOf(io: TableIO): Set[Long] =
-    io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
-      .collect().map(_.getLong(0)).toSet
+  private def crawl(warehouse: String): TableIO = crawl(warehouse, site, config)
 
   private def bucketsOf(io: TableIO): Map[Int, FilterBucket] = {
     import spark.implicits._
@@ -99,7 +91,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
 
   test("forget+reseed re-fetches exactly the forgotten urls; changed content" +
       " yields new document rows; seen set is preserved") {
-    val wh = Files.createTempDirectory("graft-forget-reseed").toString
+    val wh = freshWarehouse("graft-forget-reseed")
     val io = crawl(wh)
     val c0 = io.committedWave
     val seen0 = seenOf(io)
@@ -120,7 +112,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
           s"<p>freshly updated content for $u</p></body>"))
       else u -> p
     }
-    val io2 = crawl(wh, mutated)
+    val io2 = crawl(wh, site.copy(pages = mutated), config)
 
     // exactly the 3 targets were re-fetched, nothing else
     val refetched = io2.readAll("fetch_log", TableIO.FetchLogSchema)
@@ -141,7 +133,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
 
   test("forget+reseed of unchanged content re-fetches but adds no documents" +
       " (F10 unique-text gate)") {
-    val wh = Files.createTempDirectory("graft-forget-same").toString
+    val wh = freshWarehouse("graft-forget-same")
     val io = crawl(wh)
     val c0 = io.committedWave
     val docs0 = io.readAll("documents", TableIO.DocumentsSchema).count()
@@ -155,7 +147,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
 
   test("two reseed forgets in a row: a re-forgotten pending row is replaced," +
       " and max_seq / next_frontier count each staged row once") {
-    val wh = Files.createTempDirectory("graft-forget-twice").toString
+    val wh = freshWarehouse("graft-forget-twice")
     val io = crawl(wh)
     val c0 = io.committedWave
     val maxSeq0 = io.stat("max_seq").get
@@ -191,7 +183,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
   test("retraction transitions affected buckets to cuckoo, removes the" +
       " hashes, keeps the no-false-negative contract, and makes the urls" +
       " re-discoverable") {
-    val wh = Files.createTempDirectory("graft-forget-retract").toString
+    val wh = freshWarehouse("graft-forget-retract")
     val io = crawl(wh)
     val seen0 = seenOf(io)
     val nb = io.stat("bloom_buckets").get.toInt
@@ -261,7 +253,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
 
   test("a later pure retraction cancels a pending recrawl request for the" +
       " same url") {
-    val wh = Files.createTempDirectory("graft-forget-cancel").toString
+    val wh = freshWarehouse("graft-forget-cancel")
     val io = crawl(wh)
     val c0 = io.committedWave
     val target = url(8)
@@ -281,11 +273,8 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("targets still pending their first fetch are skipped, not retracted") {
-    val wh = Files.createTempDirectory("graft-forget-pending").toString
-    val io = new TableIO(wh, spark)
-    val engine = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(site.pages, robots), numPartitions = 4)
-    engine.run(2) // stop mid-crawl: wave 2's frontier is staged, unfetched
+    val wh = freshWarehouse("graft-forget-pending")
+    val io = crawl(wh, site, config, waves = 2) // stop mid-crawl: wave 2's frontier is staged, unfetched
     val c0 = io.committedWave
     val pending = io.readWave("frontier", c0 + 1, TableIO.FrontierSchema,
       lookahead = 1).select("url").collect().map(_.getString(0))
@@ -306,7 +295,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
   // ---- documents removal ---------------------------------------------------
 
   test("dropDocuments rewrites the documents table without the targets") {
-    val wh = Files.createTempDirectory("graft-forget-docs").toString
+    val wh = freshWarehouse("graft-forget-docs")
     val io = crawl(wh)
     val docs0 = io.readAll("documents", TableIO.DocumentsSchema)
       .select("doc_id").collect().map(_.getString(0)).toSet
@@ -324,7 +313,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
 
   test("a saturated bucket is healed from the seen table on the next wave") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("graft-heal").toString
+    val wh = freshWarehouse("graft-heal")
     val io = crawl(wh)
     val c0 = io.committedWave
     val nb = io.stat("bloom_buckets").get.toInt
@@ -353,7 +342,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
 
   test("compactTable folds per-wave partitions into one and the crawl" +
       " resumes on the compacted snapshot") {
-    val wh = Files.createTempDirectory("graft-compact").toString
+    val wh = freshWarehouse("graft-compact")
     val io = crawl(wh)
     val seen0 = seenOf(io)
     val blocks0 = io.readAll("unique_blocks", TableIO.UniqueBlocksSchema)
@@ -392,18 +381,12 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
 
   test("auto-compaction (compactEveryWaves) changes nothing observable and" +
       " bounds the partition-directory count") {
-    val whPlain = Files.createTempDirectory("graft-autocompact-base").toString
-    val whAuto = Files.createTempDirectory("graft-autocompact").toString
+    val whPlain = freshWarehouse("graft-autocompact-base")
+    val whAuto = freshWarehouse("graft-autocompact")
     val ioPlain = crawl(whPlain)
-    val ioAuto = new TableIO(whAuto, spark)
-    new CrawlEngine(spark, ioAuto, config.copy(compactEveryWaves = 2),
-      new SyntheticFetcher(site.pages, robots), numPartitions = 4).run()
+    val ioAuto = crawl(whAuto, site, config.copy(compactEveryWaves = 2))
     assert(ioAuto.committedWave == ioPlain.committedWave)
     assert(seenOf(ioAuto) == seenOf(ioPlain))
-    val docsOf = (io: TableIO) =>
-      io.readAll("documents", TableIO.DocumentsSchema)
-        .select("doc_id", "seq", "wave").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
     assert(docsOf(ioAuto) == docsOf(ioPlain))
     assertNoFalseNegatives(ioAuto)
     // compaction bounded the per-table partition count: at most the waves
@@ -426,7 +409,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
 
   test("a staged generation is invisible until the atomic manifest flip") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("graft-genflip").toString
+    val wh = freshWarehouse("graft-genflip")
     val io = new TableIO(wh, spark)
     io.stage("seen", 0, Seq(1L, 2L, 3L).toDF("url_hash"))
     io.commitWave(0)
@@ -482,7 +465,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
   test("manifest: render/parse round-trips, a commit carries exactly gen_*" +
       " and reseed_wave, a merge keeps every other key, and the parent's" +
       " formats parse to the same values (property, 200 cases)") {
-    val wh = Files.createTempDirectory("graft-manifest").toString
+    val wh = freshWarehouse("graft-manifest")
     val io = new TableIO(wh, spark)
     assert(io.manifest == Manifest.Fresh && io.committedWave == -2)
     val caseGen = for {
@@ -519,7 +502,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
         io.manifest == model && Manifest.parse(Manifest.render(model)) == model &&
           io.committedWave == model.committedWave &&
           model.stats.forall { case (k, v) => io.stat(k).contains(v) } &&
-          io.statStr("stop_reason") == model.stopReason &&
+          io.manifest.stopReason == model.stopReason &&
           (!plain || Manifest.parse(legacy) == model)
       }
     }
@@ -554,10 +537,9 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
 
   test("an engine instance run across a retraction commits seen_total ==" +
       " count(seen)") {
-    val wh = Files.createTempDirectory("graft-forget-live").toString
+    val wh = freshWarehouse("graft-forget-live")
     val io = new TableIO(wh, spark)
-    val engine = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(site.pages, robots), numPartitions = 4)
+    val engine = engineOn(io, site, config)
     assert(engine.run(2) == 2)
     val fetched = io.readAll("fetch_log", TableIO.FetchLogSchema)
       .select("url").collect().map(_.getString(0)).toSeq
@@ -571,14 +553,13 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
       " engine instance, as for a fresh one") {
     val stopAt = config.copy(maxErrors = 1)
     val broken = site.pages - url(1) - url(2) // 404s
-    def engineOn(io: TableIO) = new CrawlEngine(spark, io, stopAt,
-      new SyntheticFetcher(broken, robots), numPartitions = 4)
+    def engineOf(io: TableIO) = engineOn(io, site.copy(pages = broken), stopAt)
     def refetched(io: TableIO, after: Int) = io.readAll("fetch_log", TableIO.FetchLogSchema)
       .filter(s"wave > $after").select("url").collect().map(_.getString(0)).toSet
     val Seq((ioSame, same), (ioFresh, _)) = Seq("graft-reopen-same", "graft-reopen-fresh")
       .map { prefix =>
-        val io = new TableIO(Files.createTempDirectory(prefix).toString, spark)
-        val engine = engineOn(io)
+        val io = new TableIO(freshWarehouse(prefix), spark)
+        val engine = engineOf(io)
         engine.run()
         assert(engine.stopReason.contains("max_errors"))
         (io, engine)
@@ -589,7 +570,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with SharedSpark {
       io.warehouse, Seq(site.rootUrl), reseed = true).reseeded == 1)
     assert(same.stopReason.isEmpty)
     assert(same.run() > 0)
-    assert(engineOn(ioFresh).run() > 0)
+    assert(engineOf(ioFresh).run() > 0)
     assert(refetched(ioSame, c0).contains(site.rootUrl))
     assert(refetched(ioSame, c0) == refetched(ioFresh, c0))
     assert(ioSame.manifest == ioFresh.manifest.copy(stats = ioFresh.manifest.stats +

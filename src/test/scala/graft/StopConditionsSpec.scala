@@ -3,22 +3,20 @@ package graft
 import graft.core.ScopeFilter
 import graft.crawl._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Stop-condition cascade + crawl caps (WebsiteTextExtractor.cs:638-767,
   * CrawlDecisionMaker.cs:56-71): engine must stop at the same point, with
   * the same reason and the same crawled set, as the sequential oracle.
   */
-class StopConditionsSpec extends AnyFunSuite with SharedSpark {
+class StopConditionsSpec extends AnyFunSuite with CrawlFixture {
 
   private val site = SyntheticWeb.generate(
     SyntheticWeb.Spec(hosts = 2, pagesPerHost = 8, hotHostFactor = 2, fanout = 3))
 
   private def runBoth(config: CrawlConfig): (SequentialOracle.Result, TableIO, CrawlEngine) = {
     val oracle = SequentialOracle.crawl(site, config)
-    val io = new TableIO(Files.createTempDirectory("graft-stop").toString, spark)
-    val engine = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(site.pages, site.robots), numPartitions = 4)
+    val io = new TableIO(freshWarehouse("graft-stop"), spark)
+    val engine = engineOn(io, site, config)
     engine.run()
     (oracle, io, engine)
   }
@@ -34,12 +32,9 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
       assert(io.stat("next_frontier").contains(staged), s"after wave $cw")
     }
 
-  private def crawledSet(io: TableIO): Set[(String, Long, Int)] =
-    io.readAll("frontier", TableIO.FrontierSchema, lookahead = 1)
-      .collect().map(r => (r.getString(0), r.getLong(5), r.getInt(6)))
-      .groupBy(_._1).map { case (url, rows) =>
-        (url, rows.head._2, rows.map(_._3).max)
-      }.toSet
+  /** `(doc_id, seq)` of every document. */
+  private def docSeqs(docs: Seq[DocumentRow]): Set[(String, Long)] =
+    docs.map(d => (d.doc_id, d.seq)).toSet
 
   test("maxPagesToCrawl: engine stops at the cap with the oracle's exact pages") {
     val config = CrawlConfig(rootUrl = site.rootUrl, scope = ScopeFilter.Domain,
@@ -52,13 +47,8 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     assert(pages.contains(7L), s"engine crawled $pages")
     assert(io.readAll("metrics", TableIO.MetricsSchema)
       .agg(org.apache.spark.sql.functions.sum("pages")).head().getLong(0) == 7L)
-    // exactly the same pages at the same seq/wave
-    val oracleOrder = oracle.crawlOrder.map(e => (e.url, e.seq, e.wave)).toSet
-    // crawledSet includes never-fetched frontier leftovers; compare via metrics
-    val engineDocs = io.readAll("documents", TableIO.DocumentsSchema)
-      .collect().map(r => (r.getString(0), r.getLong(7))).toSet
-    val oracleDocs = oracle.documents.map(d => (d.doc_id, d.seq)).toSet
-    assert(engineDocs == oracleDocs)
+    // exactly the same pages at the same seq
+    assert(docSeqs(docsOf(io)) == docSeqs(oracle.documents))
   }
 
   test("maxErrors: dead links trip the error budget identically") {
@@ -67,9 +57,7 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     val (oracle, io, engine) = runBoth(config)
     assert(oracle.stopReason == "max_errors", s"oracle stopped: ${oracle.stopReason}")
     assert(engine.stopReason.contains("max_errors"))
-    val engineDocs = io.readAll("documents", TableIO.DocumentsSchema)
-      .collect().map(r => (r.getString(0), r.getLong(7))).toSet
-    assert(engineDocs == oracle.documents.map(d => (d.doc_id, d.seq)).toSet)
+    assert(docSeqs(docsOf(io)) == docSeqs(oracle.documents))
   }
 
   test("maxPagesPerDomain: per-host budget respected, parity holds") {
@@ -79,11 +67,7 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     val byHost = oracle.crawlOrder.groupBy(_.host).view.mapValues(_.size)
     assert(byHost.values.forall(_ <= 4), s"oracle exceeded domain cap: $byHost")
     assert(byHost.values.exists(_ == 4), "cap never bound — fixture too small")
-    val engineByHost = io.readAll("documents", TableIO.DocumentsSchema)
-      .collect().map(_.getString(0)).groupBy(u => graft.core.UrlCanonicalizer.host(u))
-    val engineDocs = io.readAll("documents", TableIO.DocumentsSchema)
-      .collect().map(r => (r.getString(0), r.getLong(7))).toSet
-    assert(engineDocs == oracle.documents.map(d => (d.doc_id, d.seq)).toSet)
+    assert(docSeqs(docsOf(io)) == docSeqs(oracle.documents))
   }
 
   test("minUniqueText: boilerplate-only site triggers auto-exclude then stop, in parity") {
@@ -110,9 +94,8 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     assert(oracle.crawlOrder.size < 30, "oracle crawled everything")
     assert(oracle.excludedPrefixes.nonEmpty, "auto-exclude never fired")
 
-    val io = new TableIO(Files.createTempDirectory("graft-uniq").toString, spark)
-    val engine = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(dupSite.pages, dupSite.robots), numPartitions = 4)
+    val io = new TableIO(freshWarehouse("graft-uniq"), spark)
+    val engine = engineOn(io, dupSite, config)
     runCheckingFrontier(engine, io)
     val enginePages = io.stat("pages_total").get
     assert(enginePages == oracle.crawlOrder.size,
@@ -122,9 +105,7 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     assert(engineExcl == oracle.excludedPrefixes,
       s"engine=$engineExcl oracle=${oracle.excludedPrefixes}")
     // halted crawl stays halted across resume (empty frontier)
-    val engine2 = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(dupSite.pages, dupSite.robots), numPartitions = 4)
-    assert(engine2.run() == 0)
+    assert(engineOn(io, dupSite, config).run() == 0)
   }
 
   test("auto-exclude: a low-uniqueness URL-prefix family is excluded, crawl continues") {
@@ -156,9 +137,8 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     assert(oracle.excludedPrefixes == Vector("https://mix.example.com/boiler/b"))
     assert(oracle.crawlOrder.size == 23, "the carried page was not excluded")
 
-    val io = new TableIO(Files.createTempDirectory("graft-excl").toString, spark)
-    val engine = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(mixSite.pages, mixSite.robots), numPartitions = 4)
+    val io = new TableIO(freshWarehouse("graft-excl"), spark)
+    val engine = engineOn(io, mixSite, config)
     runCheckingFrontier(engine, io)
 
     val expectedStop = oracle.stopReason match {
@@ -171,9 +151,7 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
       .collect().map(_.getString(0)).toVector
     assert(engineExcludes == oracle.excludedPrefixes,
       s"engine=$engineExcludes oracle=${oracle.excludedPrefixes}")
-    val engineDocs = io.readAll("documents", TableIO.DocumentsSchema)
-      .collect().map(r => (r.getString(0), r.getLong(7))).toSet
-    assert(engineDocs == oracle.documents.map(d => (d.doc_id, d.seq)).toSet)
+    assert(docSeqs(docsOf(io)) == docSeqs(oracle.documents))
   }
 
   test("maxContentChars: size-on-disk stop fires at the same point as the oracle") {
@@ -194,15 +172,12 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     val clock = () => { t += 600000L; t }
     val config = CrawlConfig(rootUrl = site.rootUrl, scope = ScopeFilter.Domain,
       maxDurationMin = 5, maxWaves = 40)
-    val io = new TableIO(Files.createTempDirectory("graft-dur").toString, spark)
-    val engine = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(site.pages, site.robots), numPartitions = 4, nowMs = clock)
+    val io = new TableIO(freshWarehouse("graft-dur"), spark)
+    val engine = engineOn(io, site, config, nowMs = clock)
     engine.run()
     assert(engine.stopReason.contains("max_duration"))
     // a stopped crawl stays stopped on resume
-    val engine2 = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(site.pages, site.robots), numPartitions = 4, nowMs = clock)
-    assert(engine2.run() == 0)
+    assert(engineOn(io, site, config, nowMs = clock).run() == 0)
   }
 
   test("redirect chains beyond maxRedirects are rejected, in parity") {
@@ -229,11 +204,8 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     val oc = SequentialOracle.crawl(chainSite, capped)
     assert(!oc.documents.exists(_.doc_id.endsWith(s"r$chainLen.html")))
     assert(oc.crawlOrder.size < chainLen + 2, s"chain not cut: ${oc.crawlOrder.size}")
-    val ioc = new TableIO(Files.createTempDirectory("graft-chain").toString, spark)
-    new CrawlEngine(spark, ioc, capped,
-      new SyntheticFetcher(chainSite.pages, chainSite.robots), numPartitions = 4).run()
-    assert(ioc.readAll("seen", TableIO.SeenSchema, lookahead = 1)
-      .collect().map(_.getLong(0)).toSet == oc.seen)
+    val ioc = crawl(freshWarehouse("graft-chain"), chainSite, capped)
+    assert(seenOf(ioc) == oc.seen)
     assert(ioc.stat("pages_total").contains(oc.crawlOrder.size.toLong))
 
     // default cap 7 < chain 9: still cut; a generous cap 20 reaches the end
@@ -241,12 +213,8 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
       scope = ScopeFilter.Domain, maxRedirects = 20, maxWaves = 40)
     val oo = SequentialOracle.crawl(chainSite, open)
     assert(oo.documents.exists(_.doc_id.endsWith(s"r$chainLen.html")))
-    val ioo = new TableIO(Files.createTempDirectory("graft-chain2").toString, spark)
-    new CrawlEngine(spark, ioo, open,
-      new SyntheticFetcher(chainSite.pages, chainSite.robots), numPartitions = 4).run()
-    val docs = ioo.readAll("documents", TableIO.DocumentsSchema)
-      .collect().map(r => (r.getString(0), r.getLong(7))).toSet
-    assert(docs == oo.documents.map(d => (d.doc_id, d.seq)).toSet)
+    val ioo = crawl(freshWarehouse("graft-chain2"), chainSite, open)
+    assert(docSeqs(docsOf(ioo)) == docSeqs(oo.documents))
   }
 
   test("bot-protection wall (X-DataDome analog) aborts the crawl") {
@@ -254,7 +222,7 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     val walled = new WalledFetcher(site.pages, site.robots, site.rootUrl)
     val config = CrawlConfig(rootUrl = site.rootUrl, scope = ScopeFilter.Domain,
       maxWaves = 40)
-    val io = new TableIO(Files.createTempDirectory("graft-wall").toString, spark)
+    val io = new TableIO(freshWarehouse("graft-wall"), spark)
     val engine = new CrawlEngine(spark, io, config, walled, numPartitions = 4)
     engine.run()
     assert(engine.stopReason.contains("bot_protection"))
@@ -293,15 +261,9 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     assert(oracle.documents.exists(_.doc_id.endsWith("/deep.html")))
     assert(oracle.errors.count(_.startsWith("503")) == 2)
 
-    val io = new TableIO(Files.createTempDirectory("graft-retry").toString, spark)
-    val engine = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(site.pages, site.robots), numPartitions = 4)
-    engine.run()
-    val engineDocs = io.readAll("documents", TableIO.DocumentsSchema)
-      .collect().map(r => (r.getString(0), r.getLong(7))).toSet
-    assert(engineDocs == oracle.documents.map(d => (d.doc_id, d.seq)).toSet)
-    assert(io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
-      .collect().map(_.getLong(0)).toSet == oracle.seen)
+    val io = crawl(freshWarehouse("graft-retry"), site, config)
+    assert(docSeqs(docsOf(io)) == docSeqs(oracle.documents))
+    assert(seenOf(io) == oracle.seen)
     // every attempt logged: flaky url appears 3 times in the fetch log
     val flakyFetches = io.readAll("fetch_log", TableIO.FetchLogSchema)
       .filter(org.apache.spark.sql.functions.col("url").endsWith("/flaky.html"))
@@ -318,13 +280,8 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     assert(!oracle.documents.exists(_.doc_id.endsWith("/flaky.html")))
     assert(!oracle.documents.exists(_.doc_id.endsWith("/deep.html")))
 
-    val io = new TableIO(Files.createTempDirectory("graft-retry1").toString, spark)
-    val engine = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(site.pages, site.robots), numPartitions = 4)
-    engine.run()
-    val engineDocs = io.readAll("documents", TableIO.DocumentsSchema)
-      .collect().map(r => (r.getString(0), r.getLong(7))).toSet
-    assert(engineDocs == oracle.documents.map(d => (d.doc_id, d.seq)).toSet)
+    val io = crawl(freshWarehouse("graft-retry1"), site, config)
+    assert(docSeqs(docsOf(io)) == docSeqs(oracle.documents))
     assert(io.stat("errors_total").contains(oracle.errors.size.toLong))
   }
 
@@ -378,21 +335,15 @@ class StopConditionsSpec extends AnyFunSuite with SharedSpark {
     assert(pdfDoc.title == "Sink")
     assert(!pdfDoc.spans.exists(_.text.contains("Repeating Header")), "pdf decoration")
 
-    val io = new TableIO(Files.createTempDirectory("graft-sink").toString, spark)
-    val engine = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(site.pages, site.robots), numPartitions = 4)
-    engine.run()
-    import spark.implicits._
-    val engineDocs = io.readAll("documents", TableIO.DocumentsSchema)
-      .as[DocumentRow].collect().sortBy(_.seq)
+    val io = crawl(freshWarehouse("graft-sink"), site, config)
+    val engineDocs = docsOf(io)
     val oracleDocs = oracle.documents.sortBy(_.seq)
     assert(engineDocs.length == oracleDocs.length)
     engineDocs.zip(oracleDocs).foreach { case (e, o) =>
       assert(e.doc_id == o.doc_id && e.seq == o.seq && e.spans == o.spans,
         s"mismatch at ${o.doc_id}")
     }
-    assert(io.readAll("seen", TableIO.SeenSchema, lookahead = 1)
-      .collect().map(_.getLong(0)).toSet == oracle.seen)
+    assert(seenOf(io) == oracle.seen)
     assert(io.stat("pages_total").contains(oracle.crawlOrder.size.toLong))
     assert(io.stat("errors_total").contains(oracle.errors.size.toLong))
   }
