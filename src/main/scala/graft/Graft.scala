@@ -119,7 +119,7 @@ object Graft {
     SeenMaintenance.forgetUrls(spark, warehouse, urls, reseed = false,
       dropDocuments = dropDocuments)
 
-  /** Fold a grow-only set table (`seen`, `unique_blocks`) into one
+  /** Fold a grow-only table (`seen`, `unique_blocks`, `hosts`) into one
     * partition — run periodically on long crawls (a W-wave crawl pays
     * O(W) file listings per read until compacted). Atomic; safe between
     * runs.

@@ -179,9 +179,9 @@ final class CrawlEngine(
     while (continue) {
       val hadWork = runWave(wave)
       if (hadWork) processed += 1
-      // periodic set-table compaction (compactEveryWaves > 0): a W-wave
-      // crawl otherwise accumulates W partition directories per grow-only
-      // table — O(W) listings per read. Runs strictly AFTER the wave
+      // periodic compaction (compactEveryWaves > 0) of the grow-only
+      // tables: a W-wave crawl otherwise accumulates W partition
+      // directories in each — O(W) listings per read. Runs strictly AFTER the wave
       // committed, through the same atomic generation flip as manual
       // maintenance; a kill inside it leaves the committed snapshot intact.
       if (hadWork && config.compactEveryWaves > 0 &&
@@ -189,6 +189,7 @@ final class CrawlEngine(
         timed(wave, "compact") {
           SeenMaintenance.compactWith(spark, io, "seen")
           SeenMaintenance.compactWith(spark, io, "unique_blocks")
+          SeenMaintenance.compactWith(spark, io, "hosts")
         }
       }
       wave += 1

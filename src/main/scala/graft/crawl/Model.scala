@@ -303,13 +303,14 @@ final case class CrawlConfig(
     // the partition-local filters pay for themselves. The broadcast-vs-
     // shuffle-join selection analog. 0 = always engage (parity tests).
     bloomMinSeenRows: Long = 200000L,
-    // fold the grow-only set tables (seen, unique_blocks) into one
+    // fold the grow-only tables (seen, unique_blocks, hosts) into one
     // partition every N committed waves (0 = off): a W-wave crawl
     // otherwise pays O(W) partition listings per read — long crawls want
     // this on (SeenMaintenance.compactWith, atomic generation flip)
     compactEveryWaves: Int = 0,
     // request-log table (S9 analog of the reference's 13-column request log,
-    // WebsiteTextExtractor.cs:415-474); off in benchmarks
+    // WebsiteTextExtractor.cs:415-474); graft.Bench turns it off in its
+    // throughput legs, perfbench's seen_churn keeps it on
     logFetches: Boolean = true,
     // bench-only knob: fixed busy-work per extracted page, standing in for
     // the parse cost of realistically-sized pages (synthetic fixtures are

@@ -105,12 +105,13 @@ object SeenMaintenance {
     forget(spark, io, targets, reseed, dropDocuments)
   }
 
-  /** Fold a grow-only set table's per-wave partitions into ONE wave-0
-    * partition behind the atomic generation flip — `seen` and
-    * `unique_blocks` grow a partition directory per wave, so a crawl of W
+  /** Fold a grow-only table's per-wave partitions into ONE wave-0
+    * partition behind the atomic generation flip — `seen`, `unique_blocks`
+    * and `hosts` grow a partition directory per wave, so a crawl of W
     * waves pays O(W) driver `exists()` calls on every `readAll` and O(W)
     * parquet footers per scan; a 10^4-wave crawl wants this periodically.
-    * Lossless for set-semantics tables (their rows carry no wave column).
+    * Lossless for the engine, which reads these tables whole, never wave
+    * by wave (`hosts` rows keep their discovery wave as a column).
     * Returns the row count of the compacted snapshot.
     */
   def compactTable(spark: SparkSession, warehouse: String,
@@ -129,17 +130,20 @@ object SeenMaintenance {
     */
   private[graft] def compactWith(spark: SparkSession, io: TableIO,
       name: String): (StructType, Long) = {
-    require(name == "seen" || name == "unique_blocks",
-      s"compactTable supports the grow-only set tables, not '$name'")
-    require(io.committedWave >= -1, "compact needs a bootstrapped warehouse")
-    val schema = if (name == "seen") TableIO.SeenSchema
-                 else TableIO.UniqueBlocksSchema
     // lookahead mirrors each table's staging contract: seen is staged one
-    // wave AHEAD (visible at committedWave+1); unique_blocks is staged at
-    // the current wave, so a lookahead read could promote a killed
-    // attempt's uncommitted staged partition into the committed snapshot
-    val all = io.readAll(name, schema,
-      lookahead = if (name == "seen") 1 else 0)
+    // wave AHEAD (visible at committedWave+1); unique_blocks and hosts are
+    // staged at the current wave, so a lookahead read could promote a
+    // killed attempt's uncommitted staged partition into the committed
+    // snapshot
+    val (schema, lookahead) = name match {
+      case "seen" => (TableIO.SeenSchema, 1)
+      case "unique_blocks" => (TableIO.UniqueBlocksSchema, 0)
+      case "hosts" => (TableIO.HostsSchema, 0)
+      case other => throw new IllegalArgumentException(
+        s"compactTable supports seen, unique_blocks and hosts, not '$other'")
+    }
+    require(io.committedWave >= -1, "compact needs a bootstrapped warehouse")
+    val all = io.readAll(name, schema, lookahead)
     val (genKey, genVal) = io.stageGeneration(name, atWave = 0, all)
     io.mergeStats(Map(genKey -> genVal))
     io.dropOldGenerations(name)

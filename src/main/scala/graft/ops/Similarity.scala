@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,9 +16,11 @@ import org.apache.spark.sql.functions._
   *    equi-join on a small bucket id, so it hash-partitions evenly and never
   *    materializes the quadratic pair space;
   *  - quantized top-k (IVF, PQ, IVFPQ): one quantizer core — one k-means
-  *    trainer (`pqTrain`), one encoder of residuals to coarse cells, one
-  *    cell-filtered ADC scan with partition-local heaps — where PQ is the
-  *    core with a single zero cell.
+  *    trainer (`pqTrain`), one encoder of residuals to coarse cells — and
+  *    one query shape (`probeJoin`): queries probe their cells on
+  *    executors and equi-join the corpus's cell table, then IVF scores the
+  *    joined rows by exact cosine and PQ/IVFPQ by ADC over the codes. PQ is
+  *    the core with a single zero cell. No query row reaches the driver.
   *
   * Every top-k entry point ends in the same tail: `row_number` over
   * (score desc, neighbor_id asc), then rank ≤ k. Column math is
@@ -364,12 +367,10 @@ object Similarity {
     * set: at 100 TB of float32 embeddings the code table is the only thing
     * the top-k scan reads.
     */
-  private def encode(base: Dataset[(Long, Seq[Float])], centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]]): DataFrame = {
+  private def encode(base: Dataset[(Long, Seq[Float])], centBc: Broadcast[Array[Array[Double]]],
+      bookBc: Broadcast[Array[Array[Array[Double]]]]): DataFrame = {
     val spark = base.sparkSession
     import spark.implicits._
-    val centBc = spark.sparkContext.broadcast(centroids)
-    val bookBc = spark.sparkContext.broadcast(codebooks)
     base.mapPartitions { rows =>
       val cents = centBc.value
       val books = bookBc.value
@@ -389,15 +390,32 @@ object Similarity {
     * encoder with no coarse cells, as (id, code, norm).
     */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
-      codebooks: Array[Array[Array[Double]]]): DataFrame =
-    encode(vectors(corpus, idCol, vecCol), NoCells, codebooks).drop("cell")
+      codebooks: Array[Array[Array[Double]]]): DataFrame = {
+    val sc = corpus.sparkSession.sparkContext
+    encode(vectors(corpus, idCol, vecCol), sc.broadcast(NoCells), sc.broadcast(codebooks))
+      .drop("cell")
+  }
 
-  /** One query's ADC state: the m×ksub inner-product table against the
-    * codebooks, its norm and its probed cells with their dot(q, centroid)
-    * offsets.
+  /** The one ANN candidate shape: on executors, each query probes its
+    * `nprobe` nearest cells (only the centroids are broadcast) and emits one
+    * (cell, query_id, qvec) row per probed cell; those rows equi-join the
+    * corpus's cell table `corpusCells` (cell, neighbor_id, …) on `cell`, self
+    * matches dropped. No query row reaches the driver, and the join is
+    * hash-partitioned by Spark, never a cross join with the corpus.
     */
-  private final case class AdcQuery(id: Long, lut: Array[Double], norm: Double,
-      probed: Seq[(Int, Double)])
+  private def probeJoin(corpusCells: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, cents: Broadcast[Array[Array[Double]]], nprobe: Int): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val np = math.min(nprobe, cents.value.length)
+    val queryCells = vectors(queries, idCol, vecCol).mapPartitions { rows =>
+      val cs = cents.value
+      rows.flatMap { case (id, vec) =>
+        probe(toDoubles(vec), cs, np).map(cell => (cell, id, vec))
+      }
+    }.toDF("cell", "query_id", "qvec")
+    corpusCells.join(queryCells, "cell").filter(col("query_id") =!= col("neighbor_id"))
+  }
 
   /** IVF / PQ / IVFPQ top-k on one core (Jégou et al. 2011 §IV, the FAISS
     * IVFPQ shape):
@@ -406,16 +424,18 @@ object Similarity {
     *     centroid) — residuals concentrate near 0 so the same codebook
     *     budget quantizes much finer than raw-vector PQ;
     *  2. the code table (`encode`);
-    *  3. driver-side query prep (bounded query sets by contract): residual
-    *     LUT, the `nprobe` nearest cells and their dot(q, centroid);
-    *  4. scan: only codes in probed cells reach the ADC loop (the `isin`
-    *     filter also pushes down to storage when the code table is
-    *     persisted bucketed by cell), scored as (dot(q, centroid) +
-    *     Σ lut[code]) / (‖q‖·‖x‖) with the TRUE vector norm — cosine
-    *     ranking from m byte lookups — into partition-local bounded heaps,
-    *     so the shuffle is O(partitions · Q · rerank);
-    *  5. the global top-rerank candidates exact-rerank against their true
-    *     vectors.
+    *  3. `probeJoin`: codes in each query's probed cells;
+    *  4. ADC scoring in one pass over the joined rows, (dot(q, centroid) +
+    *     Σ lut[code]) / (‖q‖·‖x‖) with the TRUE vector norm — cosine ranking
+    *     from m byte lookups. Each partition builds a query's m×ksub LUT, ‖q‖
+    *     and per-cell centroid dots once, on its first row of that query.
+    *     The rows carry the query vector (dim floats), not the LUT (m·ksub
+    *     doubles): the typed pass decodes every field of every row;
+    *  5. `topK` to `rerank` candidates per query: Spark plans it as a
+    *     partial `WindowGroupLimit` before the shuffle (for rerank ≤
+    *     `spark.sql.optimizer.windowGroupLimitThreshold`, 1000), so the
+    *     shuffle is O(partitions · Q · rerank);
+    *  6. the candidates exact-rerank against their true vectors.
     */
   private def adcTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, centroids: Array[Array[Double]],
@@ -432,65 +452,43 @@ object Similarity {
         (id, arr.map(_.toFloat).toSeq)
       }
     }.toDF("id", "vec")
-    val books = pqTrain(residuals, "id", "vec", m, ksub, iterations)
-    val codes = encode(base, centroids, books)
-    val kk = books(0).length
-    val dsub = books(0)(0).length
-    val np = math.min(nprobe, centroids.length)
-    val prep = vectors(queries, idCol, vecCol).collect().map { case (qid, qv) =>
-      val q = toDoubles(qv)
-      val lut = Array.tabulate(m * kk)(i =>
-        dotAt(q, i / kk * dsub, books(i / kk)(i % kk), dsub))
-      val probed = probe(q, centroids, np).map(c =>
-        (c, dotAt(q, 0, centroids(c), math.min(q.length, centroids(c).length))))
-      AdcQuery(qid, lut, math.sqrt(dotAt(q, 0, q, q.length)), probed)
-    }
-    val qBc = spark.sparkContext.broadcast(prep)
-    val r = math.max(k, rerank)
-    val cand = codes
-      .filter(col("cell").isin(prep.flatMap(_.probed.map(_._1)).distinct.toSeq: _*))
-      .as[(Int, Long, Array[Byte], Double)]
+    val bookBc = spark.sparkContext.broadcast(
+      pqTrain(residuals, "id", "vec", m, ksub, iterations))
+    val codes = encode(base, centBc, bookBc).withColumnRenamed("id", "neighbor_id")
+    val cand = probeJoin(codes, queries, idCol, vecCol, centBc, nprobe)
+      .select("query_id", "qvec", "cell", "neighbor_id", "code", "norm")
+      .as[(Long, Array[Float], Int, Long, Array[Byte], Double)]
       .mapPartitions { rows =>
-        val qs = qBc.value
-        // cell → (query index, dot(q, centroid)): only probing queries pay
-        // ADC for a code row
-        val byCell = qs.indices
-          .flatMap(qi => qs(qi).probed.map { case (c, cd) => (c, (qi, cd)) })
-          .groupMap(_._1)(_._2).withDefaultValue(Nil)
-        val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-          Ordering.by[(Double, Long), Double](-_._1))) // min-heap on score
-        rows.foreach { case (cell, id, code, nrm) =>
-          byCell(cell).foreach { case (qi, cellDot) =>
-            val q = qs(qi)
-            if (q.id != id) {
-              var adc = cellDot
-              var sub = 0
-              while (sub < code.length) {
-                adc += q.lut(sub * kk + (code(sub) & 0xff))
-                sub += 1
-              }
-              val score = adc / math.max(q.norm * nrm, 1e-12)
-              val h = heaps(qi)
-              if (h.size < r) h.enqueue((score, id))
-              else if (score > h.head._1) { h.dequeue(); h.enqueue((score, id)) }
-            }
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.iterator.map { case (score, id) => (qs(qi).id, id, score) }
+        val cents = centBc.value
+        val books = bookBc.value
+        val kk = books(0).length
+        val dsub = books(0)(0).length
+        val memo = scala.collection.mutable.HashMap
+          .empty[Long, (Array[Double], Double, Array[Double])]
+        rows.map { case (qid, qv, cell, id, code, nrm) =>
+          val (lut, qNorm, cellDots) = memo.getOrElseUpdate(qid, {
+            val q = qv.map(_.toDouble)
+            (Array.tabulate(books.length * kk)(i =>
+                dotAt(q, i / kk * dsub, books(i / kk)(i % kk), dsub)),
+              math.sqrt(dotAt(q, 0, q, q.length)),
+              cents.map(c => dotAt(q, 0, c, math.min(q.length, c.length))))
+          })
+          var adc = cellDots(cell)
+          var sub = 0
+          while (sub < code.length) { adc += lut(sub * kk + (code(sub) & 0xff)); sub += 1 }
+          (qid, id, adc / math.max(qNorm * nrm, 1e-12))
         }
       }.toDF("query_id", "neighbor_id", "adc_cos")
-    val topCand = topK(cand, "adc_cos", r).drop("rank", "adc_cos")
+    val topCand = topK(cand, "adc_cos", math.max(k, rerank)).drop("rank", "adc_cos")
     val truth = corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("nvec"))
     val qDf = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qvec"))
-    cosineTopK(topCand.join(truth, "neighbor_id").join(broadcast(qDf), "query_id"), k)
+    cosineTopK(topCand.join(truth, "neighbor_id").join(qDf, "query_id"), k)
   }
 
   /** IVF ANN top-k: corpus vectors are bucketed by nearest centroid cell;
     * each query probes its `nprobe` nearest cells and exact-reranks only
-    * those cells' vectors. Candidate generation is an equi-join on the
-    * cell id — never a cross join with the corpus — so it hash-partitions
-    * evenly; recall is the standard nprobe/nlist trade.
+    * those cells' vectors (`probeJoin`); recall is the standard
+    * nprobe/nlist trade.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
@@ -502,15 +500,7 @@ object Similarity {
       val cents = bc.value
       rows.map { case (id, vec) => (nearestCell(toDoubles(vec), cents), id, vec) }
     }.toDF("cell", "neighbor_id", "nvec")
-    val np = math.min(nprobe, nlist)
-    val queryCells = vectors(queries, idCol, vecCol).mapPartitions { rows =>
-      val cents = bc.value
-      rows.flatMap { case (id, vec) =>
-        probe(toDoubles(vec), cents, np).map(cell => (cell, id, vec))
-      }
-    }.toDF("cell", "query_id", "qvec")
-    cosineTopK(corpusCells.join(queryCells, "cell")
-      .filter(col("query_id") =!= col("neighbor_id")), k)
+    cosineTopK(probeJoin(corpusCells, queries, idCol, vecCol, bc, nprobe), k)
   }
 
   /** PQ ANN top-k with ADC: the quantizer core with one zero cell. Per

@@ -87,19 +87,6 @@ object CrawlMonitor {
       error_rate: Double,
       flagged: Boolean)
 
-  /** Per-host error-rate gate with EXPLICIT stream state: cumulative
-    * (pages, errors) per host held in `GroupState` across micro-batches —
-    * a host is flagged once it has `minPages` observations and its
-    * crawl-lifetime error rate exceeds `maxErrorRate` (the streaming
-    * analog of F4's retroactive auto-exclude, which batches decide per
-    * wave). Emits the updated health row for every host seen in the
-    * batch; run with outputMode("update").
-    *
-    * State is O(distinct hosts) — the same bound the batch engine's hosts
-    * table carries; entries never expire because host health is
-    * crawl-lifetime by definition (a crawl that needs expiry can wrap the
-    * call with a watermark + timeout variant).
-    */
   /** Exactly-once committed-wave micro-batching over one warehouse table —
     * the manifest-aware monitor tier. The crawl's atomic wave commits
     * already define a totally-ordered micro-batch sequence (the committed-
@@ -178,6 +165,19 @@ object CrawlMonitor {
     }
   }
 
+  /** Per-host error-rate gate with EXPLICIT stream state: cumulative
+    * (pages, errors) per host held in `GroupState` across micro-batches —
+    * a host is flagged once it has `minPages` observations and its
+    * crawl-lifetime error rate exceeds `maxErrorRate` (the streaming
+    * analog of F4's retroactive auto-exclude, which batches decide per
+    * wave). Emits the updated health row for every host seen in the
+    * batch; run with outputMode("update").
+    *
+    * State is O(distinct hosts) — the same bound the batch engine's hosts
+    * table carries; entries never expire because host health is
+    * crawl-lifetime by definition (a crawl that needs expiry can wrap the
+    * call with a watermark + timeout variant).
+    */
   def hostHealth(fetchLog: DataFrame, minPages: Long = 10L,
       maxErrorRate: Double = 0.5): Dataset[HostHealth] = {
     val spark = fetchLog.sparkSession

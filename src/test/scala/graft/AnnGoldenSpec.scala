@@ -36,28 +36,33 @@ class AnnGoldenSpec extends AnyFunSuite with SharedSpark {
     sha(buf.array())
   }
 
+  /** Every `SparkEntry` ANN configuration, plus the tighter rerank
+    * budgets, over the query rows `q`.
+    */
+  private def configs(q: DataFrame): Map[String, () => DataFrame] = Map(
+    "q_ivf_topk" -> (() => Similarity.ivfTopK(emb, q, "vec_id", "embedding",
+      k = 5, nlist = 8, nprobe = 8)),
+    "ivf_np4" -> (() => Similarity.ivfTopK(emb, q, "vec_id", "embedding",
+      k = 5, nlist = 8, nprobe = 4)),
+    "q_pq_topk" -> (() => Similarity.pqTopK(emb, q, "vec_id", "embedding",
+      k = 5, m = 8, ksub = 16, rerank = 128)),
+    "q_pq_exact" -> (() => Similarity.pqTopK(emb, q, "vec_id", "embedding",
+      k = 5, m = 8, ksub = 16, rerank = Int.MaxValue)),
+    "pq_rerank5" -> (() => Similarity.pqTopK(emb, q, "vec_id", "embedding",
+      k = 5, m = 8, ksub = 16, rerank = 5)),
+    "q_ivfpq_topk" -> (() => Similarity.ivfPqTopK(emb, q, "vec_id", "embedding",
+      k = 5, nlist = 8, nprobe = 4, m = 8, ksub = 16, iterations = 2, rerank = 128)),
+    "q_ivfpq_exact" -> (() => Similarity.ivfPqTopK(emb, q, "vec_id", "embedding",
+      k = 5, nlist = 8, nprobe = 8, m = 8, ksub = 16, iterations = 2,
+      rerank = Int.MaxValue)),
+    "ivfpq_rerank5" -> (() => Similarity.ivfPqTopK(emb, q, "vec_id", "embedding",
+      k = 5, nlist = 8, nprobe = 4, m = 8, ksub = 16, rerank = 5)))
+
+  // the three exact configurations equal brute force, hence one digest
+  private val brute = "1e8ff12a2a3f3406"
+
   test("ANN rows of the SparkEntry configurations are unchanged") {
-    val cases = Seq(
-      "q_ivf_topk" -> (() => Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
-        k = 5, nlist = 8, nprobe = 8)),
-      "ivf_np4" -> (() => Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
-        k = 5, nlist = 8, nprobe = 4)),
-      "q_pq_topk" -> (() => Similarity.pqTopK(emb, queries, "vec_id", "embedding",
-        k = 5, m = 8, ksub = 16, rerank = 128)),
-      "q_pq_exact" -> (() => Similarity.pqTopK(emb, queries, "vec_id", "embedding",
-        k = 5, m = 8, ksub = 16, rerank = Int.MaxValue)),
-      "pq_rerank5" -> (() => Similarity.pqTopK(emb, queries, "vec_id", "embedding",
-        k = 5, m = 8, ksub = 16, rerank = 5)),
-      "q_ivfpq_topk" -> (() => Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding",
-        k = 5, nlist = 8, nprobe = 4, m = 8, ksub = 16, iterations = 2, rerank = 128)),
-      "q_ivfpq_exact" -> (() => Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding",
-        k = 5, nlist = 8, nprobe = 8, m = 8, ksub = 16, iterations = 2,
-        rerank = Int.MaxValue)),
-      "ivfpq_rerank5" -> (() => Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding",
-        k = 5, nlist = 8, nprobe = 4, m = 8, ksub = 16, rerank = 5)))
-    val got = cases.map { case (name, run) => name -> rowsDigest(run()) }.toMap
-    // the three exact configurations equal brute force, hence one digest
-    val brute = "1e8ff12a2a3f3406"
+    val got = configs(queries).map { case (name, run) => name -> rowsDigest(run()) }
     assert(got == Map(
       "q_ivf_topk" -> brute,
       "ivf_np4" -> "9362858cfd4a186a",
@@ -69,6 +74,28 @@ class AnnGoldenSpec extends AnyFunSuite with SharedSpark {
       "ivfpq_rerank5" -> "a40817e86b4dd28c"))
     assert(rowsDigest(
       Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 5)) == brute)
+  }
+
+  test("the exact PQ and IVFPQ configurations need no broadcast join") {
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      Seq("q_pq_exact", "q_ivfpq_exact").foreach { name =>
+        assert(rowsDigest(configs(queries)(name)()) == brute, name)
+      }
+    }
+  }
+
+  test("building an ANN query runs no job over its query rows") {
+    import spark.implicits._
+    val served = spark.sparkContext.longAccumulator("ann-query-rows")
+    val counted = queries.select("vec_id", "embedding").as[(Long, Seq[Float])]
+      .map { r => served.add(1); r }.toDF("vec_id", "embedding")
+    configs(counted).foreach { case (name, build) =>
+      served.reset()
+      val df = build()
+      assert(served.value == 0, s"$name read its query rows before the action")
+      df.collect()
+      assert(served.value > 0, s"$name never read its query rows")
+    }
   }
 
   test("trained centroids and codebooks keep their bit patterns") {

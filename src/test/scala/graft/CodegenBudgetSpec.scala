@@ -5,7 +5,6 @@ import graft.crawl._
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** A crawl wave's generated code fits Spark's codegen cache: under the
   * default `spark.sql.codegen.cache.maxEntries` (100), a steady Bloom-engaged
@@ -22,7 +21,7 @@ import java.nio.file.Files
   * 153, 152, 151): about 160 cache entries per wave, so the LRU evicted each
   * class before the next wave reused it.
   */
-class CodegenBudgetSpec extends AnyFunSuite with SharedSpark {
+class CodegenBudgetSpec extends AnyFunSuite with CrawlFixture {
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
@@ -33,13 +32,11 @@ class CodegenBudgetSpec extends AnyFunSuite with SharedSpark {
     // 100 ms minimum delay, 1 s budget: 10 pages per host per wave
     val config = CrawlConfig(rootUrl = site.rootUrl, scope = ScopeFilter.Domain,
       waveBudgetMs = 1000L, maxWaves = 40, bloomMinSeenRows = 5000L)
-    val wh = Files.createTempDirectory("graft-codegen").toString
-    val io = new TableIO(wh, spark)
+    val io = new TableIO(freshWarehouse("graft-codegen"), spark)
     CrawlEngine.seedWarehouse(spark, io, config,
       extraSeen = spark.range(10000L).select((col("id") + (1L << 40)).as("url_hash")),
       nowMs = 1L)
-    val engine = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(site.pages, site.robots), numPartitions = 4)
+    val engine = engineOn(io, site, config)
     val perWave = Iterator.continually {
       val c0 = compiles
       val ran = engine.run(1)

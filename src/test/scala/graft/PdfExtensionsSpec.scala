@@ -5,7 +5,7 @@ import graft.extract.PdfFixture
 import graft.extract.PdfFixture.Block
 import org.scalatest.funsuite.AnyFunSuite
 
-class PdfExtensionsSpec extends AnyFunSuite with SharedSpark {
+class PdfExtensionsSpec extends AnyFunSuite with CrawlFixture {
 
   test("PDF: lines group into blocks, /Title read, non-PDF rejected") {
     val pdf = PdfFixture.pdf(Seq(Seq(
@@ -496,10 +496,8 @@ class PdfExtensionsSpec extends AnyFunSuite with SharedSpark {
     val oracle = SequentialOracle.crawl(site, config)
     assert(oracle.documents.exists(d => d.doc_id.endsWith(".pdf") && d.title == "Annual Report"))
 
-    val io = new TableIO(java.nio.file.Files.createTempDirectory("graft-pdf").toString, spark)
-    val engine = new CrawlEngine(spark, io, config,
-      new SyntheticFetcher(site.pages, site.robots), numPartitions = 2)
-    engine.run()
+    val io = new TableIO(freshWarehouse("graft-pdf"), spark)
+    engineOn(io, site, config, numPartitions = 2).run()
     import org.apache.spark.sql.functions.col
     val engineDocs = io.readAll("documents", TableIO.DocumentsSchema)
       .collect().map(r => (r.getString(0), r.getLong(7))).toSet

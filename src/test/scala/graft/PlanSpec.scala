@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, In, InSet, Literal}
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -70,6 +74,35 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
       // the self-join on the blocking key must be an equi-join
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
         p.contains("BroadcastHashJoin"), s"$q has no equi-join:\n$p")
+    }
+  }
+
+  test("PQ/IVFPQ candidates: a partial WindowGroupLimit feeds their shuffle; no cell literals") {
+    Seq("q_pq_topk", "q_ivfpq_topk").foreach { q =>
+      val all = PlanNodes.nodes(SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan)
+      def below(p: SparkPlan): SparkPlan = p match {
+        case w: WholeStageCodegenExec => below(w.child)
+        case i: InputAdapter => below(i.child)
+        case other => other
+      }
+      // the per-partition top-rerank cut runs before the candidates shuffle,
+      // so the shuffle carries O(partitions · queries · rerank) rows
+      assert(all.exists {
+        case e: ShuffleExchangeExec => below(e.child) match {
+          case w: WindowGroupLimitExec => w.mode == Partial
+          case _ => false
+        }
+        case _ => false
+      }, s"$q: no partial WindowGroupLimit below an Exchange:\n${all.head.treeString}")
+      // probed cells come from the cell join, not a driver-built literal
+      // list; the optimizer renames the cell column (`_1`) and turns a
+      // one-cell list into `= literal`, so no such filter may appear at all
+      val literalLists = all.flatMap(_.expressions).flatMap(_.collect {
+        case i: In => i
+        case i: InSet => i
+        case e @ EqualTo(_, _: Literal) => e
+      })
+      assert(literalLists.isEmpty, s"$q filters by a literal list: $literalLists")
     }
   }
 

@@ -388,6 +388,11 @@ class SeenMaintenanceSpec extends AnyFunSuite with CrawlFixture {
     assert(ioAuto.committedWave == ioPlain.committedWave)
     assert(seenOf(ioAuto) == seenOf(ioPlain))
     assert(docsOf(ioAuto) == docsOf(ioPlain))
+    def hostsOf(io: TableIO): Set[HostState] = {
+      import spark.implicits._
+      io.readAll("hosts", TableIO.HostsSchema).as[HostState].collect().toSet
+    }
+    assert(hostsOf(ioAuto) == hostsOf(ioPlain))
     assertNoFalseNegatives(ioAuto)
     // compaction bounded the per-table partition count: at most the waves
     // since the last compact (+1 lookahead for seen)
@@ -397,6 +402,7 @@ class SeenMaintenanceSpec extends AnyFunSuite with CrawlFixture {
         .flatMap(_.listFiles()).count(_.getName.startsWith("w"))
     assert(waveDirs(whAuto, "seen") <= 4)
     assert(waveDirs(whAuto, "seen") < waveDirs(whPlain, "seen"))
+    assert(waveDirs(whAuto, "hosts") < waveDirs(whPlain, "hosts"))
     // config round-trips (legacy config.json without the field still parses)
     assert(CrawlConfigCodec.fromJson(CrawlConfigCodec.toJson(
       config.copy(compactEveryWaves = 2))).compactEveryWaves == 2)

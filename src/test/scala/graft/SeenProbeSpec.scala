@@ -3,36 +3,20 @@ package graft
 import graft.core.{ScopeFilter, UrlCanonicalizer}
 import graft.crawl._
 import org.apache.spark.rdd.RDD
+import graft.PlanNodes.{kids, nodes}
 import org.apache.spark.sql.execution.{BinaryExecNode, FileSourceScanExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalacheck.{Gen, Prop, Test => Check}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 /** The probe-side exact seen check ([[SeenSet.probe]]): on both of its
   * branches it answers present and absent exactly like the plain joins,
   * and no crawl wave or forget ever broadcasts the seen table.
   */
-class SeenProbeSpec extends AnyFunSuite with SharedSpark {
-
-  private val ThresholdKey = "spark.sql.autoBroadcastJoinThreshold"
-
-  /** Every node of an executed plan, through adaptive stages, reused
-    * exchanges, cached relations and subqueries.
-    */
-  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-    case q: QueryStageExec => Seq(q.plan)
-    case r: ReusedExchangeExec => Seq(r.child)
-    case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
-    case other => other.children ++ other.subqueries
-  }
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+class SeenProbeSpec extends AnyFunSuite with CrawlFixture {
 
   private def isSeenScan(p: SparkPlan): Boolean = p match {
     case s: FileSourceScanExec => s.relation.location.rootPaths.exists { path =>
@@ -50,16 +34,6 @@ class SeenProbeSpec extends AnyFunSuite with SharedSpark {
     case _: BinaryExecNode => false
     case s if isSeenScan(s) => true
     case other => kids(other).exists(carriesSeenRows)
-  }
-
-  private def withThreshold[T](bytes: Long)(f: => T): T = {
-    val prev = spark.conf.getOption(ThresholdKey)
-    spark.conf.set(ThresholdKey, bytes.toString)
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(ThresholdKey, v)
-      case None => spark.conf.unset(ThresholdKey)
-    }
   }
 
   /** The RDDs `r` is computed from, itself included. */
@@ -98,7 +72,7 @@ class SeenProbeSpec extends AnyFunSuite with SharedSpark {
       // keys × 8 B exactly at the threshold: broadcast; one byte under it:
       // the sort-merge fallback
       Seq(n * 8 -> true, n * 8 - 1 -> false).forall { case (threshold, bc) =>
-        withThreshold(threshold) {
+        withConf("spark.sql.autoBroadcastJoinThreshold", threshold.toString) {
           plans.clear()
           val answer = SeenSet.probe(spark, spark.sparkContext.parallelize(candList, 2),
             seen, "url_hash", n)(_._1, _ => true)
@@ -130,7 +104,7 @@ class SeenProbeSpec extends AnyFunSuite with SharedSpark {
       SyntheticWeb.Spec(hosts = 2, pagesPerHost = 8, hotHostFactor = 1, fanout = 3))
     val config = CrawlConfig(rootUrl = site.rootUrl, scope = ScopeFilter.Domain,
       waveBudgetMs = 3000L, maxWaves = 40, bloomMinSeenRows = 50000L)
-    val wh = Files.createTempDirectory("graft-probe-plans").toString
+    val wh = freshWarehouse("graft-probe-plans")
     val io = new TableIO(wh, spark)
     // 10^5 junk hashes, far from any real url hash: seen's parquet is well
     // under the broadcast threshold, the shape that used to broadcast it
@@ -147,8 +121,7 @@ class SeenProbeSpec extends AnyFunSuite with SharedSpark {
     }
     spark.listenerManager.register(listener)
     try {
-      val engine = new CrawlEngine(spark, io, config,
-        new SyntheticFetcher(site.pages, site.robots), numPartitions = 4)
+      val engine = engineOn(io, site, config)
       assert(engine.run(1) == 1)
       assert(engine.lastWaveBloomEngaged, "the wave must take the Bloom path")
       val root = UrlCanonicalizer.canonicalize(site.rootUrl).get

@@ -9,7 +9,7 @@ import java.nio.file.Files
   * micro-batches; per-host health accumulates in explicit GroupState
   * across them.
   */
-class StreamingMonitorSpec extends AnyFunSuite with SharedSpark {
+class StreamingMonitorSpec extends AnyFunSuite with CrawlFixture {
 
   import spark.implicits._
 
@@ -92,11 +92,10 @@ class StreamingMonitorSpec extends AnyFunSuite with SharedSpark {
     import graft.core.ScopeFilter
     val site = SyntheticWeb.generate(
       SyntheticWeb.Spec(hosts = 2, pagesPerHost = 6, hotHostFactor = 1, fanout = 3))
-    val wh = Files.createTempDirectory("graft-tailer").toString
+    val wh = freshWarehouse("graft-tailer")
     val ck = Files.createTempDirectory("graft-tailer-ck").toString
     val config = CrawlConfig(rootUrl = site.rootUrl, scope = ScopeFilter.Domain)
-    def engine() = new CrawlEngine(spark, new TableIO(wh, spark), config,
-      new SyntheticFetcher(site.pages, site.robots), numPartitions = 2)
+    def engine() = engineOn(new TableIO(wh, spark), site, config, numPartitions = 2)
     engine().run(maxWavesThisRun = 2)
     val io = new TableIO(wh, spark)
     val committed = io.committedWave
