@@ -134,6 +134,9 @@ object Dev {
     "q_anti_join",       // left_anti on url-hash
     "q_topk_per_group",  // window + filter, single shuffle
     "q_minhash_lsh",     // band-bucket equi-join, no cartesian
+    "q_jaccard_pairs",   // the capped set-similarity join over shingle hashes
+    "q_winnow_pairs",    // the same join over winnowed fingerprints
+    "q_dedup_clusters",  // contraction + stitch rounds over exact cosine pairs
     "q_dedup_exact",     // fingerprint window
     "q_cosine_topk",     // broadcast queries x corpus, rank window
     "q_ivf_topk",        // cell equi-join probe + rerank

@@ -1,5 +1,7 @@
 package graft.core
 
+import java.util.Locale
+
 /** Deterministic, dependency-free language identification.
   *
   * The reference uses fastText lid.176.ftz with a 0.6 probability floor
@@ -32,9 +34,10 @@ object LangId {
 
   /** Normalized out-of-place distance above which the best candidate is
     * rejected as "?" — the deterministic analog of fastText's P > 0.6
-    * floor. Calibrated on the held-out fixtures in LangIdSpec: real
-    * sentences in the trained languages score 0.45–0.75 (short ones at
-    * the high end), random-keyboard gibberish 0.80+.
+    * floor. Calibrated on the held-out fixtures of `LangIdSpec`
+    * (CoreSpec.scala): real sentences in the trained languages score
+    * 0.45–0.75 (short ones at the high end), random-keyboard gibberish
+    * 0.80+.
     */
   val MaxNormDistance = 0.78
 
@@ -144,7 +147,7 @@ object LangId {
   private def ngramCounts(text: String, maxChars: Int): java.util.HashMap[String, Int] = {
     val counts = new java.util.HashMap[String, Int](1024)
     val slice = if (text.length > maxChars) text.substring(0, maxChars) else text
-    val lower = slice.toLowerCase
+    val lower = slice.toLowerCase(Locale.ROOT)
     val word = new StringBuilder("_")
     def flush(): Unit = {
       if (word.length > 1) {
@@ -293,12 +296,12 @@ object LangId {
       "pero", "sus", "fue", "ser", "son", "entre", "está", "cuando",
       "hay", "este", "esta"))
 
-  /** Round-1..5 default (stopword-hit ratio over en/fr/de/es), retained so
-    * LangIdSpec can assert the n-gram model measurably beats it on the
-    * held-out fixtures.
+  /** Round-1..5 default (stopword-hit ratio over en/fr/de/es). Its only
+    * caller is test code: the `LangIdSpec` suite in CoreSpec.scala asserts
+    * the n-gram model measurably beats it on the held-out fixtures.
     */
   def stopwordHeuristic(text: String): String = {
-    val words = text.toLowerCase.split("[^\\p{L}]+").filter(_.nonEmpty)
+    val words = text.toLowerCase(Locale.ROOT).split("[^\\p{L}]+").filter(_.nonEmpty)
     if (words.length < 2) return "?"
     var bestLang = "?"
     var bestHits = 0

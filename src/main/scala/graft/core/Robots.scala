@@ -1,5 +1,7 @@
 package graft.core
 
+import java.util.Locale
+
 /** robots.txt parsing + matching with the semantics of the reference's
   * patched NRobots (`wordslab.webscraper.dependencies/NRobotsPatched/`):
   *
@@ -66,13 +68,13 @@ object RobotsTxt {
     content.linesIterator.foreach { raw =>
       val line = stripComment(raw).trim
       if (line.nonEmpty) {
-        val lower = line.toLowerCase
+        val lower = line.toLowerCase(Locale.ROOT)
         def value(kw: String): String = line.substring(kw.length).trim
         if (lower.startsWith("user-agent:")) {
           val ua = value("user-agent:").stripSuffix("?")
           if (ua.nonEmpty) {
             if (addedRulesToGroup) { currentGroup = Nil; addedRulesToGroup = false }
-            val g = byName.getOrElseUpdate(ua.toLowerCase, new MutableGroup(ua))
+            val g = byName.getOrElseUpdate(ua.toLowerCase(Locale.ROOT), new MutableGroup(ua))
             currentGroup = currentGroup :+ g
           }
         } else if (lower.startsWith("disallow:")) {

@@ -3,6 +3,7 @@ package graft.core
 import java.net.URI
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
+import java.util.Locale
 
 /** URL canonicalization + hashing — the single shared definition used by the
   * frontier, the seen-set and link extraction (north rule: "canonicalized +
@@ -99,9 +100,9 @@ object UrlCanonicalizer {
   def canonicalize(url: String): Option[String] = {
     try {
       val u = new URI(iriToUri(url.split('#')(0).trim)).normalize()
-      val scheme = Option(u.getScheme).map(_.toLowerCase).orNull
+      val scheme = Option(u.getScheme).map(_.toLowerCase(Locale.ROOT)).orNull
       if (scheme != "http" && scheme != "https") return None
-      var host = Option(u.getHost).map(_.toLowerCase).orNull
+      var host = Option(u.getHost).map(_.toLowerCase(Locale.ROOT)).orNull
       if (host == null) return None
       while (host.endsWith(".")) host = host.dropRight(1)
       val defaultPort = if (scheme == "https") 443 else 80

@@ -4,6 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.{Charset, StandardCharsets}
 import java.time.Duration
+import java.util.Locale
 import java.util.zip.GZIPInputStream
 
 /** Production HTTP fetcher — the S1/S2 surface of the reference
@@ -131,7 +132,7 @@ object HttpFetcher {
 
   /** mime type without parameters, lowercased. */
   def mimeOf(contentType: String): String =
-    contentType.split(';')(0).trim.toLowerCase
+    contentType.split(';')(0).trim.toLowerCase(Locale.ROOT)
 
   /** The reference's processed content types (`CrawlDecisionMaker.cs:99-144`,
     * config at `WebsiteTextExtractor.cs:121`).

@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.util.Locale
+
 import scala.collection.mutable.ArrayBuffer
 
 /** Minimal HTML DOM for the extraction pipeline.
@@ -97,7 +99,7 @@ object HtmlParser {
           val end = html.indexOf('>', lt)
           if (end < 0) { i = n }
           else {
-            val tag = html.substring(lt + 2, end).trim.toLowerCase
+            val tag = html.substring(lt + 2, end).trim.toLowerCase(Locale.ROOT)
             closeElem(tag)
             i = end + 1
           }
@@ -105,7 +107,7 @@ object HtmlParser {
           parseTag(html, lt) match {
             case Some((tag, attrs, selfClosed, after)) =>
               if (RawText.contains(tag) && !selfClosed) {
-                val closeIdx = html.toLowerCase.indexOf(s"</$tag", after)
+                val closeIdx = indexOfCloseTag(html, tag, after)
                 openElem(tag, attrs, selfClosed = false)
                 // attach raw content as a text child, then pop
                 val contentEnd = if (closeIdx < 0) n else closeIdx
@@ -127,6 +129,18 @@ object HtmlParser {
     root
   }
 
+  /** Index of the first `</tag` at or after `from`, tag matched without
+    * case. Compares in place: indices into a lowercased copy would drift
+    * past any char whose lowercase is longer (U+0130 `İ` → `i̇`).
+    */
+  private def indexOfCloseTag(html: String, tag: String, from: Int): Int = {
+    val needle = s"</$tag"
+    var i = html.indexOf("</", from)
+    while (i >= 0 && !html.regionMatches(true, i, needle, 0, needle.length))
+      i = html.indexOf("</", i + 1)
+    i
+  }
+
   /** Parses "<tag attr=... >" starting at `lt`. Returns (tag, attrs,
     * selfClosed, indexAfterGt).
     */
@@ -136,7 +150,7 @@ object HtmlParser {
     val tagStart = i
     while (i < n && (html.charAt(i).isLetterOrDigit || html.charAt(i) == '-')) i += 1
     if (i == tagStart) return None
-    val tag = html.substring(tagStart, i).toLowerCase
+    val tag = html.substring(tagStart, i).toLowerCase(Locale.ROOT)
     val attrs = Map.newBuilder[String, String]
     var selfClosed = false
     var done = false
@@ -152,7 +166,7 @@ object HtmlParser {
           val nameStart = i
           while (i < n && !html.charAt(i).isWhitespace &&
                  html.charAt(i) != '=' && html.charAt(i) != '>' && html.charAt(i) != '/') i += 1
-          val name = html.substring(nameStart, i).toLowerCase
+          val name = html.substring(nameStart, i).toLowerCase(Locale.ROOT)
           while (i < n && html.charAt(i).isWhitespace) i += 1
           if (i < n && html.charAt(i) == '=') {
             i += 1

@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.util.Locale
+
 import graft.core.{Span, SpanKinds}
 import scala.collection.mutable
 
@@ -70,7 +72,7 @@ object HtmlToSpans {
     root.descendants.foreach { e =>
       if ((e.tag == "a" || e.tag == "area") && e.hasAttr("href")) {
         val rel = e.attr("rel").getOrElse("")
-        if (!rel.toLowerCase.split("[ ,]").contains("nofollow")) {
+        if (!rel.toLowerCase(Locale.ROOT).split("[ ,]").contains("nofollow")) {
           hrefs += e.attr("href").get
         }
       }
@@ -86,7 +88,7 @@ object HtmlToSpans {
       e.tag == "meta" &&
       e.attr("name").exists(_.equalsIgnoreCase("robots")) &&
       e.attr("content").exists { v =>
-        val lv = v.toLowerCase
+        val lv = v.toLowerCase(Locale.ROOT)
         lv.contains("nofollow") || lv.contains("none")
       }
     }
@@ -168,8 +170,8 @@ object HtmlToSpans {
       val kv = decl.split(":", 2)
       if (kv.length != 2) None
       else {
-        val prop = kv(0).trim.toLowerCase
-        val rawV = kv(1).trim.toLowerCase
+        val prop = kv(0).trim.toLowerCase(Locale.ROOT)
+        val rawV = kv(1).trim.toLowerCase(Locale.ROOT)
         val imp = rawV.endsWith("!important")
         val v = (if (imp) rawV.stripSuffix("!important") else rawV).trim
         if (prop.isEmpty || v.isEmpty) None else Some((prop, v, imp))
@@ -210,7 +212,7 @@ object HtmlToSpans {
       consumed = m.end
       if (m.group(1) != null) {
         if (m.start != 0) return None // a tag is only valid leading
-        tag = Some(m.group(1).toLowerCase)
+        tag = Some(m.group(1).toLowerCase(Locale.ROOT))
       } else if (m.group(2) != null) classes += m.group(2)
       else ids += m.group(3)
     }
@@ -326,7 +328,7 @@ object HtmlToSpans {
                 else if (c == '}') { d -= 1; if (d == 0) end = k }
                 k += 1
               }
-              val lower = selText.toLowerCase
+              val lower = selText.toLowerCase(Locale.ROOT)
               if (lower.startsWith("@media") &&
                   mediaAppliesToScreen(lower.substring("@media".length))) {
                 frames = (end + 1, limit) :: frames

@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,50 +40,71 @@ object Dedup {
       .drop("dup_rank")
   }
 
-  /** Word n-gram shingles of a text column (distinct, as array).
+  /** Distinct word n-gram shingles (as array) of the lowercased, trimmed,
+    * whitespace-split text, words joined by " ". */
+  def shingles(text: Column, n: Int): Column =
+    array_distinct(filter(grams(split(lower(trim(text)), "\\s+"), n, " "),
+      s => s.isNotNull))
+
+  /** The dedup family's one n-gram builder: each run of `n` consecutive
+    * `tokens` joined by `sep`, null past the array's end. Callers own the
+    * tokenizing normalization and the final filter ([[shingles]]: words;
+    * [[Winnowing.charGrams]]: characters).
     *
-    * Built by zipping the word array with its own shifted slices — all
+    * Built by zipping the token array with its own shifted slices — all
     * evaluated ONCE per row as zip_with arguments. (The naive form,
-    * referencing `slice(words, i, n)`/`size(words)` INSIDE a transform
+    * referencing `slice(tokens, i, n)`/`size(tokens)` INSIDE a transform
     * lambda, re-evaluates the outer split() per array element — O(W²)
     * work per document; measured 25x slower at sf0.1.)
     */
-  def shingles(text: Column, n: Int): Column = {
-    val words = split(lower(trim(text)), "\\s+")
-    val grams = (1 until n).foldLeft(words) { (acc, k) =>
-      zip_with(acc, slice(words, lit(k + 1), size(words)), (a, b) =>
-        when(a.isNotNull && b.isNotNull, concat(a, lit(" "), b)))
+  private[ops] def grams(tokens: Column, n: Int, sep: String): Column =
+    (1 until n).foldLeft(tokens) { (acc, k) =>
+      zip_with(acc, slice(tokens, lit(k + 1), size(tokens)), (a, b) =>
+        when(a.isNotNull && b.isNotNull,
+          if (sep.isEmpty) concat(a, b) else concat(a, lit(sep), b)))
     }
-    array_distinct(filter(grams, s => s.isNotNull))
-  }
 
-  /** n-gram Jaccard near-dup pairs via shingle-equality blocking:
-    * explode distinct shingles → self-join on shingle → per-pair
-    * intersection counts → Jaccard. Pure equi-joins on strings, fully
-    * oracle-expressible. Returns pairs (id_a < id_b) with jaccard ≥
-    * threshold.
-    *
-    * `maxDocFreq > 0` drops shingles whose document frequency exceeds the
-    * cap BEFORE the self-join — a hot boilerplate shingle shared by d docs
-    * contributes d² rows to the blocking join, so an uncapped join is
-    * quadratic on common phrases. The Jaccard is then computed over the
-    * capped shingle sets on BOTH numerator and denominator (a consistent
-    * "rare-shingle Jaccard": ubiquitous shingles carry no dedup signal —
-    * the standard prefix/frequency-filter trade in set-similarity joins).
+  /** n-gram Jaccard near-dup pairs (id_a < id_b, jaccard ≥ threshold):
+    * `cappedJaccardPairs` over the xxhash64 of each document's shingles —
+    * the same intersection counts as the strings (collisions are
+    * ~n²·|sh|/2^64) on far cheaper join keys.
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double, maxDocFreq: Int = 0): DataFrame = {
-    // join/shuffle on the 64-bit shingle hash, not the string: same
-    // intersection counts (collisions are ~n²·|sh|/2^64), far cheaper keys
-    val shAll = Par.spread(df.select(col(idCol).as("id"), col(textCol)))
+      n: Int, threshold: Double, maxDocFreq: Int = 0): DataFrame =
+    cappedJaccardPairs(shingleHashes(df, idCol, textCol, n), threshold,
+      maxDocFreq, "jaccard")
+
+  /** (id, sh) rows: xxhash64 of each document's distinct shingles, the gram
+    * chain spread off a narrow scan. */
+  private def shingleHashes(df: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame =
+    Par.spread(df.select(col(idCol).as("id"), col(textCol)))
       .select(col("id"), explode(shingles(col(textCol), n)).as("sh_str"))
       .select(col("id"), xxhash64(col("sh_str")).as("sh"))
+
+  /** The dedup family's one set-similarity join over (id, sh: long) rows,
+    * grams distinct per id: self-join on the gram with id_a < id_b →
+    * per-pair intersection counts → `round(inter / (n_a + n_b − inter),
+    * 6)` ≥ `threshold`, as (id_a, id_b, `simCol`). Pure equi-joins, fully
+    * oracle-expressible; pairs sharing no gram are never emitted. Used by
+    * [[jaccardPairs]] and [[Winnowing.fingerprintPairs]].
+    *
+    * `maxDocFreq > 0` drops grams whose document frequency exceeds the
+    * cap BEFORE the self-join — a hot boilerplate gram shared by d docs
+    * contributes d² rows to the blocking join, so an uncapped join is
+    * quadratic on common phrases. The Jaccard is then computed over the
+    * capped gram sets on BOTH numerator and denominator (a consistent
+    * "rare-gram Jaccard": ubiquitous grams carry no dedup signal — the
+    * standard prefix/frequency-filter trade in set-similarity joins).
+    */
+  private[graft] def cappedJaccardPairs(rows: DataFrame, threshold: Double,
+      maxDocFreq: Int, simCol: String): DataFrame = {
     val sh = if (maxDocFreq > 0) {
-      // shingles are per-doc distinct, so count(*) per shingle IS doc freq
-      val rare = shAll.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+      // grams are per-id distinct, so count(*) per gram IS doc freq
+      val rare = rows.groupBy(col("sh")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= maxDocFreq).select(col("sh"))
-      shAll.join(rare, "sh")
-    } else shAll
+      rows.join(rare, "sh")
+    } else rows
     val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
     val pairs = sh.as("a").join(sh.as("b"),
         col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
@@ -90,10 +113,10 @@ object Dedup {
     pairs
       .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
       .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-      .withColumn("jaccard",
+      .withColumn(simCol,
         round(col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+      .filter(col(simCol) >= threshold)
+      .select(col("id_a"), col("id_b"), col(simCol))
   }
 
   /** Benchmark-decontamination flags — the train/eval overlap gate every
@@ -103,23 +126,18 @@ object Dedup {
     * corpus. Returns every doc row as (id, n_hits, contaminated).
     *
     * Scale shape: candidate generation is an equi-join on the 64-bit
-    * shingle hash against the distinct benchmark shingle set. Eval suites
-    * are MB-scale against a 100-TB corpus, so the benchmark side
-    * broadcasts by default (`broadcastBenchmark = false` falls back to a
-    * shuffle equi-join for corpus-scale benchmark sets); the docs side
-    * streams through untouched — no self-join, nothing quadratic.
+    * shingle hash (the same rows as [[jaccardPairs]]) against the distinct
+    * benchmark shingle set. Eval suites are MB-scale against a 100-TB
+    * corpus, so the benchmark side broadcasts; the docs side streams
+    * through untouched — no self-join, nothing quadratic.
     */
   def contaminationFlags(docs: DataFrame, idCol: String, textCol: String,
       benchmark: DataFrame, benchTextCol: String,
-      n: Int = 8, minHits: Int = 1,
-      broadcastBenchmark: Boolean = true): DataFrame = {
-    val docSh = Par.spread(docs.select(col(idCol).as("id"), col(textCol)))
-      .select(col("id"), explode(shingles(col(textCol), n)).as("sh_str"))
-      .select(col("id"), xxhash64(col("sh_str")).as("sh"))
-    val benchSh0 = benchmark
+      n: Int = 8, minHits: Int = 1): DataFrame = {
+    val docSh = shingleHashes(docs, idCol, textCol, n)
+    val benchSh = broadcast(benchmark
       .select(explode(shingles(col(benchTextCol), n)).as("sh_str"))
-      .select(xxhash64(col("sh_str")).as("sh")).distinct()
-    val benchSh = if (broadcastBenchmark) broadcast(benchSh0) else benchSh0
+      .select(xxhash64(col("sh_str")).as("sh")).distinct())
     // shingles() is per-doc distinct, so the join-then-count is the count
     // of distinct shared shingles per document
     val hits = docSh.join(benchSh, "sh")
@@ -189,11 +207,16 @@ object Dedup {
     */
   def jaccardForPairs(pairs: DataFrame, docs: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame =
-    jaccardForPairsOver(pairs,
-      // spread BEFORE building the gram sets so the zip_with chain runs
-      // post-exchange at full width, not on a narrow scan
-      Par.spread(docs.select(col(idCol).as("id"), col(textCol)))
-        .select(col("id"), shingles(col(textCol), n).as("shs")))
+    jaccardForPairsOver(pairs, gramSets(docs, idCol, textCol, shingles(_, n)))
+
+  /** (id, shs) rows: each document's gram set `gramsOf(text)`, spread
+    * BEFORE the gram chain so it runs post-exchange at full width, not on
+    * a narrow scan.
+    */
+  private[ops] def gramSets(docs: DataFrame, idCol: String, textCol: String,
+      gramsOf: Column => Column): DataFrame =
+    Par.spread(docs.select(col(idCol).as("id"), col(textCol)))
+      .select(col("id"), gramsOf(col(textCol)).as("shs"))
 
   /** Exact Jaccard over arbitrary per-document gram SETS — the shared core
     * of [[jaccardForPairs]] (word n-grams) and
@@ -228,7 +251,7 @@ object Dedup {
     */
   def simHash64(text: String): Long = {
     val sums = new Array[Int](64)
-    text.toLowerCase.split("\\s+").foreach { t =>
+    text.toLowerCase(Locale.ROOT).split("\\s+").foreach { t =>
       if (t.nonEmpty) {
         val h = graft.core.XxHash64.hash(t.getBytes("UTF-8"), 42L)
         var b = 0
@@ -394,20 +417,12 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, maxIterations: Int = 25,
       contractionParts: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.types._
-    val integral = pairs.schema.apply("id_a").dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    if (integral) connectedComponentsLong(pairs, maxIterations, contractionParts)
+    if (integralId(pairs, "id_a"))
+      connectedComponentsLong(pairs, maxIterations, contractionParts)
     else {
-      val spark = pairs.sparkSession
-      val ids = pairs.select(col("id_a").as("oid"))
-        .unionByName(pairs.select(col("id_b").as("oid"))).distinct()
-      // dense ids via sort + zipWithIndex (two linear passes, no
-      // single-partition window); dict size = ids touched by pairs only
-      val dict = graft.crawl.CrawlEngine
-        .assignSeq(spark, ids, Seq("oid"), 0L, "nid").persist()
+      // dict size = ids touched by pairs only
+      val dict = idDictionary(pairs.select(col("id_a").as("oid"))
+        .unionByName(pairs.select(col("id_b").as("oid"))), "nid").persist()
       val enc = pairs
         .join(dict.select(col("oid").as("id_a"), col("nid").as("na")), "id_a")
         .join(dict.select(col("oid").as("id_b"), col("nid").as("nb")), "id_b")
@@ -423,6 +438,29 @@ object Dedup {
       out
     }
   }
+
+  /** Integral ids (Long, Int, Short, Byte) are their own 8-byte surrogate:
+    * the dedup family numbers only other id types through [[idDictionary]].
+    */
+  private def integralId(df: DataFrame, idCol: String): Boolean = {
+    import org.apache.spark.sql.types._
+    df.schema(idCol).dataType match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+  }
+
+  /** The dedup family's one id dictionary: the distinct values of `ids`'
+    * one column, numbered 0, 1, … in sort order as the long column
+    * `outCol` (sort + zipWithIndex: two linear passes, no single-partition
+    * window). Numbering is order-preserving, so a minimum taken over the
+    * dense ids picks the same row as one over the native ids — the
+    * "cluster = minimum member id" and "owner = first occurrence"
+    * contracts carry over to the original type's ordering.
+    */
+  private def idDictionary(ids: DataFrame, outCol: String): DataFrame =
+    graft.crawl.CrawlEngine.assignSeq(ids.sparkSession, ids.distinct(),
+      ids.columns.toSeq, 0L, outCol)
 
   private def connectedComponentsLong(pairs: DataFrame, maxIterations: Int,
       contractionParts: Option[Int] = None): DataFrame = {
@@ -548,38 +586,22 @@ object Dedup {
   private def exactSubstrMarked(df: DataFrame, idCol: String,
       textCol: String, minTokens: Int,
       maxOccurrences: Long): (DataFrame, DataFrame) = {
-    val spark = df.sparkSession
     // The per-token-window rows are the dominant shuffle, so they carry an
     // 8-byte dense surrogate (did), never the native id (the crawl
     // documents table's doc_id is a ~60-char URL — carrying it would widen
-    // the O(total tokens) shuffle ~8x). The dictionary is built by sorting
-    // the distinct ids and numbering them (deterministic, collision-free),
-    // so min(struct(did, start)) picks the SAME owner as ordering by the
-    // native id would; the small marked set joins the dictionary back at
-    // the end.
-    // LONG ids are their own 8-byte surrogate: `did = doc_id` skips the
-    // dictionary entirely (its two zipWithIndex jobs and three joins).
-    // Owner selection is unchanged — dictionary numbering is doc_id sort
-    // order, which for longs IS the value order, so min(struct(did,
-    // start)) picks the same owner either way.
-    val longId = df.schema(idCol).dataType ==
-      org.apache.spark.sql.types.LongType
-    val idDict = if (longId) null else {
-      val ids = df.select(col(idCol).as("doc_id")).distinct()
-        .orderBy(col("doc_id"))
-      val schema = org.apache.spark.sql.types.StructType(ids.schema.fields :+
-        org.apache.spark.sql.types.StructField("did",
-          org.apache.spark.sql.types.LongType, nullable = false))
-      spark.createDataFrame(
-        ids.rdd.zipWithIndex().map { case (r, i) =>
-          org.apache.spark.sql.Row(r.get(0), i)
-        }, schema)
-    }
+    // the O(total tokens) shuffle ~8x); the small marked set joins the
+    // dictionary back at the end. Integral ids are their own surrogate
+    // (`did = doc_id`: no dictionary, no decode joins). Either way
+    // min(struct(did, start)) picks the same owner as ordering by the
+    // native id would.
+    val ownId = integralId(df, idCol)
+    val idDict =
+      if (ownId) null else idDictionary(df.select(col(idCol).as("doc_id")), "did")
     val toksBase = Par.spread(df.select(col(idCol).as("doc_id"), col(textCol)))
       .select(col("doc_id"), split(col(textCol), "\\s+").as("toks"))
       .filter(size(col("toks")) >= minTokens)
     val toks =
-      if (longId) toksBase.withColumn("did", col("doc_id"))
+      if (ownId) toksBase.withColumn("did", col("doc_id"))
       else toksBase.join(idDict, "doc_id")
     // (did, start_tok, win_hash) — the ONLY columns that shuffle; the
     // window text itself never leaves its partition (re-derived later for
@@ -599,7 +621,7 @@ object Dedup {
       .filter(!(col("did") === col("owner.did") &&
         col("start_tok") === col("owner.start_tok")))
     val marked =
-      if (longId) marked0.select(col("did").as("doc_id"), col("start_tok"),
+      if (ownId) marked0.select(col("did").as("doc_id"), col("start_tok"),
         col("owner.did").as("owner_id"),
         col("owner.start_tok").as("owner_start"))
       else marked0

@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.util.Locale
+
 import graft.core.XxHash64
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -17,7 +19,7 @@ object Winnowing {
 
   /** Normalize like a fingerprinter: lowercase, collapse non-alphanumerics. */
   def normalize(text: String): String =
-    text.toLowerCase.replaceAll("[^a-z0-9]+", " ").trim
+    text.toLowerCase(Locale.ROOT).replaceAll("[^a-z0-9]+", " ").trim
 
   /** Rolling k-gram hashes (XXH64 of each k-char window; the "rolling"
     * property we need is per-position hashing of overlapping windows, not
@@ -55,60 +57,35 @@ object Winnowing {
   }
 
   /** Estimated containment/overlap pairs via shared winnowed fingerprints:
-    * explode fingerprints → equi-join → per-pair overlap counts → Jaccard
-    * over fingerprint sets. Same blocking shape as Dedup.jaccardPairs but
-    * robust to word-boundary edits (character-level k-grams).
+    * each document's fingerprint set through
+    * `Dedup.cappedJaccardPairs` (Jaccard over fingerprint sets, emitted
+    * as `sim`; `maxDocFreq > 0` caps the fingerprints' document frequency).
+    * Robust to word-boundary edits (character-level k-grams).
     */
   def fingerprintPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, w: Int = 16, threshold: Double = 0.3,
       maxDocFreq: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val fpUdf = udf((t: String) =>
       fingerprints(if (t == null) "" else t, k, w).toSeq)
     // spread before the rolling-hash UDF — the per-row kernel — so a narrow
     // scan does not serialize it (no-op at scale)
-    val fpAll = Par.spread(df.select(col(idCol).as("id"), col(textCol)))
-      .select(col("id"), explode(fpUdf(col(textCol))).as("fp"))
-    // frequency cap (same rationale as Dedup.jaccardPairs): a boilerplate
-    // k-gram fingerprint shared by d docs costs d² join rows; similarity is
-    // computed over the capped fingerprint sets on both sides
-    val fp = if (maxDocFreq > 0) {
-      val rare = fpAll.groupBy($"fp").agg(count(lit(1)).as("df"))
-        .filter($"df" <= maxDocFreq).select($"fp")
-      fpAll.join(rare, "fp")
-    } else fpAll
-    val sizes = fp.groupBy($"id").agg(count(lit(1)).as("n_fp"))
-    val pairs = fp.as("a").join(fp.as("b"),
-        col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("shared"))
-    pairs
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_fp", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_fp", "n_b"), "id_b")
-      .withColumn("sim",
-        round($"shared".cast("double") / ($"n_a" + $"n_b" - $"shared"), 6))
-      .filter($"sim" >= threshold)
-      .select($"id_a", $"id_b", $"sim")
+    val fps = Par.spread(df.select(col(idCol).as("id"), col(textCol)))
+      .select(col("id"), explode(fpUdf(col(textCol))).as("sh"))
+    Dedup.cappedJaccardPairs(fps, threshold, maxDocFreq, "sim")
   }
 
   /** Distinct character k-grams of the winnowing-normalized text as a
     * native Column (lowercase, non-alphanumerics collapsed to single
     * spaces — the same normalization [[normalize]] applies before
-    * hashing). Built like `Dedup.shingles`: the char array zipped with its
-    * own shifted slices, evaluated once per row — a `substring(n, i, k)`
-    * inside a transform lambda would re-evaluate the regexp_replace per
-    * gram (the O(L²) pitfall documented on shingles). Grams shorter than
-    * `k` (array tail) are filtered by length.
+    * hashing): the normalized characters through the one n-gram builder
+    * `Dedup.grams`, joined with no separator. Grams shorter than `k`
+    * (array tail) are filtered by length.
     */
   def charGrams(text: Column, k: Int): Column = {
     val chars = split(
       trim(regexp_replace(lower(text), "[^a-z0-9]+", " ")), "")
-    val grams = (1 until k).foldLeft(chars) { (acc, j) =>
-      zip_with(acc, slice(chars, lit(j + 1), size(chars)), (a, b) =>
-        when(a.isNotNull && b.isNotNull, concat(a, b)))
-    }
-    array_distinct(filter(grams, s => s.isNotNull && length(s) === k))
+    array_distinct(filter(Dedup.grams(chars, k, ""),
+      s => s.isNotNull && length(s) === k))
   }
 
   /** The verification stage winnowing approximates: EXACT character
@@ -124,8 +101,5 @@ object Winnowing {
   def exactKGramJaccardForPairs(pairs: DataFrame, docs: DataFrame,
       idCol: String, textCol: String, k: Int = 8): DataFrame =
     Dedup.jaccardForPairsOver(pairs,
-      // spread BEFORE the per-char zip_with gram chain (the kernel) so it
-      // runs post-exchange at full width, not on a narrow scan
-      Par.spread(docs.select(col(idCol).as("id"), col(textCol)))
-        .select(col("id"), charGrams(col(textCol), k).as("shs")))
+      Dedup.gramSets(docs, idCol, textCol, charGrams(_, k)))
 }

@@ -247,6 +247,11 @@ class ExtractSpec extends AnyFunSuite {
       """<html><body><script>var a = "<p>no</p>";</script><style>p{}</style>
         |<svg><text>no</text></svg><p>yes</p></body></html>""".stripMargin
     assert(ktext(spansOf(html)) == Seq(("TextBlock.Text", "yes")))
+    // U+0130 lowercases to two chars: the close tag is found in place
+    val dotted = "\u0130" * 12
+    val after = s"<html><body><p>$dotted</p><SCRIPT>var a = 1;</Script><p>after</p></body></html>"
+    assert(ktext(spansOf(after)) ==
+      Seq(("TextBlock.Text", dotted), ("TextBlock.Text", "after")))
   }
 
   test("bare text directly in list/table containers is dropped (builder guard)") {

@@ -68,7 +68,7 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
     // the quadratic trap for pair-mining ops is a BroadcastNestedLoopJoin /
     // CartesianProduct; all three must plan hash-partitioned equi-joins
     Seq("q_jaccard_pairs", "q_simhash_pairs", "q_ann_lsh",
-        "q_minhash_jaccard", "q_winnow_jaccard").foreach { q =>
+        "q_minhash_jaccard", "q_winnow_pairs", "q_winnow_jaccard").foreach { q =>
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q plans a cartesian:\n$p")
       // the self-join on the blocking key must be an equi-join
