@@ -12,8 +12,11 @@ import java.util.Locale
   * Behavior modeled on the reference link pipeline:
   *  - fragment stripped before resolution
   *    (`Abot/Core/HyperLinkParser.cs:104-108`)
-  *  - relative resolution against the page URL or `<base href>`, with
-  *    `//host` base fixed up with the page scheme (`HyperLinkParser.cs:85-96`)
+  *  - relative resolution against the document base URL, which
+  *    `HtmlToSpans.outLinks` (the one `<base href>` rule) derives with
+  *    `resolve` itself: the first `<base href>` resolved against the page
+  *    URL, else the page URL (`HyperLinkParser.cs:85-96`); a `//host`
+  *    href takes the base's scheme
   *  - lowercased scheme/host, default ports dropped, trailing host dot
   *    removed (C#'s Uri class does this implicitly; trailing-dot patch
   *    `Abot/Crawler/WebCrawler.cs:140-160`)

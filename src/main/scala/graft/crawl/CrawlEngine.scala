@@ -39,16 +39,8 @@ final class SyntheticFetcher(
     robots: Map[String, String],
     simulatedCostNanos: Long = 0L) extends Fetcher {
 
-  private def simulate(): Unit = {
-    if (simulatedCostNanos > 0) {
-      val end = System.nanoTime() + simulatedCostNanos
-      var x = 0L
-      while (System.nanoTime() < end) { x += 1 }
-    }
-  }
-
   override def fetch(url: String, attempt: Int = 0): FetchResponse = {
-    simulate()
+    CrawlEngine.busyWait(System.nanoTime(), simulatedCostNanos)
     pages.get(url) match {
       case None => FetchResponse(404, "text/html", null, "")
       case Some(p) if p.fail_first > attempt => // transient outage window
@@ -827,50 +819,48 @@ object CrawlEngine {
       0, null, null, null, 0.0, e.retry_count, e.retry_after_sec,
       e.redirect_position, carry = true, is_retry = e.is_retry)
 
+  /** Spins until `nanos` have passed since `from` (a System.nanoTime
+    * reading): the simulated per-page cost of a benchmark fetch or extract.
+    */
+  private[crawl] def busyWait(from: Long, nanos: Long): Unit = {
+    val end = from + nanos
+    while (nanos > 0 && System.nanoTime() < end) ()
+  }
+
+  /** The crawl's one per-page extraction, shared by the engine and
+    * [[SequentialOracle]]: a 200 HTML page gives its title, spans and
+    * out-links ([[HtmlToSpans.outLinks]]: none on a nofollow page); a 200
+    * PDF (S6/J5/O4: body is the raw bytes as ISO-8859-1) its title and
+    * spans, no links, and noFollow; a 3xx with a target that target,
+    * resolved against the page URL; anything else nothing. `css` is the
+    * page's fetched same-host stylesheet text ("" or null for none).
+    */
+  def extractPage(url: String, status: Int, contentType: String, redirectTo: String,
+      body: String, css: String): PageContent =
+    if (status == 200 && contentType == "text/html") {
+      val root = HtmlParser.parse(body)
+      val (title, spans) = HtmlToSpans.convert(root,
+        if (css != null && css.nonEmpty) Seq(css) else Nil)
+      val (links, noFollow) = HtmlToSpans.outLinks(root, url)
+      PageContent(title, spans, links, noFollow)
+    } else if (status == 200 && contentType == "application/pdf") {
+      val d = PdfToSpans.extract(body)
+      PageContent(d.title, d.spans, Vector.empty, noFollow = true)
+    } else if (status >= 300 && status < 400 && redirectTo != null)
+      PageContent("", Vector.empty, UrlCanonicalizer.resolve(url, redirectTo).toVector, noFollow = false)
+    else PageContent("", Vector.empty, Vector.empty, noFollow = false)
+
   /** Extract one fetched page — the CPU-bound unit of work run in the
     * salted extract stage (north rule: extraction as a partition-parallel
     * mapPartitions emitting interleaved text+media span structs).
     */
   def extractOne(p: FetchedPage, partitionId: Int, simulatedCostNanos: Long = 0L): PageResult = {
     val t1 = System.nanoTime()
-    if (simulatedCostNanos > 0) {
-      val end = t1 + simulatedCostNanos
-      var x = 0L
-      while (System.nanoTime() < end) { x += 1 }
-    }
-    var title = ""
-    var spans = Vector.empty[graft.core.Span]
-    var outLinks = Vector.empty[String]
-    var noFollow = false
-    if (p.status == 200 && p.content_type == "text/html") {
-      val dom = HtmlParser.parse(p.body)
-      val extracted = HtmlToSpans.extractDom(dom,
-        if (p.css != null && p.css.nonEmpty) Seq(p.css) else Nil)
-      title = extracted.title
-      spans = extracted.spans
-      noFollow = extracted.noFollow
-      if (!noFollow) {
-        val (rawHrefs, baseHref) = HtmlToSpans.rawLinks(dom)
-        val baseUrl = baseHref match {
-          case Some(b) if b.startsWith("//") => p.url.takeWhile(_ != ':') + ":" + b
-          case Some(b) => b
-          case None => p.url
-        }
-        outLinks = dedupResolve(baseUrl, rawHrefs)
-      }
-    } else if (p.status == 200 && p.content_type == "application/pdf") {
-      // PDF path (S6/J5/O4): body is the raw bytes as ISO-8859-1; PDFs
-      // contribute spans but no out-links
-      val extracted = PdfToSpans.extract(p.body)
-      title = extracted.title
-      spans = extracted.spans
-      noFollow = true
-    } else if (p.status >= 300 && p.status < 400 && p.redirect_to != null) {
-      outLinks = dedupResolve(p.url, Vector(p.redirect_to))
-    }
+    busyWait(t1, simulatedCostNanos)
+    val page = extractPage(p.url, p.status, p.content_type, p.redirect_to, p.body, p.css)
     val t2 = System.nanoTime()
     // per-doc stats are doc-local facts: fold them here, never shuffle them
-    val items = DocAnalysis.analyzableItems(spans)
+    val items = DocAnalysis.analyzableItems(page.spans)
     val totalWords = items.map(_.words.toLong).sum
     val lang = DocAnalysis.docLanguage(items)
     // error classification (F9): any non-200 except a followable redirect
@@ -883,7 +873,7 @@ object CrawlEngine {
       else if (p.error_class != null) (p.error_class, p.error_message, p.error_stack)
       else (CrawlEngine.HttpStatusErrorClass, s"HTTP ${p.status}", null)
     PageResult(p.url, p.url_hash, p.host, p.seq, p.depth, p.wave,
-      p.status, p.content_type, title, spans, outLinks, noFollow,
+      p.status, p.content_type, page.title, page.spans, page.links, page.noFollow,
       p.fetch_ms, (t2 - t1) / 1e6, partitionId, totalWords, lang, isError,
       p.parent_url, p.retry_count, p.retry_after_sec, p.redirect_position,
       if (p.body == null) 0 else p.body.length, p.css_ms,
@@ -1053,13 +1043,6 @@ object CrawlEngine {
         FrontierEntry(c.url, c.url_hash, c.host, c.parent_url, c.parent_depth + 1,
           start + i, c.wave, redirect_position = c.redirect_position)
       }
-  }
-
-  /** In-page canonical-URL dedup, first occurrence order (D2). */
-  def dedupResolve(baseUrl: String, hrefs: Vector[String]): Vector[String] = {
-    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    hrefs.foreach(h => UrlCanonicalizer.resolve(baseUrl, h).foreach(seen.add))
-    seen.toVector
   }
 
   /** Deterministic dense sequence assignment: total sort on `orderCols`

@@ -83,6 +83,13 @@ final case class FetchedPage(
     carry: Boolean = false,
     is_retry: Boolean = false)
 
+/** What [[CrawlEngine.extractPage]] takes from one fetched page: its
+  * title and spans, its canonical out-links (in-page deduped, document
+  * order) and whether it is nofollow.
+  */
+final case class PageContent(title: String, spans: Vector[Span],
+    links: Vector[String], noFollow: Boolean)
+
 /** Result of fetching+extracting one page inside the fetch mapPartitions. */
 final case class PageResult(
     url: String,

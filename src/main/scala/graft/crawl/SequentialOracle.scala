@@ -1,7 +1,7 @@
 package graft.crawl
 
 import graft.core.{ScopeFilter, TextStats, UrlCanonicalizer}
-import graft.extract.{DocAnalysis, HtmlToSpans, HtmlParser}
+import graft.extract.DocAnalysis
 import scala.collection.mutable
 
 /** Plain-Scala sequential reference crawler (FIXTURES.md §5): FIFO frontier
@@ -92,41 +92,30 @@ object SequentialOracle {
         pagesCrawled += 1
         crawledByHost(entry.host) += 1
 
-        def scheduleCandidates(hrefs: Vector[String], baseUrl: String,
-            redirectPos: Int = 0): Unit = {
-          val inPage = mutable.Set.empty[String]
+        // `links` are the page's canonical out-links, in-page deduped in
+        // document order (CrawlEngine.extractPage)
+        def scheduleCandidates(links: Vector[String], redirectPos: Int): Unit = {
           var scheduled = 0
-          hrefs.foreach { href =>
-            UrlCanonicalizer.resolve(baseUrl, href).foreach { canon =>
-              if (inPage.add(canon)) {
-                val h = UrlCanonicalizer.urlHash(canon)
-                if (!seen.contains(h)) {
-                  val cHost = UrlCanonicalizer.host(canon)
-                  val pass = entry.depth + 1 <= config.maxDepth &&
-                    ScopeFilter.shouldCrawl(config.scope, canon, rootCanon) &&
-                    robotsOf(cHost).allowed(UrlCanonicalizer.pathAndQuery(canon), config.userAgent) &&
-                    !excludedPrefixes.exists(canon.startsWith) &&
-                    redirectPos <= config.maxRedirects && // 3xx chain bound
-                    scheduled < config.maxLinksPerPage
-                  seen += h
-                  if (pass) {
-                    newFrontier += FrontierEntry(canon, h, cHost, entry.url,
-                      entry.depth + 1, nextSeq, wave + 1,
-                      redirect_position = redirectPos)
-                    nextSeq += 1
-                    scheduled += 1
-                  }
-                }
+          links.foreach { canon =>
+            val h = UrlCanonicalizer.urlHash(canon)
+            if (!seen.contains(h)) {
+              val cHost = UrlCanonicalizer.host(canon)
+              val pass = entry.depth + 1 <= config.maxDepth &&
+                ScopeFilter.shouldCrawl(config.scope, canon, rootCanon) &&
+                robotsOf(cHost).allowed(UrlCanonicalizer.pathAndQuery(canon), config.userAgent) &&
+                !excludedPrefixes.exists(canon.startsWith) &&
+                redirectPos <= config.maxRedirects && // 3xx chain bound
+                scheduled < config.maxLinksPerPage
+              seen += h
+              if (pass) {
+                newFrontier += FrontierEntry(canon, h, cHost, entry.url,
+                  entry.depth + 1, nextSeq, wave + 1,
+                  redirect_position = redirectPos)
+                nextSeq += 1
+                scheduled += 1
               }
             }
           }
-        }
-
-        // content-size accumulation (size-on-disk proxy): every served body
-        // counts, chars — exactly what the engine sums over PageResult
-        site.pages.get(entry.url).foreach { page =>
-          if (!(page.fail_first > entry.retry_count) && page.html != null)
-            contentChars += page.html.length
         }
 
         // transient-failure retry (WebCrawler.cs:837-875): 5xx re-enters the
@@ -148,49 +137,34 @@ object SequentialOracle {
             errors += s"503 ${entry.url}"
             errorCount += 1
             maybeRetry(1)
-          case Some(page) if page.status >= 300 && page.status < 400 && page.redirect_to != null =>
-            scheduleCandidates(Vector(page.redirect_to), entry.url,
-              redirectPos = entry.redirect_position + 1)
-          case Some(page) if page.status != 200 =>
-            errors += s"${page.status} ${entry.url}"
-            errorCount += 1
-            if (page.status >= 500) maybeRetry(0)
-          case Some(page) if page.content_type == "application/pdf" =>
-            // PDF path: same analysis/dedup flow as HTML, no out-links,
-            // and NOT part of the html-only uniqueness window
-            val extracted = graft.extract.PdfToSpans.extract(page.html)
-            val items = DocAnalysis.analyzableItems(extracted.spans)
-            var totalWords = 0L
-            var uniqueWords = 0L
-            items.foreach { it =>
-              totalWords += it.words
-              if (!uniqueBlocks.contains(it.text_hash)) {
-                uniqueBlocks(it.text_hash) = it.words
-                uniqueWords += it.words
-              }
-            }
-            if (uniqueWords > 0) {
-              docs += DocumentRow(entry.url, extracted.spans, extracted.title,
-                DocAnalysis.docLanguage(items), totalWords, uniqueWords, wave, entry.seq)
-            }
-          case Some(page) if page.content_type != "text/html" =>
-            () // other content types: counted, no doc, no links
           case Some(page) =>
-            val dom = HtmlParser.parse(page.html)
+            // content-size accumulation (size-on-disk proxy): every served
+            // body counts, chars — exactly what the engine sums over PageResult
+            if (page.html != null) contentChars += page.html.length
+            // error classification as the engine's: any non-200 except a
+            // followable redirect
+            val redirect = page.status >= 300 && page.status < 400 && page.redirect_to != null
+            if (page.status != 200 && !redirect) {
+              errors += s"${page.status} ${entry.url}"
+              errorCount += 1
+              if (page.status >= 500) maybeRetry(0)
+            }
+            val html = page.status == 200 && page.content_type == "text/html"
             // same-host stylesheet evaluation, mirroring the engine's
             // CssFetch path (the oracle "fetches" from the site map)
             // CSS fetches are single-shot (attempt 0, no retry loop) in
             // the engine, so a fail_first sheet is a 503 to BOTH sides
-            val css = CssFetch.cssFor(page.html, entry.url, entry.host,
+            val css = if (!html) "" else CssFetch.cssFor(page.html, entry.url, entry.host,
               u => site.pages.get(u) match {
                 case Some(p) if p.fail_first > 0 => (503, "text/html", "")
                 case Some(p) => (p.status, p.content_type, p.html)
                 case None => (404, "", "")
               }, cssCache)
-            val extracted = HtmlToSpans.extractDom(dom,
-              if (css.nonEmpty) Seq(css) else Nil)
-            // first-wins text-block dedup across the whole crawl (D3)
-            val items = DocAnalysis.analyzableItems(extracted.spans)
+            val content = CrawlEngine.extractPage(entry.url, page.status,
+              page.content_type, page.redirect_to, page.html, css)
+            // first-wins text-block dedup across the whole crawl (D3): only
+            // 200 HTML and PDF pages have spans
+            val items = DocAnalysis.analyzableItems(content.spans)
             var totalWords = 0L
             var uniqueWords = 0L
             items.foreach { it =>
@@ -201,21 +175,13 @@ object SequentialOracle {
               }
             }
             if (uniqueWords > 0) {
-              docs += DocumentRow(entry.url, extracted.spans, extracted.title,
+              docs += DocumentRow(entry.url, content.spans, content.title,
                 DocAnalysis.docLanguage(items), totalWords, uniqueWords, wave, entry.seq)
             }
-            lastDocsPct += ((entry.url,
+            // PDFs are not part of the html-only uniqueness window
+            if (html) lastDocsPct += ((entry.url,
               if (totalWords > 0) uniqueWords.toDouble / totalWords else 0.0))
-            if (!extracted.noFollow) {
-              val (rawHrefs, baseHref) = HtmlToSpans.rawLinks(dom)
-              val baseUrl = baseHref match {
-                case Some(b) if b.startsWith("//") =>
-                  entry.url.takeWhile(_ != ':') + ":" + b
-                case Some(b) => b
-                case None => entry.url
-              }
-              scheduleCandidates(rawHrefs, baseUrl)
-            }
+            scheduleCandidates(content.links, if (redirect) entry.redirect_position + 1 else 0)
         }
       }
 

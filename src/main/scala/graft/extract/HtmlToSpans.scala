@@ -2,20 +2,19 @@ package graft.extract
 
 import java.util.Locale
 
-import graft.core.{Span, SpanKinds}
+import graft.core.{Span, SpanKinds, UrlCanonicalizer}
 import scala.collection.mutable
 
-/** Result of extracting one HTML page. `spans` is the interleaved text+media
-  * span sequence (offsets dense); `outLinks` are canonicalized hrefs in
-  * first-occurrence document order (in-page dedup D2,
-  * `Abot/Core/HyperLinkParser.cs:114-115`); `noFollow` reflects a
-  * `<meta name=robots content=nofollow|none>` page
-  * (`Abot/Core/HyperLinkParser.cs:127-157`).
+/** Result of extracting one HTML or PDF document. `spans` is the
+  * interleaved text+media span sequence (offsets dense); `noFollow`
+  * reflects a `<meta name=robots content=nofollow|none>` page
+  * (`Abot/Core/HyperLinkParser.cs:127-157`) and is always set for a PDF.
+  * A page's out-links are not part of it: the crawl takes them from
+  * [[HtmlToSpans.outLinks]], the one `<base href>` rule.
   */
 final case class ExtractedDoc(
     title: String,
     spans: Vector[Span],
-    outLinks: Vector[String],
     noFollow: Boolean,
     // document-level provenance metadata (PDF /Info entries: Author,
     // Subject, Keywords, Producer, ... — the reference copies every string
@@ -46,52 +45,69 @@ final case class ExtractedDoc(
   */
 object HtmlToSpans {
 
-  def extract(html: String): ExtractedDoc = extractDom(HtmlParser.parse(html))
-
-  /** As `extract`, with fetched same-host external stylesheet text fed
-    * into the hidden-element evaluation (the crawl layer fetches
-    * `<link rel=stylesheet>` targets; see HttpFetcher).
+  /** `html` as a document; `extraCss` is fetched same-host external
+    * stylesheet text fed into the hidden-element evaluation (the crawl
+    * layer fetches `<link rel=stylesheet>` targets; see CssFetch).
     */
-  def extract(html: String, extraCss: Seq[String]): ExtractedDoc =
-    extractDom(HtmlParser.parse(html), extraCss)
+  def extract(html: String, extraCss: Seq[String] = Nil): ExtractedDoc = {
+    val root = HtmlParser.parse(html)
+    val (title, spans) = convert(root, extraCss)
+    ExtractedDoc(title, spans, rawLinks(root)._3)
+  }
 
-  def extractDom(root: HElem): ExtractedDoc = extractDom(root, Nil)
-
-  def extractDom(root: HElem, extraCss: Seq[String]): ExtractedDoc = {
+  /** The document title and span sequence of a parsed page. */
+  def convert(root: HElem, extraCss: Seq[String]): (String, Vector[Span]) = {
     val c = new Converter(root, StyleSheet.fromDom(root, extraCss))
     c.run()
-    ExtractedDoc(c.docTitle, c.result(), extractLinks(root), metaNoFollow(root))
+    (c.docTitle, c.result())
   }
 
-  /** a[href] / area[href] values in document order (before resolution —
-    * resolution happens against the fetched page URL at the crawl layer),
-    * skipping rel=nofollow anchors. Also returns <base href> if present.
+  /** The crawl's one link rule: the page's out-links, canonical, in
+    * first-occurrence document order (in-page dedup D2,
+    * `Abot/Core/HyperLinkParser.cs:114-115`), and whether the page is
+    * nofollow, in which case it has none. Hrefs resolve against the
+    * document base URL: the first `<base href>` resolved against the page
+    * URL, or the page URL when there is no base or it does not resolve
+    * (https://html.spec.whatwg.org/multipage/urls-and-fetching.html#document-base-url),
+    * so a relative, `//host` or empty base keeps the page's links.
     */
-  def rawLinks(root: HElem): (Vector[String], Option[String]) = {
-    val hrefs = Vector.newBuilder[String]
-    root.descendants.foreach { e =>
-      if ((e.tag == "a" || e.tag == "area") && e.hasAttr("href")) {
-        val rel = e.attr("rel").getOrElse("")
-        if (!rel.toLowerCase(Locale.ROOT).split("[ ,]").contains("nofollow")) {
-          hrefs += e.attr("href").get
-        }
-      }
+  def outLinks(root: HElem, pageUrl: String): (Vector[String], Boolean) = {
+    val (hrefs, base, noFollow) = rawLinks(root)
+    if (noFollow) (Vector.empty, true)
+    else {
+      val baseUrl = base.flatMap(UrlCanonicalizer.resolve(pageUrl, _)).getOrElse(pageUrl)
+      val links = mutable.LinkedHashSet.empty[String]
+      hrefs.foreach(h => UrlCanonicalizer.resolve(baseUrl, h).foreach(links.add))
+      (links.toVector, false)
     }
-    val base = root.descendants.find(e => e.tag == "base" && e.hasAttr("href")).flatMap(_.attr("href"))
-    (hrefs.result(), base)
   }
 
-  private def extractLinks(root: HElem): Vector[String] = rawLinks(root)._1
-
-  def metaNoFollow(root: HElem): Boolean =
-    root.descendants.exists { e =>
-      e.tag == "meta" &&
-      e.attr("name").exists(_.equalsIgnoreCase("robots")) &&
-      e.attr("content").exists { v =>
-        val lv = v.toLowerCase(Locale.ROOT)
-        lv.contains("nofollow") || lv.contains("none")
+  /** One DOM walk for everything the crawl follows: the a[href] /
+    * area[href] values in document order, unresolved, skipping
+    * rel=nofollow anchors; the first `<base href>`; and whether a robots
+    * meta says nofollow or none.
+    */
+  private[graft] def rawLinks(root: HElem): (Vector[String], Option[String], Boolean) = {
+    val hrefs = Vector.newBuilder[String]
+    var base: Option[String] = None
+    var noFollow = false
+    root.descendants.foreach { e =>
+      e.tag match {
+        case "a" | "area" if e.hasAttr("href") &&
+            !e.attr("rel").exists(_.toLowerCase(Locale.ROOT).split("[ ,]").contains("nofollow")) =>
+          hrefs += e.attr("href").get
+        case "base" if base.isEmpty => base = e.attr("href")
+        case "meta" if !noFollow =>
+          noFollow = e.attr("name").exists(_.equalsIgnoreCase("robots")) &&
+            e.attr("content").exists { v =>
+              val lv = v.toLowerCase(Locale.ROOT)
+              lv.contains("nofollow") || lv.contains("none")
+            }
+        case _ =>
       }
     }
+    (hrefs.result(), base, noFollow)
+  }
 
   // ---------------------------------------------------------------------
 

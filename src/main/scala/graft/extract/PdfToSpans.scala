@@ -60,13 +60,13 @@ object PdfToSpans {
   }
 
   def extract(pdfBytes: Array[Byte]): ExtractedDoc =
-    if (pdfBytes == null) ExtractedDoc("", Vector.empty, Vector.empty, noFollow = true)
+    if (pdfBytes == null) ExtractedDoc("", Vector.empty, noFollow = true)
     else extract(new String(pdfBytes, java.nio.charset.StandardCharsets.ISO_8859_1))
 
   /** `pdf` is the raw bytes decoded ISO-8859-1 (lossless byte↔char). */
   def extract(pdf: String): ExtractedDoc = {
     if (pdf == null || !pdf.startsWith("%PDF"))
-      return ExtractedDoc("", Vector.empty, Vector.empty, noFollow = true)
+      return ExtractedDoc("", Vector.empty, noFollow = true)
     // ONE raw-stream scan feeds title resolution, the object catalog, and
     // content extraction (this runs per document inside the extract
     // mapPartitions — a 10 MB PDF must not pay three full-file passes)
@@ -80,15 +80,12 @@ object PdfToSpans {
     }
     val blocks = removeDecorations(pages).flatten
     ExtractedDoc(info.getOrElse("Title", ""), buildSpans(blocks),
-      Vector.empty, noFollow = true, metadata = info - "Title")
+      noFollow = true, metadata = info - "Title")
   }
 
   // --- document info -----------------------------------------------------
 
   private val InfoRefRe = "/Info\\s+(\\d+)\\s+\\d+\\s+R".r
-
-  /** /Title from the info dictionary (see `docInfo`). */
-  def docTitle(pdf: String): String = docInfo(pdf).getOrElse("Title", "")
 
   /** EVERY string entry of the document-information dictionary (Title,
     * Author, Subject, Keywords, Producer, CreationDate, ...) — the

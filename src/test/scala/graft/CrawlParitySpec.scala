@@ -288,6 +288,30 @@ class CrawlParitySpec extends AnyFunSuite with CrawlFixture {
     // the stylesheet URL itself was never crawled as a page
     assert(!engineDocs.exists(_.doc_id.contains("style.css")))
   }
+
+  test("a relative <base href> resolves against the page URL in engine and oracle") {
+    // the root's links resolve against <base href="/sub/">, itself
+    // resolved against the root's URL: both sides must fetch /sub/p.html
+    val host = "base.example.com"
+    def u(p: String) = s"https://$host$p"
+    val pages = Map(
+      u("/") -> SyntheticPage(u("/"), host, 200, "text/html", null,
+        """<html><head><base href="/sub/"></head>
+          |<body><p>base root</p><a href="p.html">p</a></body></html>""".stripMargin),
+      u("/sub/p.html") -> SyntheticPage(u("/sub/p.html"), host, 200, "text/html", null,
+        "<html><body><p>the sub page</p></body></html>"))
+    val bSite = SyntheticWeb.Site(pages, Map.empty, Map.empty, u("/"))
+    val cfg = CrawlConfig(rootUrl = bSite.rootUrl, scope = ScopeFilter.Domain,
+      waveBudgetMs = 3000L, maxWaves = 5)
+    val o = SequentialOracle.crawl(bSite, cfg)
+    val io = crawl(freshWarehouse("graft-base-href"), bSite, cfg)
+    val both = Set(u("/"), u("/sub/p.html"))
+    assert(o.crawlOrder.map(_.url).toSet == both)
+    assert(fetchedAt(io) == o.crawlOrder.map(e => (e.url, e.seq, e.wave)).toSet)
+    assert(docsOf(io) == o.documents)
+    assert(seenOf(io) == o.seen)
+  }
+
   test("pre-seeded million-scale seen set engages the Bloom filter buckets, crawl unchanged") {
     // 250k junk hashes (> bloomMinSeenRows default 200k) pre-seed the seen
     // table at offsets past any real url_hash, so the crawl RESULT is that

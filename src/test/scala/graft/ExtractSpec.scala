@@ -274,10 +274,49 @@ class ExtractSpec extends AnyFunSuite {
     val dom = HtmlParser.parse(
       """<html><head><base href="https://b.com/dir/"><meta name="robots" content="NOFOLLOW"></head>
         |<body><a href="x.html">a</a><a rel="nofollow" href="/no">b</a></body></html>""".stripMargin)
-    val (hrefs, base) = HtmlToSpans.rawLinks(dom)
+    val (hrefs, base, noFollow) = HtmlToSpans.rawLinks(dom)
     assert(hrefs == Vector("x.html"))
     assert(base.contains("https://b.com/dir/"))
-    assert(HtmlToSpans.metaNoFollow(dom))
+    assert(noFollow)
+  }
+
+  private val pageUrl = "https://a.com/one/two/page.html"
+  private def outLinks(head: String, body: String): (Vector[String], Boolean) =
+    HtmlToSpans.outLinks(
+      HtmlParser.parse(s"<html><head>$head</head><body>$body</body></html>"), pageUrl)
+
+  test("out-links resolve against the document base URL, first occurrence kept") {
+    val body = """<a href="x.html">x</a><a href="/root">r</a><a href="x.html#frag">again</a>""" +
+      """<a href="https://other.org/abs">abs</a>"""
+    val cases = Seq(
+      "" -> Seq("https://a.com/one/two/x.html", "https://a.com/root"),
+      """<base href="https://b.com/dir/">""" -> Seq("https://b.com/dir/x.html", "https://b.com/root"),
+      """<base href="//c.com/d/">""" -> Seq("https://c.com/d/x.html", "https://c.com/root"),
+      """<base href="/docs/">""" -> Seq("https://a.com/docs/x.html", "https://a.com/root"),
+      """<base href="../up/">""" -> Seq("https://a.com/one/up/x.html", "https://a.com/root"),
+      """<base href="">""" -> Seq("https://a.com/one/two/x.html", "https://a.com/root"),
+      // a base that does not resolve to an http(s) URL: the page URL
+      """<base href="mailto:me@a.com">""" -> Seq("https://a.com/one/two/x.html", "https://a.com/root"),
+      // the first <base> with an href wins
+      """<base target="_top"><base href="/first/"><base href="/second/">""" ->
+        Seq("https://a.com/first/x.html", "https://a.com/root"))
+    cases.foreach { case (head, links) =>
+      assert(outLinks(head, body) == ((links.toVector :+ "https://other.org/abs", false)), head)
+    }
+  }
+
+  test("out-links skip rel=nofollow anchors; a robots-meta nofollow page has none") {
+    val body = """<a href="a.html">a</a><a rel="nofollow" href="b.html">b</a>""" +
+      """<a rel="external NoFollow" href="c.html">c</a><map><area href="d.html"></map>""" +
+      """<a name="no-href">n</a>"""
+    assert(outLinks("", body) ==
+      ((Vector("https://a.com/one/two/a.html", "https://a.com/one/two/d.html"), false)))
+    for (content <- Seq("nofollow", "NOINDEX, NOFOLLOW", "none")) {
+      val head = s"""<meta name="Robots" content="$content">"""
+      assert(outLinks(head, body) == ((Vector.empty, true)), content)
+      assert(HtmlToSpans.extract(s"<html><head>$head</head><body>$body</body></html>").noFollow)
+    }
+    assert(outLinks("""<meta name="description" content="nofollow">""", body)._2 == false)
   }
 
   test("synthetic web: extractor reproduces generator ground truth exactly") {
